@@ -53,26 +53,27 @@ object Tables {
     df.repartition(width, pmod(
       xxhash64(df.columns.take(2).map(col): _*), lit(width * 64)))
 
+  /** Scan size at or below which [[wide]] keeps the natural layout. */
+  private val smallScanBytes = 131072L
+
   /** FULL-WIDTH spread for heavy per-byte map work (shingling,
     * n-gram builds, perceptual hash/decode, Jaro-Winkler scoring,
     * unbounded percentile buffers): these consumers measured 0.4-4.5 s
     * wins from a full-core spread in the r21 A/B even on KB-scale
     * tables, because their cost per byte is orders of magnitude above
     * a scan's. Fires only when the input scans narrower than the core
-    * count AND exceeds SPARK_GRAFT_SMALL_SCAN_BYTES (default 128 KiB
-    * — so Verify's sf0.001/sf0.01 sweeps keep the narrow layouts the
-    * oracle record was built under, and per-task overhead never
+    * count AND exceeds [[smallScanBytes]] (128 KiB — so Verify's
+    * sf0.001/sf0.01 sweeps keep the narrow layouts the oracle record
+    * was built under, and per-task overhead never
     * dominates); deterministic 2-leading-column hash — exactly the
     * r20 partitioning these consumers were oracle-swept under. On a
     * production multi-split table the parts-vs-cores guard makes this
     * a no-op. */
   def wide(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val minBytes = sys.env.getOrElse("SPARK_GRAFT_SMALL_SCAN_BYTES",
-      "131072").toLong
     val par = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par &&
-        df.queryExecution.optimizedPlan.stats.sizeInBytes > minBytes)
+        df.queryExecution.optimizedPlan.stats.sizeInBytes > smallScanBytes)
       spreadTo(df, par)
     else df
   }

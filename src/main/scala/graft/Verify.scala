@@ -31,25 +31,24 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // rows-only dump → paired oracle-checked gate (see
-    // SparkEntry.noOracleGates): the correctness artifact carries the
-    // pairing so `err: no_oracle` rows are auditable in place
-    Files.writeString(Paths.get(s"$outDir/no_oracle_gates.json"),
-      SparkEntry.noOracleGates
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-
     def writeAtomic(path: String, content: String): Unit = {
       val tmp = Paths.get(path + ".tmp")
       Files.writeString(tmp, content)
       Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     }
+    def jsonObject(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    writeAtomic(s"$outDir/oracle_sql.json", jsonObject(SparkEntry.oracleSql))
+    // rows-only dump → paired oracle-checked gate (see
+    // SparkEntry.noOracleGates): the correctness artifact carries the
+    // pairing so `err: no_oracle` rows are auditable in place
+    writeAtomic(s"$outDir/no_oracle_gates.json",
+      jsonObject(SparkEntry.noOracleGates))
+
     val done = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def flushProgress(): Unit = writeAtomic(s"$outDir/progress.json",
-      done.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    def flushProgress(): Unit =
+      writeAtomic(s"$outDir/progress.json", jsonObject(done))
 
     val toRun = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -35,8 +35,9 @@ object Dedup {
     * collisions at the 10^10-doc corpus this targets); (2) semi-join
     * the winner ids back to the source for the payload — broadcast
     * when the winner set fits, an 8-byte-keyed shuffle otherwise.
-    * [[graft.SparkEntry]]'s `dedup_fp_agree` gate cross-checks the
-    * keyed distinct count against the true text-distinct count.
+    * The `dedup_fp_agree` gate in [[graft.queries.DedupQueries]]
+    * cross-checks the keyed distinct count against the true
+    * text-distinct count.
     *
     * ADVERSARIAL CAVEAT: the birthday bound assumes random inputs.
     * DocFingerprint is a base-31 polynomial — trivially collidable on

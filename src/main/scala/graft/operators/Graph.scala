@@ -44,7 +44,9 @@ object Graph {
     * `sparkContext.setCheckpointDir`, so a lost executor recomputes
     * from the last round, not from round zero. local[*] tests and
     * single-run jobs keep the default; long iterative jobs on
-    * preemptible clusters set the knob. */
+    * preemptible clusters set the knob. The loops truncate every round:
+    * r21's cadence-2 A/B lost (pagerank 8.26 s vs 8.67 s), since a lazy
+    * 2-round plan loses AQE's runtime sizing of the iterate. */
   private def truncate(df: DataFrame,
       checkpointDir: Option[String]): DataFrame =
     checkpointDir match {
@@ -55,30 +57,6 @@ object Graph {
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(true)
     }
-
-  /** Checkpoint cadence for LINEAR fixed-round loops (each iterate is
-    * consumed exactly once, by the next round): truncating every k-th
-    * round (and always the last) is value-identical — the iterate
-    * chain has no duplicated subtree and checkpoint placement is not
-    * arithmetic. MEASURED AND REJECTED as a default in r21: cadence 2
-    * was flat-to-worse on the same box both isolated (pagerank 8.26 s
-    * @1 vs 8.67 @2, weighted 6.98 vs 9.04, katz 6.78 vs 7.01, 6-query
-    * A/B) and in the full 426-query pass (pagerank 12.7 s with
-    * cadence 2 vs 6.4 in the cadence-1 baseline pass — the 2-round
-    * lazy plan loses AQE's per-stage runtime sizing of the iterate
-    * side, so joins that broadcast from a materialized iterate
-    * re-plan worse). This extends r20's whole-loop-lazy rejection to
-    * k=2: on this harness the eager per-round truncate IS the
-    * optimum. Kept env-parameterized for future A/B
-    * (SPARK_GRAFT_ITER_CHECKPOINT_EVERY, default 1 = per-round). */
-  private val iterCheckpointEvery: Int = math.max(1,
-    sys.env.getOrElse("SPARK_GRAFT_ITER_CHECKPOINT_EVERY", "1").toInt)
-
-  private def truncateEvery(i: Int, last: Int, df: DataFrame,
-      checkpointDir: Option[String]): DataFrame =
-    if (i % iterCheckpointEvery == 0 || i == last)
-      truncate(df, checkpointDir)
-    else df
 
   /** Connected components of the undirected graph given by `edges`
     * (two long-castable columns `srcCol`, `dstCol`; orientation and
@@ -297,16 +275,15 @@ object Graph {
     // (1 - d) · 1e9, computed exactly in Scala longs
     val base = (1000000L - dampingPpm) * 1000000000L / 1000000L
     var ranks = nodes.withColumn("rank_ppb", lit(1000000000L))
-    // each iterate is consumed once (next round's contribs join) —
-    // truncate on the cadence, not per round (see truncateEvery)
-    for (i <- 1 to iters) {
+    // each iterate is consumed once (next round's contribs join)
+    for (_ <- 1 to iters) {
       val contribs = ew
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           expr("rank_ppb div out_deg").as("contrib"))
       val summed = contribs.groupBy("node")
         .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncateEvery(i, iters, nodes.join(summed, Seq("node"), "left")
+      ranks = truncate(nodes.join(summed, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + expr(
             s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
@@ -358,15 +335,14 @@ object Graph {
     val base = (1000000L - dampingPpm) * 1000000000L / 1000000L / nSeeds
     val seedBase = when(col("is_seed"), lit(base)).otherwise(lit(0L))
     var ranks = nodes.withColumn("rank_ppb", seedBase)
-    // linear chain — cadence truncation (see truncateEvery)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contribs = ew
         .join(ranks.select(col("node").as("src"), col("rank_ppb")), "src")
         .select(col("dst").as("node"),
           expr("rank_ppb div out_deg").as("contrib"))
       val summed = contribs.groupBy("node")
         .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncateEvery(i, iters, nodes.join(summed, Seq("node"), "left")
+      ranks = truncate(nodes.join(summed, Seq("node"), "left")
         .select(col("node"), col("is_seed"),
           (seedBase + expr(
             s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
@@ -424,8 +400,7 @@ object Graph {
       .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
     val base = (1000000L - dampingPpm) * 1000000000L / 1000000L
     var ranks = nodes.withColumn("rank_ppb", lit(1000000000L))
-    // linear chain — cadence truncation (see truncateEvery)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contribs = ew
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
@@ -435,7 +410,7 @@ object Graph {
             col("w_tot")).as("contrib"))
       val summed = contribs.groupBy("node")
         .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncateEvery(i, iters, nodes.join(summed, Seq("node"), "left")
+      ranks = truncate(nodes.join(summed, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + expr(
             s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
@@ -480,14 +455,13 @@ object Graph {
       .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
     val one = lit(1000000000L).cast("decimal(38,0)")
     var ranks = nodes.withColumn("katz_ppb", one)
-    // linear chain — cadence truncation (see truncateEvery)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val summed = e
         .join(ranks.select(col("node").as("src"), col("katz_ppb")), "src")
         .select(col("dst").as("node"), col("katz_ppb"))
         .groupBy("node")
         .agg(sum(col("katz_ppb")).cast("decimal(38,0)").as("s"))
-      ranks = truncateEvery(i, iters, nodes.join(summed, Seq("node"), "left")
+      ranks = truncate(nodes.join(summed, Seq("node"), "left")
         .select(col("node"),
           (one + Quality.decimalDivTrunc(
             expr(s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $alphaPpm"),
@@ -546,19 +520,10 @@ object Graph {
       .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
     var hub = nodes.withColumn("hub_ppb", lit(1000000000L))
     var auth = nodes.withColumn("auth_ppb", lit(0L))
-    // ONE-truncation-per-round (lazy intermediate auth, VERDICT r20
-    // #4) was MEASURED AND REJECTED in r21: the intermediate auth is
-    // consumed exactly once so laziness is value-identical and halves
-    // the truncation jobs, but the interleaved same-box A/B (3×3
-    // samples each way) showed no win and a worse tail — lazy medians
-    // 7.19/9.96/6.28 s vs eager 6.87/6.14/5.39 s: folding both keyed
-    // joins into one job loses AQE's runtime sizing of the
-    // materialized auth side. SPARK_GRAFT_HITS_LAZY_AUTH=true keeps
-    // the experiment reproducible; the default stays eager (the r20
-    // form, the measured optimum on this harness).
-    val lazyAuth = sys.env.get("SPARK_GRAFT_HITS_LAZY_AUTH")
-      .contains("true")
-    for (i <- 1 to iters) {
+    // auth is truncated every round: r21's lazy-auth A/B lost (medians
+    // 7.19/9.96/6.28 s lazy vs 6.87/6.14/5.39 s eager), since AQE sizes
+    // the joins from the materialized auth side.
+    for (_ <- 1 to iters) {
       val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("hub_ppb").cast("decimal(38,0)")).as("ar"))
@@ -569,8 +534,7 @@ object Graph {
         .select(col("node"), coalesce(expr(
           "CAST(coalesce(ar, 0) AS DECIMAL(38,0)) * 1000000000" +
             " div nullif(__ta, 0)"), lit(0L)).as("auth_ppb"))
-      auth = if (i == iters || !lazyAuth) truncate(authNext, checkpointDir)
-        else authNext
+      auth = truncate(authNext, checkpointDir)
       val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"))
         .agg(sum(col("auth_ppb").cast("decimal(38,0)")).as("hr"))
@@ -623,14 +587,14 @@ object Graph {
     // the iterate is consumed once per round (the src join); the
     // normalizer consumes RAW, whose groupBy exchange is planner-deduped
     // (ReusedExchange) exactly as it already was inside each round's
-    // checkpoint job — cadence truncation applies (see truncateEvery)
-    for (i <- 1 to iters) {
+    // checkpoint job
+    for (_ <- 1 to iters) {
       val raw = e.join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("eig_ppb").cast("decimal(38,0)")).as("er"))
       val tot = raw.agg(coalesce(sum(col("er")), lit(0L))
         .cast("decimal(38,0)").as("__t"))
-      ranks = truncateEvery(i, iters, nodes.join(raw, Seq("node"), "left")
+      ranks = truncate(nodes.join(raw, Seq("node"), "left")
         .crossJoin(broadcast(tot)) // 1-row normalization total
         .select(col("node"), coalesce(expr(
           "CAST(coalesce(er, 0) AS DECIMAL(38,0)) * 1000000000" +
