@@ -17,8 +17,9 @@ object Sessions {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE off measured as a loss on the iterative family (r20: 61.1 s
+      // vs 48.7 s), so it is always on
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // corrupt-row policy (sources.Csv) must be projection-independent:
       // with pruning on, a narrow projection parses only the referenced

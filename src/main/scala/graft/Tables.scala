@@ -35,7 +35,14 @@ object Tables {
     * spread is now strictly OPT-IN at the consumer: the winner queries
     * wrap their heavy input in [[wide]]; everything else scans
     * naturally (and at 100 TB a table has many row groups and scans
-    * wide with no help). */
+    * wide with no help).
+    *
+    * Some consumers are PINNED to this natural layout and must never
+    * go through [[wide]], because their OUTPUT depends on the physical
+    * layout: `sample_first_n` (limit tie-winners follow scan order),
+    * the seeded samplers (`df.sample` draws per (partition, position))
+    * and the seeded spark.ml fits (floating-point sum order moves
+    * centroids — see [[embeddings]]). Each such call site says so. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -68,7 +75,7 @@ object Tables {
     * dominates); deterministic 2-leading-column hash — exactly the
     * r20 partitioning these consumers were oracle-swept under. On a
     * production multi-split table the parts-vs-cores guard makes this
-    * a no-op. */
+    * a no-op. Layout-sensitive consumers never call it (see [[table]]). */
   def wide(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val par = spark.sparkContext.defaultParallelism
@@ -77,20 +84,6 @@ object Tables {
       spreadTo(df, par)
     else df
   }
-
-  /** Scan PINNED to the natural layout — must never go through
-    * [[wide]], for consumers whose OUTPUT depends on the physical
-    * layout: `sample_first_n` (orders by the non-unique
-    * (l_orderkey, l_linenumber) — tie-winners follow scan order, and
-    * the DuckDB oracle resolves them by file order), the seeded
-    * samplers (`df.sample` draws per (partition, position)), and the
-    * seeded spark.ml fits (floating-point sum order moves centroids —
-    * see [[embeddings]]). Now that [[table]] is spread-free this is an
-    * alias, kept as the explicit DOCUMENTED pin so a future scan-layer
-    * change cannot silently alter what these queries compute. */
-  def tableUnspread(spark: SparkSession, sfDir: String,
-      name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -130,5 +123,5 @@ object Tables {
     * sim_filtered_ivf_recall dipped below their floors under a spread
     * scan). */
   def embeddings(s: SparkSession, d: String): DataFrame =
-    tableUnspread(s, d, "embeddings")
+    table(s, d, "embeddings")
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed connected components — the transitive-closure step a
   * real dedup pipeline needs AFTER candidate-pair generation (north
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   * "HashMin" scheme — each vertex repeatedly adopts the minimum label
   * in its closed neighborhood until fixpoint). Per iteration: one
   * 16-byte-keyed equi-join + one hash-agg — no vertex ever carries
-  * payload, and lineage is truncated each round via localCheckpoint so
+  * payload, and lineage is truncated each round (see `truncate`) so
   * plan size stays O(1) in the iteration count.
   *
   * Scale notes:
@@ -36,27 +37,141 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Per-round lineage truncation for the iterative ops. Default is
-    * `localCheckpoint` (executor-local blocks — fastest, but an
+  /** Per-round lineage truncation for the iterative ops, on the
+    * session's checkpoint policy. With no checkpoint dir configured it
+    * is `localCheckpoint` (executor-local blocks — fastest, but an
     * executor loss mid-job kills a 30-round computation on a real
-    * cluster). Pass `checkpointDir` to use RELIABLE checkpoints
-    * instead: blocks land in the shared filesystem via
-    * `sparkContext.setCheckpointDir`, so a lost executor recomputes
-    * from the last round, not from round zero. local[*] tests and
-    * single-run jobs keep the default; long iterative jobs on
-    * preemptible clusters set the knob. The loops truncate every round:
+    * cluster). A session with a checkpoint dir (`spark.checkpoint.dir`
+    * or `sparkContext.setCheckpointDir`) gets RELIABLE checkpoints
+    * instead: blocks land in that shared filesystem, so a lost executor
+    * recomputes from the last round, not from round zero. local[*]
+    * runs keep the default; long iterative jobs on preemptible
+    * clusters configure the dir. The loops truncate every round:
     * r21's cadence-2 A/B lost (pagerank 8.26 s vs 8.67 s), since a lazy
     * 2-round plan loses AQE's runtime sizing of the iterate. */
-  private def truncate(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // idempotent (mkdirs); cheap enough per round
-        sc.setCheckpointDir(dir)
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(true)
-    }
+  private def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(true)
+
+  private def requireIters(iters: Int, max: Int = 50): Unit =
+    require(iters >= 1 && iters <= max,
+      s"iters must be in [1,$max] (got $iters)")
+
+  /** Non-loop long-keyed `(u, v)` edges, not yet deduped. */
+  private def longEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("u"),
+        col(dstCol).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+
+  /** The undirected simple graph as symmetric long `(u, v)` rows: both
+    * orientations of every non-loop edge, parallel edges deduped. */
+  private def symEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    val e0 = longEdges(edges, srcCol, dstCol)
+    e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct()
+  }
+
+  /** The undirected simple graph as canonical long `(a, b)` rows,
+    * `a < b`, one per edge. */
+  private def canonEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    longEdges(edges, srcCol, dstCol)
+      .select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b")).distinct()
+
+  /** Per-vertex degree of a canonical `(a, b)` edge set. */
+  private def canonDegrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("id"))
+      .union(und.select(col("b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+
+  /** Orients each canonical `(a, b)` edge from its lower- to its
+    * higher-order endpoint under the total order (degree, id), as
+    * `(a, b, x, y)` — each triangle then forms exactly one wedge, at
+    * its minimum-order vertex (see [[triangleCount]]). */
+  private def orient(und: DataFrame, deg: DataFrame): DataFrame =
+    und
+      .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
+      .select(col("a"), col("b"), when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("x"), col("b").as("y")))
+        .otherwise(struct(col("b").as("x"), col("a").as("y"))).as("e"))
+      .select(col("a"), col("b"), col("e.x").as("x"), col("e.y").as("y"))
+
+  /** Every triangle of the canonical edge set `und`, once, as
+    * `(p, q, x)`: the wedge of two `oriented` out-edges at the triangle's
+    * minimum-order vertex `x` (`p < q` by id, so the closing edge is
+    * already in canonical form), closed against `und`. */
+  private def triangles(oriented: DataFrame, und: DataFrame): DataFrame =
+    oriented.as("e1").join(oriented.as("e2"),
+        col("e1.x") === col("e2.x") && col("e1.y") < col("e2.y"))
+      .select(col("e1.x").as("x"), col("e1.y").as("p"), col("e2.y").as("q"))
+      .join(und.select(col("a").as("p"), col("b").as("q")), Seq("p", "q"))
+
+  /** The directed graph keyed by string ids — the one place the
+    * centrality family casts its keys: non-loop `(src, dst)` rows plus
+    * the `payload` columns, not yet deduped. */
+  private def stringEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, payload: Column*): DataFrame =
+    edges.select(col(srcCol).cast("string").as("src") +:
+        col(dstCol).cast("string").as("dst") +: payload: _*)
+      .filter(col("src") =!= col("dst"))
+
+  /** Every endpoint of a `(src, dst)` edge set, once, as `node`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+
+  /** Validates `dampingPpm` and returns the teleport mass (1 − d)·1e9,
+    * computed exactly in Scala longs. */
+  private def teleportPpb(dampingPpm: Long): Long = {
+    require(dampingPpm >= 0L && dampingPpm <= 1000000L,
+      s"dampingPpm must be in [0, 1e6] (got $dampingPpm)")
+    (1000000L - dampingPpm) * 1000000000L / 1000000L
+  }
+
+  /** One integer rank-flow round of the PageRank family: each edge of
+    * `ew` carries `contrib` (an expression over the edge row joined with
+    * its source's `rank_ppb`) to its `dst`, and every node of `nodes`
+    * collects `teleport + damping · Σcontrib div 1e6`. The contrib sum
+    * widens through DECIMAL(38,0) before the damping multiply, so a hub
+    * fed by billions of nodes cannot overflow. Keeps the columns of
+    * `nodes` and appends the new `rank_ppb`. */
+  private def rankFlow(ew: DataFrame, nodes: DataFrame, ranks: DataFrame,
+      contrib: Column, teleport: Column, dampingPpm: Long): DataFrame = {
+    val summed = ew
+      .join(ranks.select(col("node").as("src"), col("rank_ppb")), "src")
+      .select(col("dst").as("node"), contrib.as("contrib"))
+      .groupBy("node")
+      .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
+    nodes.join(summed, Seq("node"), "left")
+      .select(nodes.columns.map(col).toSeq :+ (teleport + expr(
+        s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
+        .as("rank_ppb"): _*)
+  }
+
+  /** One L1-normalised ppb power-iteration step: every edge carries
+    * its `from` endpoint's `score` (a column of `x`, keyed by `node`)
+    * to its `to` endpoint, and each node's sum is rescaled to
+    * `Σ · 10⁹ div Σ_all` — truncating division of DECIMAL(38,0)-exact
+    * sums, 0 when no mass flows (the nullif guard). Returns
+    * (`node`, `out`). */
+  private def l1Step(e: DataFrame, nodes: DataFrame, x: DataFrame,
+      score: String, from: String, to: String, out: String): DataFrame = {
+    val raw = e.join(x.withColumnRenamed("node", from), from)
+      .groupBy(col(to).as("node"))
+      .agg(sum(col(score).cast("decimal(38,0)")).as("__raw"))
+    val tot = raw.agg(coalesce(sum(col("__raw")), lit(0L))
+      .cast("decimal(38,0)").as("__tot"))
+    nodes.join(raw, Seq("node"), "left")
+      .crossJoin(broadcast(tot)) // 1-row normalization total
+      .select(col("node"), coalesce(expr(
+        "CAST(coalesce(__raw, 0) AS DECIMAL(38,0)) * 1000000000" +
+          " div nullif(__tot, 0)"), lit(0L)).as(out))
+  }
 
   /** Connected components of the undirected graph given by `edges`
     * (two long-castable columns `srcCol`, `dstCol`; orientation and
@@ -67,18 +182,13 @@ object Graph {
     * total assignment should left-join and coalesce to the vertex's
     * own id (see [[assignClusters]]). */
   def connectedComponents(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxIter: Int = 30,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
+      dstCol: String = "id_b", maxIter: Int = 30): DataFrame = {
     // symmetrize + dedupe parallel edges once, so every propagation
     // round joins against the minimal edge set
-    val sym = truncate(
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+    val sym = truncate(symEdges(edges, srcCol, dstCol))
     var labels = truncate(
       sym.select(col("u").as("id")).distinct()
-        .withColumn("comp", col("id")), checkpointDir)
+        .withColumn("comp", col("id")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -87,7 +197,7 @@ object Graph {
       val msgs = sym.join(labels.withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), col("comp"))
       val next = truncate(labels.union(msgs)
-        .groupBy("id").agg(min("comp").as("comp")), checkpointDir)
+        .groupBy("id").agg(min("comp").as("comp")))
       changed = next.join(labels.withColumnRenamed("comp", "prev"), "id")
         .filter(col("comp") =!= col("prev")).count()
       labels = next
@@ -117,14 +227,12 @@ object Graph {
     * exact set equality. */
   def connectedComponentsIncremental(oldLabels: DataFrame,
       newEdges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxIter: Int = 30,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxIter: Int = 30): DataFrame = {
     val star = oldLabels.select(col("id").cast("long").as("u"),
       col("comp").cast("long").as("v"))
     val ne = newEdges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
-    val cc = connectedComponents(star.unionByName(ne), "u", "v", maxIter,
-      checkpointDir)
+    val cc = connectedComponents(star.unionByName(ne), "u", "v", maxIter)
     // a singleton's star edge is a self-loop the symmetrize step drops
     // — restore those vertices as their own label (total assignment)
     val allIds = oldLabels.select(col("id").cast("long").as("id"))
@@ -156,16 +264,13 @@ object Graph {
     * `comp` = smallest vertex id in the component — the same contract
     * as [[connectedComponents]], so the two are interchangeable. */
   def connectedComponentsStar(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    var e = truncate(e0.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct(), checkpointDir)
-    val allVertices = truncate(e0.select(col("a").as("id"))
-      .union(e0.select(col("b").as("id"))).distinct(), checkpointDir)
+      dstCol: String = "id_b", maxIter: Int = 50): DataFrame = {
+    val e0 = longEdges(edges, srcCol, dstCol)
+    var e = truncate(e0.select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
+      .distinct())
+    val allVertices = truncate(e0.select(col("u").as("id"))
+      .union(e0.select(col("v").as("id"))).distinct())
 
     // full (node, neighbor) view of the canonical edge list
     def nbrs(es: DataFrame) =
@@ -189,7 +294,7 @@ object Graph {
       val large = truncate(nb.filter(col("v") > col("u"))
         .join(mins(nb), "u")
         .select(col("v").as("u"), col("m").as("v"))
-        .distinct(), checkpointDir)
+        .distinct())
       val nLarge = large.count()
       val largeStable = sameEdges(large, e, nLarge, nE)
       // SMALL-STAR on large-star's output: every node links its
@@ -203,7 +308,7 @@ object Graph {
           struct(col("v").as("u"), col("m").as("v")))).as("e"))
         .select(col("e.u"), col("e.v"))
         .filter(col("u") =!= col("v"))
-        .distinct(), checkpointDir)
+        .distinct())
       val nSmall = small.count()
       converged = largeStable && sameEdges(small, large, nSmall, nLarge)
       e = small
@@ -248,7 +353,7 @@ object Graph {
     *
     * Scale shape: per iteration ONE src-keyed join of the 16-byte
     * (src, rank) table against the edge list + one dst-keyed hash-agg,
-    * lineage truncated per round (localCheckpoint — construction runs
+    * lineage truncated per round (construction runs
     * jobs, like connectedComponents). Dangling nodes (no out-edges)
     * leak their damped mass, the standard simplification; symmetrize
     * the edges if every node must keep in+out degree >= 1. The
@@ -256,39 +361,21 @@ object Graph {
     * multiply, so a hub fed by billions of nodes cannot overflow. */
   def pageRank(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", iters: Int = 5,
-      dampingPpm: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    require(dampingPpm >= 0L && dampingPpm <= 1000000L,
-      s"dampingPpm must be in [0, 1e6] (got $dampingPpm)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
+      dampingPpm: Long = 850000L): DataFrame = {
+    requireIters(iters)
+    val base = teleportPpb(dampingPpm)
+    val e = truncate(stringEdges(edges, srcCol, dstCol).distinct())
     // the out-degree is STATIC across iterations — fuse it onto the
     // edge table ONCE (the pageRankWeighted discipline), so each round
     // pays a single src-keyed join instead of two
     val ew = truncate(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"),
-      checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
-    // (1 - d) · 1e9, computed exactly in Scala longs
-    val base = (1000000L - dampingPpm) * 1000000000L / 1000000L
+      e.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
+    val nodes = truncate(nodesOf(e))
     var ranks = nodes.withColumn("rank_ppb", lit(1000000000L))
     // each iterate is consumed once (next round's contribs join)
-    for (_ <- 1 to iters) {
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank_ppb div out_deg").as("contrib"))
-      val summed = contribs.groupBy("node")
-        .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncate(nodes.join(summed, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
-            .as("rank_ppb")), checkpointDir)
-    }
+    for (_ <- 1 to iters)
+      ranks = truncate(rankFlow(ew, nodes, ranks,
+        expr("rank_ppb div out_deg"), lit(base), dampingPpm))
     ranks
   }
 
@@ -312,42 +399,26 @@ object Graph {
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "id", iters: Int = 5,
-      dampingPpm: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    require(dampingPpm >= 0L && dampingPpm <= 1000000L,
-      s"dampingPpm must be in [0, 1e6] (got $dampingPpm)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
+      dampingPpm: Long = 850000L): DataFrame = {
+    requireIters(iters)
+    val teleport = teleportPpb(dampingPpm)
+    val e = truncate(stringEdges(edges, srcCol, dstCol).distinct())
     // static out-degree fused onto the edge table once (see pageRank)
     val ew = truncate(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"),
-      checkpointDir)
+      e.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
     val sd = seeds.select(col(seedCol).cast("string").as("node")).distinct()
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = truncate(nodesOf(e)
       .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")
       .withColumn("is_seed", coalesce(col("__seed"), lit(false)))
-      .drop("__seed"), checkpointDir)
+      .drop("__seed"))
     val nSeeds = nodes.filter(col("is_seed")).count()
     require(nSeeds > 0, "no seed appears in the edge set")
-    val base = (1000000L - dampingPpm) * 1000000000L / 1000000L / nSeeds
+    val base = teleport / nSeeds
     val seedBase = when(col("is_seed"), lit(base)).otherwise(lit(0L))
     var ranks = nodes.withColumn("rank_ppb", seedBase)
-    for (_ <- 1 to iters) {
-      val contribs = ew
-        .join(ranks.select(col("node").as("src"), col("rank_ppb")), "src")
-        .select(col("dst").as("node"),
-          expr("rank_ppb div out_deg").as("contrib"))
-      val summed = contribs.groupBy("node")
-        .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncate(nodes.join(summed, Seq("node"), "left")
-        .select(col("node"), col("is_seed"),
-          (seedBase + expr(
-            s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
-            .as("rank_ppb")), checkpointDir)
-    }
+    for (_ <- 1 to iters)
+      ranks = truncate(rankFlow(ew, nodes, ranks,
+        expr("rank_ppb div out_deg"), seedBase, dampingPpm))
     ranks.select(col("node"), col("rank_ppb"))
   }
 
@@ -378,44 +449,28 @@ object Graph {
     * round. */
   def pageRankWeighted(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", weightCol: String = "w", iters: Int = 5,
-      dampingPpm: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    require(dampingPpm >= 0L && dampingPpm <= 1000000L,
-      s"dampingPpm must be in [0, 1e6] (got $dampingPpm)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"),
+      dampingPpm: Long = 850000L): DataFrame = {
+    requireIters(iters)
+    val base = teleportPpb(dampingPpm)
+    val e = truncate(stringEdges(edges, srcCol, dstCol,
         col(weightCol).cast("long").as("w"))
-      .filter(col("src") =!= col("dst") && col("w").isNotNull &&
-        col("w") > 0L)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w")), checkpointDir)
+      .filter(col("w").isNotNull && col("w") > 0L)
+      .groupBy("src", "dst").agg(sum(col("w")).as("w")))
     // the per-source total is STATIC across iterations — join it onto
     // the edge table once, so each round pays a single src-keyed join
     // (the plain pageRank joins its static out-degree every round;
     // here the weight column makes the fused form measurably cheaper)
     val outW = e.groupBy("src")
       .agg(sum(col("w").cast("decimal(38,0)")).as("w_tot"))
-    val ew = truncate(e.join(outW, "src"), checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
-    val base = (1000000L - dampingPpm) * 1000000000L / 1000000L
+    val ew = truncate(e.join(outW, "src"))
+    val nodes = truncate(nodesOf(e))
     var ranks = nodes.withColumn("rank_ppb", lit(1000000000L))
-    for (_ <- 1 to iters) {
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          Quality.decimalDivTrunc(
-            col("rank_ppb").cast("decimal(38,0)") *
-              col("w").cast("decimal(38,0)"),
-            col("w_tot")).as("contrib"))
-      val summed = contribs.groupBy("node")
-        .agg(sum(col("contrib").cast("decimal(38,0)")).as("s"))
-      ranks = truncate(nodes.join(summed, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $dampingPpm div 1000000"))
-            .as("rank_ppb")), checkpointDir)
-    }
+    val contrib = Quality.decimalDivTrunc(
+      col("rank_ppb").cast("decimal(38,0)") * col("w").cast("decimal(38,0)"),
+      col("w_tot"))
+    for (_ <- 1 to iters)
+      ranks = truncate(
+        rankFlow(ew, nodes, ranks, contrib, lit(base), dampingPpm))
     ranks
   }
 
@@ -443,16 +498,13 @@ object Graph {
     * equi-join + one dst-keyed hash-agg over fixed-width rows,
     * lineage truncated per round. */
   def katzCentrality(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", iters: Int = 5, alphaPpm: Long = 10000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
+      dstCol: String = "dst", iters: Int = 5,
+      alphaPpm: Long = 10000L): DataFrame = {
+    requireIters(iters)
     require(alphaPpm > 0L && alphaPpm < 1000000L,
       s"alphaPpm must be in (0, 1e6) (got $alphaPpm)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
+    val e = truncate(stringEdges(edges, srcCol, dstCol).distinct())
+    val nodes = truncate(nodesOf(e))
     val one = lit(1000000000L).cast("decimal(38,0)")
     var ranks = nodes.withColumn("katz_ppb", one)
     for (_ <- 1 to iters) {
@@ -465,29 +517,11 @@ object Graph {
         .select(col("node"),
           (one + Quality.decimalDivTrunc(
             expr(s"CAST(coalesce(s, 0) AS DECIMAL(38,0)) * $alphaPpm"),
-            lit(1000000L))).cast("decimal(38,0)").as("katz_ppb")), checkpointDir)
+            lit(1000000L))).cast("decimal(38,0)").as("katz_ppb")))
     }
     ranks.select(col("node"), col("katz_ppb").cast("bigint").as("katz_ppb"))
   }
 
-  /** Exact triangle count of the undirected simple graph in `edges`
-    * (orientation/duplicates/self-loops are cleaned first). Returns a
-    * 1-row DataFrame (n_vertices, n_edges, n_triangles).
-    *
-    * Degree-oriented wedge join (Suri & Vassilvitskii, WWW'11): give
-    * vertices the total order (degree, id) and orient every edge from
-    * its lower- to its higher-order endpoint. Each triangle then forms
-    * exactly ONE wedge at its minimum-order vertex, so one self-join
-    * of the oriented adjacency plus one closure join against the edge
-    * set counts every triangle exactly once — no post-hoc dedup, no
-    * division by 3.
-    *
-    * The orientation is the 100 TB guard: a raw wedge join explodes at
-    * hub vertices (Σ deg² — a celebrity node with 10M neighbors makes
-    * 10¹⁴ wedges alone), while the oriented out-degree is bounded by
-    * O(√m), capping the wedge set at O(m^1.5) REGARDLESS of skew.
-    * Every join is a fixed-width long-keyed equi-join; vertices carry
-    * no payload. */
   /** HITS (hubs & authorities) over the DIRECTED graph in `edges` —
     * the mutually-recursive importance pair PageRank doesn't give:
     * a good HUB points at many good authorities, a good AUTHORITY is
@@ -510,42 +544,20 @@ object Graph {
     * PageRank dataflow run twice per round; lineage truncates per
     * round; vertices carry an 8-byte score and no payload. */
   def hits(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", iters: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
+      dstCol: String = "dst", iters: Int = 4): DataFrame = {
+    requireIters(iters)
+    val e = truncate(stringEdges(edges, srcCol, dstCol).distinct())
+    val nodes = truncate(nodesOf(e))
     var hub = nodes.withColumn("hub_ppb", lit(1000000000L))
     var auth = nodes.withColumn("auth_ppb", lit(0L))
     // auth is truncated every round: r21's lazy-auth A/B lost (medians
     // 7.19/9.96/6.28 s lazy vs 6.87/6.14/5.39 s eager), since AQE sizes
     // the joins from the materialized auth side.
     for (_ <- 1 to iters) {
-      val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("hub_ppb").cast("decimal(38,0)")).as("ar"))
-      val aTot = aRaw.agg(coalesce(sum(col("ar")), lit(0L))
-        .cast("decimal(38,0)").as("__ta"))
-      val authNext = nodes.join(aRaw, Seq("node"), "left")
-        .crossJoin(broadcast(aTot)) // 1-row normalization total
-        .select(col("node"), coalesce(expr(
-          "CAST(coalesce(ar, 0) AS DECIMAL(38,0)) * 1000000000" +
-            " div nullif(__ta, 0)"), lit(0L)).as("auth_ppb"))
-      auth = truncate(authNext, checkpointDir)
-      val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(sum(col("auth_ppb").cast("decimal(38,0)")).as("hr"))
-      val hTot = hRaw.agg(coalesce(sum(col("hr")), lit(0L))
-        .cast("decimal(38,0)").as("__th"))
-      hub = truncate(nodes.join(hRaw, Seq("node"), "left")
-        .crossJoin(broadcast(hTot))
-        .select(col("node"), coalesce(expr(
-          "CAST(coalesce(hr, 0) AS DECIMAL(38,0)) * 1000000000" +
-            " div nullif(__th, 0)"), lit(0L)).as("hub_ppb")),
-        checkpointDir)
+      auth = truncate(l1Step(e, nodes, hub, "hub_ppb", "src", "dst",
+        "auth_ppb"))
+      hub = truncate(l1Step(e, nodes, auth, "auth_ppb", "dst", "src",
+        "hub_ppb"))
     }
     hub.join(auth, Seq("node"))
   }
@@ -575,32 +587,18 @@ object Graph {
     * dataflow; lineage truncates per round; vertices carry an 8-byte
     * score and no payload. */
   def eigenvectorCentrality(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", iters: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    val e = truncate(edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
+      dstCol: String = "dst", iters: Int = 4): DataFrame = {
+    requireIters(iters)
+    val e = truncate(stringEdges(edges, srcCol, dstCol).distinct())
+    val nodes = truncate(nodesOf(e))
     var ranks = nodes.withColumn("eig_ppb", lit(1000000000L))
     // the iterate is consumed once per round (the src join); the
     // normalizer consumes RAW, whose groupBy exchange is planner-deduped
     // (ReusedExchange) exactly as it already was inside each round's
     // checkpoint job
-    for (_ <- 1 to iters) {
-      val raw = e.join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("eig_ppb").cast("decimal(38,0)")).as("er"))
-      val tot = raw.agg(coalesce(sum(col("er")), lit(0L))
-        .cast("decimal(38,0)").as("__t"))
-      ranks = truncate(nodes.join(raw, Seq("node"), "left")
-        .crossJoin(broadcast(tot)) // 1-row normalization total
-        .select(col("node"), coalesce(expr(
-          "CAST(coalesce(er, 0) AS DECIMAL(38,0)) * 1000000000" +
-            " div nullif(__t, 0)"), lit(0L)).as("eig_ppb")),
-        checkpointDir)
-    }
+    for (_ <- 1 to iters)
+      ranks = truncate(l1Step(e, nodes, ranks, "eig_ppb", "src", "dst",
+        "eig_ppb"))
     ranks.select(col("node"), col("eig_ppb").cast("bigint").as("eig_ppb"))
   }
 
@@ -615,7 +613,7 @@ object Graph {
     * recompute degrees over the induced subgraph, repeat to fixpoint.
     * Per round: one hash-agg over the live edge set + two long-keyed
     * semi-joins — vertices carry no payload, lineage is truncated per
-    * round (localCheckpoint), and the edge set only shrinks.
+    * round, and the edge set only shrinks.
     * Convergence is at most O(V) rounds in pathological chains but a
     * handful in practice (each round removes every currently-exposed
     * vertex, not one); like [[connectedComponents]] this FAILS LOUDLY
@@ -623,14 +621,9 @@ object Graph {
     * order-independent (the k-core is unique), so the output is
     * deterministic and an oracle can replay the rounds exactly. */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxIter: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxIter: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = truncate(e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct(), checkpointDir)
+    var e = truncate(symEdges(edges, srcCol, dstCol))
     var nEdges = e.count()
     var iter = 0
     var converged = false
@@ -641,7 +634,7 @@ object Graph {
       val pruned = truncate(e
         .join(alive.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
         .join(alive.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")), checkpointDir)
+        .select(col("u"), col("v")))
       val n = pruned.count()
       converged = n == nEdges
       nEdges = n
@@ -675,16 +668,11 @@ object Graph {
     * the closeness/triangle family already carries; lineage
     * truncates per round. */
   def coreness(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", iters: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50] (got $iters)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = truncate(e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct(), checkpointDir)
+      dstCol: String = "id_b", iters: Int = 4): DataFrame = {
+    requireIters(iters)
+    val e = truncate(symEdges(edges, srcCol, dstCol))
     var c = truncate(e.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("coreness")), checkpointDir)
+      .agg(count(lit(1)).as("coreness")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("cv").desc)
     for (_ <- 1 to iters) {
@@ -695,37 +683,34 @@ object Graph {
       c = truncate(nbr
         .withColumn("__rn", row_number().over(w).cast("long"))
         .select(col("node"), least(col("__rn"), col("cv")).as("__h"))
-        .groupBy(col("node")).agg(max(col("__h")).as("coreness")), checkpointDir)
+        .groupBy(col("node")).agg(max(col("__h")).as("coreness")))
     }
     c.select(col("node"), col("coreness").cast("bigint").as("coreness"))
   }
 
+  /** Exact triangle count of the undirected simple graph in `edges`
+    * (orientation/duplicates/self-loops are cleaned first). Returns a
+    * 1-row DataFrame (n_vertices, n_edges, n_triangles).
+    *
+    * Degree-oriented wedge join (Suri & Vassilvitskii, WWW'11): give
+    * vertices the total order (degree, id) and orient every edge from
+    * its lower- to its higher-order endpoint. Each triangle then forms
+    * exactly ONE wedge at its minimum-order vertex, so one self-join
+    * of the oriented adjacency plus one closure join against the edge
+    * set counts every triangle exactly once — no post-hoc dedup, no
+    * division by 3.
+    *
+    * The orientation is the 100 TB guard: a raw wedge join explodes at
+    * hub vertices (Σ deg² — a celebrity node with 10M neighbors makes
+    * 10¹⁴ wedges alone), while the oriented out-degree is bounded by
+    * O(√m), capping the wedge set at O(m^1.5) REGARDLESS of skew.
+    * Every join is a fixed-width long-keyed equi-join; vertices carry
+    * no payload. */
   def triangleCount(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b"): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    // canonical simple undirected edge set: (min id, max id), distinct
-    val und = e0.select(least(col("u"), col("v")).as("a"),
-      greatest(col("u"), col("v")).as("b")).distinct()
-    val deg = und.select(col("a").as("id"))
-      .union(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
-      .select(when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("x"), col("b").as("y")))
-        .otherwise(struct(col("b").as("x"), col("a").as("y"))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-    // wedges at each apex (ordered by id so the closure edge is
-    // already in canonical (a < b) form), closed against the edge set
-    val wedges = oriented.as("e1").join(oriented.as("e2"),
-        col("e1.x") === col("e2.x") && col("e1.y") < col("e2.y"))
-      .select(col("e1.y").as("p"), col("e2.y").as("q"))
-    val tri = wedges
-      .join(und.select(col("a").as("p"), col("b").as("q")), Seq("p", "q"))
+    val und = canonEdges(edges, srcCol, dstCol)
+    val deg = canonDegrees(und)
+    val tri = triangles(orient(und, deg), und)
       .agg(count(lit(1)).cast("bigint").as("n_triangles"))
     deg.agg(count(lit(1)).cast("bigint").as("n_vertices"))
       .crossJoin(und.agg(count(lit(1)).cast("bigint").as("n_edges")))
@@ -745,27 +730,9 @@ object Graph {
     * the count plan. */
   def localTriangles(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b"): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val und = e0.select(least(col("u"), col("v")).as("a"),
-      greatest(col("u"), col("v")).as("b")).distinct()
-    val deg = und.select(col("a").as("id"))
-      .union(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
-      .select(when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("x"), col("b").as("y")))
-        .otherwise(struct(col("b").as("x"), col("a").as("y"))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-    val wedges = oriented.as("e1").join(oriented.as("e2"),
-        col("e1.x") === col("e2.x") && col("e1.y") < col("e2.y"))
-      .select(col("e1.x").as("x"), col("e1.y").as("p"), col("e2.y").as("q"))
-    val triVerts = wedges
-      .join(und.select(col("a").as("p"), col("b").as("q")), Seq("p", "q"))
+    val und = canonEdges(edges, srcCol, dstCol)
+    val deg = canonDegrees(und)
+    val triVerts = triangles(orient(und, deg), und)
       .select(explode(array(col("x"), col("p"), col("q"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
     deg.join(triVerts, Seq("id"), "left")
@@ -773,24 +740,6 @@ object Graph {
         coalesce(col("n_tri"), lit(0L)).cast("bigint").as("n_tri"))
   }
 
-  /** Bounded multi-source BFS: exact hop distance from the nearest
-    * source for every vertex within `maxHops` of one — the k-hop
-    * neighborhood primitive (influence radius around flagged spam
-    * domains, blast-radius of a bad seed crawl, "how far is every doc
-    * from a trusted root"). Deliberately HOP-BOUNDED rather than
-    * run-to-fixpoint: on a 100 TB graph an unbounded BFS is a bug, and
-    * the bound makes the semantics a pure function both engines can
-    * replay (DuckDB's recursive CTE caps at the same depth —
-    * `graph_shortest_paths`). Returns (`id`, `dist`) with dist ≤
-    * maxHops; unreached vertices are absent. Undirected (edges
-    * symmetrized), unweighted.
-    *
-    * Scale shape: per round ONE join of the 16-byte frontier against
-    * the edge list + a dst-keyed min-agg + an anti-join against the
-    * settled set — the frontier SHRINKS to newly reached vertices
-    * only, so total work is O(E · 1) amortized, not O(E · rounds);
-    * lineage truncated per round like every iterative op here
-    * (construction runs jobs eagerly). */
   /** Co-occurrence pair graph — the edge builder behind "items that
     * share a basket/order/document": every distinct item pair within a
     * group becomes one undirected edge (`id_a < id_b`), optionally
@@ -902,14 +851,14 @@ object Graph {
   def weightedShortestPaths(edges: DataFrame, sources: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       weightCol: String = "weight", sourceCol: String = "id",
-      maxHops: Int = 8, checkpointDir: Option[String] = None): DataFrame = {
+      maxHops: Int = 8): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
     val e = truncate(edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"),
-      col(weightCol).cast("long").as("w")), checkpointDir)
+      col(weightCol).cast("long").as("w")))
     var dist = truncate(
       sources.select(col(sourceCol).cast("long").as("id")).distinct()
-        .withColumn("dist", lit(0L)), checkpointDir)
+        .withColumn("dist", lit(0L)))
     var frontier = dist
     var hop = 0
     var improvedN = frontier.count()
@@ -923,29 +872,42 @@ object Graph {
       val improved = truncate(
         cand.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left_outer")
           .filter(col("__old").isNull || col("__d") < col("__old"))
-          .select(col("id"), col("__d").as("dist")), checkpointDir)
+          .select(col("id"), col("__d").as("dist")))
       improvedN = improved.count()
       if (improvedN > 0) {
         dist = truncate(
           dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-            .unionByName(improved), checkpointDir)
+            .unionByName(improved))
         frontier = improved
       }
     }
     dist
   }
 
+  /** Bounded multi-source BFS: exact hop distance from the nearest
+    * source for every vertex within `maxHops` of one — the k-hop
+    * neighborhood primitive (influence radius around flagged spam
+    * domains, blast-radius of a bad seed crawl, "how far is every doc
+    * from a trusted root"). Deliberately HOP-BOUNDED rather than
+    * run-to-fixpoint: on a 100 TB graph an unbounded BFS is a bug, and
+    * the bound makes the semantics a pure function both engines can
+    * replay (DuckDB's recursive CTE caps at the same depth —
+    * `graph_shortest_paths`). Returns (`id`, `dist`) with dist ≤
+    * maxHops; unreached vertices are absent. Undirected (edges
+    * symmetrized), unweighted.
+    *
+    * Scale shape: per round ONE join of the 16-byte frontier against
+    * the edge list + a dst-keyed min-agg + an anti-join against the
+    * settled set — the frontier SHRINKS to newly reached vertices
+    * only, so total work is O(E · 1) amortized, not O(E · rounds);
+    * lineage truncated per round like every iterative op here
+    * (construction runs jobs eagerly). */
   def shortestPaths(edges: DataFrame, sources: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
-      sourceCol: String = "id", maxHops: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      sourceCol: String = "id", maxHops: Int = 8): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
-    val sym = truncate(
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
-    shortestPathsFromSym(sym, sources, sourceCol, maxHops, checkpointDir)
+    val sym = truncate(symEdges(edges, srcCol, dstCol))
+    shortestPathsFromSym(sym, sources, sourceCol, maxHops)
   }
 
   /** BFS over an ALREADY symmetrized, deduped, checkpointed edge
@@ -953,15 +915,14 @@ object Graph {
     * multi-sweep callers ([[diameterBound]]) derive the edge table
     * ONCE instead of re-running the upstream pair builder per sweep. */
   private def shortestPathsFromSym(sym: DataFrame, sources: DataFrame,
-      sourceCol: String, maxHops: Int,
-      checkpointDir: Option[String]): DataFrame = {
+      sourceCol: String, maxHops: Int): DataFrame = {
     // append-only settled set — see closenessFromSeeds: per-hop
     // frontiers are checkpointed once, the settled state is a lazy
     // union of them instead of a per-hop full rewrite
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     parts += truncate(
       sources.select(col(sourceCol).cast("long").as("id")).distinct()
-        .withColumn("dist", lit(0L)), checkpointDir)
+        .withColumn("dist", lit(0L)))
     def settled = parts.reduce(_.unionByName(_))
     var frontier = parts.head
     var hop = 0
@@ -973,7 +934,7 @@ object Graph {
           .select(col("v").as("id"))
           .join(settled.select(col("id")), Seq("id"), "left_anti")
           .distinct()
-          .withColumn("dist", lit(hop.toLong)), checkpointDir)
+          .withColumn("dist", lit(hop.toLong)))
       live = next.count()
       if (live > 0) {
         parts += next
@@ -1006,19 +967,13 @@ object Graph {
     * plus one degree hash-agg; the driver sees exactly three 1-row
     * lookups. */
   def diameterBound(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxHops: Int = 12,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxHops: Int = 12): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
     // symmetrize + checkpoint ONCE: both sweeps and the degree agg
     // read this table — previously each sweep re-ran the upstream
     // edge builder (the expensive co-order pair join at bench scale)
-    val sym = truncate(
-      e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-        .distinct(), checkpointDir)
+    val sym = truncate(symEdges(edges, srcCol, dstCol))
     val start = sym.groupBy(col("u").as("id"))
       .agg(count(lit(1)).as("__deg"))
       .orderBy(col("__deg").desc, col("id"))
@@ -1029,12 +984,12 @@ object Graph {
     } else {
       val seedA = start.head.getLong(0)
       val d1 = shortestPathsFromSym(sym, Seq(seedA).toDF("id"),
-        "id", maxHops, checkpointDir)
+        "id", maxHops)
       val far = d1.orderBy(col("dist").desc, col("id")).limit(1)
         .collect().head
       val (seedB, eccA) = (far.getLong(0), far.getLong(1))
       val d2 = shortestPathsFromSym(sym, Seq(seedB).toDF("id"),
-        "id", maxHops, checkpointDir)
+        "id", maxHops)
       val lb = d2.agg(max(col("dist"))).collect().head.getLong(0)
       Seq((seedA, eccA, seedB, lb))
         .toDF("seed_a", "ecc_a", "seed_b", "diameter_lb")
@@ -1068,18 +1023,12 @@ object Graph {
       "grid must be non-empty thresholds >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-    val deg = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+    val und = canonEdges(edges, srcCol, dstCol)
+    val deg = canonDegrees(und)
     val degHist = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
-    val mdHist = e0
-      .join(deg.select(col("id").as("u"), col("deg").as("__du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("__dv")), "v")
+    val mdHist = und
+      .join(deg.select(col("id").as("a"), col("deg").as("__du")), "a")
+      .join(deg.select(col("id").as("b"), col("deg").as("__dv")), "b")
       .select(least(col("__du"), col("__dv")).as("md"))
       .groupBy(col("md")).agg(count(lit(1)).as("cntE"))
     val ks = grid.distinct.sorted.toDF("k")
@@ -1114,11 +1063,7 @@ object Graph {
     * + two long-keyed joins + one 1-row aggregate. */
   def assortativity(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b"): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
+    val e = symEdges(edges, srcCol, dstCol)
     val deg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
     val xy = e
       .join(deg.select(col("id").as("u"), col("deg").as("__x")), "u")
@@ -1159,14 +1104,9 @@ object Graph {
   def closenessFromSeeds(edges: DataFrame, sources: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
       sourceCol: String = "id", maxHops: Int = 8,
-      maxSeeds: Long = 10000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxSeeds: Long = 10000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
-    val sym = truncate(
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+    val sym = truncate(symEdges(edges, srcCol, dstCol))
     val seeds = sources.select(col(sourceCol).cast("long").as("seed"))
       .distinct()
     val nSeeds = seeds.count()
@@ -1187,11 +1127,13 @@ object Graph {
     // stay append-only checkpointed parts (the r20 discipline) and
     // carry (sidx, id, dist) for the exact readout, which is
     // value-identical: BFS distances do not depend on the dedup
-    // mechanism.
-    val wSeed = org.apache.spark.sql.expressions.Window
-      .orderBy(col("seed"))
-    val sIdx = truncate(seeds.withColumn("sidx",
-      (row_number().over(wSeed) - 1).cast("long")), checkpointDir)
+    // mechanism. The dense index is zipWithIndex over the sorted seeds
+    // — a partitioned sort, not a single-partition global window.
+    val spark = edges.sparkSession
+    val sIdx = truncate(spark.createDataFrame(
+      seeds.orderBy(col("seed")).rdd.zipWithIndex()
+        .map { case (r, i) => Row(r.get(0), i) },
+      seeds.schema.add("sidx", LongType, nullable = false)))
     val words = (((nSeeds - 1) / 64) + 1).toInt.max(1)
     // id-keyed bitmask of (sidx, id) rows: word w collects the bits of
     // seed indexes [64w, 64w+63] via map-side partial bit_or
@@ -1203,7 +1145,7 @@ object Graph {
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     parts += truncate(
       sIdx.select(col("sidx"), col("seed").as("id"),
-        lit(0L).as("dist")), checkpointDir)
+        lit(0L).as("dist")))
     def settled = parts.reduce(_.unionByName(_))
     var frontier = parts.head
     var hop = 0
@@ -1225,8 +1167,7 @@ object Graph {
             "filter(sequence(0, 63), b -> (wm & shiftleft(1L, b)) != 0L)"))
             .as("b"))
           .select((col("wi").cast("long") * 64L + col("b").cast("long"))
-            .as("sidx"), col("id"), lit(hop.toLong).as("dist")),
-        checkpointDir)
+            .as("sidx"), col("id"), lit(hop.toLong).as("dist")))
       live = next.count()
       if (live > 0) {
         parts += next
@@ -1282,14 +1223,9 @@ object Graph {
   def betweennessFromSeeds(edges: DataFrame, sources: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
       sourceCol: String = "id", maxHops: Int = 4,
-      maxSeeds: Long = 10000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxSeeds: Long = 10000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
-    val sym = truncate(
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+    val sym = truncate(symEdges(edges, srcCol, dstCol))
     val seeds = sources.select(col(sourceCol).cast("long").as("seed"))
       .distinct()
     val nSeeds = seeds.count()
@@ -1301,7 +1237,7 @@ object Graph {
     // reached at hop d; sigma = number of shortest s→v paths
     val levels = scala.collection.mutable.ArrayBuffer[DataFrame]()
     levels += truncate(seeds.select(col("seed"), col("seed").as("id"),
-      lit(1).cast("decimal(38,0)").as("sigma")), checkpointDir)
+      lit(1).cast("decimal(38,0)").as("sigma")))
     var reached = levels.head.select(col("seed"), col("id"))
     var frontier = levels.head
     var hop = 0
@@ -1313,13 +1249,12 @@ object Graph {
           .select(col("seed"), col("v").as("id"), col("sigma"))
           .groupBy(col("seed"), col("id"))
           .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
-          .join(reached, Seq("seed", "id"), "left_anti"), checkpointDir)
+          .join(reached, Seq("seed", "id"), "left_anti"))
       live = next.count()
       if (live > 0) {
         levels += next
         reached = truncate(
-          reached.unionByName(next.select(col("seed"), col("id"))),
-          checkpointDir)
+          reached.unionByName(next.select(col("seed"), col("id"))))
         frontier = next
       }
     }
@@ -1350,8 +1285,7 @@ object Graph {
         delta = truncate(
           cur.join(contrib, Seq("seed", "id"), "left")
             .select(col("seed"), col("id"), col("sigma"),
-              coalesce(col("__dsum"), lit(0L)).as("delta_ppm")),
-          checkpointDir)
+              coalesce(col("__dsum"), lit(0L)).as("delta_ppm")))
         out = out.unionByName(
           delta.select(col("seed"), col("id"), col("delta_ppm")))
       }
@@ -1388,14 +1322,9 @@ object Graph {
     * min-label as a max over `Long.MaxValue - label`); the operator
     * fails loudly otherwise. */
   def labelPropagation(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", iters: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters must be in [1,20] (got $iters)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = truncate(e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct(), checkpointDir)
+      dstCol: String = "id_b", iters: Int = 3): DataFrame = {
+    requireIters(iters, max = 20)
+    val e = truncate(symEdges(edges, srcCol, dstCol))
     require(e.filter(col("u") < 0L).isEmpty,
       "labelPropagation requires non-negative vertex ids " +
         "(the deterministic tie-break encodes min-label as a max)")
@@ -1409,7 +1338,7 @@ object Graph {
       labels = truncate(cnt.groupBy(col("u").as("id"))
         .agg(max(struct(col("c"),
           (lit(Long.MaxValue) - col("label")).as("nl"))).as("m"))
-        .select(col("id"), (lit(Long.MaxValue) - col("m.nl")).as("label")), checkpointDir)
+        .select(col("id"), (lit(Long.MaxValue) - col("m.nl")).as("label")))
     }
     labels
   }
@@ -1437,17 +1366,12 @@ object Graph {
     * Scale shape, per round: one long-keyed edge ⋈ labels equi-join
     * + three hash-aggs (community totals, (u, d) counts, per-vertex
     * argmax via ONE map-side-combinable `max(struct)` — no per-vertex
-    * window sort); lineage truncates per round, `checkpointDir` for
-    * preemptible clusters. One do-once `count()` fixes 2m. */
+    * window sort); lineage truncates per round. One do-once `count()`
+    * fixes 2m. */
   def louvainMove(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", iters: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters must be in [1,20] (got $iters)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = truncate(e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct(), checkpointDir)
+      dstCol: String = "id_b", iters: Int = 3): DataFrame = {
+    requireIters(iters, max = 20)
+    val e = truncate(symEdges(edges, srcCol, dstCol))
     require(e.filter(col("u") < 0L).isEmpty,
       "louvainMove requires non-negative vertex ids " +
         "(the deterministic tie-break encodes min-label as a max)")
@@ -1478,8 +1402,7 @@ object Graph {
       labels = truncate(scored.groupBy(col("u").as("id"))
         .agg(max(struct(col("__score"),
           (lit(Long.MaxValue) - col("d")).as("nd"))).as("m"))
-        .select(col("id"), (lit(Long.MaxValue) - col("m.nd")).as("label")),
-        checkpointDir)
+        .select(col("id"), (lit(Long.MaxValue) - col("m.nd")).as("label")))
     }
     labels
   }
@@ -1513,6 +1436,8 @@ object Graph {
   def modularity(edges: DataFrame, labels: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
       idCol: String = "id", labelCol: String = "label"): DataFrame = {
+    // not canonEdges: this least-of-casts form plans fewer jobs here
+    // (graph_modularity at sf0.01: 14 execution jobs vs 17)
     val e = edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
@@ -1521,9 +1446,7 @@ object Graph {
     val lab = labels.select(col(idCol).cast("long").as("id"),
       col(labelCol).as("label"))
     val m = e.agg(count(lit(1)).as("m"))
-    val deg = e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    val deg = canonDegrees(e)
     val intra = e
       .join(lab.select(col("id").as("a"), col("label").as("__la")), "a")
       .join(lab.select(col("id").as("b"), col("label").as("__lb")), "b")
@@ -1577,21 +1500,16 @@ object Graph {
     * discipline): without it the upstream edge-builder re-executes
     * for every one of the six consumers in the wedge plan. */
   def adamicAdar(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxApexDegree: Int = 256,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxApexDegree: Int = 256): DataFrame = {
     require(maxApexDegree >= 2,
       s"maxApexDegree must be >= 2 (got $maxApexDegree)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val und = truncate(e0.select(least(col("u"), col("v")).as("a"),
-      greatest(col("u"), col("v")).as("b")).distinct(), checkpointDir)
+    val und = truncate(canonEdges(edges, srcCol, dstCol))
     val adj = und.union(und.select(col("b").as("a"), col("a").as("b")))
     val deg = adj.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     // wedges at each qualifying apex w: every ordered neighbor pair
     val nbrs = truncate(adj.join(deg.filter(col("deg") <= maxApexDegree)
         .select(col("id").as("a"), col("deg").as("__dw")), "a")
-      .select(col("a").as("w"), col("b").as("n"), col("__dw")), checkpointDir)
+      .select(col("a").as("w"), col("b").as("n"), col("__dw")))
     val pairs = nbrs.as("l").join(nbrs.as("r"),
         col("l.w") === col("r.w") && col("l.n") < col("r.n"))
       .select(col("l.n").as("a"), col("r.n").as("b"),
@@ -1629,14 +1547,9 @@ object Graph {
     * fixed-width long-keyed exchanges; rounds are a handful in
     * practice (each round removes every currently-exposed edge). */
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxIter: Int = 15,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxIter: Int = 15): DataFrame = {
     require(k >= 3, s"k must be >= 3 (got $k)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    var und = truncate(e0.select(least(col("u"), col("v")).as("a"),
-      greatest(col("u"), col("v")).as("b")).distinct(), checkpointDir)
+    var und = truncate(canonEdges(edges, srcCol, dstCol))
     // Orientation computed ONCE from the INITIAL degrees and reused
     // every round: wedge enumeration needs only SOME consistent total
     // vertex order (each triangle then has exactly one apex with two
@@ -1646,29 +1559,10 @@ object Graph {
     // the O(m^1.5) wedge bound derived from the initial degrees still
     // holds. Saves a degree hash-agg + two edge-scale joins per round
     // (guide §2.4: loop-invariant work out of the loop).
-    val oriented0 = truncate({
-      val deg = und.select(col("a").as("id"))
-        .union(und.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      und
-        .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
-        .select(col("a"), col("b"), when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("x"), col("b").as("y")))
-          .otherwise(struct(col("b").as("x"), col("a").as("y"))).as("e"))
-        .select(col("a"), col("b"), col("e.x").as("x"), col("e.y").as("y"))
-    }, checkpointDir)
-    def supports(live: DataFrame): DataFrame = {
-      val oriented = oriented0.join(live, Seq("a", "b"), "left_semi")
-        .select(col("x"), col("y"))
-      val wedges = oriented.as("e1").join(oriented.as("e2"),
-          col("e1.x") === col("e2.x") && col("e1.y") < col("e2.y"))
-        .select(col("e1.x").as("x"), col("e1.y").as("p"),
-          col("e2.y").as("q"))
-      wedges
-        .join(live.select(col("a").as("p"), col("b").as("q")),
-          Seq("p", "q"))
+    val oriented0 = truncate(orient(und, canonDegrees(und)))
+    def supports(live: DataFrame): DataFrame =
+      triangles(oriented0.join(live, Seq("a", "b"), "left_semi")
+          .select(col("x"), col("y")), live)
         .select(explode(array(
           struct(least(col("x"), col("p")).as("a"),
             greatest(col("x"), col("p")).as("b")),
@@ -1678,7 +1572,6 @@ object Graph {
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("support"))
-    }
     var nEdges = und.count()
     var iter = 0
     var converged = nEdges == 0L
@@ -1705,8 +1598,7 @@ object Graph {
       iter += 1
       val keep = lastKeep match {
         case None => // round 1: the one full wedge census
-          supports(und).filter(col("support") >= (k - 2).toLong)
-            .localCheckpoint(true)
+          truncate(supports(und).filter(col("support") >= (k - 2).toLong))
         case Some(prev) =>
           // prev = supports within prevUnd, rows = the live set `und`
           val peeled = prevUnd.join(und, Seq("a", "b"), "left_anti")
@@ -1736,12 +1628,11 @@ object Graph {
             .select(col("e.a").as("a"), col("e.b").as("b"))
             .groupBy(col("a"), col("b"))
             .agg(count(lit(1)).as("__d"))
-          prev.join(dec, Seq("a", "b"), "left")
+          truncate(prev.join(dec, Seq("a", "b"), "left")
             .select(col("a"), col("b"),
               (col("support") - coalesce(col("__d"), lit(0L)))
                 .as("support"))
-            .filter(col("support") >= (k - 2).toLong)
-            .localCheckpoint(true)
+            .filter(col("support") >= (k - 2).toLong))
       }
       // keep is checkpointed; the live edge set is its projection —
       // no second per-round truncation needed
@@ -1796,26 +1687,20 @@ object Graph {
     * twice — two pair-scale sort-merge joins traded for one
     * edge-scale lookup. */
   def jaccardNeighbors(edges: DataFrame, srcCol: String = "id_a",
-      dstCol: String = "id_b", maxApexDegree: Int = 256,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String = "id_b", maxApexDegree: Int = 256): DataFrame = {
     require(maxApexDegree >= 2,
       s"maxApexDegree must be >= 2 (got $maxApexDegree)")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val und = truncate(e0.select(least(col("u"), col("v")).as("a"),
-      greatest(col("u"), col("v")).as("b")).distinct(), checkpointDir)
+    val und = truncate(canonEdges(edges, srcCol, dstCol))
     val adj = und.union(und.select(col("b").as("a"), col("a").as("b")))
     val deg = truncate(adj.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("deg")), checkpointDir)
+      .agg(count(lit(1)).as("deg")))
     // endpoint degree rides through the wedge: one edge-scale lookup
     // here beats two pair-scale joins after the wedge
     val nbrs = truncate(adj
       .join(deg.filter(col("deg") <= maxApexDegree)
         .select(col("id").as("a")), "a")
       .join(deg.select(col("id").as("b"), col("deg").as("__dn")), "b")
-      .select(col("a").as("w"), col("b").as("n"), col("__dn")),
-      checkpointDir)
+      .select(col("a").as("w"), col("b").as("n"), col("__dn")))
     nbrs.as("l").join(nbrs.as("r"),
         col("l.w") === col("r.w") && col("l.n") < col("r.n"))
       .select(col("l.n").as("a"), col("r.n").as("b"),
@@ -1850,14 +1735,11 @@ object Graph {
     * lineage truncation; rounds = DAG depth (condensations of real
     * graphs are shallow). */
   def dagLevels(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", maxIter: Int = 100,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val e = truncate(edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+      dstCol: String = "dst", maxIter: Int = 100): DataFrame = {
+    val e = truncate(longEdges(edges, srcCol, dstCol).distinct())
     var lvl = truncate(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
-        .distinct().withColumn("level", lit(0L)), checkpointDir)
+        .distinct().withColumn("level", lit(0L)))
     var prevSum = 0L
     var changed = true
     var it = 0
@@ -1865,7 +1747,7 @@ object Graph {
       val cand = e.join(lvl.withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), (col("level") + 1L).as("level"))
       lvl = truncate(lvl.union(cand)
-        .groupBy("id").agg(max("level").as("level")), checkpointDir)
+        .groupBy("id").agg(max("level").as("level")))
       val s2 = lvl.agg(sum("level")).head().getLong(0)
       changed = s2 != prevSum
       prevSum = s2
@@ -1915,14 +1797,11 @@ object Graph {
     * (Broder's bow-tie), so single-digit rounds in practice. */
   def stronglyConnectedComponents(edges: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
-      maxOuter: Int = 20, maxIter: Int = 60,
-      checkpointDir: Option[String] = None): DataFrame = {
-    var e = truncate(edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+      maxOuter: Int = 20, maxIter: Int = 60): DataFrame = {
+    var e = truncate(longEdges(edges, srcCol, dstCol).distinct())
     var verts = truncate(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
-        .distinct(), checkpointDir)
+        .distinct())
     var nVerts = verts.count()
     val assignedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
@@ -1937,8 +1816,7 @@ object Graph {
       while (trimming && nVerts > 0 && trimIter < maxIter) {
         val twoSided = truncate(
           e.select(col("u").as("id")).distinct()
-            .join(e.select(col("v").as("id")).distinct(), "id"),
-          checkpointDir)
+            .join(e.select(col("v").as("id")).distinct(), "id"))
         val nTwo = twoSided.count()
         if (nTwo == nVerts) trimming = false
         else {
@@ -1949,7 +1827,7 @@ object Graph {
           e = truncate(
             e.join(verts.select(col("id").as("u")), "u")
               .join(verts.select(col("id").as("v")), "v")
-              .select(col("u"), col("v")), checkpointDir)
+              .select(col("u"), col("v")))
         }
         trimIter += 1
       }
@@ -1960,8 +1838,7 @@ object Graph {
         // Labels only DECREASE, so sum(c) is a strictly monotone
         // convergence witness — one narrow agg over the checkpointed
         // table instead of a join-against-previous + count.
-        var color = truncate(verts.withColumn("c", col("id")),
-          checkpointDir)
+        var color = truncate(verts.withColumn("c", col("id")))
         var prevSum = color.agg(sum("c")).head().getLong(0)
         var changed = true
         var it = 0
@@ -1969,7 +1846,7 @@ object Graph {
           val msgs = e.join(color.withColumnRenamed("id", "u"), "u")
             .select(col("v").as("id"), col("c"))
           color = truncate(color.union(msgs)
-            .groupBy("id").agg(min("c").as("c")), checkpointDir)
+            .groupBy("id").agg(min("c").as("c")))
           val s2 = color.agg(sum("c")).head().getLong(0)
           changed = s2 != prevSum
           prevSum = s2
@@ -1983,10 +1860,8 @@ object Graph {
           e.join(color.select(col("id").as("u"), col("c").as("cu")), "u")
             .join(color.select(col("id").as("v"), col("c").as("cv")), "v")
             .filter(col("cu") === col("cv"))
-            .select(col("u"), col("v"), col("cu").as("c")),
-          checkpointDir)
-        var mark = truncate(color.filter(col("id") === col("c")),
-          checkpointDir)
+            .select(col("u"), col("v"), col("cu").as("c")))
+        var mark = truncate(color.filter(col("id") === col("c")))
         var nMark = mark.count()
         var grew = true
         var mIt = 0
@@ -1994,7 +1869,7 @@ object Graph {
           val reached = eCol
             .join(mark.select(col("id").as("v")), "v")
             .select(col("u").as("id"), col("c"))
-          mark = truncate(mark.union(reached).distinct(), checkpointDir)
+          mark = truncate(mark.union(reached).distinct())
           val n2 = mark.count()
           grew = n2 != nMark
           nMark = n2
@@ -2004,12 +1879,12 @@ object Graph {
           s"SCC backward mark did not converge within $maxIter rounds")
         assignedParts += mark.select(col("id"), col("c").as("scc_id"))
         verts = truncate(verts.join(mark.select("id"), Seq("id"),
-          "left_anti"), checkpointDir)
+          "left_anti"))
         nVerts = verts.count()
         e = truncate(
           e.join(verts.select(col("id").as("u")), "u")
             .join(verts.select(col("id").as("v")), "v")
-            .select(col("u"), col("v")), checkpointDir)
+            .select(col("u"), col("v")))
       }
       outer += 1
     }
@@ -2055,16 +1930,14 @@ object Graph {
     * union-finds on the driver in one pass
     * — the latency-optimal tail that keeps a log₂V-round loop from
     * paying the full fixpoint-loop barrier cost per round. Labels
-    * localCheckpoint per round (lineage truncation; pass
-    * `checkpointDir` for reliable checkpoints on preemptible
-    * clusters). SIDE-EFFECTING: one count per round (the convergence
+    * are truncated per round (lineage truncation on the session's
+    * checkpoint policy). SIDE-EFFECTING: one count per round (the convergence
     * witness). Loud maxRounds guard.
     *
     * Returns the forest edges (src, dst, weight), src < dst. */
   def minimumSpanningForest(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b", weightCol: String = "w",
-      maxRounds: Int = 25, driverContractBound: Long = 1000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 25, driverContractBound: Long = 1000000L): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64] (got $maxRounds)")
     require(driverContractBound >= 0L,
@@ -2078,14 +1951,13 @@ object Graph {
     val canon = truncate(e0
       .select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"), col("__w"))
-      .groupBy(col("a"), col("b")).agg(min(col("__w")).as("w")),
-      checkpointDir)
+      .groupBy(col("a"), col("b")).agg(min(col("__w")).as("w")))
     var labels = truncate(canon.select(col("a").as("id"))
       .union(canon.select(col("b").as("id"))).distinct()
-      .withColumn("lab", col("id")), checkpointDir)
+      .withColumn("lab", col("id")))
     val spark = edges.sparkSession
     var chosen = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.sparkContext.emptyRDD[Row],
       canon.schema) // (a, b, w)
     var round = 0
     var active = 1L
@@ -2103,7 +1975,7 @@ object Graph {
       val picked = truncate(cand
         .withColumn("__rn", row_number().over(wMin))
         .filter(col("__rn") === 1)
-        .select(col("a"), col("b"), col("w")).distinct(), checkpointDir)
+        .select(col("a"), col("b"), col("w")).distinct())
       // convergence witness: no component claimed an edge ⇔ no
       // cross-component edge remained (cheap — picked is checkpointed)
       active = picked.count()
@@ -2140,14 +2012,12 @@ object Graph {
             import spk.implicits._
             broadcast(mapped.toDF("lab", "comp")) // bounded by the count
           } else {
-            connectedComponents(lg, "__la", "__lb", maxIter = 50,
-              checkpointDir = checkpointDir)
+            connectedComponents(lg, "__la", "__lb", maxIter = 50)
               .select(col("id").as("lab"), col("comp"))
           }
         labels = truncate(labels
           .join(remap, Seq("lab"), "left")
-          .select(col("id"), coalesce(col("comp"), col("lab")).as("lab")),
-          checkpointDir)
+          .select(col("id"), coalesce(col("comp"), col("lab")).as("lab")))
       }
       round += 1
     }
@@ -2192,8 +2062,7 @@ object Graph {
     * Returns the matched edges (src, dst, weight), src < dst. */
   def maximalMatching(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b", weightCol: String = "w",
-      maxRounds: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 512,
       s"maxRounds must be in [1, 512] (got $maxRounds)")
     import org.apache.spark.sql.expressions.Window
@@ -2205,11 +2074,10 @@ object Graph {
     var live = truncate(e0
       .select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"), col("__w"))
-      .groupBy(col("a"), col("b")).agg(min(col("__w")).as("w")),
-      checkpointDir)
+      .groupBy(col("a"), col("b")).agg(min(col("__w")).as("w")))
     val spark = edges.sparkSession
     var matched = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.sparkContext.emptyRDD[Row],
       live.schema)
     var round = 0
     var remaining = live.count()
@@ -2226,14 +2094,13 @@ object Graph {
         .groupBy(col("a"), col("b"), col("w"))
         .agg(count(lit(1)).as("__ends"))
         .filter(col("__ends") === 2)
-        .select(col("a"), col("b"), col("w")), checkpointDir)
+        .select(col("a"), col("b"), col("w")))
       matched = matched.unionByName(mutual) // ≤ maxRounds unions deep
       val mv = mutual.select(col("a").as("__mv"))
         .union(mutual.select(col("b").as("__mv"))).distinct()
       live = truncate(live
         .join(mv.select(col("__mv").as("a")), Seq("a"), "left_anti")
-        .join(mv.select(col("__mv").as("b")), Seq("b"), "left_anti"),
-        checkpointDir)
+        .join(mv.select(col("__mv").as("b")), Seq("b"), "left_anti"))
       remaining = live.count() // convergence witness (documented eager)
       round += 1
     }

@@ -178,11 +178,11 @@ object SamplingQueries {
 
     QuerySpec("sample_first_n", (s, dir) => {
       import s.implicits._
-      // unspread scan: (l_orderkey, l_linenumber) is NOT unique in the
+      // never `wide`: (l_orderkey, l_linenumber) is NOT unique in the
       // generated lineitem, so the limit's tie-winners follow scan
       // order — the oracle's file order, which only the single-split
-      // scan reproduces (see Tables.tableUnspread)
-      Sampling.firstN(Tables.tableUnspread(s, dir, "lineitem"), 1000,
+      // scan reproduces
+      Sampling.firstN(Tables.table(s, dir, "lineitem"), 1000,
           $"l_orderkey", $"l_linenumber")
         .select($"l_orderkey", $"l_linenumber", $"l_quantity")
     },
@@ -385,11 +385,11 @@ object SamplingQueries {
     QuerySpec("sample_bernoulli", (s, dir) =>
       // Seeded Bernoulli (README.md:154-162,220-230) — reproducible in
       // Spark, not replicable in DuckDB → rows-only check + ScalaCheck
-      // bounds test. tableUnspread: a seeded df.sample draws per
+      // bounds test. Never `wide`: a seeded df.sample draws per
       // (partition, position), so the kept SET is a function of the
       // scan partitioning — the single-split scan is the one layout
       // that is stable across environments/retries (ADVICE r20).
-      Sampling.bernoulli(Tables.tableUnspread(s, dir, "lineitem"), 0.2)
+      Sampling.bernoulli(Tables.table(s, dir, "lineitem"), 0.2)
         .select(col("l_orderkey"), col("l_linenumber")),
     Gate("sample_gates"),
     bench = true),
@@ -397,8 +397,8 @@ object SamplingQueries {
     QuerySpec("sample_percent", (s, dir) =>
       // Hive TABLESAMPLE(20 PERCENT) analogue (README.md:190-199);
       // seeded RNG → rows-only check + ScalaCheck bounds test.
-      // tableUnspread: see sample_bernoulli.
-      Sampling.percent(Tables.tableUnspread(s, dir, "lineitem"), 20.0)
+      // Never `wide`: see sample_bernoulli.
+      Sampling.percent(Tables.table(s, dir, "lineitem"), 20.0)
         .select(col("l_orderkey"), col("l_linenumber")),
     Gate("sample_gates"),
     bench = true),
@@ -407,8 +407,8 @@ object SamplingQueries {
       import s.implicits._
       // per-stratum fractions via df.stat.sampleBy — rows-only check
       // (seeded RNG); the spec asserts per-stratum proportions.
-      // tableUnspread: see sample_bernoulli.
-      Sampling.stratified(Tables.tableUnspread(s, dir, "orders"),
+      // Never `wide`: see sample_bernoulli.
+      Sampling.stratified(Tables.table(s, dir, "orders"),
           "o_orderpriority",
           Map("1-URGENT" -> 0.3, "2-HIGH" -> 0.2, "3-MEDIUM" -> 0.1,
             "4-NOT SPECIFIED" -> 0.05, "5-LOW" -> 0.02))
@@ -483,11 +483,11 @@ object SamplingQueries {
       // seeded-RNG samplers: DuckDB can't replay Spark's RNG, but it
       // CAN recompute the population sizes the observed fractions are
       // checked against (5σ Chernoff bounds, deterministic per seed).
-      // tableUnspread: the gate must draw the SAME samples as the
+      // never `wide`: the gate must draw the SAME samples as the
       // sample_bernoulli/percent/stratified dumps it certifies (seeded
       // draws are partitioning-dependent — see sample_bernoulli).
-      val li = Tables.tableUnspread(s, dir, "lineitem")
-      val ords = Tables.tableUnspread(s, dir, "orders")
+      val li = Tables.table(s, dir, "lineitem")
+      val ords = Tables.table(s, dir, "orders")
       val nLi = li.agg(count(lit(1)).cast("bigint").as("n_lineitem"))
       val bern = Sampling.bernoulli(li, 0.2).agg(count(lit(1)).as("n_b"))
       val pct = Sampling.percent(li, 20.0).agg(count(lit(1)).as("n_p"))

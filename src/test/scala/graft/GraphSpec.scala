@@ -2,6 +2,8 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.TestAccess
+
 import graft.operators.Graph
 
 class GraphSpec extends SparkSpec {
@@ -44,32 +46,51 @@ class GraphSpec extends SparkSpec {
     assert(out == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L))
   }
 
+  /** Runs `body` with the session's checkpoint dir set to `dir`, then
+    * unsets it, so the reliable path never leaks into other tests. */
+  private def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir)
+    try body finally TestAccess.clearCheckpointDir(sc)
+  }
+
+  private def treeSize(p: java.io.File): Long =
+    if (p.isDirectory) p.listFiles().map(treeSize).sum else p.length()
+
   test("reliable checkpointDir: same labels/ranks as localCheckpoint, files land in the dir") {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (12L, 10L)).toDF("id_a", "id_b")
-    val cc = Graph.connectedComponents(edges, checkpointDir = Some(ckpt))
+    // no session dir: the ops truncate locally, write no checkpoint
+    // files and set no dir
+    val ccLocal = Graph.connectedComponents(edges)
       .as[(Long, Long)].collect().toMap
-    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L))
-    // the reliable path really wrote checkpoint blocks to the dir
-    def treeSize(p: java.io.File): Long =
-      if (p.isDirectory) p.listFiles().map(treeSize).sum else p.length()
-    assert(treeSize(new java.io.File(ckpt)) > 0,
-      "no checkpoint files written under the reliable dir")
-    // every iterative op converges identically on the reliable path
-    val star = Graph.connectedComponentsStar(edges,
-        checkpointDir = Some(ckpt)).as[(Long, Long)].collect().toMap
-    assert(star == cc)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(treeSize(new java.io.File(ckpt)) == 0,
+      "checkpoint files written with no session checkpoint dir")
     val pr = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
     val prLocal = Graph.pageRank(pr, iters = 3)
       .as[(String, Long)].collect().toMap
-    val prReliable = Graph.pageRank(pr, iters = 3,
-        checkpointDir = Some(ckpt)).as[(String, Long)].collect().toMap
-    assert(prReliable == prLocal)
-    val kc = Graph.kCore(edges, k = 2, checkpointDir = Some(ckpt))
-      .as[(Long, Long)].collect().toMap
-    assert(kc == Map(10L -> 2L, 11L -> 2L, 12L -> 2L))
+    withCheckpointDir(ckpt) {
+      val cc = Graph.connectedComponents(edges)
+        .as[(Long, Long)].collect().toMap
+      assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L))
+      assert(cc == ccLocal)
+      // the reliable path really wrote checkpoint blocks to the dir
+      assert(treeSize(new java.io.File(ckpt)) > 0,
+        "no checkpoint files written under the reliable dir")
+      // every iterative op converges identically on the reliable path
+      val star = Graph.connectedComponentsStar(edges)
+        .as[(Long, Long)].collect().toMap
+      assert(star == cc)
+      val prReliable = Graph.pageRank(pr, iters = 3)
+        .as[(String, Long)].collect().toMap
+      assert(prReliable == prLocal)
+      val kc = Graph.kCore(edges, k = 2)
+        .as[(Long, Long)].collect().toMap
+      assert(kc == Map(10L -> 2L, 11L -> 2L, 12L -> 2L))
+    }
   }
 
   test("non-convergence fails loudly rather than returning bad labels") {
@@ -412,10 +433,13 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
     val local = Graph.shortestPaths(edges, Seq(1L).toDF("id"))
       .as[(Long, Long)].collect().toMap
-    val reliable = Graph.shortestPaths(edges, Seq(1L).toDF("id"),
-        checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
+    val reliable = withCheckpointDir(dir) {
+      Graph.shortestPaths(edges, Seq(1L).toDF("id"))
+        .as[(Long, Long)].collect().toMap
+    }
     assert(local == reliable)
+    assert(treeSize(new java.io.File(dir)) > 0,
+      "no checkpoint files written under the reliable dir")
   }
 
   test("labelPropagation: two cliques joined by a bridge separate") {
