@@ -41,13 +41,9 @@ object Bench {
     // optional arg: comma-separated name filter (local iteration only;
     // the driver always runs the full list). Unknown names fail loudly —
     // a typo must not produce an empty-but-green run.
-    val names = if (args.nonEmpty) {
-      val only = args(0).split(",").toSet
-      val unknown = only -- SparkEntry.benchQueries.toSet
-      require(unknown.isEmpty,
-        s"unknown bench queries: ${unknown.mkString(", ")}")
-      SparkEntry.benchQueries.filter(only.contains)
-    } else SparkEntry.benchQueries
+    val names =
+      if (args.nonEmpty) SparkEntry.select(SparkEntry.benchQueries, args(0), "bench")
+      else SparkEntry.benchQueries
     val results = names.map { n =>
       val first = Seq(runOnce(n), runOnce(n), runOnce(n))
       // contention screen: when the median exceeds its own min by >2x,

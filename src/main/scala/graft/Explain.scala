@@ -10,7 +10,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Sessions.local()
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchQueries
+    val names =
+      if (args.nonEmpty) SparkEntry.select(SparkEntry.queries.keys.toSeq, args.mkString(","))
+      else SparkEntry.benchQueries
     names.foreach { n =>
       println(s"\n========== $n ==========")
       println(SparkEntry.queries(n)(spark, sfDir)

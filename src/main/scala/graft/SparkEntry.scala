@@ -31,6 +31,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** The names of `pool` selected by `filter` (comma-separated query
+    * names), in pool order. Every filter name must be in the pool, so
+    * a typo fails loudly instead of producing an empty-but-green run;
+    * `kind` qualifies the pool in the message ("bench" → "unknown bench
+    * queries: …"). */
+  def select(pool: Seq[String], filter: String,
+      kind: String = ""): Seq[String] = {
+    val only = filter.split(",").toSet
+    val unknown = only -- pool
+    require(unknown.isEmpty,
+      s"unknown ${if (kind.isEmpty) "" else kind + " "}queries: " +
+        unknown.toSeq.sorted.mkString(", "))
+    pool.filter(only.contains)
+  }
+
   /** Every query's plan builder, iterated in name order. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     TreeMap(specs.map(q => q.name -> q.build): _*)

@@ -14,9 +14,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name filter (local iteration)
+    // optional 3rd arg: comma-separated name filter (local iteration);
+    // an unknown name fails before anything is written
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2)
+        Some(SparkEntry.select(SparkEntry.queries.keys.toSeq, args(2)).toSet)
+      else None
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

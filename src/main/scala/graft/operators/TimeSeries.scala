@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import Recurrences.requirePpm
 
 /** Time-series regularization: resample irregular event times onto a
   * fixed grid (gap rows included) and carry observations forward —
@@ -510,41 +512,6 @@ object TimeSeries {
     rows.toDF("lag", "pacf_micros")
   }
 
-  /** AR(p) fit + h-step forecast + residual whiteness — the member
-    * that makes the classical-TS family actionable: [[autocorrelation]]
-    * profiles the memory, [[pacf]] picks the order, this CLOSES the
-    * loop by fitting the AR(p) model (Yule–Walker via the same
-    * Durbin–Levinson recursion — the order-p row of [[pacf]]'s
-    * triangle IS the coefficient vector), forecasting `horizon` steps,
-    * and testing the in-sample residuals with the Ljung–Box
-    * portmanteau (df = lbLags − p): "fit, predict, and check there is
-    * nothing left to model" in one operator.
-    *
-    * Exactness contract (every output replayable value-for-value):
-    *  - φ comes from the QUANTIZED acf (`acf_micros/10⁶` — both
-    *    engines start from bit-identical doubles) through the fixed
-    *    ascending-j Durbin–Levinson order, then quantizes to micro
-    *    units `φM_j = round(φ_j·10⁶)`.
-    *  - Work happens on the integer-centered series `y_t = n·x_t − s`
-    *    (exact mean-zero without a division). Residuals are
-    *    `e_t = (10⁶·y_t − Σ φM_j·y_{t−j}) div 10⁶` — pure long
-    *    multiply + truncating division.
-    *  - The h-step forecast folds the SAME integer recurrence over
-    *    the last p values (predicted values feed later steps), and
-    *    maps back to x-scale via `(10⁶·(ŷ+s)) div n`.
-    *  - Residual whiteness reuses [[autocorrelation]] on the residual
-    *    series + the ts_ljung_box Q tree; the verdict compares
-    *    q_micros against the chi²(lbLags − p) 5 % critical value as
-    *    an integer.
-    * Loud guards: series shorter than p + lbLags + 1, any NULL acf in
-    * lags 1..p, or a degenerate Yule–Walker denominator fail fast.
-    *
-    * SIDE-EFFECTING: the lag-scale acf collect and the p-row tail
-    * collect run eagerly at construction.
-    *
-    * Scale: rides [[autocorrelation]]'s one materialized pass (the
-    * only row-scale work); the fit itself touches ≤ p doubles and the
-    * forecast ≤ p + horizon longs on the driver. */
   /** Yule–Walker fit shared by [[arForecast]] / [[arimaForecast]] /
     * [[arimaVsAr]] — the exact stages previously inlined in
     * arForecast, moved verbatim: 1-row stats, quantized acf at lags
@@ -604,6 +571,99 @@ object TimeSeries {
     (y, resid)
   }
 
+  /** The AR family's indexed series (__i = 1-based position in
+    * `orderExpr` order, __x = value as long; NULL values dropped),
+    * lineage-truncated — every consumer scans it more than once. */
+  private def indexedSeries(df: DataFrame, orderExpr: Column,
+      valueExpr: Column): DataFrame =
+    df.select(orderExpr.as("__o"), valueExpr.cast("long").as("__x"))
+      .filter(col("__x").isNotNull)
+      .withColumn("__i", row_number().over(
+        Window.orderBy(col("__o"))).cast("long"))
+      .select(col("__i"), col("__x"))
+      .localCheckpoint(true)
+
+  /** The lag-`lagN` differences `x_i − x_{i−lagN}` of an indexed
+    * series, as an indexed series (__i, __x) from i = lagN + 1 on. */
+  private def diffSeries(base: DataFrame, lagN: Int): DataFrame = base
+    .withColumn("__d",
+      col("__x") - lag(col("__x"), lagN).over(Window.orderBy(col("__i"))))
+    .filter(col("__d").isNotNull)
+    .select(col("__i"), col("__d").as("__x"))
+
+  /** One candidate of the AR / ARIMA / SARIMA comparison: the
+    * Yule–Walker fit on `series` and its in-sample one-step MAE on the
+    * level scale — ONE truncating DECIMAL division
+    * `Σ|e| · 10⁶ div (m · n)` (residuals live on the n-times-centered
+    * scale). Returns (n, 1 row of (mName, maeName)). SIDE-EFFECTING
+    * (the fit's stats + acf collects). */
+  private def candidateMae(series: DataFrame, p: Int, minBeyondP: Int,
+      needText: String, mName: String,
+      maeName: String): (Long, DataFrame) = {
+    val (n, s, phiM) = fitArPhiMicros(series, p, minBeyondP, needText)
+    val (_, resid) = arResiduals(series, n, s, phiM, p)
+    (n, resid.agg(count(lit(1)).cast("bigint").as(mName),
+      expr(s"CAST(CAST(sum(abs(__e)) AS DECIMAL(38,0)) * 1000000" +
+        s" div (count(*) * ${n}L) AS BIGINT)").as(maeName)))
+  }
+
+  /** The AR-on-levels and ARIMA(p,1,0)-on-differences candidates
+    * [[arimaVsAr]] and [[modelSelect]] share. Returns the indexed
+    * levels (for further diff series), n_levels, n_diffs, and one row
+    * of (__ml, mae_ar_micros, __md, mae_arima_micros). */
+  private def arAndArimaMae(df: DataFrame, orderExpr: Column,
+      valueExpr: Column, p: Int): (DataFrame, Long, Long, DataFrame) = {
+    val base = indexedSeries(df, orderExpr, valueExpr) // fits + diff scans
+    val (nl, maeL) = candidateMae(base, p, minBeyondP = 2,
+      s"AR($p) on the levels plus a comparison window", "__ml",
+      "mae_ar_micros")
+    val diffs = diffSeries(base, 1)
+      .localCheckpoint(true) // diff fit + resid consumer
+    val (nd, maeD) = candidateMae(diffs, p, minBeyondP = 1,
+      s"AR($p) on the differences", "__md", "mae_arima_micros")
+    (base, nl, nd, maeL.crossJoin(maeD)) // 1x1 rows
+  }
+
+  /** `num · 10⁶ div den` as a BIGINT ratio in ppm, NULL when den is 0. */
+  private def ratioPpm(num: String, den: String): Column =
+    expr(s"CAST(CAST($num AS DECIMAL(38,0)) * 1000000" +
+      s" div nullif($den, 0) AS BIGINT)")
+
+  /** AR(p) fit + h-step forecast + residual whiteness — the member
+    * that makes the classical-TS family actionable: [[autocorrelation]]
+    * profiles the memory, [[pacf]] picks the order, this CLOSES the
+    * loop by fitting the AR(p) model (Yule–Walker via the same
+    * Durbin–Levinson recursion — the order-p row of [[pacf]]'s
+    * triangle IS the coefficient vector), forecasting `horizon` steps,
+    * and testing the in-sample residuals with the Ljung–Box
+    * portmanteau (df = lbLags − p): "fit, predict, and check there is
+    * nothing left to model" in one operator.
+    *
+    * Exactness contract (every output replayable value-for-value):
+    *  - φ comes from the QUANTIZED acf (`acf_micros/10⁶` — both
+    *    engines start from bit-identical doubles) through the fixed
+    *    ascending-j Durbin–Levinson order, then quantizes to micro
+    *    units `φM_j = round(φ_j·10⁶)`.
+    *  - Work happens on the integer-centered series `y_t = n·x_t − s`
+    *    (exact mean-zero without a division). Residuals are
+    *    `e_t = (10⁶·y_t − Σ φM_j·y_{t−j}) div 10⁶` — pure long
+    *    multiply + truncating division.
+    *  - The h-step forecast folds the SAME integer recurrence over
+    *    the last p values (predicted values feed later steps), and
+    *    maps back to x-scale via `(10⁶·(ŷ+s)) div n`.
+    *  - Residual whiteness reuses [[autocorrelation]] on the residual
+    *    series + the ts_ljung_box Q tree; the verdict compares
+    *    q_micros against the chi²(lbLags − p) 5 % critical value as
+    *    an integer.
+    * Loud guards: series shorter than p + lbLags + 1, any NULL acf in
+    * lags 1..p, or a degenerate Yule–Walker denominator fail fast.
+    *
+    * SIDE-EFFECTING: the lag-scale acf collect and the p-row tail
+    * collect run eagerly at construction.
+    *
+    * Scale: rides [[autocorrelation]]'s one materialized pass (the
+    * only row-scale work); the fit itself touches ≤ p doubles and the
+    * forecast ≤ p + horizon longs on the driver. */
   def arForecast(df: DataFrame, orderExpr: Column, valueExpr: Column,
       p: Int = 3, horizon: Int = 12, lbLags: Int = 12,
       chi2CritMicros: Long = 16919000L): DataFrame = {
@@ -615,13 +675,7 @@ object TimeSeries {
         s"(got lbLags=$lbLags, p=$p)")
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .withColumn("__i", row_number().over(
-        Window.orderBy(col("__o"))).cast("long"))
-      .select(col("__i"), col("__x"))
-      .localCheckpoint(true)
+    val base = indexedSeries(df, orderExpr, valueExpr)
     val (n, s, phiM) = fitArPhiMicros(base, p, minBeyondP = lbLags,
       needText = s"AR($p) and test $lbLags residual lags")
     val (y, resid) = arResiduals(base, n, s, phiM, p)
@@ -688,13 +742,8 @@ object TimeSeries {
   def arimaForecast(df: DataFrame, orderExpr: Column, valueExpr: Column,
       p: Int = 3, horizon: Int = 12, lbLags: Int = 12,
       chi2CritMicros: Long = 16919000L): DataFrame = {
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .withColumn("__i", row_number().over(
-        Window.orderBy(col("__o"))).cast("long"))
-      .select(col("__i"), col("__x"))
-      .localCheckpoint(true) // diff scan + last-level lookup
+    // consumers: the diff scan + the last-level lookup
+    val base = indexedSeries(df, orderExpr, valueExpr)
     val lastRow = base.agg(count(lit(1)),
       max_by(col("__x"), col("__i"))).head() // 1-row model-scale lookup
     val n = lastRow.getLong(0)
@@ -706,13 +755,8 @@ object TimeSeries {
       s"arimaForecast: |last level| ${math.abs(xn)} exceeds the " +
         "overflow-safe bound 9e12 for the 10⁶·xₙ integration base — " +
         "quantize the series coarser")
-    val diffs = base
-      .withColumn("__d",
-        col("__x") - lag(col("__x"), 1).over(Window.orderBy(col("__i"))))
-      .filter(col("__d").isNotNull)
-      .select(col("__i"), col("__d"))
-    val fc = arForecast(diffs, col("__i"), col("__d"), p, horizon,
-      lbLags, chi2CritMicros)
+    val fc = arForecast(diffSeries(base, 1), col("__i"), col("__x"), p,
+      horizon, lbLags, chi2CritMicros)
     val wCum = Window.orderBy(col("step"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val phiCols = (1 to p).map(j => col(s"phi${j}_micros"))
@@ -750,37 +794,12 @@ object TimeSeries {
   def arimaVsAr(df: DataFrame, orderExpr: Column, valueExpr: Column,
       p: Int = 3): DataFrame = {
     require(p >= 1 && p <= 10, s"p must be in [1, 10] (got $p)")
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .withColumn("__i", row_number().over(
-        Window.orderBy(col("__o"))).cast("long"))
-      .select(col("__i"), col("__x"))
-      .localCheckpoint(true) // level fit + diff scan
-    val (nl, sl, phiL) = fitArPhiMicros(base, p, minBeyondP = 2,
-      needText = s"AR($p) on the levels plus a comparison window")
-    val (_, residL) = arResiduals(base, nl, sl, phiL, p)
-    val diffs = base
-      .withColumn("__d",
-        col("__x") - lag(col("__x"), 1).over(Window.orderBy(col("__i"))))
-      .filter(col("__d").isNotNull)
-      .select(col("__i"), col("__d").as("__x"))
-      .localCheckpoint(true) // diff fit + resid consumer
-    val (nd, sd, phiD) = fitArPhiMicros(diffs, p, minBeyondP = 1,
-      needText = s"AR($p) on the differences")
-    val (_, residD) = arResiduals(diffs, nd, sd, phiD, p)
-    def mae(resid: DataFrame, n: Long, mName: String, maeName: String) =
-      resid.agg(count(lit(1)).cast("bigint").as(mName),
-        expr(s"CAST(CAST(sum(abs(__e)) AS DECIMAL(38,0)) * 1000000" +
-          s" div (count(*) * ${n}L) AS BIGINT)").as(maeName))
-    mae(residL, nl, "__ml", "mae_ar_micros")
-      .crossJoin(mae(residD, nd, "__md", "mae_arima_micros")) // 1x1 rows
-      .select(lit(nl).cast("bigint").as("n_levels"),
+    val (_, nl, nd, maes) = arAndArimaMae(df, orderExpr, valueExpr, p)
+    maes.select(lit(nl).cast("bigint").as("n_levels"),
         lit(nd).cast("bigint").as("n_diffs"),
         lit(p).cast("bigint").as("p"),
         col("mae_ar_micros"), col("mae_arima_micros"),
-        expr("CAST(CAST(mae_arima_micros AS DECIMAL(38,0)) * 1000000" +
-          " div nullif(mae_ar_micros, 0) AS BIGINT)").as("mase_ppm"))
+        ratioPpm("mae_arima_micros", "mae_ar_micros").as("mase_ppm"))
       .withColumn("differencing_wins", col("mase_ppm") < 1000000L)
   }
 
@@ -812,13 +831,8 @@ object TimeSeries {
       chi2CritMicros: Long = 16919000L): DataFrame = {
     require(period >= 2 && period <= 100000,
       s"period must be in [2, 100000] (got $period)")
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .withColumn("__i", row_number().over(
-        Window.orderBy(col("__o"))).cast("long"))
-      .select(col("__i"), col("__x"))
-      .localCheckpoint(true) // diff scan + seasonal-base lookup
+    // consumers: the diff scan + the seasonal-base lookup
+    val base = indexedSeries(df, orderExpr, valueExpr)
     val n = base.count()
     require(n > period,
       s"series has $n points — need more than period=$period to " +
@@ -834,13 +848,8 @@ object TimeSeries {
     }
     val spark = df.sparkSession
     import spark.implicits._
-    val sdiffs = base
-      .withColumn("__d", col("__x") -
-        lag(col("__x"), period).over(Window.orderBy(col("__i"))))
-      .filter(col("__d").isNotNull)
-      .select(col("__i"), col("__d"))
-    val fc = arForecast(sdiffs, col("__i"), col("__d"), p, horizon,
-      lbLags, chi2CritMicros)
+    val fc = arForecast(diffSeries(base, period), col("__i"), col("__x"),
+      p, horizon, lbLags, chi2CritMicros)
     val slots = baseVals.toSeq.toDF("__slot", "__xbase")
     val wSeas = Window.partitionBy(col("__slot")).orderBy(col("step"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -883,37 +892,12 @@ object TimeSeries {
     require(p >= 1 && p <= 10, s"p must be in [1, 10] (got $p)")
     require(period >= 2 && period <= 100000,
       s"period must be in [2, 100000] (got $period)")
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .withColumn("__i", row_number().over(
-        Window.orderBy(col("__o"))).cast("long"))
-      .select(col("__i"), col("__x"))
-      .localCheckpoint(true) // level fit + two diff scans
-    val (nl, sl, phiL) = fitArPhiMicros(base, p, minBeyondP = 2,
-      needText = s"AR($p) on the levels plus a comparison window")
-    val (_, residL) = arResiduals(base, nl, sl, phiL, p)
-    def diffSeries(lagN: Int): DataFrame = base
-      .withColumn("__d", col("__x") -
-        lag(col("__x"), lagN).over(Window.orderBy(col("__i"))))
-      .filter(col("__d").isNotNull)
-      .select(col("__i"), col("__d").as("__x"))
-      .localCheckpoint(true)
-    val diffs = diffSeries(1)
-    val (nd, sd, phiD) = fitArPhiMicros(diffs, p, minBeyondP = 1,
-      needText = s"AR($p) on the differences")
-    val (_, residD) = arResiduals(diffs, nd, sd, phiD, p)
-    val sdiffs = diffSeries(period)
-    val (ns, ss, phiS) = fitArPhiMicros(sdiffs, p, minBeyondP = 1,
-      needText = s"AR($p) on the seasonal differences at $period")
-    val (_, residS) = arResiduals(sdiffs, ns, ss, phiS, p)
-    def mae(resid: DataFrame, n: Long, mName: String, maeName: String) =
-      resid.agg(count(lit(1)).cast("bigint").as(mName),
-        expr(s"CAST(CAST(sum(abs(__e)) AS DECIMAL(38,0)) * 1000000" +
-          s" div (count(*) * ${n}L) AS BIGINT)").as(maeName))
-    mae(residL, nl, "__ml", "mae_ar_micros")
-      .crossJoin(mae(residD, nd, "__md", "mae_arima_micros")) // 1x1
-      .crossJoin(mae(residS, ns, "__ms", "mae_sarima_micros")) // 1x1
+    val (base, nl, nd, maes) = arAndArimaMae(df, orderExpr, valueExpr, p)
+    val (ns, maeS) = candidateMae(
+      diffSeries(base, period).localCheckpoint(true), p, minBeyondP = 1,
+      s"AR($p) on the seasonal differences at $period", "__ms",
+      "mae_sarima_micros")
+    maes.crossJoin(maeS) // 1x1
       .select(lit(nl).cast("bigint").as("n_levels"),
         lit(nd).cast("bigint").as("n_diffs"),
         lit(ns).cast("bigint").as("n_sdiffs"),
@@ -921,11 +905,8 @@ object TimeSeries {
         lit(period).cast("bigint").as("period"),
         col("mae_ar_micros"), col("mae_arima_micros"),
         col("mae_sarima_micros"),
-        expr("CAST(CAST(mae_arima_micros AS DECIMAL(38,0)) * 1000000" +
-          " div nullif(mae_ar_micros, 0) AS BIGINT)")
-          .as("mase_arima_ppm"),
-        expr("CAST(CAST(mae_sarima_micros AS DECIMAL(38,0)) * 1000000" +
-          " div nullif(mae_ar_micros, 0) AS BIGINT)")
+        ratioPpm("mae_arima_micros", "mae_ar_micros").as("mase_arima_ppm"),
+        ratioPpm("mae_sarima_micros", "mae_ar_micros")
           .as("mase_sarima_ppm"))
       .withColumn("best_model",
         when(col("mae_ar_micros") <= col("mae_arima_micros") &&
@@ -933,6 +914,52 @@ object TimeSeries {
           .when(col("mae_arima_micros") <= col("mae_sarima_micros"),
             "arima")
           .otherwise("sarima"))
+  }
+
+  /** The per-key ordered-fold prelude of the Holt, Croston, EWM and
+    * Kalman folds: key as string, order and value as longs, rows with
+    * a NULL order or value (or failing `keep`) dropped, one key
+    * shuffle, and each key's (order, value) points sorted by (order,
+    * value) before `body` folds them. */
+  private def foldByKey[U: Encoder](df: DataFrame, keyCol: String,
+      orderCol: String, valueCol: String, keep: Column*)(
+      body: (String, Array[(Long, Long)]) => Iterator[U]): Dataset[U] = {
+    import df.sparkSession.implicits._
+    df.select(col(keyCol).cast("string").as("k"),
+        col(orderCol).cast("long").as("o"),
+        col(valueCol).cast("long").as("x"))
+      .filter((Seq(col("o").isNotNull, col("x").isNotNull) ++ keep)
+        .reduce(_ && _))
+      .as[(String, Long, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups((k, it) =>
+        body(k, it.map(r => (r._2, r._3)).toArray.sorted))
+  }
+
+  /** The Holt fold of `xs` from the seed l₁ = x₁, b₁ = 0
+    * ([[Recurrences.holt]] per step). At every rolling origin
+    * t ≥ `minTrain` — the state then IS the fit on the prefix x₁..x_t —
+    * it first hands `score(h, t, l + h·b)` each forecast whose actual
+    * x_{t+h} exists (h ≤ `horizon`), then folds x_{t+1}. Returns the
+    * final (level, trend). */
+  private def holtFit(xs: Array[Long], alphaPpm: Long, betaPpm: Long,
+      horizon: Int = 0, minTrain: Int = Int.MaxValue)(
+      score: (Int, Int, Long) => Unit = (_, _, _) => ()): (Long, Long) = {
+    var l = xs(0); var b = 0L
+    var t = 1 // observations consumed; state fits prefix t
+    while (t < xs.length) {
+      if (t >= minTrain) {
+        var h = 1
+        while (h <= horizon && t + h <= xs.length) {
+          score(h, t, l + h * b)
+          h += 1
+        }
+      }
+      val (l2, b2) = Recurrences.holt(l, b, xs(t), alphaPpm, betaPpm)
+      l = l2; b = b2
+      t += 1
+    }
+    (l, b)
   }
 
   /** Holt double-exponential (level + trend) smoothing forecast — the
@@ -956,32 +983,78 @@ object TimeSeries {
   def holtForecast(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L, horizon: Int = 12): DataFrame = {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [0, 1000000] (got $alphaPpm)")
-    require(betaPpm >= 0 && betaPpm <= 1000000L,
-      s"betaPpm must be in [0, 1000000] (got $betaPpm)")
+    requirePpm("alphaPpm", alphaPpm)
+    requirePpm("betaPpm", betaPpm)
     require(horizon >= 1, s"horizon must be >= 1 (got $horizon)")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("x").isNotNull && col("o").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3)).map(_._3)
-        var l = xs.head; var b = 0L
-        xs.tail.foreach { x =>
-          val l2 = (alphaPpm * x + (1000000L - alphaPpm) * (l + b)) / 1000000L
-          b = (betaPpm * (l2 - l) + (1000000L - betaPpm) * b) / 1000000L
-          l = l2
-        }
-        (1 to horizon).iterator.map(h =>
-          (k, xs.size.toLong, l, b, h.toLong, l + h * b))
-      }
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
+      val (l, b) = holtFit(pts.map(_._2), alphaPpm, betaPpm)()
+      (1 to horizon).iterator.map(h =>
+        (k, pts.length.toLong, l, b, h.toLong, l + h * b))
+    }
       .toDF(keyCol, "n_obs", "level_micros", "trend_micros", "step",
         "forecast_micros")
+      .orderBy(col(keyCol), col("step"))
+  }
+
+  /** Holt forecast WITH distribution-free prediction intervals — the
+    * uncertainty [[holtForecast]] refuses to fake: the rolling-origin
+    * errors [[holtBacktest]] scores are exactly the out-of-sample
+    * |forecast − actual| distribution at each horizon, so the
+    * conformal rank rule (`k = ⌈(n_h+1)·cover⌉`-th smallest absolute
+    * error, the [[graft.operators.Features.conformalInterval]]
+    * device) turns them into a per-horizon radius with finite-sample
+    * coverage on exchangeable errors. `forecast ± radius` is the
+    * band a capacity plan can actually consume; horizons whose error
+    * sample is too small for the requested coverage emit nothing (a
+    * row would lie).
+    *
+    * Exactness: the SAME truncating-ppm integer fold as holtForecast
+    * / holtBacktest (one pass collects the per-horizon error
+    * multisets AND the final state); the radius is an order
+    * statistic (a multiset property); lo/hi are integer sums. The
+    * recursive-CTE oracle replays every state, error, rank and
+    * band. Per-key series fit one task (the ts family contract).
+    * Returns (key, step, n_errors, forecast_micros, radius_micros,
+    * lo_micros, hi_micros). */
+  def holtForecastInterval(df: DataFrame, keyCol: String,
+      orderCol: String, valueMicrosCol: String,
+      alphaPpm: Long = 300000L, betaPpm: Long = 100000L,
+      horizon: Int = 6, minTrain: Int = 24,
+      coverPpm: Long = 900000L): DataFrame = {
+    requirePpm("alphaPpm", alphaPpm)
+    requirePpm("betaPpm", betaPpm)
+    require(horizon >= 1, s"horizon must be >= 1 (got $horizon)")
+    require(minTrain >= 2, s"minTrain must be >= 2 (got $minTrain)")
+    require(coverPpm > 0L && coverPpm < 1000000L,
+      s"coverPpm must be in (0, 1e6) (got $coverPpm)")
+    val spark = df.sparkSession
+    import spark.implicits._
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
+      val xs = pts.map(_._2)
+      if (xs.length < 2) Iterator.empty
+      else {
+        val errs = Array.fill(horizon)(
+          scala.collection.mutable.ArrayBuffer.empty[Long])
+        val (l, b) = holtFit(xs, alphaPpm, betaPpm, horizon, minTrain) {
+          (h, t, f) => errs(h - 1) += math.abs(f - xs(t + h - 1))
+        }
+        (1 to horizon).iterator.flatMap { h =>
+          val es = errs(h - 1).sorted
+          val kIdx = ((es.length + 1L) * coverPpm + 999999L) / 1000000L
+          if (kIdx > es.length || es.isEmpty) Iterator.empty
+          else {
+            val radius = es(kIdx.toInt - 1)
+            val f = l + h * b
+            Iterator((k, h.toLong, es.length.toLong, f, radius,
+              f - radius, f + radius))
+          }
+        }
+      }
+    }
+      .toDF(keyCol, "step", "n_errors", "forecast_micros",
+        "radius_micros", "lo_micros", "hi_micros")
       .orderBy(col(keyCol), col("step"))
   }
 
@@ -1008,130 +1081,26 @@ object TimeSeries {
     * Scale: the EWMA/Holt posture — one key shuffle, one per-group
     * ordered fold; the emitted error stream is ≤ n·horizon rows of
     * three fixed-width columns, reduced by one key-scale hash-agg. */
-  /** Holt forecast WITH distribution-free prediction intervals — the
-    * uncertainty [[holtForecast]] refuses to fake: the rolling-origin
-    * errors [[holtBacktest]] scores are exactly the out-of-sample
-    * |forecast − actual| distribution at each horizon, so the
-    * conformal rank rule (`k = ⌈(n_h+1)·cover⌉`-th smallest absolute
-    * error, the [[graft.operators.Features.conformalInterval]]
-    * device) turns them into a per-horizon radius with finite-sample
-    * coverage on exchangeable errors. `forecast ± radius` is the
-    * band a capacity plan can actually consume; horizons whose error
-    * sample is too small for the requested coverage emit nothing (a
-    * row would lie).
-    *
-    * Exactness: the SAME truncating-ppm integer fold as holtForecast
-    * / holtBacktest (one pass collects the per-horizon error
-    * multisets AND the final state); the radius is an order
-    * statistic (a multiset property); lo/hi are integer sums. The
-    * recursive-CTE oracle replays every state, error, rank and
-    * band. Per-key series fit one task (the ts family contract).
-    * Returns (key, step, n_errors, forecast_micros, radius_micros,
-    * lo_micros, hi_micros). */
-  def holtForecastInterval(df: DataFrame, keyCol: String,
-      orderCol: String, valueMicrosCol: String,
-      alphaPpm: Long = 300000L, betaPpm: Long = 100000L,
-      horizon: Int = 6, minTrain: Int = 24,
-      coverPpm: Long = 900000L): DataFrame = {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L, "alphaPpm in [0,1e6]")
-    require(betaPpm >= 0 && betaPpm <= 1000000L, "betaPpm in [0,1e6]")
-    require(horizon >= 1 && minTrain >= 2, "horizon >= 1, minTrain >= 2")
-    require(coverPpm > 0L && coverPpm < 1000000L,
-      s"coverPpm must be in (0, 1e6) (got $coverPpm)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("x").isNotNull && col("o").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3)).map(_._3).toArray
-        if (xs.length < 2) Iterator.empty
-        else {
-          val errs = Array.fill(horizon)(
-            scala.collection.mutable.ArrayBuffer.empty[Long])
-          var l = xs(0); var b = 0L
-          var t = 1
-          while (t < xs.length) {
-            if (t >= minTrain) {
-              var h = 1
-              while (h <= horizon && t + h <= xs.length) {
-                errs(h - 1) += math.abs(l + h * b - xs(t + h - 1))
-                h += 1
-              }
-            }
-            val x = xs(t)
-            val l2 = (alphaPpm * x +
-              (1000000L - alphaPpm) * (l + b)) / 1000000L
-            b = (betaPpm * (l2 - l) + (1000000L - betaPpm) * b) / 1000000L
-            l = l2
-            t += 1
-          }
-          (1 to horizon).iterator.flatMap { h =>
-            val es = errs(h - 1).sorted
-            val kIdx = ((es.length + 1L) * coverPpm + 999999L) / 1000000L
-            if (kIdx > es.length || es.isEmpty) Iterator.empty
-            else {
-              val radius = es(kIdx.toInt - 1)
-              val f = l + h * b
-              Iterator((k, h.toLong, es.length.toLong, f, radius,
-                f - radius, f + radius))
-            }
-          }
-        }
-      }
-      .toDF(keyCol, "step", "n_errors", "forecast_micros",
-        "radius_micros", "lo_micros", "hi_micros")
-      .orderBy(col(keyCol), col("step"))
-  }
-
   def holtBacktest(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L, horizon: Int = 6,
       minTrain: Int = 24): DataFrame = {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [0, 1000000] (got $alphaPpm)")
-    require(betaPpm >= 0 && betaPpm <= 1000000L,
-      s"betaPpm must be in [0, 1000000] (got $betaPpm)")
+    requirePpm("alphaPpm", alphaPpm)
+    requirePpm("betaPpm", betaPpm)
     require(horizon >= 1, s"horizon must be >= 1 (got $horizon)")
     require(minTrain >= 2, s"minTrain must be >= 2 (got $minTrain)")
     val spark = df.sparkSession
     import spark.implicits._
-    val errs = df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("x").isNotNull && col("o").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3)).map(_._3).toArray
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Long, Long)]
-        if (xs.length >= 2) {
-          var l = xs(0); var b = 0L
-          var t = 1 // observations consumed; state fits prefix t
-          while (t < xs.length) {
-            if (t >= minTrain) {
-              var h = 1
-              while (h <= horizon && t + h <= xs.length) {
-                val f = l + h * b
-                out += ((k, math.abs(f - xs(t + h - 1)),
-                  math.abs(xs(t - 1) - xs(t + h - 1))))
-                h += 1
-              }
-            }
-            val x = xs(t)
-            val l2 = (alphaPpm * x +
-              (1000000L - alphaPpm) * (l + b)) / 1000000L
-            b = (betaPpm * (l2 - l) + (1000000L - betaPpm) * b) / 1000000L
-            l = l2
-            t += 1
-          }
-        }
-        out.iterator
+    val errs = foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
+      val xs = pts.map(_._2)
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(String, Long, Long)]
+      holtFit(xs, alphaPpm, betaPpm, horizon, minTrain) { (h, t, f) =>
+        out += ((k, math.abs(f - xs(t + h - 1)),
+          math.abs(xs(t - 1) - xs(t + h - 1))))
       }
+      out.iterator
+    }
       .toDF("k", "__ef", "__en")
     errs.groupBy(col("k"))
       .agg(count(lit(1)).as("n_evals"),
@@ -1177,43 +1146,36 @@ object TimeSeries {
       gammaPpm: Long = 300000L, horizon: Int = 12): DataFrame = {
     require(period >= 2 && period <= 100000,
       s"period must be in [2, 100000] (got $period)")
-    Seq(("alphaPpm", alphaPpm), ("betaPpm", betaPpm),
-      ("gammaPpm", gammaPpm)).foreach { case (n, v) =>
-      require(v >= 0 && v <= 1000000L, s"$n must be in [0, 1000000] (got $v)")
-    }
+    requirePpm("alphaPpm", alphaPpm)
+    requirePpm("betaPpm", betaPpm)
+    requirePpm("gammaPpm", gammaPpm)
     require(horizon >= 1, s"horizon must be >= 1 (got $horizon)")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("x").isNotNull && col("o").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3)).map(_._3)
-        if (xs.size <= period) Iterator.empty
-        else {
-          var l = xs.take(period).sum / period
-          var b = 0L
-          val s = xs.take(period).map(_ - l).toArray
-          var t = period
-          while (t < xs.size) {
-            val slot = t % period
-            val l2 = (alphaPpm * (xs(t) - s(slot)) +
-              (1000000L - alphaPpm) * (l + b)) / 1000000L
-            b = (betaPpm * (l2 - l) + (1000000L - betaPpm) * b) / 1000000L
-            s(slot) = (gammaPpm * (xs(t) - l2) +
-              (1000000L - gammaPpm) * s(slot)) / 1000000L
-            l = l2
-            t += 1
-          }
-          val tn = xs.size
-          (1 to horizon).iterator.map(h =>
-            (k, tn.toLong, l, b, h.toLong,
-              l + h * b + s((tn + h - 1) % period)))
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
+      val xs = pts.map(_._2)
+      if (xs.length <= period) Iterator.empty
+      else {
+        var l = xs.take(period).sum / period
+        var b = 0L
+        val s = xs.take(period).map(_ - l)
+        var t = period
+        while (t < xs.length) {
+          val slot = t % period
+          // the Holt step on the deseasonalized value, then the slot's
+          // seasonal state smooths toward the new deviation
+          val (l2, b2) = Recurrences.holt(l, b, xs(t) - s(slot), alphaPpm,
+            betaPpm)
+          s(slot) = Recurrences.smooth(s(slot), xs(t) - l2, gammaPpm)
+          l = l2; b = b2
+          t += 1
         }
+        val tn = xs.length
+        (1 to horizon).iterator.map(h =>
+          (k, tn.toLong, l, b, h.toLong,
+            l + h * b + s((tn + h - 1) % period)))
       }
+    }
       .toDF(keyCol, "n_obs", "level_micros", "trend_micros", "step",
         "forecast_micros")
       .orderBy(col(keyCol), col("step"))
@@ -1478,61 +1440,50 @@ object TimeSeries {
     * key-scale. */
   def croston(df: DataFrame, keyCol: String, orderCol: String,
       demandCol: String, alphaPpm: Long = 200000L): DataFrame = {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [0, 1000000] (got $alphaPpm)")
+    requirePpm("alphaPpm", alphaPpm)
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(demandCol).cast("long").as("z"))
-      .filter(col("o").isNotNull && col("z").isNotNull && col("z") =!= 0L)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val pts = it.toSeq.sortBy(r => (r._2, r._3))
-        pts.find(_._3 < 0L).foreach { bad =>
-          throw new IllegalArgumentException(
-            s"croston: negative demand ${bad._3} at order ${bad._2} " +
-              s"(key $k) — demand sizes must be non-negative")
-        }
-        // z·10⁶ (and the final rate numerator zState·10⁶) must stay a
-        // long: 9·10⁶ bounds both at < 10¹⁹ for every α — refuse loudly
-        pts.find(_._3 > 9000000L).foreach { bad =>
-          throw new IllegalArgumentException(
-            s"croston: demand ${bad._3} at order ${bad._2} (key $k) " +
-              "exceeds the overflow-safe bound 9000000 — quantize coarser")
-        }
-        if (pts.size < 2) Iterator.empty
-        else {
-          var zState = pts.head._3 * 1000000L
-          var qState = 0L
-          var prevO = pts.head._2
-          var i = 1
-          while (i < pts.size) {
-            val (_, o, z) = pts(i)
-            val q = o - prevO
-            // q = 0 means two demands at one order value (malformed
-            // input — the period axis must be strictly increasing);
-            // q > 9·10⁶ would overflow α·q·10⁶ for α → 10⁶
-            if (q < 1L || q > 9000000L)
-              throw new IllegalArgumentException(
-                s"croston: inter-demand interval $q at order $o " +
-                  s"(key $k) outside [1, 9000000] — orders must be " +
-                  "strictly increasing integers at a sane period scale")
-            qState =
-              if (i == 1) q * 1000000L
-              else (alphaPpm * (q * 1000000L) +
-                (1000000L - alphaPpm) * qState) / 1000000L
-            zState = (alphaPpm * (z * 1000000L) +
-              (1000000L - alphaPpm) * zState) / 1000000L
-            prevO = o
-            i += 1
-          }
-          val rate = zState * 1000000L / qState
-          val sba = rate * (1000000L - alphaPpm / 2L) / 1000000L
-          Iterator.single((k, pts.size.toLong, zState, qState, rate, sba))
-        }
+    foldByKey(df, keyCol, orderCol, demandCol, col("x") =!= 0L) {
+      (k, pts) =>
+      pts.find(_._2 < 0L).foreach { bad =>
+        throw new IllegalArgumentException(
+          s"croston: negative demand ${bad._2} at order ${bad._1} " +
+            s"(key $k) — demand sizes must be non-negative")
       }
+      // z·10⁶ (and the final rate numerator zState·10⁶) must stay a
+      // long: 9·10⁶ bounds both at < 10¹⁹ for every α — refuse loudly
+      pts.find(_._2 > 9000000L).foreach { bad =>
+        throw new IllegalArgumentException(
+          s"croston: demand ${bad._2} at order ${bad._1} (key $k) " +
+            "exceeds the overflow-safe bound 9000000 — quantize coarser")
+      }
+      if (pts.length < 2) Iterator.empty
+      else {
+        var zState = pts(0)._2 * 1000000L
+        var qState = 0L
+        var i = 1
+        while (i < pts.length) {
+          val (o, z) = pts(i)
+          val q = o - pts(i - 1)._1
+          // q = 0 means two demands at one order value (malformed
+          // input — the period axis must be strictly increasing);
+          // q > 9·10⁶ would overflow α·q·10⁶ for α → 10⁶
+          if (q < 1L || q > 9000000L)
+            throw new IllegalArgumentException(
+              s"croston: inter-demand interval $q at order $o " +
+                s"(key $k) outside [1, 9000000] — orders must be " +
+                "strictly increasing integers at a sane period scale")
+          qState =
+            if (i == 1) q * 1000000L
+            else Recurrences.smooth(qState, q * 1000000L, alphaPpm)
+          zState = Recurrences.smooth(zState, z * 1000000L, alphaPpm)
+          i += 1
+        }
+        val rate = zState * 1000000L / qState
+        val sba = rate * (1000000L - alphaPpm / 2L) / 1000000L
+        Iterator.single((k, pts.length.toLong, zState, qState, rate, sba))
+      }
+    }
       .toDF(keyCol, "n_demands", "size_micros", "interval_micros",
         "croston_micros", "sba_micros")
       .orderBy(col(keyCol))
@@ -1565,42 +1516,35 @@ object TimeSeries {
     * fold (the EWMA posture); output is row-scale fixed-width. */
   def ewmVolatility(df: DataFrame, keyCol: String, orderCol: String,
       valueCol: String, lambdaPpm: Long = 940000L): DataFrame = {
-    require(lambdaPpm >= 0 && lambdaPpm <= 1000000L,
-      s"lambdaPpm must be in [0, 1000000] (got $lambdaPpm)")
+    requirePpm("lambdaPpm", lambdaPpm)
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueCol).cast("long").as("x"))
-      .filter(col("o").isNotNull && col("x").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3))
-        if (xs.isEmpty) Iterator.empty
-        else {
-          var v = 0L
-          var prev = xs.head._3
-          var first = true
-          xs.iterator.map { case (_, o, x) =>
-            val r = if (first) 0L else x - prev
-            if (math.abs(r) > 3000L)
-              throw new IllegalArgumentException(
-                s"ewmVolatility: |delta| ${math.abs(r)} at order $o " +
-                  s"(key $k) exceeds the overflow-safe bound 3000 — " +
-                  "quantize the series coarser")
-            if (!first)
-              v = (lambdaPpm * v +
-                (1000000L - lambdaPpm) * (r * r * 1000000L)) / 1000000L
-            first = false
-            prev = x
-            val sigma = math.round(math.sqrt(v.toDouble / 1e6) * 1e6)
-            (k, o, x, r, v, sigma)
-          }
-        }
+    foldByKey(df, keyCol, orderCol, valueCol) { (k, pts) =>
+      var v = 0L
+      var prev = pts(0)._2
+      var first = true
+      pts.iterator.map { case (o, x) =>
+        val r = if (first) 0L else x - prev
+        if (!first)
+          v = Recurrences.ewmVar(v, r, lambdaPpm, "ewmVolatility",
+            s" at order $o (key $k)")
+        first = false
+        prev = x
+        (k, o, x, r, v, Recurrences.sigma(v))
       }
+    }
       .toDF(keyCol, "o", "x", "ret", "var_micros", "sigma_micros")
       .orderBy(col(keyCol), col("o"))
+  }
+
+  /** The Kalman filters' entry bound: Q, R > 0 and Q + R ≤ 9·10¹²,
+    * which keeps every P⁻·10⁶ inside a long (P never exceeds R + Q). */
+  private def requireKalmanVars(qMicros: Long, rMicros: Long): Unit = {
+    require(qMicros > 0L, s"qMicros must be > 0 (got $qMicros)")
+    require(rMicros > 0L, s"rMicros must be > 0 (got $rMicros)")
+    require(qMicros + rMicros <= Recurrences.Bound,
+      s"qMicros + rMicros must be <= 9e12 so the gain's P⁻·10⁶ " +
+        s"numerator stays inside a long (got ${qMicros + rMicros})")
   }
 
   /** Kalman LOCAL-LEVEL filter — the state-space member the classical
@@ -1641,46 +1585,26 @@ object TimeSeries {
   def kalmanLocalLevel(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
-    require(qMicros > 0L, s"qMicros must be > 0 (got $qMicros)")
-    require(rMicros > 0L, s"rMicros must be > 0 (got $rMicros)")
-    require(qMicros + rMicros <= 9000000000000L,
-      s"qMicros + rMicros must be <= 9e12 so the gain's P⁻·10⁶ " +
-        s"numerator stays inside a long (got ${qMicros + rMicros})")
+    requireKalmanVars(qMicros, rMicros)
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("o").isNotNull && col("x").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3))
-        if (xs.isEmpty) Iterator.empty
-        else {
-          var l = xs.head._3
-          var p = rMicros
-          var first = true
-          xs.iterator.map { case (_, o, x) =>
-            if (first) {
-              first = false
-              (k, o, x, 0L, 0L, l, p)
-            } else {
-              val pp = p + qMicros // <= R + Q by induction: P_t <= P⁻
-              val gain = pp * 1000000L / (pp + rMicros)
-              val e = x - l
-              if (math.abs(e) > 9000000000000L)
-                throw new IllegalArgumentException(
-                  s"kalmanLocalLevel: |innovation| ${math.abs(e)} at " +
-                    s"order $o (key $k) exceeds the overflow-safe " +
-                    "bound 9e12 — quantize the series coarser")
-              l = l + gain * e / 1000000L
-              p = pp * (1000000L - gain) / 1000000L
-              (k, o, x, e, gain, l, p)
-            }
-          }
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
+      var l = pts(0)._2
+      var p = rMicros
+      var first = true
+      pts.iterator.map { case (o, x) =>
+        if (first) {
+          first = false
+          (k, o, x, 0L, 0L, l, p)
+        } else {
+          // P⁻ = P + Q <= R + Q by induction (P_t <= P⁻), bounded at entry
+          val (e, gain, l2, p2) = Recurrences.kalman(l, p, x, qMicros,
+            rMicros, "kalmanLocalLevel", s" at order $o (key $k)")
+          l = l2; p = p2
+          (k, o, x, e, gain, l, p)
         }
       }
+    }
       .toDF(keyCol, "o", "x", "innovation_micros", "gain_ppm",
         "level_micros", "p_micros")
       .orderBy(col(keyCol), col("o"))
@@ -1712,85 +1636,55 @@ object TimeSeries {
       qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
     require(step > 0L, s"step must be > 0 (got $step)")
-    require(qMicros > 0L, s"qMicros must be > 0 (got $qMicros)")
-    require(rMicros > 0L, s"rMicros must be > 0 (got $rMicros)")
-    require(qMicros + rMicros <= 9000000000000L,
-      s"qMicros + rMicros must be <= 9e12 so the gain's P⁻·10⁶ " +
-        s"numerator stays inside a long (got ${qMicros + rMicros})")
+    requireKalmanVars(qMicros, rMicros)
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("o").isNotNull && col("x").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val obs = it.toSeq.sortBy(_._2)
-        if (obs.isEmpty) Iterator.empty
-        else {
-          val byO = scala.collection.mutable.LongMap.empty[Long]
-          obs.foreach { r =>
-            require(!byO.contains(r._2),
-              s"kalmanLocalLevelGaps: duplicate order ${r._2} (key $k)" +
-                " — the grid needs one value per point")
-            byO(r._2) = r._3
-          }
-          val (lo, hi) = (obs.head._2, obs.last._2)
-          obs.foreach { r =>
-            require((r._2 - lo) % step == 0,
-              s"kalmanLocalLevelGaps: order ${r._2} (key $k) is off " +
-                s"the $step-grid anchored at $lo — aggregate to the " +
-                "grid cadence first")
-          }
-          val nPoints = (hi - lo) / step + 1
-          require(nPoints <= 500000L,
-            s"kalmanLocalLevelGaps: $nPoints grid points (key $k) " +
-              "exceed the 500k in-memory fold guard — coarsen the grid")
-          var l = obs.head._3
-          var p = rMicros
-          var first = true
-          (0L until nPoints).iterator.map { j =>
-            val o = lo + j * step
-            val xOpt = byO.get(o)
-            if (first) {
-              first = false
-              (k, o, xOpt, true, Option(0L), Option(0L), l, p)
-            } else if (xOpt.isEmpty) {
-              p = p + qMicros // predict-only: uncertainty accumulates
-              if (p > 9000000000000L)
-                throw new IllegalArgumentException(
-                  s"kalmanLocalLevelGaps: predicted variance $p at " +
-                    s"order $o (key $k) exceeds the overflow-safe " +
-                    "bound 9e12 after a long gap — coarsen the grid " +
-                    "or lower qMicros")
-              (k, o, Option.empty[Long], false, Option.empty[Long],
-                Option.empty[Long], l, p)
-            } else {
-              val pp = p + qMicros
-              // the predict-only guard bounds p at 9e12 but this step
-              // adds one more Q on top — guard pp itself before the
-              // gain's pp·10⁶ multiply, same discipline as above
-              if (pp > 9000000000000L)
-                throw new IllegalArgumentException(
-                  s"kalmanLocalLevelGaps: predicted variance $pp at " +
-                    s"order $o (key $k) exceeds the overflow-safe " +
-                    "bound 9e12 after a long gap — coarsen the grid " +
-                    "or lower qMicros")
-              val gain = pp * 1000000L / (pp + rMicros)
-              val e = xOpt.get - l
-              if (math.abs(e) > 9000000000000L)
-                throw new IllegalArgumentException(
-                  s"kalmanLocalLevelGaps: |innovation| ${math.abs(e)} " +
-                    s"at order $o (key $k) exceeds the overflow-safe " +
-                    "bound 9e12 — quantize the series coarser")
-              l = l + gain * e / 1000000L
-              p = pp * (1000000L - gain) / 1000000L
-              (k, o, xOpt, true, Option(e), Option(gain), l, p)
-            }
-          }
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, obs) =>
+      val byO = scala.collection.mutable.LongMap.empty[Long]
+      obs.foreach { case (o, x) =>
+        require(!byO.contains(o),
+          s"kalmanLocalLevelGaps: duplicate order $o (key $k)" +
+            " — the grid needs one value per point")
+        byO(o) = x
+      }
+      val (lo, hi) = (obs.head._1, obs.last._1)
+      obs.foreach { case (o, _) =>
+        require((o - lo) % step == 0,
+          s"kalmanLocalLevelGaps: order $o (key $k) is off " +
+            s"the $step-grid anchored at $lo — aggregate to the " +
+            "grid cadence first")
+      }
+      val nPoints = (hi - lo) / step + 1
+      require(nPoints <= 500000L,
+        s"kalmanLocalLevelGaps: $nPoints grid points (key $k) " +
+          "exceed the 500k in-memory fold guard — coarsen the grid")
+      var l = obs.head._2
+      var p = rMicros
+      var first = true
+      (0L until nPoints).iterator.map { j =>
+        val o = lo + j * step
+        val xOpt = byO.get(o)
+        def where = s" at order $o (key $k)"
+        // a gap lets P + Q grow past the entry bound on Q + R, so it is
+        // guarded on every step after the seed
+        def predicted = Recurrences.kalmanPredict(p, qMicros,
+          "kalmanLocalLevelGaps", where, "qMicros")
+        if (first) {
+          first = false
+          (k, o, xOpt, true, Option(0L), Option(0L), l, p)
+        } else if (xOpt.isEmpty) {
+          p = predicted // predict-only: uncertainty accumulates
+          (k, o, Option.empty[Long], false, Option.empty[Long],
+            Option.empty[Long], l, p)
+        } else {
+          predicted // guarded before the gain's P⁻·10⁶ multiply
+          val (e, gain, l2, p2) = Recurrences.kalman(l, p, xOpt.get,
+            qMicros, rMicros, "kalmanLocalLevelGaps", where)
+          l = l2; p = p2
+          (k, o, xOpt, true, Option(e), Option(gain), l, p)
         }
       }
+    }
       .toDF(keyCol, "o", "x", "observed", "innovation_micros",
         "gain_ppm", "level_micros", "p_micros")
       .orderBy(col(keyCol), col("o"))
@@ -1822,71 +1716,48 @@ object TimeSeries {
   def kalmanSmooth(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
-    require(qMicros > 0L, s"qMicros must be > 0 (got $qMicros)")
-    require(rMicros > 0L, s"rMicros must be > 0 (got $rMicros)")
-    require(qMicros + rMicros <= 9000000000000L,
-      s"qMicros + rMicros must be <= 9e12 so the gain's P⁻·10⁶ " +
-        s"numerator stays inside a long (got ${qMicros + rMicros})")
+    requireKalmanVars(qMicros, rMicros)
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("string").as("k"),
-        col(orderCol).cast("long").as("o"),
-        col(valueMicrosCol).cast("long").as("x"))
-      .filter(col("o").isNotNull && col("x").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val xs = it.toSeq.sortBy(r => (r._2, r._3)).toArray
-        if (xs.isEmpty) Iterator.empty
-        else {
-          val n = xs.length
-          val ls = new Array[Long](n)
-          val ps = new Array[Long](n)
-          var l = xs(0)._3
-          var p = rMicros
-          ls(0) = l; ps(0) = p
-          var t = 1
-          while (t < n) {
-            val pp = p + qMicros
-            val gain = pp * 1000000L / (pp + rMicros)
-            val e = xs(t)._3 - l
-            if (math.abs(e) > 9000000000000L)
-              throw new IllegalArgumentException(
-                s"kalmanSmooth: |innovation| ${math.abs(e)} at order " +
-                  s"${xs(t)._2} (key $k) exceeds the overflow-safe " +
-                  "bound 9e12 — quantize the series coarser")
-            l = l + gain * e / 1000000L
-            p = pp * (1000000L - gain) / 1000000L
-            ls(t) = l; ps(t) = p
-            t += 1
-          }
-          val sm = new Array[Long](n)
-          val cs = new Array[Long](n)
-          sm(n - 1) = ls(n - 1)
-          cs(n - 1) = 0L // no later evidence flows into the last step
-          t = n - 2
-          while (t >= 0) {
-            val c = ps(t) * 1000000L / (ps(t) + qMicros)
-            // the smoothing delta is bounded by the whole-series
-            // spread of filtered levels, not the per-step innovation
-            // guard — a long drifting series could overflow c·delta
-            // where the forward pass stays legal, so guard it here
-            // with the same loud discipline
-            val delta = sm(t + 1) - ls(t)
-            if (math.abs(delta) > 9000000000000L)
-              throw new IllegalArgumentException(
-                s"kalmanSmooth: |smoothing delta| ${math.abs(delta)} " +
-                  s"at order ${xs(t)._2} (key $k) exceeds the " +
-                  "overflow-safe bound 9e12 — quantize the series " +
-                  "coarser")
-            sm(t) = ls(t) + c * delta / 1000000L
-            cs(t) = c
-            t -= 1
-          }
-          (0 until n).iterator.map(i =>
-            (k, xs(i)._2, xs(i)._3, ls(i), cs(i), sm(i)))
-        }
+    foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, xs) =>
+      val n = xs.length
+      val ls = new Array[Long](n)
+      val ps = new Array[Long](n)
+      ls(0) = xs(0)._2; ps(0) = rMicros
+      var t = 1
+      while (t < n) {
+        val (o, x) = xs(t)
+        val (_, _, l, p) = Recurrences.kalman(ls(t - 1), ps(t - 1), x,
+          qMicros, rMicros, "kalmanSmooth", s" at order $o (key $k)")
+        ls(t) = l; ps(t) = p
+        t += 1
       }
+      val sm = new Array[Long](n)
+      val cs = new Array[Long](n)
+      sm(n - 1) = ls(n - 1)
+      cs(n - 1) = 0L // no later evidence flows into the last step
+      t = n - 2
+      while (t >= 0) {
+        val c = ps(t) * 1000000L / (ps(t) + qMicros)
+        // the smoothing delta is bounded by the whole-series
+        // spread of filtered levels, not the per-step innovation
+        // guard — a long drifting series could overflow c·delta
+        // where the forward pass stays legal, so guard it here
+        // with the same loud discipline
+        val delta = sm(t + 1) - ls(t)
+        if (math.abs(delta) > Recurrences.Bound)
+          throw new IllegalArgumentException(
+            s"kalmanSmooth: |smoothing delta| ${math.abs(delta)} " +
+              s"at order ${xs(t)._1} (key $k) exceeds the " +
+              "overflow-safe bound 9e12 — quantize the series " +
+              "coarser")
+        sm(t) = ls(t) + c * delta / 1000000L
+        cs(t) = c
+        t -= 1
+      }
+      (0 until n).iterator.map(i =>
+        (k, xs(i)._1, xs(i)._2, ls(i), cs(i), sm(i)))
+    }
       .toDF(keyCol, "o", "x", "level_micros", "c_ppm", "smooth_micros")
       .orderBy(col(keyCol), col("o"))
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Quality
 import graft.streaming.EventStreams
 
-import Shared.{revenue, setsEqual, tmpPath}
+import Shared.{replaySealed, revenue, setsEqual, tmpPath, typedEvents}
 
 /** Event streams in batch form: windows, sessions, funnels, retention,
   * attribution, growth accounting. */
@@ -1260,15 +1260,13 @@ object EventQueries {
     QuerySpec("evt_incidents_replay", (s, dir) => {
       import s.implicits._
       // Replay-identity gate for STREAMING incident grouping: the
-      // evt_cusum_replay protocol (in-window redelivery before the
-      // flush sentinel, sealed redelivery after) over the hourly
+      // replaySealed protocol (in-window redelivery before the flush
+      // sentinel, sealed redelivery after) over the hourly
       // count series, with SEALED per-type median thresholds (the
       // frozen-reference stance — a live monitor can't threshold on
       // a median it hasn't finished seeing). Identity is exact
       // integer equality through the shared fold. GATE-ONLY collect
       // (hour-scale series + a 5-row threshold table).
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val hc = Tables.events(s, dir)
         .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
         .agg(count(lit(1)).as("x"))
@@ -1280,28 +1278,10 @@ object EventQueries {
       val evs = hc.collect().map(r => EventStreams.Event(
         r.getTimestamp(1).getTime / 1000L, r.getTimestamp(1),
         0L, r.getString(0), r.getLong(2).toDouble)).toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L,
-        "__flush", 0.0)
-      val sink = s"incidents_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.incidentsStateful(mem.toDS(), medMap, 7200L)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
       val cols = Seq("event_type", "hour", "x", "incident_id")
-      val stream = s.table(sink).select(cols.map(col): _*)
+      val stream = replaySealed(s, dir, "incidents", evs, flushHours = 3L)(
+          EventStreams.incidentsStateful(_, medMap, 7200L))
+        .select(cols.map(col): _*)
       val batch = EventStreams.incidentHours(evs.toDS(), medMap, 7200L)
         .toDF().select(cols.map(col): _*)
       stream.agg(count(lit(1)).cast("bigint").as("n_alarm_hours"))
@@ -1579,41 +1559,22 @@ object EventQueries {
 
     QuerySpec("evt_attribution_replay", (s, dir) => {
       import s.implicits._
-      // Replay-identity gate for streaming attribution: corpus feeds
-      // a MemoryStream; a slice REDELIVERS while still above the
-      // watermark (the buffer must absorb it by event_id); a
+      // Replay-identity gate for streaming attribution under the
+      // replaySealed protocol: a slice REDELIVERS while still above
+      // the watermark (the buffer must absorb it by event_id); a
       // far-future sentinel seals every conversion; a different slice
       // redelivers after the seal (dropped as stragglers). The sealed
       // per-channel credit totals must equal the batch twin EXACTLY —
       // same integer div/mod arithmetic, same (ts, event_id) touch
       // order. GATE-ONLY collect, same posture as evt_anomaly_replay.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 9L * 3600 * 1000), -1L, "__flush", 0.0)
-      val sink = s"attrib_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.attributionStateful(mem.toDS(),
-          Seq("view", "click", "signup"), "purchase",
-          lookbackSeconds = 21600L)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush: seal everything
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed past
-        q.processAllAvailable()
-      } finally q.stop()
-      val stream = s.table(sink).groupBy($"channel")
+      val evs = typedEvents(s, dir).collect().toSeq
+      // the 9-hour flush clears the 2-hour watermark plus the 6-hour
+      // lookback, sealing every conversion
+      val stream = replaySealed(s, dir, "attrib", evs, flushHours = 9L)(
+          EventStreams.attributionStateful(_,
+            Seq("view", "click", "signup"), "purchase",
+            lookbackSeconds = 21600L))
+        .groupBy($"channel")
         .agg(count(lit(1)).cast("bigint").as("n_touches"),
           sum($"first_micros").cast("bigint").as("first_micros"),
           sum($"last_micros").cast("bigint").as("last_micros"),
@@ -1644,9 +1605,7 @@ object EventQueries {
       // from a real source, never via collect.
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
+      val evs = typedEvents(s, dir).collect().toSeq
       val sink = s"funnel_replay_${math.abs(dir.hashCode)}"
       s.catalog.dropTempView(sink)
       val mem = MemoryStream[EventStreams.Event]
@@ -1708,9 +1667,7 @@ object EventQueries {
       // source, same posture as evt_funnel_stateful_replay.
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
+      val evs = typedEvents(s, dir).collect().toSeq
       val redelivered = evs.filter(_.event_id % 10 == 3)
       val sink = s"dedup_replay_${math.abs(dir.hashCode)}"
       s.catalog.dropTempView(sink)
@@ -1738,8 +1695,8 @@ object EventQueries {
 
     QuerySpec("evt_anomaly_replay", (s, dir) => {
       import s.implicits._
-      // Replay-identity gate for streaming EWMA anomaly scoring: the
-      // corpus feeds a MemoryStream; a tenth is REDELIVERED while its
+      // Replay-identity gate for streaming EWMA anomaly scoring under
+      // the replaySealed protocol: a tenth is REDELIVERED while its
       // events are still ABOVE the watermark (in-window duplicates —
       // the buffer must absorb them by event_id, not fold both
       // copies); then a far-future flush sentinel advances the
@@ -1750,41 +1707,13 @@ object EventQueries {
       // (ts, event_id) order ⇒ identical IEEE doubles, compared at
       // micro-z quantization). GATE-ONLY collect, same posture as
       // evt_dedup_replay.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
-      val redelivered = evs.filter(_.event_id % 10 == 3)
-      val sink = s"anomaly_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.ewmaAnomaliesStateful(mem.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        // in-window redelivery BEFORE the seal: these duplicates are
-        // above the watermark, pass the straggler filter, and must be
-        // absorbed by the buffer's event_id dedup
-        mem.addData(evs.filter(_.event_id % 10 == 7))
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(redelivered) // at-least-once redelivery: sealed past
-        q.processAllAvailable()
-      } finally q.stop()
       def canon(df: DataFrame) = df.select($"event_id",
         round($"zscore" * 1e6).cast("long").as("z_micros"), $"is_anomaly")
-      val stream = canon(s.table(sink))
+      val stream = canon(replaySealed(s, dir, "anomaly",
+        typedEvents(s, dir).collect().toSeq, flushHours = 3L)(
+        EventStreams.ewmaAnomaliesStateful(_)))
       val batch = canon(
-        EventStreams.ewmaAnomalies(Tables.events(s, dir)
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-          .as[EventStreams.Event]).toDF())
+        EventStreams.ewmaAnomalies(typedEvents(s, dir)).toDF())
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))
         .crossJoin(setsEqual(stream, batch,
           Seq("event_id", "z_micros", "is_anomaly"), "stream_equals_batch"))
@@ -1801,44 +1730,21 @@ object EventQueries {
 
     QuerySpec("evt_cusum_replay", (s, dir) => {
       import s.implicits._
-      // Replay-identity gate for streaming CUSUM: same protocol as
-      // evt_anomaly_replay (in-window redelivery BEFORE the flush
+      // Replay-identity gate for streaming CUSUM: the replaySealed
+      // protocol (in-window redelivery BEFORE the flush
       // sentinel, sealed redelivery after), but the identity is pure
       // integer equality — the shared fold is long add/max, no IEEE
       // argument needed. Target sits below the corpus mean so the
       // positive accumulator genuinely alarms. GATE-ONLY collect.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
       val (target, slack, thr) = (45000000L, 1000000L, 200000000L)
-      val sink = s"cusum_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.cusumStateful(mem.toDS(), target, slack, thr)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
       val cols = Seq("event_id", "value_micros", "cusum_pos_micros",
         "cusum_neg_micros", "alarm")
-      val stream = s.table(sink).select(cols.map(col): _*)
-      val batch = EventStreams.cusumEvents(Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event], target, slack, thr)
-        .toDF().select(cols.map(col): _*)
+      val stream = replaySealed(s, dir, "cusum",
+          typedEvents(s, dir).collect().toSeq, flushHours = 3L)(
+          EventStreams.cusumStateful(_, target, slack, thr))
+        .select(cols.map(col): _*)
+      val batch = EventStreams.cusumEvents(typedEvents(s, dir), target,
+        slack, thr).toDF().select(cols.map(col): _*)
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))
         .crossJoin(setsEqual(stream, batch, cols, "stream_equals_batch"))
         .crossJoin(stream.filter($"alarm")
@@ -1851,40 +1757,18 @@ object EventQueries {
 
     QuerySpec("evt_holt_replay", (s, dir) => {
       import s.implicits._
-      // Replay-identity gate for streaming Holt residuals: the same
-      // protocol as evt_cusum_replay (in-window redelivery before the
+      // Replay-identity gate for streaming Holt residuals: the
+      // replaySealed protocol (in-window redelivery before the
       // flush sentinel, sealed redelivery after); identity is exact
       // integer equality through the shared fold. GATE-ONLY collect.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
-      val sink = s"holt_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.holtStateful(mem.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
       val cols = Seq("event_id", "value_micros", "forecast_micros",
         "residual_micros")
-      val stream = s.table(sink).select(cols.map(col): _*)
-      val batch = EventStreams.holtResiduals(Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event]).toDF().select(cols.map(col): _*)
+      val stream = replaySealed(s, dir, "holt",
+          typedEvents(s, dir).collect().toSeq, flushHours = 3L)(
+          EventStreams.holtStateful(_))
+        .select(cols.map(col): _*)
+      val batch = EventStreams.holtResiduals(typedEvents(s, dir)).toDF()
+        .select(cols.map(col): _*)
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))
         .crossJoin(setsEqual(stream, batch, cols, "stream_equals_batch"))
         .crossJoin(stream.agg((coalesce(sum(when($"residual_micros" =!= 0L,
@@ -1897,41 +1781,19 @@ object EventQueries {
 
     QuerySpec("evt_ewm_vol_replay", (s, dir) => {
       import s.implicits._
-      // Replay-identity gate for streaming EWMA volatility: the same
-      // redelivery protocol as evt_holt_replay (in-window duplicate
+      // Replay-identity gate for streaming EWMA volatility: the
+      // replaySealed protocol (in-window duplicate
       // tenth before the flush sentinel, sealed redelivery after);
       // identity is exact through the shared integer fold plus one
       // mirrored sqrt. GATE-ONLY collect.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
-      val sink = s"ewm_vol_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.ewmVolStateful(mem.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
       val cols = Seq("event_id", "x", "ret", "var_micros",
         "sigma_micros")
-      val stream = s.table(sink).select(cols.map(col): _*)
-      val batch = EventStreams.ewmVolResiduals(Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event]).toDF().select(cols.map(col): _*)
+      val stream = replaySealed(s, dir, "ewm_vol",
+          typedEvents(s, dir).collect().toSeq, flushHours = 3L)(
+          EventStreams.ewmVolStateful(_))
+        .select(cols.map(col): _*)
+      val batch = EventStreams.ewmVolResiduals(typedEvents(s, dir)).toDF()
+        .select(cols.map(col): _*)
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))
         .crossJoin(setsEqual(stream, batch, cols, "stream_equals_batch"))
         .crossJoin(stream.agg((coalesce(sum(when($"var_micros" =!= 0L,
@@ -1948,40 +1810,18 @@ object EventQueries {
       import s.implicits._
       // Replay-identity gate for streaming Kalman local-level
       // filtering — the graded batch-replay twin every stateful op
-      // carries: same redelivery protocol as evt_ewm_vol_replay
-      // (in-window duplicate tenth before the flush sentinel, sealed
+      // carries: the replaySealed protocol (in-window duplicate
+      // tenth before the flush sentinel, sealed
       // redelivery after); identity is exact through the shared pure-
       // integer fold. GATE-ONLY collect.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
-      val sink = s"kalman_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.kalmanStateful(mem.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
       val cols = Seq("event_id", "x", "innovation", "gain_ppm",
         "level", "p_var")
-      val stream = s.table(sink).select(cols.map(col): _*)
-      val batch = EventStreams.kalmanResiduals(Tables.events(s, dir)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventStreams.Event]).toDF().select(cols.map(col): _*)
+      val stream = replaySealed(s, dir, "kalman",
+          typedEvents(s, dir).collect().toSeq, flushHours = 3L)(
+          EventStreams.kalmanStateful(_))
+        .select(cols.map(col): _*)
+      val batch = EventStreams.kalmanResiduals(typedEvents(s, dir)).toDF()
+        .select(cols.map(col): _*)
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))
         .crossJoin(setsEqual(stream, batch, cols, "stream_equals_batch"))
         .crossJoin(stream.agg((coalesce(sum(when($"gain_ppm" =!= 0L,
@@ -1999,15 +1839,13 @@ object EventQueries {
       // of the hours dropped (hour-index % 7 == 3, the ts_kalman_gaps
       // fixture) stream through kalmanGapsStateful — silent grid
       // points emit predict-only rows on event-time timeout, variance
-      // growing online — under the usual redelivery protocol
+      // growing online — under the replaySealed protocol
       // (in-window duplicate tenth before the flush sentinel, sealed
       // redelivery after). Sealed rows through each key's last
       // observation must equal the batch twin EXACTLY, gap rows
       // included (NULL innovation/gain coalesced to a sentinel for
       // the set compare — full-outer join keys never match on NULL).
       // GATE-ONLY collect (hourly cadence, group-scale).
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val hourlyDf = Tables.events(s, dir)
         .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
         .agg(count(lit(1)).cast("double").as("value"))
@@ -2015,26 +1853,9 @@ object EventQueries {
         .filter($"hid" % 7 =!= 3)
         .select($"hid".as("event_id"), $"hour".as("ts"),
           lit(0L).as("user_id"), $"event_type", $"value")
-      val evs = hourlyDf.as[EventStreams.Event].collect().toSeq
-      val maxTs = evs.map(_.ts.getTime).max
-      val sentinel = EventStreams.Event(-1L,
-        new java.sql.Timestamp(maxTs + 3L * 3600 * 1000), -1L, "__flush", 0.0)
-      val sink = s"kalman_gaps_replay_${math.abs(dir.hashCode)}"
-      s.catalog.dropTempView(sink)
-      val mem = MemoryStream[EventStreams.Event]
-      val q = EventStreams.kalmanGapsStateful(mem.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        mem.addData(evs)
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 7)) // in-window dup
-        q.processAllAvailable()
-        mem.addData(Seq(sentinel)) // watermark flush
-        q.processAllAvailable()
-        mem.addData(evs.filter(_.event_id % 10 == 3)) // sealed dup
-        q.processAllAvailable()
-      } finally q.stop()
+      val streamed = replaySealed(s, dir, "kalman_gaps",
+        hourlyDf.as[EventStreams.Event].collect().toSeq, flushHours = 3L)(
+        EventStreams.kalmanGapsStateful(_))
       // compare through each key's LAST OBSERVATION: past it the
       // stream honestly keeps predicting (no online operator can know
       // an observation was the last), which the batch form by design
@@ -2052,7 +1873,7 @@ object EventQueries {
           $"level", $"p_var")
       val cols = Seq("event_type", "o", "observed", "event_id", "x",
         "innovation", "gain_ppm", "level", "p_var")
-      val stream = cmp(s.table(sink))
+      val stream = cmp(streamed)
       val batch = cmp(EventStreams.kalmanGapsResiduals(
         hourlyDf.as[EventStreams.Event]).toDF())
       stream.agg(count(lit(1)).cast("bigint").as("n_scored"))

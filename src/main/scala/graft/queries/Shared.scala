@@ -1,11 +1,12 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
 import graft.ml.TextFeatures
+import graft.streaming.EventStreams
 
 /** Helpers shared across the query families: plan fragments used by
   * several queries, the Medicare CSV fixture, and the per-sf-dir
@@ -276,5 +277,52 @@ private[queries] object Shared {
       else trades.select(pair: _*).distinct()
     val w = if (weighted) Seq($"w") else Nil
     cs.union(cs.select(Seq($"dst".as("src"), $"src".as("dst")) ++ w: _*))
+  }
+
+  /** The events table as typed [[EventStreams.Event]]s — the input of
+    * the streaming twins and of their batch forms. */
+  def typedEvents(s: SparkSession, dir: String): Dataset[EventStreams.Event] = {
+    import s.implicits._
+    Tables.events(s, dir)
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      .as[EventStreams.Event]
+  }
+
+  /** The at-least-once replay protocol of the `evt_*_replay` gates:
+    * streams `evs` through the stateful operator `op` from a
+    * MemoryStream into a memory sink and returns the sink table. Each
+    * batch is fully processed before the next:
+    *  1. every event;
+    *  2. the IN-WINDOW duplicates (`event_id % 10 == 7`), still above
+    *     the watermark — the buffer must absorb them by event_id;
+    *  3. a `__flush` sentinel `flushHours` past the newest event,
+    *     which advances the watermark past every event and seals it;
+    *  4. the SEALED duplicates (`event_id % 10 == 3`), now below the
+    *     watermark — stragglers the fold must drop.
+    * GATE-ONLY collect posture: bounded test data feeds the in-memory
+    * source; production streams arrive from a real source. */
+  def replaySealed[T](s: SparkSession, dir: String, tag: String,
+      evs: Seq[EventStreams.Event], flushHours: Long)(
+      op: Dataset[EventStreams.Event] => Dataset[T]): DataFrame = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val maxTs = evs.map(_.ts.getTime).max
+    val sentinel = EventStreams.Event(-1L,
+      new java.sql.Timestamp(maxTs + flushHours * 3600 * 1000), -1L,
+      "__flush", 0.0)
+    val sink = s"${tag}_replay_${math.abs(dir.hashCode)}"
+    s.catalog.dropTempView(sink)
+    val mem = MemoryStream[EventStreams.Event]
+    val q = op(mem.toDS()).writeStream.outputMode("append").format("memory")
+      .queryName(sink).start()
+    try {
+      Seq(evs, evs.filter(_.event_id % 10 == 7), Seq(sentinel),
+        evs.filter(_.event_id % 10 == 3)).foreach { batch =>
+        mem.addData(batch)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    s.table(sink)
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Recurrences
 
 /** Streaming surface over the `events` table (SURVEY.md §2.10; the
   * reference predates Structured Streaming, the north star requires
@@ -459,20 +461,99 @@ object EventStreams extends Serializable {
       .limit(k)
   }
 
+  // ============ per-type sequential folds and their streaming twins ============
+
+  /** Persistent state of a watermark-sealed streaming twin: the fold's
+    * own state plus the unsealed tail (events above the watermark), one
+    * class for every twin [[sealedFold]] runs.
+    *
+    * CHECKPOINT COMPATIBILITY: this class replaced the per-twin buffers
+    * (EwmaBuffer, CusumBuffer, IncBuffer, HoltBuffer, VolBuffer,
+    * KalmanBuffer), whose state field was named after the twin
+    * (`ewma`, `cusum`, `inc`, `holt`, `vol`, `kal`) where this one says
+    * `state`. A query restarted from a checkpoint written before that
+    * change fails to decode its state (state-encoder schema change).
+    * Restart such a query with a FRESH checkpoint (and a replayable
+    * source offset) — the state rebuilds from the stream; there is no
+    * in-place migration. */
+  case class SealedBuffer[S](state: S, buffered: Seq[Event])
+
+  /** The batch form of a twin: one shuffle on `event_type`, each
+    * type's events sorted by (ts, event_id) — the replayable total
+    * order — and folded from `init` by the twin's `fold`.
+    *
+    * Scale: one key shuffle, then a per-group in-memory sort + fold
+    * (`flatMapGroups` — a genuine sequential recurrence has no
+    * windowed-SQL form). Group = one event_type's history: at 100 TB,
+    * key it by (type, shard-date) or a similar bounded episode; the
+    * streaming twin holds the fold state forever in O(1) per key and
+    * never re-sorts history. */
+  private def batchFold[S, O: Encoder](events: Dataset[Event], init: S)(
+      fold: (String, Seq[Event], S) => (S, Seq[O])): Dataset[O] =
+    events.groupByKey(_.event_type)(Encoders.STRING).flatMapGroups {
+      (k, it) =>
+        fold(k, it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)), init)
+          ._2.iterator
+    }
+
+  /** The watermark-sealed streaming form of a twin: events BUFFER per
+    * `event_type` until the event-time watermark seals them (no
+    * earlier event can still arrive), then fold into the persistent
+    * state in (ts, event_id) order — the batch form's order — and emit
+    * exactly once. Per invocation:
+    *  - events arriving BELOW the watermark (true stragglers and
+    *    at-least-once redeliveries — their position in the fold is
+    *    already spoken for) are dropped;
+    *  - an at-least-once redelivery can also arrive while its event is
+    *    still ABOVE the watermark; it would sit in the buffer NEXT TO
+    *    its first copy and fold twice once sealed, so the buffer is
+    *    deduplicated by event_id (first copy wins — duplicates are
+    *    identical payloads under at-least-once semantics);
+    *  - the sealed part folds, the open part stays buffered, and the
+    *    timeout wakes the key when its earliest open event seals.
+    * Both redeliveries are therefore no-ops, and the sealed output
+    * equals [[batchFold]] with the same `fold` over the on-time corpus
+    * — the `evt_*_replay` gates pin it per twin. */
+  private def sealedFold[S, O](events: Dataset[Event], watermark: String,
+      init: S)(fold: (String, Seq[Event], S) => (S, Seq[O]))(
+      implicit bufferEnc: Encoder[SealedBuffer[S]],
+      outEnc: Encoder[O]): Dataset[O] = {
+    def fn(key: String, rows: Iterator[Event],
+        state: GroupState[SealedBuffer[S]]): Iterator[O] = {
+      val prior = state.getOption.getOrElse(SealedBuffer(init, Seq.empty))
+      val wmMs = state.getCurrentWatermarkMs()
+      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
+      val (ripe, open) = (prior.buffered ++ fresh)
+        .distinctBy(_.event_id)
+        .partition(_.ts.getTime <= wmMs)
+      val (st, out) = fold(key,
+        ripe.sortBy(e => (e.ts.getTime, e.event_id)), prior.state)
+      state.update(SealedBuffer(st, open))
+      if (open.nonEmpty)
+        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
+      out.iterator
+    }
+
+    events.withWatermark("ts", watermark)
+      .groupByKey(_.event_type)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(fn)
+  }
+
   // ================== streaming EWMA anomaly scoring ==================
 
   case class EwmaOut(event_type: String, event_id: Long,
       ts: java.sql.Timestamp, value: Double, zscore: Double,
       is_anomaly: Boolean)
   case class EwmaState(mean: Double, variance: Double, n: Long)
-  case class EwmaBuffer(ewma: EwmaState, buffered: Seq[Event])
 
-  /** One EWMA step, SHARED by the batch and streaming forms — replay
-    * identity between them is a property of this function being the
-    * only fold either path runs, over the same (ts, event_id) order:
-    * identical IEEE operations in identical order give bit-identical
-    * doubles. Score first (against the baseline EXCLUDING the current
-    * event — an outlier must not dampen its own z-score), then fold
+  /** One EWMA step of the twin's fold, which [[batchFold]] and
+    * [[sealedFold]] both run — replay identity between the two forms
+    * is a property of this being the only fold either path runs, over
+    * the same (ts, event_id) order: identical IEEE operations in
+    * identical order give bit-identical doubles. Score first (against
+    * the baseline EXCLUDING the current event — an outlier must not
+    * dampen its own z-score), then fold
     * the value in (West 1979's incremental EW variance). The first
     * observation seeds the mean (no phantom zero baseline). */
   private def ewmaStep(s: EwmaState, x: Double, alpha: Double,
@@ -721,7 +802,7 @@ object EventStreams extends Serializable {
     * `watermark − lookback` can serve no future conversion and are
     * dropped; the buffer dedupes by event_id, so at-least-once
     * redeliveries — in-window or sealed — are no-ops (the
-    * [[ewmaAnomaliesStateful]] discipline). Late TOUCHES below the
+    * [[sealedFold]] discipline). Late TOUCHES below the
     * watermark are dropped like any straggler; the sealed output
     * equals the batch twin over the on-time corpus
     * (`evt_attribution_replay` pins the identity). Credits are the
@@ -797,38 +878,26 @@ object EventStreams extends Serializable {
     * mean/variance baseline over events in (ts, event_id) order, each
     * event z-scored against the baseline BEFORE it folds in. The
     * parameters quantize as integers (alpha in ppm, threshold in
-    * hundredths) so a config is engine-portable text.
-    *
-    * Scale: one shuffle on the key, then a per-group in-memory sort +
-    * fold (`flatMapGroups` — genuine sequential recurrence; an EWMA
-    * has no windowed-SQL form). Group = one event_type's history: at
-    * 100 TB, key this by (type, shard-date) or similar bounded
-    * episode; the streaming twin is the form that holds the baseline
-    * forever in O(1) state and never re-sorts history. */
+    * hundredths) so a config is engine-portable text. Runs through
+    * [[batchFold]] (its Scale note applies to every batch twin). */
   def ewmaAnomalies(events: Dataset[Event], alphaPpm: Long = 125000L,
       minN: Long = 10L, thresholdX100: Long = 250L): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
     val alpha = alphaPpm.toDouble / 1e6
     val thr = thresholdX100.toDouble / 100.0
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      foldOrdered(k, evs, EwmaState(0.0, 0.0, 0L), alpha, minN, thr)
-        ._2.iterator
-    }
+    batchFold(events, EwmaState(0.0, 0.0, 0L))(
+      foldOrdered(_, _, _, alpha, minN, thr))
   }
 
   /** Streaming EWMA anomaly scoring — the order-sensitive stateful
-    * op done with watermark discipline: events BUFFER per key until
-    * the event-time watermark seals them (no earlier event can still
-    * arrive), then fold into the baseline in (ts, event_id) order and
-    * emit exactly once. The EWMA baseline itself persists FOREVER in
-    * O(1) state per key (mean, variance, n — three numbers; the
-    * buffer holds only the unsealed tail, bounded by the watermark
-    * delay). Events arriving BELOW the watermark (true stragglers and
-    * at-least-once redeliveries — their position in the fold is
-    * already spoken for) are DROPPED, which is exactly what makes a
-    * redelivered batch a no-op and the sealed output equal
-    * [[ewmaAnomalies]] over the on-time corpus. */
+    * op done with watermark discipline, through [[sealedFold]]: events
+    * buffer per key until the watermark seals them, then fold into the
+    * baseline in (ts, event_id) order and emit exactly once. The EWMA
+    * baseline persists FOREVER in O(1) state per key (mean, variance,
+    * n — three numbers; the buffer holds only the unsealed tail,
+    * bounded by the watermark delay). Sealed output equals
+    * [[ewmaAnomalies]] over the on-time corpus (`evt_anomaly_replay`
+    * pins it with both redelivery windows). */
   def ewmaAnomaliesStateful(events: Dataset[Event],
       alphaPpm: Long = 125000L, minN: Long = 10L,
       thresholdX100: Long = 250L,
@@ -836,48 +905,18 @@ object EventStreams extends Serializable {
     import events.sparkSession.implicits._
     val alpha = alphaPpm.toDouble / 1e6
     val thr = thresholdX100.toDouble / 100.0
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[EwmaBuffer]): Iterator[EwmaOut] = {
-      val prior = state.getOption.getOrElse(
-        EwmaBuffer(EwmaState(0.0, 0.0, 0L), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      // new events already below the watermark are stragglers /
-      // redeliveries: the fold's past — dropped, not re-ordered
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      // an at-least-once redelivery can also arrive while its event is
-      // still ABOVE the watermark — it passes the straggler filter and
-      // would sit in the buffer NEXT TO its first copy, double-folding
-      // into the baseline once sealed. The buffer is therefore
-      // deduplicated by event_id (first copy wins — duplicates are
-      // identical payloads under at-least-once semantics), making an
-      // in-window redelivery as much of a no-op as a sealed one.
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = foldOrdered(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.ewma, alpha, minN, thr)
-      state.update(EwmaBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(events, watermark, EwmaState(0.0, 0.0, 0L))(
+      foldOrdered(_, _, _, alpha, minN, thr))
   }
 
   case class CusumOut(event_type: String, event_id: Long,
       ts: java.sql.Timestamp, value_micros: Long,
       cusum_pos_micros: Long, cusum_neg_micros: Long, alarm: Boolean)
   case class CusumState(sp: Long, sm: Long)
-  case class CusumBuffer(cusum: CusumState, buffered: Seq[Event])
 
-  /** One CUSUM step, SHARED by the batch and streaming forms —
-    * integer arithmetic, so replay identity is exact equality, not an
+  /** One CUSUM step of the fold [[cusumEvents]] and [[cusumStateful]]
+    * both run (through [[batchFold]] / [[sealedFold]]) — integer
+    * arithmetic, so replay identity is exact equality, not an
     * IEEE argument: values quantize to micro-units, both clamped
     * accumulators update with pure long add/max. */
   private def cusumStep(s: CusumState, valueMicros: Long,
@@ -907,27 +946,22 @@ object EventStreams extends Serializable {
     * [[graft.operators.TimeSeries.cusum]]'s series form (same
     * recurrence, same micro-unit config; this one keys the fold on
     * the replayable (ts, event_id) total order so the streaming twin
-    * can match it exactly). One key shuffle, per-group sequential
-    * fold via the SHARED [[cusumStep]] — integer state, exact. */
+    * can match it exactly). [[batchFold]] over [[cusumStep]] — integer
+    * state, exact. */
   def cusumEvents(events: Dataset[Event], targetMicros: Long,
       slackMicros: Long, thresholdMicros: Long): Dataset[CusumOut] = {
     import events.sparkSession.implicits._
     require(slackMicros >= 0, s"slackMicros must be >= 0 (got $slackMicros)")
     require(thresholdMicros > 0,
       s"thresholdMicros must be > 0 (got $thresholdMicros)")
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      cusumFold(k, evs, CusumState(0L, 0L), targetMicros, slackMicros,
-        thresholdMicros)._2.iterator
-    }
+    batchFold(events, CusumState(0L, 0L))(
+      cusumFold(_, _, _, targetMicros, slackMicros, thresholdMicros))
   }
 
   /** Streaming two-sided CUSUM — the drift monitor that pages on a
-    * small persistent shift long before a point z-score would: same
-    * watermark discipline as [[ewmaAnomaliesStateful]] (buffer the
-    * unsealed tail, fold sealed events in (ts, event_id) order, drop
-    * below-watermark stragglers, dedupe in-window redeliveries by
-    * event_id), but the persistent state is TWO LONGS per key — the
+    * small persistent shift long before a point z-score would:
+    * [[sealedFold]] over [[cusumStep]], with TWO LONGS of persistent
+    * state per key — the
     * clamped accumulators — so a key's state never grows with its
     * history. Sealed output equals [[cusumEvents]] over the on-time
     * corpus EXACTLY (shared integer fold; `evt_cusum_replay` pins it
@@ -939,38 +973,17 @@ object EventStreams extends Serializable {
     require(slackMicros >= 0, s"slackMicros must be >= 0 (got $slackMicros)")
     require(thresholdMicros > 0,
       s"thresholdMicros must be > 0 (got $thresholdMicros)")
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[CusumBuffer]): Iterator[CusumOut] = {
-      val prior = state.getOption.getOrElse(
-        CusumBuffer(CusumState(0L, 0L), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = cusumFold(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.cusum, targetMicros, slackMicros, thresholdMicros)
-      state.update(CusumBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(events, watermark, CusumState(0L, 0L))(
+      cusumFold(_, _, _, targetMicros, slackMicros, thresholdMicros))
   }
 
   case class IncidentOut(event_type: String, hour: java.sql.Timestamp,
       x: Long, incident_id: Long)
   case class IncState(nextId: Long, lastAlarmSec: Long)
-  case class IncBuffer(inc: IncState, buffered: Seq[Event])
 
-  /** One incident step, SHARED by the batch and streaming forms —
-    * pure integer comparisons: an hour whose count exceeds 2× the
+  /** The incident fold [[incidentHours]] and [[incidentsStateful]]
+    * both run (through [[batchFold]] / [[sealedFold]]) — pure integer
+    * comparisons: an hour whose count exceeds 2× the
     * SEALED per-type median is an alarm; an alarm within
     * `coolSeconds` of the previous alarm joins its incident,
     * otherwise opens the next one. */
@@ -1012,19 +1025,14 @@ object EventStreams extends Serializable {
       coolSeconds: Long = 7200L): Dataset[IncidentOut] = {
     import hours.sparkSession.implicits._
     require(coolSeconds >= 0, s"coolSeconds must be >= 0 (got $coolSeconds)")
-    hours.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      incidentFold(k, evs, IncState(0L, Long.MinValue), medByType,
-        coolSeconds)._2.iterator
-    }
+    batchFold(hours, IncState(0L, Long.MinValue))(
+      incidentFold(_, _, _, medByType, coolSeconds))
   }
 
   /** Streaming incident grouping — the page-once-per-episode shape
-    * ([[incidentHours]]'s batch contract) as a live monitor: same
-    * watermark discipline as the EWMA/CUSUM/Holt twins (buffer the
-    * unsealed tail, fold sealed hours in (ts, event_id) order, drop
-    * below-watermark stragglers, dedupe in-window redeliveries by
-    * event_id), with TWO LONGS of persistent state per key (open
+    * ([[incidentHours]]'s batch contract) as a live monitor:
+    * [[sealedFold]] over [[incidentFold]], with TWO LONGS of
+    * persistent state per key (open
     * incident id, last alarm second). Sealed output equals
     * [[incidentHours]] over the on-time corpus EXACTLY (shared
     * integer fold; `evt_incidents_replay` pins both redelivery
@@ -1034,40 +1042,20 @@ object EventStreams extends Serializable {
       watermark: String = "2 hours"): Dataset[IncidentOut] = {
     import hours.sparkSession.implicits._
     require(coolSeconds >= 0, s"coolSeconds must be >= 0 (got $coolSeconds)")
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[IncBuffer]): Iterator[IncidentOut] = {
-      val prior = state.getOption.getOrElse(
-        IncBuffer(IncState(0L, Long.MinValue), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = incidentFold(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.inc, medByType, coolSeconds)
-      state.update(IncBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    hours.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(hours, watermark, IncState(0L, Long.MinValue))(
+      incidentFold(_, _, _, medByType, coolSeconds))
   }
 
   case class HoltOut(event_type: String, event_id: Long,
       ts: java.sql.Timestamp, value_micros: Long,
       forecast_micros: Long, residual_micros: Long)
   case class HoltState(l: Long, b: Long, n: Long)
-  case class HoltBuffer(holt: HoltState, buffered: Seq[Event])
 
-  /** One Holt step, SHARED by the batch and streaming forms — the
-    * [[graft.operators.TimeSeries.holtForecast]] recurrence (same
-    * init l₁ = x₁, b₁ = 0; same truncating long division) scoring
+  /** One Holt step of the fold [[holtResiduals]] and [[holtStateful]]
+    * both run (through [[batchFold]] / [[sealedFold]]) — the
+    * [[graft.operators.Recurrences.holt]] update that
+    * [[graft.operators.TimeSeries.holtForecast]] folds (same init
+    * l₁ = x₁, b₁ = 0), scoring
     * each event against the one-step-ahead forecast BEFORE folding it
     * in. The first observation seeds the level (forecast = value,
     * residual 0 — no phantom zero baseline). */
@@ -1076,8 +1064,7 @@ object EventStreams extends Serializable {
     if (s.n == 0L) (HoltState(v, 0L, 1L), v, 0L)
     else {
       val f = s.l + s.b
-      val l2 = (alphaPpm * v + (1000000L - alphaPpm) * (s.l + s.b)) / 1000000L
-      val b2 = (betaPpm * (l2 - s.l) + (1000000L - betaPpm) * s.b) / 1000000L
+      val (l2, b2) = Recurrences.holt(s.l, s.b, v, alphaPpm, betaPpm)
       (HoltState(l2, b2, s.n + 1), f, v - f)
     }
   }
@@ -1102,60 +1089,34 @@ object EventStreams extends Serializable {
   def holtResiduals(events: Dataset[Event], alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L): Dataset[HoltOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      holtFold(k, evs, HoltState(0L, 0L, 0L), alphaPpm, betaPpm)
-        ._2.iterator
-    }
+    batchFold(events, HoltState(0L, 0L, 0L))(
+      holtFold(_, _, _, alphaPpm, betaPpm))
   }
 
   /** Streaming Holt forecast residuals — online "is traffic tracking
     * the trend line" monitoring with THREE LONGS of persistent state
-    * per key (level, trend, count): same watermark discipline as the
-    * EWMA/CUSUM twins (buffer the unsealed tail, fold sealed events
-    * in (ts, event_id) order, drop below-watermark stragglers, dedupe
-    * in-window redeliveries by event_id). Sealed output equals
+    * per key (level, trend, count): [[sealedFold]] over [[holtStep]].
+    * Sealed output equals
     * [[holtResiduals]] EXACTLY — the shared fold is integer
     * arithmetic (`evt_holt_replay` pins both redelivery windows). */
   def holtStateful(events: Dataset[Event], alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L,
       watermark: String = "2 hours"): Dataset[HoltOut] = {
     import events.sparkSession.implicits._
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[HoltBuffer]): Iterator[HoltOut] = {
-      val prior = state.getOption.getOrElse(
-        HoltBuffer(HoltState(0L, 0L, 0L), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = holtFold(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.holt, alphaPpm, betaPpm)
-      state.update(HoltBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(events, watermark, HoltState(0L, 0L, 0L))(
+      holtFold(_, _, _, alphaPpm, betaPpm))
   }
 
   case class VolOut(event_type: String, event_id: Long,
       ts: java.sql.Timestamp, x: Long, ret: Long,
       var_micros: Long, sigma_micros: Long)
   case class VolState(v: Long, prev: Long, n: Long)
-  case class VolBuffer(vol: VolState, buffered: Seq[Event])
 
-  /** One EWMA-variance step, SHARED by the batch and streaming
-    * forms — the [[graft.operators.TimeSeries.ewmVolatility]]
-    * recurrence (`v' = (λ·v + (10⁶−λ)·r²·10⁶) / 10⁶` over the first
-    * difference r, truncating long division, seed r = 0 / v = 0).
+  /** One EWMA-variance step of the fold [[ewmVolResiduals]] and
+    * [[ewmVolStateful]] both run (through [[batchFold]] /
+    * [[sealedFold]]) — the [[graft.operators.Recurrences.ewmVar]]
+    * update that [[graft.operators.TimeSeries.ewmVolatility]] folds
+    * (over the first difference r, seed r = 0 / v = 0).
     * Values fold in WHOLE units (`round(value)`) so the convex-
     * combination overflow bound (|r| ≤ 3000 for every λ) holds for
     * the event value range by construction — the same loud guard
@@ -1165,12 +1126,8 @@ object EventStreams extends Serializable {
     if (s.n == 0L) (VolState(0L, x, 1L), 0L, 0L)
     else {
       val r = x - s.prev
-      if (math.abs(r) > 3000L)
-        throw new IllegalArgumentException(
-          s"ewm volatility fold: |delta| ${math.abs(r)} exceeds the " +
-            "overflow-safe bound 3000 — quantize the series coarser")
-      val v2 = (lambdaPpm * s.v +
-        (1000000L - lambdaPpm) * (r * r * 1000000L)) / 1000000L
+      val v2 = Recurrences.ewmVar(s.v, r, lambdaPpm, "ewm volatility fold",
+        "")
       (VolState(v2, x, s.n + 1), r, v2)
     }
   }
@@ -1182,8 +1139,7 @@ object EventStreams extends Serializable {
       val x = math.round(e.value)
       val (s2, r, v) = volStep(st, x, lambdaPpm)
       st = s2
-      VolOut(key, e.event_id, e.ts, x, r, v,
-        math.round(math.sqrt(v.toDouble / 1e6) * 1e6))
+      VolOut(key, e.event_id, e.ts, x, r, v, Recurrences.sigma(v))
     }
     (st, out)
   }
@@ -1197,59 +1153,33 @@ object EventStreams extends Serializable {
   def ewmVolResiduals(events: Dataset[Event],
       lambdaPpm: Long = 940000L): Dataset[VolOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      volFold(k, evs, VolState(0L, 0L, 0L), lambdaPpm)._2.iterator
-    }
+    batchFold(events, VolState(0L, 0L, 0L))(volFold(_, _, _, lambdaPpm))
   }
 
   /** Streaming EWMA volatility — online dispersion monitoring with
     * THREE LONGS of persistent state per key (variance, previous
-    * value, count): the EWMA/CUSUM/Holt watermark discipline (buffer
-    * the unsealed tail, fold sealed events in (ts, event_id) order,
-    * drop below-watermark stragglers, dedupe in-window redeliveries
-    * by event_id). Sealed output equals [[ewmVolResiduals]] EXACTLY
+    * value, count): [[sealedFold]] over [[volStep]]. Sealed output
+    * equals [[ewmVolResiduals]] EXACTLY
     * — the shared fold is integer arithmetic plus one mirrored sqrt
     * (`evt_ewm_vol_replay` pins both redelivery windows). */
   def ewmVolStateful(events: Dataset[Event],
       lambdaPpm: Long = 940000L,
       watermark: String = "2 hours"): Dataset[VolOut] = {
     import events.sparkSession.implicits._
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[VolBuffer]): Iterator[VolOut] = {
-      val prior = state.getOption.getOrElse(
-        VolBuffer(VolState(0L, 0L, 0L), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = volFold(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.vol, lambdaPpm)
-      state.update(VolBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(events, watermark, VolState(0L, 0L, 0L))(
+      volFold(_, _, _, lambdaPpm))
   }
 
   case class KalmanOut(event_type: String, event_id: Long,
       ts: java.sql.Timestamp, x: Long, innovation: Long,
       gain_ppm: Long, level: Long, p_var: Long)
   case class KalmanState(l: Long, p: Long, n: Long)
-  case class KalmanBuffer(kal: KalmanState, buffered: Seq[Event])
 
-  /** One Kalman local-level step, SHARED by the batch and streaming
-    * forms — the [[graft.operators.TimeSeries.kalmanLocalLevel]]
-    * recurrence (time-varying gain `K = P⁻·10⁶/(P⁻+R)`, truncating
-    * long division; seed l₁ = x₁, P₁ = R). Values fold in CENTS
+  /** One Kalman local-level step of the fold [[kalmanResiduals]] and
+    * [[kalmanStateful]] both run (through [[batchFold]] /
+    * [[sealedFold]]) — the [[graft.operators.Recurrences.kalman]]
+    * update that [[graft.operators.TimeSeries.kalmanLocalLevel]] folds
+    * (seed l₁ = x₁, P₁ = R). Values fold in CENTS
     * (`round(value·100)`) — |innovation| stays far inside the 9·10¹²
     * overflow bound for the event value range, guarded loudly
     * otherwise. */
@@ -1257,15 +1187,9 @@ object EventStreams extends Serializable {
       rVar: Long): (KalmanState, Long, Long) = {
     if (s.n == 0L) (KalmanState(x, rVar, 1L), 0L, 0L)
     else {
-      val pp = s.p + qVar
-      val gain = pp * 1000000L / (pp + rVar)
-      val e = x - s.l
-      if (math.abs(e) > 9000000000000L)
-        throw new IllegalArgumentException(
-          s"kalman fold: |innovation| ${math.abs(e)} exceeds the " +
-            "overflow-safe bound 9e12 — quantize the series coarser")
-      (KalmanState(s.l + gain * e / 1000000L,
-        pp * (1000000L - gain) / 1000000L, s.n + 1), e, gain)
+      val (e, gain, l2, p2) = Recurrences.kalman(s.l, s.p, x, qVar, rVar,
+        "kalman fold", "")
+      (KalmanState(l2, p2, s.n + 1), e, gain)
     }
   }
 
@@ -1290,47 +1214,22 @@ object EventStreams extends Serializable {
   def kalmanResiduals(events: Dataset[Event], qVar: Long = 10000L,
       rVar: Long = 250000L): Dataset[KalmanOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      kalmanFold(k, evs, KalmanState(0L, 0L, 0L), qVar, rVar)._2.iterator
-    }
+    batchFold(events, KalmanState(0L, 0L, 0L))(
+      kalmanFold(_, _, _, qVar, rVar))
   }
 
   /** Streaming Kalman local-level filter — online level tracking with
     * THREE LONGS of persistent state per key (level, variance,
-    * count): the EWMA/CUSUM/Holt watermark discipline (buffer the
-    * unsealed tail, fold sealed events in (ts, event_id) order, drop
-    * below-watermark stragglers, dedupe in-window redeliveries by
-    * event_id). Sealed output equals [[kalmanResiduals]] EXACTLY —
+    * count): [[sealedFold]] over [[kalmanStep]]. Sealed output equals
+    * [[kalmanResiduals]] EXACTLY —
     * the shared fold is pure integer arithmetic
     * (`evt_kalman_replay` pins both redelivery windows). */
   def kalmanStateful(events: Dataset[Event], qVar: Long = 10000L,
       rVar: Long = 250000L,
       watermark: String = "2 hours"): Dataset[KalmanOut] = {
     import events.sparkSession.implicits._
-
-    def fn(key: String, rows: Iterator[Event],
-        state: GroupState[KalmanBuffer]): Iterator[KalmanOut] = {
-      val prior = state.getOption.getOrElse(
-        KalmanBuffer(KalmanState(0L, 0L, 0L), Seq.empty))
-      val wmMs = state.getCurrentWatermarkMs()
-      val fresh = rows.filter(_.ts.getTime > wmMs).toSeq
-      val (ripe, open) = (prior.buffered ++ fresh)
-        .distinctBy(_.event_id)
-        .partition(_.ts.getTime <= wmMs)
-      val (st, out) = kalmanFold(key,
-        ripe.sortBy(e => (e.ts.getTime, e.event_id)),
-        prior.kal, qVar, rVar)
-      state.update(KalmanBuffer(st, open))
-      if (open.nonEmpty)
-        state.setTimeoutTimestamp(open.map(_.ts.getTime).min + 1)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
+    sealedFold(events, watermark, KalmanState(0L, 0L, 0L))(
+      kalmanFold(_, _, _, qVar, rVar))
   }
 
   case class KalmanGapsOut(event_type: String, ts: java.sql.Timestamp,
@@ -1340,8 +1239,9 @@ object EventStreams extends Serializable {
   case class KalmanGapsState(kal: KalmanState, anchorMs: Long,
       nextMs: Long, buffered: Seq[Event], lastObsMs: Long)
 
-  /** One densified-grid Kalman catch-up, SHARED by the batch and
-    * streaming gap-aware forms — the
+  /** One densified-grid Kalman catch-up, the fold both gap-aware forms
+    * run ([[kalmanGapsResiduals]] through [[batchFold]];
+    * [[kalmanGapsStateful]] keeps its own state function) — the
     * [[graft.operators.TimeSeries.kalmanLocalLevelGaps]] semantics on
     * events: walk grid points `startMs, startMs+stepMs, …` up to and
     * including `upToMs`; a point with an observation folds the
@@ -1381,13 +1281,13 @@ object EventStreams extends Serializable {
     var o = startMs
     val out = Seq.newBuilder[KalmanGapsOut]
     while (o <= upToMs) {
+      // a gap lets P + Q grow past the entry bound on Q + R, so it is
+      // guarded on every step after the seed
+      def predicted = Recurrences.kalmanPredict(st.p, qVar, "kalman gaps",
+        s" at $o (key $key)", "Q")
       byTs.get(o) match {
         case Some(e) =>
-          if (st.n > 0L && st.p + qVar > 9000000000000L)
-            throw new IllegalArgumentException(
-              s"kalman gaps: predicted variance ${st.p + qVar} at $o " +
-                s"(key $key) exceeds the overflow-safe bound 9e12 " +
-                "after a long gap — coarsen the grid or lower Q")
+          if (st.n > 0L) predicted // guarded before the gain's ·10⁶
           val x = math.round(e.value * 100) // cents
           val (s2, innov, gain) = kalmanStep(st, x, qVar, rVar)
           val seeded = st.n == 0L
@@ -1397,12 +1297,7 @@ object EventStreams extends Serializable {
             if (seeded) Some(0L) else Some(gain), s2.l, s2.p)
         case None =>
           if (st.n > 0L) { // before the seed there is nothing to carry
-            val p2 = st.p + qVar
-            if (p2 > 9000000000000L)
-              throw new IllegalArgumentException(
-                s"kalman gaps: predicted variance $p2 at $o (key $key)" +
-                  " exceeds the overflow-safe bound 9e12 after a long " +
-                  "gap — coarsen the grid or lower Q")
+            val p2 = predicted
             st = KalmanState(st.l, p2, st.n)
             out += KalmanGapsOut(key, new java.sql.Timestamp(o),
               observed = false, -1L, None, None, None, st.l, p2)
@@ -1427,14 +1322,11 @@ object EventStreams extends Serializable {
     require(qVar > 0L && rVar > 0L && qVar + rVar <= 9000000000000L,
       s"need 0 < qVar, 0 < rVar, qVar + rVar <= 9e12 (got $qVar, $rVar)")
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type).flatMapGroups { (k, it) =>
-      val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val anchor = evs.head.ts.getTime
-        kalmanGapsFold(k, evs, KalmanState(0L, 0L, 0L), anchor, anchor,
-          stepMs, evs.last.ts.getTime, qVar, rVar)._3.iterator
-      }
+    batchFold(events, KalmanState(0L, 0L, 0L)) { (k, evs, st0) =>
+      val anchor = evs.head.ts.getTime // groups are never empty
+      val (st, _, out) = kalmanGapsFold(k, evs, st0, anchor, anchor,
+        stepMs, evs.last.ts.getTime, qVar, rVar)
+      (st, out)
     }
   }
 

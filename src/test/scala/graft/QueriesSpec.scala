@@ -43,6 +43,23 @@ class QueriesSpec extends SparkSpec {
     assert(dupes.isEmpty, s"duplicate bench entries: $dupes")
   }
 
+  test("query-name filters fail on a typo and name it (Bench, Verify, Explain)") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(SparkEntry.benchQueries, "q1_agg,q1_aggg", "bench")
+    }
+    assert(e.getMessage.contains("unknown bench queries: q1_aggg"), e.getMessage)
+    assert(SparkEntry.select(SparkEntry.queries.keys.toSeq, "ts_holt,q1_agg") ==
+      Seq("q1_agg", "ts_holt"))
+    // Verify's filter fails before it writes anything: a typo must not
+    // leave a green-looking oracle_sql.json behind
+    val out = java.nio.file.Files.createTempDirectory("verify_typo").toFile
+    val eV = intercept[IllegalArgumentException] {
+      Verify.main(Array(sf0001, out.getPath, "q1_agg,ts_hlot"))
+    }
+    assert(eV.getMessage.contains("unknown queries: ts_hlot"), eV.getMessage)
+    assert(!new java.io.File(out, "oracle_sql.json").exists())
+  }
+
   test("benchQueries holds production shapes only — no verification gates") {
     // Gates (agreement/recall/ground-truth replays) run a production plan
     // PLUS a verification pass; benching them double-counts work no user

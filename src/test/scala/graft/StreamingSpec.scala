@@ -956,6 +956,63 @@ class StreamingSpec extends SparkSpec {
     assert(stream(3L) == ((1000000L, 333334L, 625000L, 874999L, 625000L)))
   }
 
+  test("TimeSeries folds agree with the EventStreams twins row for row: kalman, ewm volatility, holt") {
+    // one shared step object serves both modules; this pins the
+    // cross-module contract on a noisy two-key series
+    import graft.operators.TimeSeries
+    val t0 = 1700000000000L
+    val rnd = new scala.util.Random(7)
+    val evs = for {
+      ((k, base), ki) <- Seq("a" -> 50.0, "b" -> 900.0).zipWithIndex
+      i <- 0 until 40
+    } yield Event(ki * 100L + i, new Timestamp(t0 + i * 60000L), 1L, k,
+      math.round((base + i * 1.5 + rnd.nextGaussian() * 20) * 100) / 100.0)
+    // the twins' own quantizations, so both sides fold identical longs
+    val series = evs.map(e => (e.event_type, e.ts.getTime,
+      math.round(e.value * 100), math.round(e.value),
+      math.round(e.value * 1e6))).toDF("k", "o", "cents", "whole", "micros")
+
+    val kTs = TimeSeries.kalmanLocalLevel(series, "k", "o", "cents",
+        qMicros = 10000L, rMicros = 250000L).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
+    val kEs = EventStreams.kalmanResiduals(evs.toDS(), qVar = 10000L,
+        rVar = 250000L).collect()
+      .map(r => (r.event_type, r.ts.getTime) ->
+        ((r.x, r.innovation, r.gain_ppm, r.level, r.p_var))).toMap
+    assert(kTs.size == evs.size)
+    assert(kTs == kEs)
+
+    val vTs = TimeSeries.ewmVolatility(series, "k", "o", "whole",
+        lambdaPpm = 940000L).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    val vEs = EventStreams.ewmVolResiduals(evs.toDS(), lambdaPpm = 940000L)
+      .collect().map(r => (r.event_type, r.ts.getTime) ->
+        ((r.x, r.ret, r.var_micros, r.sigma_micros))).toMap
+    assert(vTs.size == evs.size)
+    assert(vTs == vEs)
+    assert(vTs.values.exists(_._3 > 0L))
+
+    // holtForecast's step 1 on the first n-1 points == holtResiduals'
+    // one-step forecast for point n: every prefix is its own key
+    val prefixes = series.as[(String, Long, Long, Long, Long)].collect()
+      .groupBy(_._1).toSeq.flatMap { case (k, rows) =>
+        val sorted = rows.sortBy(_._2)
+        (2 to sorted.length).flatMap(n => sorted.take(n - 1)
+          .map(r => (s"$k/${sorted(n - 1)._2}", r._2, r._5)))
+      }.toDF("kn", "o", "micros")
+    val hTs = TimeSeries.holtForecast(prefixes, "kn", "o", "micros",
+        alphaPpm = 300000L, betaPpm = 100000L, horizon = 1).collect()
+      .map(r => r.getString(0) -> r.getLong(5)).toMap
+    val hEs = EventStreams.holtResiduals(evs.toDS(), alphaPpm = 300000L,
+        betaPpm = 100000L).collect()
+      .filter(_.event_id % 100 != 0) // first points have no prefix
+      .map(r => s"${r.event_type}/${r.ts.getTime}" -> r.forecast_micros).toMap
+    assert(hTs.size == evs.size - 2)
+    assert(hTs == hEs)
+  }
+
   test("kalmanGapsStateful == kalmanGapsResiduals; timeouts emit predict-only rows online; guards") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val t0 = 1700000000000L
