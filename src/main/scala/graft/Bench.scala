@@ -7,9 +7,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Timing forces full materialization through the `noop` sink — a
   * bare `count()` would let Catalyst prune the projections a real
-  * consumer pays for. One warm-up query absorbs JVM/codegen/parquet
-  * footer warm-up so per-query numbers measure the plan, not the
-  * first-call tax.
+  * consumer pays for. One warm-up query absorbs JVM start-up and the
+  * first footer reads of the tables it scans; each benched query's
+  * first run still compiles its generated classes and infers the
+  * schemas of tables not read before (both then stay cached for the
+  * session, see [[Sessions]] and [[Tables.table]]), and the median of
+  * three discards that first run.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -53,6 +53,20 @@ private[graft] object Recurrences {
     * micro units — one mirrored IEEE tree. */
   def sigma(v: Long): Long = math.round(math.sqrt(v.toDouble / 1e6) * 1e6)
 
+  /** The Kalman filters' entry bound, checked on the driver before any
+    * job: Q, R > 0 (else the first gain divides by zero inside a task)
+    * and Q + R ≤ 9·10¹², which keeps every P⁻·10⁶ inside a long (P
+    * never exceeds R + Q). `qName`/`rName` are the caller's parameter
+    * names, which the messages quote. */
+  def requireKalmanVars(qName: String, q: Long, rName: String,
+      r: Long): Unit = {
+    require(q > 0L, s"$qName must be > 0 (got $q)")
+    require(r > 0L, s"$rName must be > 0 (got $r)")
+    require(q <= Bound - r, // not q + r <= Bound: q + r can wrap
+      s"$qName + $rName must be <= 9e12 so the gain's P⁻·10⁶ " +
+        s"numerator stays inside a long (got ${BigInt(q) + r})")
+  }
+
   /** One Kalman local-level update of level `l` and variance `p` on
     * observation `x`: `P⁻ = P + Q`, gain `K = P⁻·10⁶ / (P⁻ + R)` in ppm,
     * innovation `e = x − l`, `l′ = l + K·e / 10⁶`,

@@ -1537,16 +1537,6 @@ object TimeSeries {
       .orderBy(col(keyCol), col("o"))
   }
 
-  /** The Kalman filters' entry bound: Q, R > 0 and Q + R ≤ 9·10¹²,
-    * which keeps every P⁻·10⁶ inside a long (P never exceeds R + Q). */
-  private def requireKalmanVars(qMicros: Long, rMicros: Long): Unit = {
-    require(qMicros > 0L, s"qMicros must be > 0 (got $qMicros)")
-    require(rMicros > 0L, s"rMicros must be > 0 (got $rMicros)")
-    require(qMicros + rMicros <= Recurrences.Bound,
-      s"qMicros + rMicros must be <= 9e12 so the gain's P⁻·10⁶ " +
-        s"numerator stays inside a long (got ${qMicros + rMicros})")
-  }
-
   /** Kalman LOCAL-LEVEL filter — the state-space member the classical
     * family (AR, Holt, Holt–Winters, Croston, EWMA) lacks: the model
     * `level_t = level_{t−1} + w_t (Var w = Q)`,
@@ -1585,7 +1575,7 @@ object TimeSeries {
   def kalmanLocalLevel(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
-    requireKalmanVars(qMicros, rMicros)
+    Recurrences.requireKalmanVars("qMicros", qMicros, "rMicros", rMicros)
     val spark = df.sparkSession
     import spark.implicits._
     foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, pts) =>
@@ -1636,7 +1626,7 @@ object TimeSeries {
       qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
     require(step > 0L, s"step must be > 0 (got $step)")
-    requireKalmanVars(qMicros, rMicros)
+    Recurrences.requireKalmanVars("qMicros", qMicros, "rMicros", rMicros)
     val spark = df.sparkSession
     import spark.implicits._
     foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, obs) =>
@@ -1716,7 +1706,7 @@ object TimeSeries {
   def kalmanSmooth(df: DataFrame, keyCol: String, orderCol: String,
       valueMicrosCol: String, qMicros: Long = 1000000000L,
       rMicros: Long = 10000000000L): DataFrame = {
-    requireKalmanVars(qMicros, rMicros)
+    Recurrences.requireKalmanVars("qMicros", qMicros, "rMicros", rMicros)
     val spark = df.sparkSession
     import spark.implicits._
     foldByKey(df, keyCol, orderCol, valueMicrosCol) { (k, xs) =>

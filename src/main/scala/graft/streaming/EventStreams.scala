@@ -1213,6 +1213,7 @@ object EventStreams extends Serializable {
     * replay. */
   def kalmanResiduals(events: Dataset[Event], qVar: Long = 10000L,
       rVar: Long = 250000L): Dataset[KalmanOut] = {
+    Recurrences.requireKalmanVars("qVar", qVar, "rVar", rVar)
     import events.sparkSession.implicits._
     batchFold(events, KalmanState(0L, 0L, 0L))(
       kalmanFold(_, _, _, qVar, rVar))
@@ -1227,6 +1228,7 @@ object EventStreams extends Serializable {
   def kalmanStateful(events: Dataset[Event], qVar: Long = 10000L,
       rVar: Long = 250000L,
       watermark: String = "2 hours"): Dataset[KalmanOut] = {
+    Recurrences.requireKalmanVars("qVar", qVar, "rVar", rVar)
     import events.sparkSession.implicits._
     sealedFold(events, watermark, KalmanState(0L, 0L, 0L))(
       kalmanFold(_, _, _, qVar, rVar))
@@ -1319,8 +1321,7 @@ object EventStreams extends Serializable {
       stepMs: Long = 3600000L, qVar: Long = 10000L,
       rVar: Long = 250000L): Dataset[KalmanGapsOut] = {
     require(stepMs > 0L, s"stepMs must be > 0 (got $stepMs)")
-    require(qVar > 0L && rVar > 0L && qVar + rVar <= 9000000000000L,
-      s"need 0 < qVar, 0 < rVar, qVar + rVar <= 9e12 (got $qVar, $rVar)")
+    Recurrences.requireKalmanVars("qVar", qVar, "rVar", rVar)
     import events.sparkSession.implicits._
     batchFold(events, KalmanState(0L, 0L, 0L)) { (k, evs, st0) =>
       val anchor = evs.head.ts.getTime // groups are never empty
@@ -1363,8 +1364,7 @@ object EventStreams extends Serializable {
       watermark: String = "2 hours",
       maxSilentPoints: Long = 100000L): Dataset[KalmanGapsOut] = {
     require(stepMs > 0L, s"stepMs must be > 0 (got $stepMs)")
-    require(qVar > 0L && rVar > 0L && qVar + rVar <= 9000000000000L,
-      s"need 0 < qVar, 0 < rVar, qVar + rVar <= 9e12 (got $qVar, $rVar)")
+    Recurrences.requireKalmanVars("qVar", qVar, "rVar", rVar)
     require(maxSilentPoints > 0L && maxSilentPoints <= 500000L,
       s"maxSilentPoints must be in (0, 500k] — the catch-up guard's " +
         s"bound (got $maxSilentPoints)")

@@ -956,6 +956,30 @@ class StreamingSpec extends SparkSpec {
     assert(stream(3L) == ((1000000L, 333334L, 625000L, 874999L, 625000L)))
   }
 
+  test("kalmanResiduals / kalmanStateful refuse bad Q, R at the call, before any Spark job") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val batch = sample.toDS()
+    val stream = MemoryStream[Event].toDS()
+    // (qVar, rVar) -> the substring the message must carry: Q = R = 0
+    // used to divide by zero inside a task, and Q + R past 9e12 (or
+    // wrapping past Long.MaxValue) to overflow the gain silently
+    val bad = Seq(
+      (0L, 0L) -> "qVar must be > 0",
+      (1L, 0L) -> "rVar must be > 0",
+      (5000000000000L, 5000000000000L) -> "qVar + rVar must be <= 9e12",
+      (Long.MaxValue, 1L) -> "qVar + rVar must be <= 9e12")
+    val (_, jobs) = jobsDuring(bad.foreach { case ((q, r), msg) =>
+      val calls = Seq[() => Any](
+        () => EventStreams.kalmanResiduals(batch, qVar = q, rVar = r),
+        () => EventStreams.kalmanStateful(stream, qVar = q, rVar = r))
+      calls.foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(msg), e.getMessage)
+      }
+    })
+    assert(jobs == 0, s"$jobs Spark jobs ran before the guard fired")
+  }
+
   test("TimeSeries folds agree with the EventStreams twins row for row: kalman, ewm volatility, holt") {
     // one shared step object serves both modules; this pins the
     // cross-module contract on a noisy two-key series
