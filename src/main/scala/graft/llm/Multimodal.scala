@@ -419,6 +419,35 @@ object Multimodal {
       .withColumn("modality", lit("audio"))
   }
 
+  /** The 16-bit PCM samples of an audio payload, or null when it does
+    * not decode or is not 16-bit — the reader [[ahash64]] and
+    * [[audioQuality]] share. */
+  private def pcm16(payload: Array[Byte]): Array[Int] =
+    try {
+      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(payload))
+      val fmt = ais.getFormat
+      if (fmt.getSampleSizeInBits != 16) null
+      else {
+        val bytes = ais.readAllBytes()
+        val le = !fmt.isBigEndian
+        val out = new Array[Int](bytes.length / 2)
+        var i = 0
+        while (2 * i + 1 < bytes.length) {
+          out(i) =
+            if (le) ((bytes(2 * i + 1) << 8) |
+              (bytes(2 * i) & 0xff)).toShort.toInt
+            else ((bytes(2 * i) << 8) |
+              (bytes(2 * i + 1) & 0xff)).toShort.toInt
+          i += 1
+        }
+        out
+      }
+    } catch {
+      case _: javax.sound.sampled.UnsupportedAudioFileException |
+           _: java.io.IOException => null
+    }
+
   /** 64-bit perceptual audio fingerprint over the DECODED PCM — the
     * audio member of the perceptual-dedup family ([[dhash64]] for
     * images): a re-encoded, gain-adjusted, or DC-shifted duplicate
@@ -452,31 +481,7 @@ object Multimodal {
     media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.map { case (id, payload) =>
-          val samples =
-            try {
-              val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              val fmt = ais.getFormat
-              if (fmt.getSampleSizeInBits != 16) null
-              else {
-                val bytes = ais.readAllBytes()
-                val le = !fmt.isBigEndian
-                val out = new Array[Int](bytes.length / 2)
-                var i = 0
-                while (2 * i + 1 < bytes.length) {
-                  out(i) =
-                    if (le) ((bytes(2 * i + 1) << 8) |
-                      (bytes(2 * i) & 0xff)).toShort.toInt
-                    else ((bytes(2 * i) << 8) |
-                      (bytes(2 * i + 1) & 0xff)).toShort.toInt
-                  i += 1
-                }
-                out
-              }
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException |
-                   _: java.io.IOException => null
-            }
+          val samples = pcm16(payload)
           if (samples == null || samples.length < 2048) (id, 0L, false)
           else {
             val n = samples.length
@@ -580,31 +585,7 @@ object Multimodal {
     media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.map { case (id, payload) =>
-          val samples =
-            try {
-              val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              val fmt = ais.getFormat
-              if (fmt.getSampleSizeInBits != 16) null
-              else {
-                val bytes = ais.readAllBytes()
-                val le = !fmt.isBigEndian
-                val out = new Array[Int](bytes.length / 2)
-                var i = 0
-                while (2 * i + 1 < bytes.length) {
-                  out(i) =
-                    if (le) ((bytes(2 * i + 1) << 8) |
-                      (bytes(2 * i) & 0xff)).toShort.toInt
-                    else ((bytes(2 * i) << 8) |
-                      (bytes(2 * i + 1) & 0xff)).toShort.toInt
-                  i += 1
-                }
-                out
-              }
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException |
-                   _: java.io.IOException => null
-            }
+          val samples = pcm16(payload)
           if (samples == null || samples.isEmpty)
             (id, false, 0L, 0L, 0L, 0L)
           else {

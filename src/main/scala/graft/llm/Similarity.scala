@@ -16,14 +16,20 @@ import graft.functions.cosine_similarity
   *    inner product is the codegen'd [[graft.expr.CosineSimilarity]];
   *    per-query top-k is a window `row_number`, so no global sort and
   *    the shuffle carries only (query, candidate, score).
-  *  - [[cosineLshBuckets]] + [[lshTopK]]: random-hyperplane sign LSH.
-  *    One projection pass per row; candidates restricted to the
-  *    query's bucket. Tunable recall via `planes` (fewer planes =
-  *    bigger buckets = higher recall, more work).
+  *  - [[cosineLshBucketsMulti]] + [[lshTopK]]: random-hyperplane sign
+  *    LSH. One projection pass per row; candidates restricted to the
+  *    query's buckets. Tunable recall via `planes` (fewer planes =
+  *    bigger buckets = higher recall, more work) and `tables`.
   *  - [[ivfTopK]]: IVF — KMeans-partitioned index probing the
   *    `nprobe` nearest centroids. The 100 TB path: index build is one
-  *    ML fit + one assignment pass; queries touch nprobe/k of the
+  *    ML fit + one assignment pass; queries touch nprobe/nlist of the
   *    corpus.
+  *
+  * Each step of the retrieval grid ({top-k, range} × {unfiltered,
+  * filtered} × {brute, LSH, IVF, PQ}) is written once: `topK` is the
+  * per-query rank cut, `probeCandidates` the IVF probe router,
+  * `rangeCut` the micro-quantized threshold, `adcLut` + `adcScores`
+  * the ADC kernel and `refineExact` the PQ refine.
   */
 object Similarity {
 
@@ -31,17 +37,34 @@ object Similarity {
     * (self-matches excluded when ids collide). */
   def bruteForceTopK(candidates: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int): DataFrame = {
+    requireK(k)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
     val c = candidates.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec"))),
+      "cosine", k)
   }
+
+  /** The per-query top-k cut every ranked operator ends with: number
+    * each query's rows by (`score` desc, n_id) — a window, so no
+    * global sort — and keep rank ≤ k. Returns (q_id, n_id, score,
+    * rankCol); the rank is INT unless `asLong`. */
+  private def topK(scored: DataFrame, score: String, k: Int,
+      rankCol: String = "rn", asLong: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col(score).desc, col("n_id"))
+    val rank = row_number().over(w)
+    scored.withColumn(rankCol, if (asLong) rank.cast("long") else rank)
+      .filter(col(rankCol) <= k)
+      .select(col("q_id"), col("n_id"), col(score), col(rankCol))
+  }
+
+  private def requireK(k: Int): Unit =
+    require(k >= 1, s"k must be >= 1 (got $k)")
+
+  private def requireNprobe(nprobe: Int): Unit =
+    require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
 
   /** FILTERED vector search — the production shape [[bruteForceTopK]]
     * skips: "nearest neighbors among rows my predicate matches"
@@ -64,7 +87,7 @@ object Similarity {
       vecCol: String, idCol: String, filterCols: Seq[String],
       k: Int): DataFrame = {
     require(filterCols.nonEmpty, "filterCols must be non-empty")
-    require(k >= 1, s"k must be >= 1 (got $k)")
+    requireK(k)
     val q = queries.select(col(idCol).as("q_id") +:
       col(vecCol).as("q_vec") +:
       filterCols.map(f => col(f).as(s"__q_$f")): _*)
@@ -72,13 +95,9 @@ object Similarity {
       col(vecCol).as("n_vec") +: filterCols.map(col): _*)
     val cond = filterCols.map(f => col(f) <=> col(s"__q_$f"))
       .reduce(_ && _) && col("q_id") =!= col("n_id")
-    val scored = c.join(broadcast(q), cond)
-      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+    topK(c.join(broadcast(q), cond)
+      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec"))),
+      "cosine", k)
   }
 
   /** Symmetric per-vector int8 quantization: `q_vec[i] = round(v[i] *
@@ -96,30 +115,6 @@ object Similarity {
     emb.withColumn("q_scale", lit(127.0) / absMax)
       .withColumn("q_vec", transform(col(vecCol),
         x => round(x.cast("double") * col("q_scale")).cast("tinyint")))
-  }
-
-  /** Random-hyperplane sign buckets: `planes` pseudo-random
-    * hyperplanes (deterministic from `seed`), bucket = sign-bit
-    * string. Cosine-similar vectors agree on most signs (Charikar
-    * 2002), so near-identical vectors share a bucket with high
-    * probability. Output: (id, vec, bucket). */
-  def cosineLshBuckets(emb: DataFrame, vecCol: String, idCol: String,
-      planes: Int = 12, seed: Long = 42L): DataFrame = {
-    // Pseudo-random plane p, dim d gets deterministic coefficient
-    // hash(p,d,seed) scaled to [-1,1]; the projection is expressed with
-    // higher-order array functions — no UDF, stays in codegen.
-    val dims = sequence(lit(0), size(col(vecCol)) - 1)
-    val bucketBits = (0 until planes).map { p =>
-      val coef = (i: org.apache.spark.sql.Column) =>
-        (pmod(xxhash64(lit(seed), lit(p), i), lit(2000001L)).cast("double")
-          / lit(1000000.0)) - lit(1.0)
-      val dot = aggregate(
-        zip_with(col(vecCol), transform(dims, coef), (v, c) => v * c),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1)).otherwise(lit(0)).cast("string")
-    }
-    emb.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      concat(bucketBits: _*).as("bucket"))
   }
 
   /** Multi-table sign-LSH buckets: `tables` independent hash tables of
@@ -155,22 +150,18 @@ object Similarity {
   def lshTopK(emb: DataFrame, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, planes: Int = 6, tables: Int = 8,
       seed: Long = 42L): DataFrame = {
+    requireK(k)
     val cb = cosineLshBucketsMulti(emb, vecCol, idCol, planes, tables, seed)
     val qb = cosineLshBucketsMulti(queries, vecCol, idCol, planes, tables, seed)
       .select(col("id").as("q_id"), col("vec").as("q_vec"),
         col("table"), col("bucket"))
-    val scored = qb.join(cb, Seq("table", "bucket"))
+    topK(qb.join(cb, Seq("table", "bucket"))
       .filter(col("q_id") =!= col("id"))
       .withColumn("cosine", cosine_similarity(col("q_vec"), col("vec")))
       // a pair colliding in several tables is scored per collision
       // (row-local, codegen'd); dedup on the scored triple
       .select(col("q_id"), col("id").as("n_id"), col("cosine"))
-      .distinct()
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+      .distinct(), "cosine", k)
   }
 
   /** IVF index: KMeans cluster assignment per row. Returns
@@ -236,17 +227,8 @@ object Similarity {
 
   /** Build the IVF index (the expensive, do-once half). */
   def ivfBuild(emb: DataFrame, vecCol: String, idCol: String,
-      nlist: Int = 16, seed: Long = 42L): IvfIndex = {
-    val spark = emb.sparkSession
-    val (assigned, model) = ivfAssign(emb, vecCol, nlist, seed)
-    import spark.implicits._
-    val cents = model.clusterCenters.zipWithIndex.map { case (v, i) =>
-      (i, v.toArray.map(_.toFloat))
-    }.toSeq.toDF("cluster", "centroid")
-    IvfIndex(
-      assigned.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col("cluster")),
-      cents, nlist)
-  }
+      nlist: Int = 16, seed: Long = 42L): IvfIndex =
+    buildIndex(emb, vecCol, idCol, Nil, nlist, seed)
 
   /** Build an IVF index whose inverted lists CARRY the slice (filter)
     * columns — the corpus-scale form of [[filteredTopK]]: ONE shared
@@ -300,25 +282,34 @@ object Similarity {
   def ivfSavePartitioned(index: IvfIndex, path: String,
       sliceCols: Seq[String]): Unit = {
     require(sliceCols.nonEmpty, "sliceCols must be non-empty")
-    val stringSlices = index.assigned.schema.fields
-      .filter(f => sliceCols.contains(f.name))
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .map(_.name)
-    if (stringSlices.nonEmpty) {
-      val nEmpty = index.assigned
-        .filter(stringSlices.map(col(_) === "").reduce(_ || _))
-        .limit(1).count()
-      require(nEmpty == 0L,
-        "ivfSavePartitioned: an empty-string slice value cannot " +
-          "round-trip through the Hive directory encoding (it reads " +
-          "back as NULL and merges into the NULL slice) — map it to " +
-          "a sentinel before saving")
-    }
+    requireNoEmptySlices(index.assigned, sliceCols, "ivfSavePartitioned")
     index.assigned.limit(0).coalesce(1).write.mode("overwrite")
       .parquet(s"$path/assigned__schema")
     index.assigned.write.mode("overwrite")
       .partitionBy(sliceCols: _*).parquet(s"$path/assigned")
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  /** Refuses an empty-string value in any STRING slice column of
+    * `rows` (one limit-1 job): the Hive directory encoding writes it
+    * as the default partition, which reads back as NULL and merges
+    * into the NULL slice. Shared by the save and the on-disk append. */
+  private def requireNoEmptySlices(rows: DataFrame, sliceCols: Seq[String],
+      op: String): Unit = {
+    val stringSlices = rows.schema.fields
+      .filter(f => sliceCols.contains(f.name))
+      .filter(_.dataType == org.apache.spark.sql.types.StringType)
+      .map(_.name)
+    if (stringSlices.nonEmpty) {
+      val nEmpty = rows
+        .filter(stringSlices.map(col(_) === "").reduce(_ || _))
+        .limit(1).count()
+      require(nEmpty == 0L,
+        s"$op: an empty-string slice value cannot " +
+          "round-trip through the Hive directory encoding (it reads " +
+          "back as NULL and merges into the NULL slice) — map it to " +
+          "a sentinel first")
+    }
   }
 
   /** FILTERED probe of a [[ivfBuildSliced]] index — the corpus-scale
@@ -336,15 +327,12 @@ object Similarity {
   def ivfProbeFiltered(index: IvfIndex, queries: DataFrame,
       vecCol: String, idCol: String, filterCols: Seq[String], k: Int,
       nprobe: Int = 4): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
-    val scored = filteredCandidates(index, queries, vecCol, idCol,
-        filterCols, nprobe)
-      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+    requireK(k)
+    require(filterCols.nonEmpty, "filterCols must be non-empty")
+    requireNprobe(nprobe)
+    topK(probeCandidates(index, queries, vecCol, idCol, filterCols, nprobe)
+      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec"))),
+      "cosine", k)
   }
 
   /** FILTERED threshold (range) search through a sliced index —
@@ -362,25 +350,24 @@ object Similarity {
   def ivfRangeSearchFiltered(index: IvfIndex, queries: DataFrame,
       vecCol: String, idCol: String, filterCols: Seq[String],
       minCosineMicros: Long, nprobe: Int = 4): DataFrame = {
-    require(minCosineMicros >= -1000000L && minCosineMicros <= 1000000L,
-      s"minCosineMicros must be in [-1e6, 1e6] (got $minCosineMicros)")
-    filteredCandidates(index, queries, vecCol, idCol, filterCols, nprobe)
-      .withColumn("cosine_micros",
-        round(cosine_similarity(col("q_vec"), col("n_vec")) * 1e6)
-          .cast("long"))
-      .filter(col("cosine_micros") >= minCosineMicros)
-      .select(col("q_id"), col("n_id"), col("cosine_micros"))
+    require(filterCols.nonEmpty, "filterCols must be non-empty")
+    requireNprobe(nprobe)
+    rangeCut(probeCandidates(index, queries, vecCol, idCol, filterCols,
+      nprobe), minCosineMicros)
   }
 
-  /** probe routing + (slice, cluster) candidate join shared by the
-    * filtered top-k and filtered range forms — one definition so the
-    * two can never drift on the slice semantics. Emits one row per
-    * (query, in-slice candidate from a probed cell), self-matches
-    * excluded, with q_vec/n_vec riding for the caller's scoring. */
-  private def filteredCandidates(index: IvfIndex, queries: DataFrame,
+  /** The IVF probe router every probe form shares: route each query to
+    * its `nprobe` nearest centroids (cosine desc, ties to the lower
+    * cluster; the nlist-row centroid table is broadcast), then join
+    * the probed inverted lists. Non-empty `filterCols` join on
+    * (slice, cluster) with the slice equality NULL-SAFE (a NULL tenant
+    * is its own slice); empty `filterCols` is the unfiltered probe, a
+    * join on cluster alone. Emits one row per (query, candidate from a
+    * probed cell), self-matches excluded, with q_vec/n_vec riding for
+    * the caller's scoring. */
+  private def probeCandidates(index: IvfIndex, queries: DataFrame,
       vecCol: String, idCol: String, filterCols: Seq[String],
       nprobe: Int): DataFrame = {
-    require(filterCols.nonEmpty, "filterCols must be non-empty")
     val q = queries.select(col(idCol).as("q_id") +:
       col(vecCol).as("q_vec") +:
       filterCols.map(f => col(f).as(s"__q_$f")): _*)
@@ -393,10 +380,26 @@ object Similarity {
       .select(col("q_id") +: col("q_vec") +: col("cluster") +:
         filterCols.map(f => col(s"__q_$f")): _*)
     val asg = index.assigned
-    val cond = (probes("cluster") === asg("cluster")) &&
-      filterCols.map(f => asg(f) <=> probes(s"__q_$f")).reduce(_ && _)
-    probes.join(asg, cond)
-      .filter(col("q_id") =!= col("n_id"))
+    val lists =
+      if (filterCols.isEmpty) probes.join(asg, "cluster")
+      else probes.join(asg, (probes("cluster") === asg("cluster")) &&
+        filterCols.map(f => asg(f) <=> probes(s"__q_$f")).reduce(_ && _))
+    lists.filter(col("q_id") =!= col("n_id"))
+  }
+
+  /** The threshold both range forms end with: cosines quantize to
+    * integer micros AT the comparison, so no boundary pair can flicker
+    * on an IEEE tiebreak. Returns (q_id, n_id, cosine_micros). */
+  private def rangeCut(candidates: DataFrame,
+      minCosineMicros: Long): DataFrame = {
+    require(minCosineMicros >= -1000000L && minCosineMicros <= 1000000L,
+      s"minCosineMicros must be in [-1e6, 1e6] (got $minCosineMicros)")
+    candidates
+      .withColumn("cosine_micros",
+        round(cosine_similarity(col("q_vec"), col("n_vec")) * 1e6)
+          .cast("long"))
+      .filter(col("cosine_micros") >= minCosineMicros)
+      .select(col("q_id"), col("n_id"), col("cosine_micros"))
   }
 
   /** Incremental index maintenance: assign NEW vectors to the nearest
@@ -515,19 +518,7 @@ object Similarity {
         s"does not match the index's pinned schema ${pinned.sql} — a " +
         "re-typed slice column would silently merge tenants in the " +
         "directory encoding; cast the batch to the index's types")
-    val stringSlices = pinned.fields
-      .filter(f => sliceCols.contains(f.name))
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .map(_.name)
-    if (stringSlices.nonEmpty) {
-      val nEmpty = assignedNew
-        .filter(stringSlices.map(col(_) === "").reduce(_ || _))
-        .limit(1).count()
-      require(nEmpty == 0L,
-        "ivfAppendPartitioned: an empty-string slice value cannot " +
-          "round-trip through the Hive directory encoding — map it " +
-          "to a sentinel before appending")
-    }
+    requireNoEmptySlices(assignedNew, sliceCols, "ivfAppendPartitioned")
     assignedNew.write.mode("append")
       .partitionBy(sliceCols: _*).parquet(s"$path/assigned")
   }
@@ -537,28 +528,22 @@ object Similarity {
     * those inverted lists. The cheap, repeatable half. */
   def ivfProbe(index: IvfIndex, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val qCents = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", cosine_similarity(col("q_vec"), col("centroid")))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist").desc, col("cluster"))
-    val probes = qCents.withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("cluster"))
-    val scored = probes.join(index.assigned, "cluster")
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+    requireK(k)
+    requireNprobe(nprobe)
+    topK(probeCandidates(index, queries, vecCol, idCol, Nil, nprobe)
+      .withColumn("cosine", cosine_similarity(col("q_vec"), col("n_vec"))),
+      "cosine", k)
   }
 
   /** Build + probe in one call (small/one-shot use; for anything
     * repeated, hold the [[IvfIndex]] and call [[ivfProbe]]). */
   def ivfTopK(emb: DataFrame, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
-      seed: Long = 42L): DataFrame =
+      seed: Long = 42L): DataFrame = {
+    requireK(k) // before the build's KMeans fit
+    requireNprobe(nprobe)
     ivfProbe(ivfBuild(emb, vecCol, idCol, nlist, seed), queries, vecCol, idCol, k, nprobe)
+  }
 
   /** RANGE (threshold) search through the IVF index — every neighbor
     * with cosine ≥ τ, the retrieval shape dedup and
@@ -585,24 +570,9 @@ object Similarity {
   def ivfRangeSearch(index: IvfIndex, queries: DataFrame,
       vecCol: String, idCol: String, minCosineMicros: Long,
       nprobe: Int = 4): DataFrame = {
-    require(minCosineMicros >= -1000000L && minCosineMicros <= 1000000L,
-      s"minCosineMicros must be in [-1e6, 1e6] (got $minCosineMicros)")
-    val qCents = queries.select(col(idCol).as("q_id"),
-        col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", cosine_similarity(col("q_vec"), col("centroid")))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cdist").desc, col("cluster"))
-    val probes = qCents.withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("cluster"))
-    probes.join(index.assigned, "cluster")
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine_micros",
-        round(cosine_similarity(col("q_vec"), col("n_vec")) * 1e6)
-          .cast("long"))
-      .filter(col("cosine_micros") >= minCosineMicros)
-      .select(col("q_id"), col("n_id"), col("cosine_micros"))
+    requireNprobe(nprobe)
+    rangeCut(probeCandidates(index, queries, vecCol, idCol, Nil, nprobe),
+      minCosineMicros)
   }
 
   /** kNN GRAPH construction: the corpus probed against its own index —
@@ -659,9 +629,8 @@ object Similarity {
   def hardNegatives(emb: DataFrame, vecCol: String, idCol: String,
       labelCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
       overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
+    requireK(k)
     require(overfetch >= 1, s"overfetch must be >= 1 (got $overfetch)")
-    import org.apache.spark.sql.expressions.Window
     val labeled = emb.filter(col(labelCol).isNotNull)
     val qLabels = labeled.select(col(idCol).cast("long").as("q_id"),
       col(labelCol).as("__ql"))
@@ -669,14 +638,10 @@ object Similarity {
       col(labelCol).as("__nl"))
     val cand = ivfTopK(labeled, labeled, vecCol, idCol,
       k * overfetch + 1, nlist, nprobe, seed)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    cand.filter(col("q_id") =!= col("n_id"))
+    topK(cand.filter(col("q_id") =!= col("n_id"))
       .join(qLabels, Seq("q_id")).join(nLabels, Seq("n_id"))
-      .filter(!(col("__ql") <=> col("__nl")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rank"))
+      .filter(!(col("__ql") <=> col("__nl"))),
+      "cosine", k, rankCol = "rank", asLong = true)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR'09) —
@@ -883,6 +848,7 @@ object Similarity {
     * rows only. */
   def pqAdcTopK(codes: DataFrame, books: PqCodebooks, queries: DataFrame,
       vecCol: String, idCol: String, k: Int): DataFrame = {
+    requireK(k) // before the query-batch collect
     val spark = codes.sparkSession
     import spark.implicits._
     val qBatch: Array[(Long, Array[Double])] = queries
@@ -893,47 +859,54 @@ object Similarity {
       .as[(Long, Array[Short])]
       .mapPartitions { it =>
         val (b, qs) = bc.value
-        val m = b.m; val dsub = b.dsub; val kk = b.k
-        // per-partition, per-query LUTs: dot(q_j, c) for every
-        // (subspace j, code c) — m×k doubles per query
-        val luts = qs.map { case (qid, qv) =>
-          val lut = Array.ofDim[Double](m, kk)
-          var qn = 0.0
-          var tq = 0
-          while (tq < qv.length) { qn += qv(tq) * qv(tq); tq += 1 }
-          var j = 0
-          while (j < m) {
-            val cs = b.centroids(j); val off = j * dsub
-            var c = 0
-            while (c < kk) {
-              var s = 0.0; var t = 0
-              while (t < dsub) { s += qv(off + t) * cs(c)(t); t += 1 }
-              lut(j)(c) = s; c += 1
-            }
-            j += 1
-          }
-          (qid, lut, math.sqrt(qn))
-        }
-        val n2 = b.norm2
-        it.flatMap { case (nid, code) =>
-          var cn2 = 0.0
-          var jc = 0
-          while (jc < m) { cn2 += n2(jc)(code(jc)); jc += 1 }
-          val cn = math.sqrt(cn2)
-          luts.iterator.collect { case (qid, lut, qn) if qid != nid =>
-            var dot = 0.0
-            var j = 0
-            while (j < m) { dot += lut(j)(code(j)); j += 1 }
-            val denom = qn * cn
-            (qid, nid, if (denom <= 0) 0.0 else dot / denom)
-          }
-        }
+        val luts = qs.map { case (qid, qv) => adcLut(b, qid, qv) }
+        it.flatMap { case (nid, code) => adcScores(b, luts, nid, code) }
       }.toDF("q_id", "n_id", "cosine_adc")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine_adc").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine_adc"), col("rn"))
+    topK(scored, "cosine_adc", k)
+  }
+
+  /** One query's ADC lookup table — dot(q_j, c) for every (subspace j,
+    * code c), m×k doubles — with the query id and |q|. Built per
+    * partition for every query of the batch. */
+  private def adcLut(b: PqCodebooks, qid: Long,
+      qv: Array[Double]): (Long, Array[Array[Double]], Double) = {
+    val m = b.m; val dsub = b.dsub; val kk = b.k
+    val lut = Array.ofDim[Double](m, kk)
+    var qn = 0.0
+    var tq = 0
+    while (tq < qv.length) { qn += qv(tq) * qv(tq); tq += 1 }
+    var j = 0
+    while (j < m) {
+      val cs = b.centroids(j); val off = j * dsub
+      var c = 0
+      while (c < kk) {
+        var s = 0.0; var t = 0
+        while (t < dsub) { s += qv(off + t) * cs(c)(t); t += 1 }
+        lut(j)(c) = s; c += 1
+      }
+      j += 1
+    }
+    (qid, lut, math.sqrt(qn))
+  }
+
+  /** ADC cosine of one code row against each query table in `luts`
+    * (self-match skipped): m table adds per pair, no float vector
+    * read. Emits (q_id, n_id, cosine_adc). */
+  private def adcScores(b: PqCodebooks,
+      luts: Array[(Long, Array[Array[Double]], Double)], nid: Long,
+      code: Array[Short]): Iterator[(Long, Long, Double)] = {
+    val m = b.m; val n2 = b.norm2
+    var cn2 = 0.0
+    var jc = 0
+    while (jc < m) { cn2 += n2(jc)(code(jc)); jc += 1 }
+    val cn = math.sqrt(cn2)
+    luts.iterator.collect { case (qid, lut, qn) if qid != nid =>
+      var dot = 0.0
+      var j = 0
+      while (j < m) { dot += lut(j)(code(j)); j += 1 }
+      val denom = qn * cn
+      (qid, nid, if (denom <= 0) 0.0 else dot / denom)
+    }
   }
 
   /** PQ + exact refine — the production serving shape (FAISS's
@@ -948,23 +921,33 @@ object Similarity {
     * spec fixture. */
   def pqAdcTopKRefined(codes: DataFrame, books: PqCodebooks,
       queries: DataFrame, emb: DataFrame, vecCol: String, idCol: String,
-      k: Int, shortlist: Int = -1): DataFrame = {
+      k: Int, shortlist: Int = -1): DataFrame =
+    refineExact(queries, emb, vecCol, idCol, k, shortlist)(sl =>
+      pqAdcTopK(codes, books, queries, vecCol, idCol, sl))
+
+  /** The exact refine both PQ serving forms end with: `adcTopK(sl)` is
+    * the ADC shortlist of `sl` per query (`shortlist`, or 8k when it
+    * is ≤ 0); ONE 8-byte-keyed join fetches only the shortlist's float
+    * vectors, exact cosine re-ranks and cuts at k. A shortlist in
+    * [1, k) would return fewer than k rows, so it refuses. */
+  private def refineExact(queries: DataFrame, emb: DataFrame,
+      vecCol: String, idCol: String, k: Int, shortlist: Int)(
+      adcTopK: Int => DataFrame): DataFrame = {
+    requireK(k)
+    require(shortlist <= 0 || shortlist >= k,
+      s"shortlist must be >= k = $k, or <= 0 for the 8k default " +
+        s"(got $shortlist)")
     val sl = if (shortlist <= 0) 8 * k else shortlist
-    val short = pqAdcTopK(codes, books, queries, vecCol, idCol, sl)
-      .select(col("q_id"), col("n_id"))
+    val short = adcTopK(sl).select(col("q_id"), col("n_id"))
     val qv = queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).as("__qv"))
     val nv = emb.select(col(idCol).cast("long").as("n_id"),
       col(vecCol).as("__nv"))
-    val exact = short
+    topK(short
       .join(nv, "n_id") // shortlist-sized — tiny vs the corpus
       .join(broadcast(qv), "q_id")
-      .withColumn("cosine", cosine_similarity(col("__qv"), col("__nv")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
+      .withColumn("cosine", cosine_similarity(col("__qv"), col("__nv"))),
+      "cosine", k)
   }
 
   /** Injective slice-key canonicalization shared by the filtered PQ
@@ -1023,7 +1006,7 @@ object Similarity {
   def pqAdcTopKFiltered(codes: DataFrame, books: PqCodebooks,
       queries: DataFrame, vecCol: String, idCol: String,
       sliceCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
+    requireK(k)
     val spark = codes.sparkSession
     import spark.implicits._
     val qBatch: Array[(Long, Array[Double], String)] = queries
@@ -1036,52 +1019,17 @@ object Similarity {
       .as[(Long, Array[Short], String)]
       .mapPartitions { it =>
         val (b, qs) = bc.value
-        val m = b.m; val dsub = b.dsub; val kk = b.k
-        val lutsBySlice: Map[String, Array[(Long, Array[Array[Double]], Double)]] =
-          qs.groupBy(_._3).map { case (sk, grp) =>
-            sk -> grp.map { case (qid, qv, _) =>
-              val lut = Array.ofDim[Double](m, kk)
-              var qn = 0.0
-              var tq = 0
-              while (tq < qv.length) { qn += qv(tq) * qv(tq); tq += 1 }
-              var j = 0
-              while (j < m) {
-                val cs = b.centroids(j); val off = j * dsub
-                var c = 0
-                while (c < kk) {
-                  var s = 0.0; var t = 0
-                  while (t < dsub) { s += qv(off + t) * cs(c)(t); t += 1 }
-                  lut(j)(c) = s; c += 1
-                }
-                j += 1
-              }
-              (qid, lut, math.sqrt(qn))
-            }
-          }
-        val n2 = b.norm2
+        val lutsBySlice = qs.groupBy(_._3).map { case (sk, grp) =>
+          sk -> grp.map { case (qid, qv, _) => adcLut(b, qid, qv) }
+        }
         it.flatMap { case (nid, code, ck) =>
           lutsBySlice.get(ck) match {
             case None => Iterator.empty
-            case Some(luts) =>
-              var cn2 = 0.0
-              var jc = 0
-              while (jc < m) { cn2 += n2(jc)(code(jc)); jc += 1 }
-              val cn = math.sqrt(cn2)
-              luts.iterator.collect { case (qid, lut, qn) if qid != nid =>
-                var dot = 0.0
-                var j = 0
-                while (j < m) { dot += lut(j)(code(j)); j += 1 }
-                val denom = qn * cn
-                (qid, nid, if (denom <= 0) 0.0 else dot / denom)
-              }
+            case Some(luts) => adcScores(b, luts, nid, code)
           }
         }
       }.toDF("q_id", "n_id", "cosine_adc")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine_adc").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine_adc"), col("rn"))
+    topK(scored, "cosine_adc", k)
   }
 
   /** Filtered PQ + exact refine — [[pqAdcTopKRefined]] through the
@@ -1095,25 +1043,9 @@ object Similarity {
     * contract. Returns (q_id, n_id, cosine, rn ≤ k). */
   def pqAdcTopKRefinedFiltered(codes: DataFrame, books: PqCodebooks,
       queries: DataFrame, emb: DataFrame, vecCol: String, idCol: String,
-      sliceCol: String, k: Int, shortlist: Int = -1): DataFrame = {
-    val sl = if (shortlist <= 0) 8 * k else shortlist
-    val short = pqAdcTopKFiltered(codes, books, queries, vecCol, idCol,
-        sliceCol, sl)
-      .select(col("q_id"), col("n_id"))
-    val qv = queries.select(col(idCol).cast("long").as("q_id"),
-      col(vecCol).as("__qv"))
-    val nv = emb.select(col(idCol).cast("long").as("n_id"),
-      col(vecCol).as("__nv"))
-    val exact = short
-      .join(nv, "n_id") // shortlist-sized — tiny vs the corpus
-      .join(broadcast(qv), "q_id")
-      .withColumn("cosine", cosine_similarity(col("__qv"), col("__nv")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("n_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rn"))
-  }
+      sliceCol: String, k: Int, shortlist: Int = -1): DataFrame =
+    refineExact(queries, emb, vecCol, idCol, k, shortlist)(sl =>
+      pqAdcTopKFiltered(codes, books, queries, vecCol, idCol, sliceCol, sl))
 
   /** Persist / reload codebooks as one parquet table
     * (subspace, code, centroid) — the build-once artifact. */
@@ -1176,7 +1108,7 @@ object Similarity {
   def mmrRerank(candidates: DataFrame, idCol: String, scoreCol: String,
       vecCol: String, k: Int, lambdaPpm: Long = 700000L,
       maxCandidates: Int = 10000): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
+    requireK(k)
     require(lambdaPpm >= 0L && lambdaPpm <= 1000000L,
       s"lambdaPpm must be in [0, 1000000] (got $lambdaPpm)")
     val spark = candidates.sparkSession
@@ -1260,7 +1192,7 @@ object Similarity {
     * k-sample's. */
   def kCenterGreedy(emb: DataFrame, vecCol: String, idCol: String,
       k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
+    requireK(k)
     val spark = emb.sparkSession
     import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
@@ -1333,7 +1265,24 @@ object Similarity {
     * small constant by contract), one per-vector argmax window keyed
     * by vector id (parallelizes), one seed-scale aggregate. */
   def centroidAssign(df: DataFrame, idCol: String, vecCol: String,
-      numSeeds: Int = 8): DataFrame = {
+      numSeeds: Int = 8): DataFrame =
+    assignToSeeds(df, idCol, vecCol, numSeeds)
+      .groupBy(col("__sid"))
+      .agg(count(lit(1)).as("n_assigned"),
+        sum(col("__cm")).as("__sum"))
+      .select(col("__sid").cast("bigint").as("seed_id"),
+        col("n_assigned").cast("bigint").as("n_assigned"),
+        expr("CAST(__sum div n_assigned AS BIGINT)")
+          .as("mean_cos_micros"))
+      .orderBy(col("seed_id"))
+
+  /** The exact E-step [[centroidAssign]] and [[kmeansStep]] share: the
+    * `numSeeds` lowest-id non-zero vectors are the seeds, and every
+    * vector keeps its pico-cosine argmax seed, (cos desc, seed asc).
+    * Returns one row per assigned vector, with its id `__id`, vector
+    * `__v`, seed `__sid` and micro cosine `__cm`. */
+  private def assignToSeeds(df: DataFrame, idCol: String, vecCol: String,
+      numSeeds: Int): DataFrame = {
     require(numSeeds >= 1 && numSeeds <= 1024,
       s"numSeeds must be in [1, 1024] (got $numSeeds)")
     val picoDot = (a: org.apache.spark.sql.Column,
@@ -1359,14 +1308,6 @@ object Similarity {
             sqrt(col("__snp").cast("double"))) * 1e6).cast("long"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .groupBy(col("__sid"))
-      .agg(count(lit(1)).as("n_assigned"),
-        sum(col("__cm")).as("__sum"))
-      .select(col("__sid").cast("bigint").as("seed_id"),
-        col("n_assigned").cast("bigint").as("n_assigned"),
-        expr("CAST(__sum div n_assigned AS BIGINT)")
-          .as("mean_cos_micros"))
-      .orderBy(col("seed_id"))
   }
 
   /** ONE full Lloyd iteration, hash-gradable — [[centroidAssign]]'s
@@ -1387,32 +1328,8 @@ object Similarity {
     * rows) + one (seed, dim)-keyed hash-agg — numSeeds·dims output
     * rows, nothing pairwise. */
   def kmeansStep(df: DataFrame, idCol: String, vecCol: String,
-      numSeeds: Int = 8): DataFrame = {
-    require(numSeeds >= 1 && numSeeds <= 1024,
-      s"numSeeds must be in [1, 1024] (got $numSeeds)")
-    val picoDot = (a: org.apache.spark.sql.Column,
-        b: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(a, b, (x, y) =>
-          round(x.cast("double") * y.cast("double") * lit(1e12))
-            .cast("long")),
-        lit(0L), (acc, t) => acc + t)
-    val base = df.select(col(idCol).cast("long").as("__id"),
-        col(vecCol).as("__v"))
-      .filter(col("__id").isNotNull && col("__v").isNotNull)
-      .withColumn("__np", picoDot(col("__v"), col("__v")))
-      .filter(col("__np") > 0L)
-    val seeds = base.orderBy(col("__id")).limit(numSeeds)
-      .select(col("__id").as("__sid"), col("__v").as("__sv"),
-        col("__np").as("__snp"))
-    val w = Window.partitionBy(col("__id"))
-      .orderBy(col("__cm").desc, col("__sid"))
-    base.crossJoin(broadcast(seeds)) // n x numSeeds fixed-width rows
-      .withColumn("__cm",
-        round(picoDot(col("__v"), col("__sv")).cast("double") /
-          (sqrt(col("__np").cast("double")) *
-            sqrt(col("__snp").cast("double"))) * 1e6).cast("long"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+      numSeeds: Int = 8): DataFrame =
+    assignToSeeds(df, idCol, vecCol, numSeeds)
       .select(col("__sid"), posexplode(col("__v")))
       .select(col("__sid"), col("pos").as("dim"),
         round(col("col").cast("double") * lit(1e6)).cast("long")
@@ -1425,7 +1342,6 @@ object Similarity {
         col("__n").cast("bigint").as("n_assigned"),
         expr("CAST(__s div __n AS BIGINT)").as("centroid_micros"))
       .orderBy(col("seed_id"), col("dim"))
-  }
 
   /** MULTI-ROUND Lloyd k-means, hash-gradable — the actual clustering
     * loop [[kmeansStep]] grades one iteration of: `rounds` full
@@ -1536,7 +1452,7 @@ object Similarity {
     *
     * Scale: this is the EXACT baseline — probes × train fixed-width
     * comparison rows (never train × train); for corpus-scale probe
-    * sets substitute the IVF probe ([[topkIvf]]) for the cross join
+    * sets substitute the IVF probe ([[ivfProbe]]) for the cross join
     * and keep the vote/confusion tail unchanged. The vote is one
     * (probe, label)-keyed hash-agg plus two probe-keyed windows. The
     * pairwise cosine is the codegen'd [[graft.expr.QuantizedCosine]]

@@ -13,6 +13,13 @@ import Shared.{built, setsEqual, tmpPath}
   * range variants. The recall gates compare each approximate tier with
   * the exact brute-force answer as one driver-checkable row. */
 object SimilarityQueries {
+  /** Recall readout of `got` against `truth` on (q_id, n_id): one-row
+    * frames (n_true) and (n_hit); each gate applies its own bar. */
+  private def recallCounts(truth: DataFrame, got: DataFrame) =
+    (truth.agg(count(lit(1)).as("n_true")),
+      truth.join(got, Seq("q_id", "n_id"), "left_semi")
+        .agg(count(lit(1)).as("n_hit")))
+
   val specs: Seq[QuerySpec] = Seq(
 
     QuerySpec("sim_hard_negatives", (s, dir) => {
@@ -73,14 +80,12 @@ object SimilarityQueries {
         .withColumn("__r", row_number().over(
           Window.partitionBy($"q_id").orderBy($"__c".desc, $"n_id")))
         .filter($"__r" <= 5).select($"q_id", $"n_id")
-      val hits = exact.join(hn.select($"q_id", $"n_id"),
-        Seq("q_id", "n_id"), "left_semi")
+      val (nTrue, nHit) = recallCounts(exact, hn.select($"q_id", $"n_id"))
       emb.agg(count(lit(1)).cast("bigint").as("n_anchors"))
-        .crossJoin(exact.agg(count(lit(1)).cast("bigint").as("n_true")))
-        .crossJoin(hits.agg(count(lit(1)).as("__hit")))
+        .crossJoin(nTrue).crossJoin(nHit)
         .crossJoin(crossOk).crossJoin(perAnchor)
         .select($"n_anchors", $"n_true",
-          (($"__hit".cast("double") / $"n_true".cast("double")) >= 0.6)
+          (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.6)
             .as("recall_ok"),
           $"all_cross_label", $"at_most_k", $"ranks_dense")
     },
@@ -110,8 +115,7 @@ object SimilarityQueries {
         nlist = nlist, nprobe = nprobe).cache()
       val brute = Similarity.bruteForceTopK(emb, emb, "embedding",
         "vec_id", k = 5).select($"q_id", $"n_id").cache()
-      val hits = brute.join(g.select($"q_id", $"n_id"),
-        Seq("q_id", "n_id"), "left_semi")
+      val (nTrue, nHit) = recallCounts(brute, g.select($"q_id", $"n_id"))
       val mutualOp = Similarity.knnGraph(emb, "embedding", "vec_id", k = 5,
         nlist = nlist, nprobe = nprobe, mutual = true)
         .select($"q_id", $"n_id")
@@ -120,14 +124,13 @@ object SimilarityQueries {
           Seq("q_id", "n_id"), "left_semi")
       val swapped = mutualOp.select($"n_id".as("q_id"), $"q_id".as("n_id"))
       emb.agg(count(lit(1)).cast("bigint").as("n_vectors"))
-        .crossJoin(brute.agg(count(lit(1)).cast("bigint").as("n_true")))
-        .crossJoin(hits.agg(count(lit(1)).as("__hit")))
+        .crossJoin(nTrue).crossJoin(nHit)
         .crossJoin(setsEqual(mutualOp, mutualExpected,
           Seq("q_id", "n_id"), "mutual_matches_op"))
         .crossJoin(setsEqual(mutualOp, swapped,
           Seq("q_id", "n_id"), "mutual_symmetric"))
         .select($"n_vectors", $"n_true",
-          (($"__hit".cast("double") / $"n_true".cast("double")) >= 0.6)
+          (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.6)
             .as("recall_ok"),
           $"mutual_matches_op", $"mutual_symmetric")
     },
@@ -312,9 +315,8 @@ object SimilarityQueries {
       val gotLoaded = Similarity.ivfProbeFiltered(loaded, q,
           "embedding", "vec_id", Seq("label"), k = 5, nprobe = nprobe)
         .select($"q_id", $"n_id")
-      truth.agg(count(lit(1)).as("n_true"))
-        .crossJoin(truth.join(got, Seq("q_id", "n_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hit")))
+      val (nTrue, nHit) = recallCounts(truth, got)
+      nTrue.crossJoin(nHit)
         .crossJoin(setsEqual(got, gotLoaded, Seq("q_id", "n_id"),
           "loaded_agrees"))
         .select(($"n_true" > 0).as("nonempty"),
@@ -581,12 +583,11 @@ object SimilarityQueries {
         .select($"q_id", $"n_id")
       val lsh = Similarity.lshTopK(emb, q, "embedding", "vec_id", k = 5, planes = 6)
         .select($"q_id", $"n_id")
-      val hits = brute.join(lsh, Seq("q_id", "n_id"), "left_semi")
       // threshold gate, not the exact hit count: recall@5 with 6
       // planes is ~0.44 here, but the exact value shifts with any
       // plane/seed/testdata retune — >= 0.4 is the contract
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
+      val (nTrue, nHit) = recallCounts(brute, lsh)
+      nTrue.crossJoin(nHit)
         .select(lit(5).as("k"), $"n_true",
           (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.4).as("recall_ok"))
     },
@@ -673,9 +674,8 @@ object SimilarityQueries {
           built.pqCodesSliced(s, dir), books, q, emb, "embedding",
           "vec_id", "label", k = 5)
         .select($"q_id", $"n_id")
-      val hits = truth.join(got, Seq("q_id", "n_id"), "left_semi")
-      truth.agg(count(lit(1)).as("n_true"))
-        .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
+      val (nTrue, nHit) = recallCounts(truth, got)
+      nTrue.crossJoin(nHit)
         .select(lit(5).as("k"), $"n_true",
           (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.7)
             .as("recall_ok"))
@@ -699,9 +699,8 @@ object SimilarityQueries {
       val pq = Similarity.pqAdcTopKRefined(codes, books, q, emb,
           "embedding", "vec_id", k = 5)
         .select($"q_id", $"n_id")
-      val hits = brute.join(pq, Seq("q_id", "n_id"), "left_semi")
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
+      val (nTrue, nHit) = recallCounts(brute, pq)
+      nTrue.crossJoin(nHit)
         .select(lit(5).as("k"), $"n_true",
           (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.7).as("recall_ok"))
     },
@@ -723,9 +722,8 @@ object SimilarityQueries {
           "embedding", "vec_id", k = 5,
           nprobe = Similarity.ivfAutoNprobe(idx.nlist))
         .select($"q_id", $"n_id")
-      val hits = brute.join(ivf, Seq("q_id", "n_id"), "left_semi")
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
+      val (nTrue, nHit) = recallCounts(brute, ivf)
+      nTrue.crossJoin(nHit)
         .select(lit(5).as("k"), $"n_true",
           (($"n_hit".cast("double") / $"n_true".cast("double")) >= 0.6).as("recall_ok"))
     },
@@ -753,20 +751,19 @@ object SimilarityQueries {
       val idxFull = built.ivfIndex(s, dir)
       val brute = Similarity.bruteForceTopK(emb, q, "embedding", "vec_id", k = 5)
         .select($"q_id", $"n_id")
-      def nHits(idx: graft.llm.Similarity.IvfIndex): DataFrame =
-        brute.join(
-          Similarity.ivfProbe(idx, q, "embedding", "vec_id", k = 5,
-              nprobe = Similarity.ivfAutoNprobe(idx.nlist))
-            .select($"q_id", $"n_id"),
-          Seq("q_id", "n_id"), "left_semi")
-          .agg(count(lit(1)).cast("double"))
+      def probe(idx: graft.llm.Similarity.IvfIndex): DataFrame =
+        Similarity.ivfProbe(idx, q, "embedding", "vec_id", k = 5,
+            nprobe = Similarity.ivfAutoNprobe(idx.nlist))
+          .select($"q_id", $"n_id")
+      val (nTrue, hApp) = recallCounts(brute, probe(idxApp))
+      val (_, hFull) = recallCounts(brute, probe(idxFull))
       val counts = idxApp.assigned.agg(
         count(lit(1)).as("n_indexed"),
         count_distinct($"n_id").as("n_uniq"))
       emb.agg(count(lit(1)).as("n_total")).crossJoin(counts)
-        .crossJoin(nHits(idxApp).toDF("h_app"))
-        .crossJoin(nHits(idxFull).toDF("h_full"))
-        .crossJoin(brute.agg(count(lit(1)).cast("double").as("n_true")))
+        .crossJoin(hApp.select($"n_hit".cast("double").as("h_app")))
+        .crossJoin(hFull.select($"n_hit".cast("double").as("h_full")))
+        .crossJoin(nTrue.select($"n_true".cast("double").as("n_true")))
         .select($"n_total".as("n_indexed"),
           ($"n_indexed" === $"n_total" && $"n_uniq" === $"n_total").as("all_indexed"),
           ($"h_app" / $"n_true" >= 0.55 &&

@@ -223,6 +223,89 @@ class SimilaritySpec extends SparkSpec {
     assert(exC.getMessage.contains("atomic"), exC.getMessage)
   }
 
+  test("retrieval grid: k < 1, nprobe < 1 and a short shortlist refuse at the call, before any Spark job") {
+    val emb = Seq((1L, Array(1f, 0f), 0), (2L, Array(0f, 1f), 0),
+      (3L, Array(1f, 1f), 0)).toDF("vec_id", "embedding", "slice")
+    val idx = Similarity.IvfIndex(
+      Seq((1L, Array(1f, 0f), 0, 0), (2L, Array(0f, 1f), 0, 0))
+        .toDF("n_id", "n_vec", "cluster", "slice"),
+      Seq((0, Array(1f, 0f))).toDF("cluster", "centroid"), 1)
+    val books = Similarity.PqCodebooks(1, 2, 1, Array(Array(Array(1f, 0f))))
+    val codes = Seq((1L, Array[Short](0), "int:v0"))
+      .toDF("vec_id", "codes", "slice_key")
+    val (v, id) = ("embedding", "vec_id")
+    val badK = "k must be >= 1 (got 0)"
+    val badProbe = "nprobe must be >= 1 (got 0)"
+    val badShort = "shortlist must be >= k"
+    val calls: Seq[(String, String, () => Any)] = Seq(
+      ("bruteForceTopK", badK, () => Similarity.bruteForceTopK(emb, emb, v, id, 0)),
+      ("lshTopK", badK, () => Similarity.lshTopK(emb, emb, v, id, 0)),
+      ("ivfProbe", badK, () => Similarity.ivfProbe(idx, emb, v, id, 0)),
+      ("ivfTopK", badK, () => Similarity.ivfTopK(emb, emb, v, id, 0, nlist = 1)),
+      ("knnGraph", badK, () => Similarity.knnGraph(emb, v, id, 0, nlist = 1)),
+      ("pqAdcTopK", badK, () => Similarity.pqAdcTopK(codes, books, emb, v, id, 0)),
+      ("pqAdcTopKRefined", badK,
+        () => Similarity.pqAdcTopKRefined(codes, books, emb, emb, v, id, 0)),
+      ("ivfProbe nprobe", badProbe,
+        () => Similarity.ivfProbe(idx, emb, v, id, 1, nprobe = 0)),
+      ("ivfProbeFiltered nprobe", badProbe, () => Similarity.ivfProbeFiltered(
+        idx, emb, v, id, Seq("slice"), 1, nprobe = 0)),
+      ("ivfRangeSearch nprobe", badProbe,
+        () => Similarity.ivfRangeSearch(idx, emb, v, id, 0L, nprobe = 0)),
+      ("ivfRangeSearchFiltered nprobe", badProbe,
+        () => Similarity.ivfRangeSearchFiltered(idx, emb, v, id,
+          Seq("slice"), 0L, nprobe = 0)),
+      ("pqAdcTopKRefined shortlist", badShort,
+        () => Similarity.pqAdcTopKRefined(codes, books, emb, emb, v, id,
+          3, shortlist = 2)),
+      ("pqAdcTopKRefinedFiltered shortlist", badShort,
+        () => Similarity.pqAdcTopKRefinedFiltered(codes, books, emb, emb,
+          v, id, "slice", 3, shortlist = 1)))
+    calls.foreach { case (name, msg, call) =>
+      val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      assert(jobs == 0, s"$name ran $jobs Spark jobs before refusing")
+    }
+  }
+
+  test("twins agree: plain vs one-slice probe, range, ADC scan; centroidAssign vs kmeansStep counts") {
+    val rnd = new scala.util.Random(29)
+    val df = (0 until 120).map(i =>
+        (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").withColumn("slice", lit(0)).cache()
+    val q = df.filter($"vec_id" < 10)
+    val (v, id) = ("embedding", "vec_id")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy(d.columns.map(col): _*).collect().toSeq
+    def same(what: String, a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Unit = {
+      val (ra, rb) = (rows(a), rows(b))
+      assert(ra.nonEmpty, s"$what: empty")
+      assert(ra == rb, s"$what: ${ra.diff(rb).take(3)} / ${rb.diff(ra).take(3)}")
+    }
+    val idx = Similarity.ivfBuild(df, v, id, nlist = 6)
+    val sliced = idx.copy(assigned = idx.assigned.withColumn("slice", lit(0)))
+    same("ivfProbe", Similarity.ivfProbe(idx, q, v, id, k = 5, nprobe = 2),
+      Similarity.ivfProbeFiltered(sliced, q, v, id, Seq("slice"), k = 5,
+        nprobe = 2))
+    same("ivfRangeSearch",
+      Similarity.ivfRangeSearch(idx, q, v, id, 200000L, nprobe = 2),
+      Similarity.ivfRangeSearchFiltered(sliced, q, v, id, Seq("slice"),
+        200000L, nprobe = 2))
+    val books = Similarity.pqTrain(df, v, m = 4, k = 16)
+    same("pqAdcTopK",
+      Similarity.pqAdcTopK(Similarity.pqEncode(df, v, id, books), books,
+        q, v, id, 5),
+      Similarity.pqAdcTopKFiltered(
+        Similarity.pqEncodeSliced(df, v, id, books, "slice"), books, q, v,
+        id, "slice", 5))
+    same("seed n_assigned",
+      Similarity.centroidAssign(df, id, v, numSeeds = 4)
+        .select($"seed_id", $"n_assigned"),
+      Similarity.kmeansStep(df, id, v, numSeeds = 4)
+        .select($"seed_id", $"n_assigned").distinct())
+  }
+
   test("pq: codes are within [0,k); encode is deterministic; save/load round-trips") {
     val rnd = new scala.util.Random(11)
     val vecs = (0 until 60).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
