@@ -431,7 +431,7 @@ object Features {
         col("__y").isNotNull)
       .groupBy(col("look"))
       .agg(cells.head, cells.tail: _*)
-    val nLooks = byLookFull.count()
+    val nLooks = Eager.stats(byLookFull, count(lit(1))).getLong(0)
     require(nLooks <= maxLooks,
       s"schedule holds $nLooks looks (cap $maxLooks) — a look table " +
         "this large is row-scale data, not a monitoring schedule; " +
@@ -1369,13 +1369,17 @@ object Features {
     * `z = (w₀ + w₁x)/10⁶`), then
     * `w ← w − (lrPpm·g) div (n·10⁶)` in driver LONG arithmetic
     * (Java `/` and DuckDB `//` both truncate toward zero).
-    * SIDE-EFFECTING: `iters` aggregate jobs run at construction.
-    * Returns one row (n, w0_micros, w1_micros, n_correct,
-    * accuracy_ppm) — accuracy at the z ≥ 0 decision rule. Empty
-    * input returns empty.
+    * SIDE-EFFECTING: `iters + 1` jobs run at construction when `df`
+    * does not shuffle (one per map stage more if it does): the
+    * checkpoint of the feature table, which also counts its rows and
+    * takes step 1's gradient, one observed pass for each later step
+    * ([[Eager.stats]]) and one for the accuracy. Returns one row (n,
+    * w0_micros, w1_micros, n_correct, accuracy_ppm) — accuracy at the
+    * z ≥ 0 decision rule. Empty input returns empty.
     *
-    * Scale: each step is ONE map-side-combined aggregate over the
-    * (localCheckpointed) feature table; nothing shuffles wide. */
+    * Scale: each step is ONE observed pass over the checkpointed
+    * feature table — exact integer sums, no shuffle, no result
+    * funnelled through one partition. */
   def logisticGd(df: DataFrame, xExpr: Column, yExpr: Column,
       iters: Int = 5, lrPpm: Long = 500000L): DataFrame = {
     require(iters >= 1 && iters <= 100,
@@ -1383,34 +1387,38 @@ object Features {
     require(lrPpm > 0L, s"lrPpm must be > 0 (got $lrPpm)")
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(xExpr.cast("double").as("x"),
+    val rows = df.select(xExpr.cast("double").as("x"),
         yExpr.cast("boolean").as("y"))
       .filter(col("x").isNotNull && !isnan(col("x")) &&
         col("y").isNotNull)
-      .localCheckpoint(true) // iters + 1 consumers
-    val nRow = base.count()
+    var w0 = 0L; var w1 = 0L
+    val yD = when(col("y"), lit(1.0)).otherwise(lit(0.0))
+    def gAggs: Seq[Column] = {
+      val z = (lit(w0).cast("double") +
+        lit(w1).cast("double") * col("x")) / lit(1000000.0)
+      val sig = lit(1.0) / (lit(1.0) + exp(-z))
+      Seq(sum(round((sig - yD) * lit(1000000.0)).cast("long")).as("g0"),
+        sum(round((sig - yD) * col("x") * lit(1000000.0))
+          .cast("long")).as("g1"))
+    }
+    // the checkpoint job counts the rows and takes step 1's gradient
+    // (w = 0); steps 2..iters and the accuracy pass read the checkpoint
+    val (base, first) = Eager.checkpoint(rows, count(lit(1)) +: gAggs: _*)
+    val nRow = first.getLong(0)
     if (nRow == 0L) {
       Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("n", "w0_micros", "w1_micros", "n_correct",
           "accuracy_ppm")
     } else {
-      var w0 = 0L; var w1 = 0L
-      val yD = when(col("y"), lit(1.0)).otherwise(lit(0.0))
-      for (_ <- 1 to iters) {
-        val z = (lit(w0).cast("double") +
-          lit(w1).cast("double") * col("x")) / lit(1000000.0)
-        val sig = lit(1.0) / (lit(1.0) + exp(-z))
-        val g = base.agg(
-          sum(round((sig - yD) * lit(1000000.0)).cast("long")).as("g0"),
-          sum(round((sig - yD) * col("x") * lit(1000000.0))
-            .cast("long")).as("g1")).collect().head
-        w0 -= lrPpm * g.getLong(0) / (nRow * 1000000L)
-        w1 -= lrPpm * g.getLong(1) / (nRow * 1000000L)
+      for (step <- 1 to iters) {
+        val (g, at) =
+          if (step == 1) (first, 1) else (Eager.stats(base, gAggs: _*), 0)
+        w0 -= lrPpm * g.getLong(at) / (nRow * 1000000L)
+        w1 -= lrPpm * g.getLong(at + 1) / (nRow * 1000000L)
       }
       val zF = lit(w0).cast("double") + lit(w1).cast("double") * col("x")
-      val acc = base.agg(count(lit(1)).as("n"),
-        sum(when((zF >= 0.0) === col("y"), 1L).otherwise(0L))
-          .as("nc")).collect().head
+      val acc = Eager.stats(base, count(lit(1)).as("n"),
+        sum(when((zF >= 0.0) === col("y"), 1L).otherwise(0L)).as("nc"))
       Seq((acc.getLong(0), w0, w1, acc.getLong(1),
         acc.getLong(1) * 1000000L / acc.getLong(0)))
         .toDF("n", "w0_micros", "w1_micros", "n_correct",
@@ -1533,15 +1541,15 @@ object Features {
     * The feature count guards LOUDLY at 16: per step the aggregate
     * is one map-side-combined pass with k+1 sums — wide-feature
     * models belong in a real solver, not the replay harness.
-    * SIDE-EFFECTING: `iters` aggregate jobs run at construction.
+    * SIDE-EFFECTING: `iters + 1` jobs run at construction, as in
+    * [[logisticGd]].
     * Returns k+1 rows (weight_idx [0 = bias], w_micros, n,
     * n_correct, accuracy_ppm) — accuracy at the z ≥ 0 rule, summary
     * columns repeated per row so the output stays a flat hashable
     * table. Empty input returns empty.
     *
-    * Scale: identical to [[logisticGd]] — each step ONE
-    * map-side-combined aggregate over the localCheckpointed feature
-    * table; nothing shuffles wide. */
+    * Scale: identical to [[logisticGd]] — each step ONE observed pass
+    * over the checkpointed feature table; nothing shuffles. */
   def logisticGdMulti(df: DataFrame, xExprs: Seq[Column],
       yExpr: Column, iters: Int = 5, lrPpm: Long = 500000L)
       : DataFrame = {
@@ -1555,31 +1563,35 @@ object Features {
     import spark.implicits._
     val k = xExprs.size
     val xCols = (1 to k).map(j => s"__x$j")
-    val base = df.select(xExprs.zip(xCols).map {
+    val rows = df.select(xExprs.zip(xCols).map {
           case (e, n) => e.cast("double").as(n)
         } :+ yExpr.cast("boolean").as("__y"): _*)
       .filter(xCols.map(c => col(c).isNotNull && !isnan(col(c)))
         .reduce(_ && _) && col("__y").isNotNull)
-      .localCheckpoint(true) // iters + 1 consumers
-    val nRow = base.count()
+    val w = Array.fill(k + 1)(0L)
+    val yD = when(col("__y"), lit(1.0)).otherwise(lit(0.0))
+    def zTree: Column = xCols.zipWithIndex.foldLeft(
+      lit(w(0)).cast("double")) { case (acc, (c, j)) =>
+        acc + lit(w(j + 1)).cast("double") * col(c) }
+    def gAggs: Seq[Column] = {
+      val sig = lit(1.0) / (lit(1.0) + exp(-(zTree / lit(1000000.0))))
+      sum(round((sig - yD) * lit(1000000.0)).cast("long")).as("g0") +:
+        xCols.zipWithIndex.map { case (c, j) =>
+          sum(round((sig - yD) * col(c) * lit(1000000.0))
+            .cast("long")).as(s"g${j + 1}") }
+    }
+    // as in logisticGd: the checkpoint job counts the rows and takes
+    // step 1's gradient
+    val (base, first) = Eager.checkpoint(rows, count(lit(1)) +: gAggs: _*)
+    val nRow = first.getLong(0)
     if (nRow == 0L) {
       Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("weight_idx", "w_micros", "n", "n_correct",
           "accuracy_ppm")
     } else {
-      val w = Array.fill(k + 1)(0L)
-      val yD = when(col("__y"), lit(1.0)).otherwise(lit(0.0))
-      def zTree: Column = xCols.zipWithIndex.foldLeft(
-        lit(w(0)).cast("double")) { case (acc, (c, j)) =>
-          acc + lit(w(j + 1)).cast("double") * col(c) }
-      for (_ <- 1 to iters) {
-        val sig = lit(1.0) / (lit(1.0) + exp(-(zTree / lit(1000000.0))))
-        val gAggs = sum(round((sig - yD) * lit(1000000.0))
-            .cast("long")).as("g0") +:
-          xCols.zipWithIndex.map { case (c, j) =>
-            sum(round((sig - yD) * col(c) * lit(1000000.0))
-              .cast("long")).as(s"g${j + 1}") }
-        val g = base.agg(gAggs.head, gAggs.tail: _*).collect().head
+      for (step <- 1 to iters) {
+        val (g, at) =
+          if (step == 1) (first, 1) else (Eager.stats(base, gAggs: _*), 0)
         // BigInt on the driver: lrPpm·g_j wraps a Java long once
         // |g_j| > ~1.8e13 (≈18M rows at |x| ≤ 1) while the oracle's
         // BIGINT errors loudly — the update must not diverge
@@ -1587,17 +1599,18 @@ object Features {
         // and DuckDB //; longValueExact keeps the failure loud if a
         // step ever leaves the representable range.
         for (j <- 0 to k)
-          w(j) -= (BigInt(lrPpm) * g.getLong(j) /
+          w(j) -= (BigInt(lrPpm) * g.getLong(at + j) /
             (BigInt(nRow) * 1000000L)).bigInteger.longValueExact()
       }
-      val acc = base.agg(count(lit(1)).as("n"),
+      val acc = Eager.stats(base, count(lit(1)).as("n"),
         sum(when((zTree >= 0.0) === col("__y"), 1L).otherwise(0L))
-          .as("nc")).collect().head
+          .as("nc"))
       val (n, nc) = (acc.getLong(0), acc.getLong(1))
       w.toSeq.zipWithIndex.map { case (wj, j) =>
         (j.toLong, wj, n, nc, nc * 1000000L / n) }
         .toDF("weight_idx", "w_micros", "n", "n_correct",
           "accuracy_ppm")
+        .coalesce(1) // k + 1 ≤ 17 rows: sorted in one task, no range sample
         .orderBy(col("weight_idx"))
     }
   }
@@ -1624,7 +1637,8 @@ object Features {
     *
     * Scale: one row-scale hash-agg to k group-moment rows; the pair
     * join and the rank window are k²-scale — the loud `maxGroups`
-    * pre-flight (one narrow count, a documented eager exception)
+    * pre-flight (k counted by the job that checkpoints the group
+    * moments, a documented eager exception)
     * refuses a grouping column that isn't a treatment arm. */
   def posthocPairs(df: DataFrame, groupExpr: Column, valueExpr: Column,
       alphaMicros: Long = 50000L, maxGroups: Long = 200L): DataFrame = {
@@ -1632,14 +1646,14 @@ object Features {
       s"alphaMicros must be in (0, 1e6) (got $alphaMicros)")
     val dec = "decimal(38,0)"
     import org.apache.spark.sql.expressions.Window
-    val perGroup = df.select(groupExpr.cast("string").as("g"),
-        valueExpr.cast("long").as("x"))
-      .filter(col("g").isNotNull && col("x").isNotNull)
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("n"), sum(col("x").cast(dec)).as("s"),
-        sum(col("x").cast(dec) * col("x")).as("q"))
-      .localCheckpoint() // consumed twice (both sides of the pair join)
-    val k = perGroup.count()
+    // consumed twice (both sides of the pair join)
+    val (perGroup, k) = Eager.truncateCounted(
+      df.select(groupExpr.cast("string").as("g"),
+          valueExpr.cast("long").as("x"))
+        .filter(col("g").isNotNull && col("x").isNotNull)
+        .groupBy(col("g"))
+        .agg(count(lit(1)).as("n"), sum(col("x").cast(dec)).as("s"),
+          sum(col("x").cast(dec) * col("x")).as("q")))
     require(k <= maxGroups,
       s"posthocPairs: $k groups (cap $maxGroups) — the pair join is " +
         "k²-scale; a grouping column this wide is not a treatment arm")
@@ -1792,8 +1806,9 @@ object Features {
     * distinct-value census + one cumulative window over it
     * (value-scale), plus one broadcast-free residual update (the
     * stump is three scalars folded into the expression).
-    * SIDE-EFFECTING: two 1-row collects per round (totals and the
-    * winning split — model-scale, documented). Rounds are a small
+    * SIDE-EFFECTING: per round the checkpoint of the distinct-value
+    * census, which also observes its totals, and one 1-row collect of
+    * the winning split (model-scale, documented). Rounds are a small
     * constant by contract. */
   def boostedStumpsL2(df: DataFrame, featureExpr: Column,
       targetMicrosExpr: Column, rounds: Int = 2): DataFrame = {
@@ -1803,12 +1818,12 @@ object Features {
     val dec = "decimal(38,0)"
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(featureExpr.cast("long").as("__f"),
-        targetMicrosExpr.cast("long").as("__y"))
-      .filter(col("__f").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(true) // every round re-scans it
-    val head0 = base.agg(sum(col("__y")).as("s"),
-      count(lit(1)).as("n")).head() // 1-row totals (documented eager)
+    // every round re-scans it; its totals come from the checkpoint job
+    val (base, head0) = Eager.checkpoint(
+      df.select(featureExpr.cast("long").as("__f"),
+          targetMicrosExpr.cast("long").as("__y"))
+        .filter(col("__f").isNotNull && col("__y").isNotNull),
+      sum(col("__y")).as("s"), count(lit(1)).as("n"))
     if (head0.isNullAt(0) || head0.getLong(1) == 0L)
       return Seq.empty[(Long, Long, Long, Long, Long, Long)]
         .toDF("round", "threshold", "n_left", "n_right",
@@ -1820,11 +1835,11 @@ object Features {
     var rnd = 1
     var splittable = true
     while (rnd <= rounds && splittable) {
-      val byV = cur.groupBy(col("__f"))
-        .agg(sum(col("__r")).as("__sr"), count(lit(1)).as("__c"))
-        .localCheckpoint(true) // totals + cumulative scan consumers
-      val tot = byV.agg(sum(col("__sr")).as("st"), sum(col("__c")).as("nt"),
-        max(col("__f")).as("fmax")).head()
+      // cumulative scan consumer; totals observed by the checkpoint job
+      val (byV, tot) = Eager.checkpoint(cur.groupBy(col("__f"))
+          .agg(sum(col("__r")).as("__sr"), count(lit(1)).as("__c")),
+        sum(col("__sr")).as("st"), sum(col("__c")).as("nt"),
+        max(col("__f")).as("fmax"))
       val (st, nt, fmax) = (tot.getLong(0), tot.getLong(1), tot.getLong(2))
       val wCum = Window.orderBy(col("__f"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1858,6 +1873,7 @@ object Features {
     }
     out.toSeq.toDF("round", "threshold", "n_left", "n_right",
         "v_left_micros", "v_right_micros")
+      .coalesce(1) // ≤ 16 rounds: sorted in one task, no range sample
       .orderBy(col("round"))
   }
 

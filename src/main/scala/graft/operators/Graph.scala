@@ -32,27 +32,22 @@ import org.apache.spark.sql.types.LongType
   *    contract); hash-min is the default because dup graphs make its
   *    per-round cost strictly cheaper and its round count in practice
   *    smaller.
-  *  - The per-round convergence check is a count over the checkpointed
-  *    label table (an 8-byte column scan), not a collect of labels.
+  *  - The per-round convergence check is the exact label sum, observed
+  *    by the job that checkpoints the round's labels: no join against
+  *    the previous round, no extra count job, no collect of labels.
   */
 object Graph {
 
-  /** Per-round lineage truncation for the iterative ops, on the
-    * session's checkpoint policy. With no checkpoint dir configured it
-    * is `localCheckpoint` (executor-local blocks — fastest, but an
-    * executor loss mid-job kills a 30-round computation on a real
-    * cluster). A session with a checkpoint dir (`spark.checkpoint.dir`
-    * or `sparkContext.setCheckpointDir`) gets RELIABLE checkpoints
-    * instead: blocks land in that shared filesystem, so a lost executor
-    * recomputes from the last round, not from round zero. local[*]
-    * runs keep the default; long iterative jobs on preemptible
-    * clusters configure the dir. The loops truncate every round:
-    * r21's cadence-2 A/B lost (pagerank 8.26 s vs 8.67 s), since a lazy
-    * 2-round plan loses AQE's runtime sizing of the iterate. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(true)
+  // Per-round lineage truncation for the iterative ops, on the
+  // session's checkpoint policy (`Eager.truncate`); a round that
+  // needs the row count of what it truncated takes it from the
+  // checkpoint job (`Eager.truncateCounted`), not from a second
+  // count job. local[*] runs keep the local default; long iterative
+  // jobs on preemptible clusters configure the dir. The loops truncate
+  // every round: r21's cadence-2 A/B lost (pagerank 8.26 s vs 8.67 s),
+  // since a lazy 2-round plan loses AQE's runtime sizing of the
+  // iterate.
+  import Eager.{truncate, truncateCounted}
 
   private def requireIters(iters: Int, max: Int = 50): Unit =
     require(iters >= 1 && iters <= max,
@@ -186,24 +181,27 @@ object Graph {
     // symmetrize + dedupe parallel edges once, so every propagation
     // round joins against the minimal edge set
     val sym = truncate(symEdges(edges, srcCol, dstCol))
-    var labels = truncate(
+    // labels only DECREASE, so an unchanged exact label sum (observed
+    // by the checkpoint job) means no label moved this round
+    val labelSum = sum(col("comp").cast("decimal(38,0)"))
+    var (labels, prevSum) = Eager.checkpoint(
       sym.select(col("u").as("id")).distinct()
-        .withColumn("comp", col("id")))
-    var changed = 1L
+        .withColumn("comp", col("id")), labelSum)
+    var changed = true
     var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    while (changed && iter < maxIter) {
       // closed-neighborhood min: each vertex keeps its own label and
       // receives every neighbor's label, then takes the minimum
       val msgs = sym.join(labels.withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), col("comp"))
-      val next = truncate(labels.union(msgs)
-        .groupBy("id").agg(min("comp").as("comp")))
-      changed = next.join(labels.withColumnRenamed("comp", "prev"), "id")
-        .filter(col("comp") =!= col("prev")).count()
+      val (next, nextSum) = Eager.checkpoint(labels.union(msgs)
+        .groupBy("id").agg(min("comp").as("comp")), labelSum)
+      changed = nextSum != prevSum
       labels = next
+      prevSum = nextSum
       iter += 1
     }
-    require(changed == 0,
+    require(!changed,
       s"connectedComponents did not converge within $maxIter rounds — " +
         "the graph has a longer path than expected for a dup-cluster " +
         "graph; raise maxIter or use large-star/small-star")
@@ -266,9 +264,10 @@ object Graph {
   def connectedComponentsStar(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b", maxIter: Int = 50): DataFrame = {
     val e0 = longEdges(edges, srcCol, dstCol)
-    var e = truncate(e0.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct())
+    var (e, nE) = truncateCounted(
+      e0.select(greatest(col("u"), col("v")).as("u"),
+          least(col("u"), col("v")).as("v"))
+        .distinct())
     val allVertices = truncate(e0.select(col("u").as("id"))
       .union(e0.select(col("v").as("id"))).distinct())
 
@@ -286,30 +285,27 @@ object Graph {
 
     var iter = 0
     var converged = false
-    var nE = e.count()
     while (!converged && iter < maxIter) {
       // LARGE-STAR: every node links its LARGER neighbors to its
       // neighborhood min — long tails fold onto local minima
       val nb = nbrs(e)
-      val large = truncate(nb.filter(col("v") > col("u"))
+      val (large, nLarge) = truncateCounted(nb.filter(col("v") > col("u"))
         .join(mins(nb), "u")
         .select(col("v").as("u"), col("m").as("v"))
         .distinct())
-      val nLarge = large.count()
       val largeStable = sameEdges(large, e, nLarge, nE)
       // SMALL-STAR on large-star's output: every node links its
       // SMALLER neighbors (and itself) to the min of that smaller set
       // — stars flatten. Canonical (u > v) IS the smaller-neighbor view
       val smaller = large
       val mSmall = smaller.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = truncate(smaller.join(mSmall, "u")
+      val (small, nSmall) = truncateCounted(smaller.join(mSmall, "u")
         .select(explode(array(
           struct(col("u"), col("m").as("v")),
           struct(col("v").as("u"), col("m").as("v")))).as("e"))
         .select(col("e.u"), col("e.v"))
         .filter(col("u") =!= col("v"))
         .distinct())
-      val nSmall = small.count()
       converged = largeStable && sameEdges(small, large, nSmall, nLarge)
       e = small
       nE = nSmall
@@ -407,11 +403,11 @@ object Graph {
     val ew = truncate(e.join(
       e.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
     val sd = seeds.select(col(seedCol).cast("string").as("node")).distinct()
-    val nodes = truncate(nodesOf(e)
+    val (nodes, seedCount) = Eager.checkpoint(nodesOf(e)
       .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")
       .withColumn("is_seed", coalesce(col("__seed"), lit(false)))
-      .drop("__seed"))
-    val nSeeds = nodes.filter(col("is_seed")).count()
+      .drop("__seed"), count(when(col("is_seed"), 1)))
+    val nSeeds = seedCount.getLong(0)
     require(nSeeds > 0, "no seed appears in the edge set")
     val base = teleport / nSeeds
     val seedBase = when(col("is_seed"), lit(base)).otherwise(lit(0L))
@@ -623,19 +619,17 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, srcCol: String = "id_a",
       dstCol: String = "id_b", maxIter: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    var e = truncate(symEdges(edges, srcCol, dstCol))
-    var nEdges = e.count()
+    var (e, nEdges) = truncateCounted(symEdges(edges, srcCol, dstCol))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       iter += 1
       val alive = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("u").as("id"))
-      val pruned = truncate(e
+      val (pruned, n) = truncateCounted(e
         .join(alive.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
         .join(alive.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
         .select(col("u"), col("v")))
-      val n = pruned.count()
       converged = n == nEdges
       nEdges = n
       e = pruned
@@ -757,8 +751,9 @@ object Graph {
       maxGroupItems: Long = 10000L, weighted: Boolean = false): DataFrame = {
     val g = df.select(col(groupCol).as("__g"), col(itemCol).as("__i"))
       .filter(col("__i").isNotNull).distinct()
-    val biggest = g.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n"))).head().getLong(0)
+    val most = Eager.stats(g.groupBy(col("__g")).agg(count(lit(1)).as("__n")),
+      max(col("__n")))
+    val biggest = if (most.isNullAt(0)) 0L else most.getLong(0)
     require(biggest <= maxGroupItems,
       s"largest group has $biggest items > maxGroupItems=$maxGroupItems; " +
         s"the pair fan-out is quadratic per group — cap or sample the " +
@@ -856,12 +851,11 @@ object Graph {
     val e = truncate(edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"),
       col(weightCol).cast("long").as("w")))
-    var dist = truncate(
+    var (dist, improvedN) = truncateCounted(
       sources.select(col(sourceCol).cast("long").as("id")).distinct()
         .withColumn("dist", lit(0L)))
     var frontier = dist
     var hop = 0
-    var improvedN = frontier.count()
     while (improvedN > 0 && hop < maxHops) {
       hop += 1
       val cand = frontier.join(e, frontier("id") === e("u"))
@@ -869,11 +863,11 @@ object Graph {
         .groupBy(col("id")).agg(min(col("__d")).as("__d"))
       // keep only genuine improvements: they are both the new frontier
       // and the rows to fold into the distance table
-      val improved = truncate(
+      val (improved, nImproved) = truncateCounted(
         cand.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left_outer")
           .filter(col("__old").isNull || col("__d") < col("__old"))
           .select(col("id"), col("__d").as("dist")))
-      improvedN = improved.count()
+      improvedN = nImproved
       if (improvedN > 0) {
         dist = truncate(
           dist.join(improved.select(col("id")), Seq("id"), "left_anti")
@@ -920,22 +914,21 @@ object Graph {
     // frontiers are checkpointed once, the settled state is a lazy
     // union of them instead of a per-hop full rewrite
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    parts += truncate(
+    var (frontier, live) = truncateCounted(
       sources.select(col(sourceCol).cast("long").as("id")).distinct()
         .withColumn("dist", lit(0L)))
+    parts += frontier
     def settled = parts.reduce(_.unionByName(_))
-    var frontier = parts.head
     var hop = 0
-    var live = frontier.count()
     while (live > 0 && hop < maxHops) {
       hop += 1
-      val next = truncate(
+      val (next, nNext) = truncateCounted(
         frontier.join(sym, frontier("id") === sym("u"))
           .select(col("v").as("id"))
           .join(settled.select(col("id")), Seq("id"), "left_anti")
           .distinct()
           .withColumn("dist", lit(hop.toLong)))
-      live = next.count()
+      live = nNext
       if (live > 0) {
         parts += next
         frontier = next
@@ -990,7 +983,7 @@ object Graph {
       val (seedB, eccA) = (far.getLong(0), far.getLong(1))
       val d2 = shortestPathsFromSym(sym, Seq(seedB).toDF("id"),
         "id", maxHops)
-      val lb = d2.agg(max(col("dist"))).collect().head.getLong(0)
+      val lb = Eager.stats(d2, max(col("dist"))).getLong(0)
       Seq((seedA, eccA, seedB, lb))
         .toDF("seed_a", "ecc_a", "seed_b", "diameter_lb")
     }
@@ -1109,7 +1102,7 @@ object Graph {
     val sym = truncate(symEdges(edges, srcCol, dstCol))
     val seeds = sources.select(col(sourceCol).cast("long").as("seed"))
       .distinct()
-    val nSeeds = seeds.count()
+    val nSeeds = Eager.stats(seeds, count(lit(1))).getLong(0)
     require(nSeeds <= maxSeeds,
       s"$nSeeds seeds exceed maxSeeds=$maxSeeds — per-seed BFS state is " +
         "(seeds x vertices); sample the panel or raise the cap if the " +
@@ -1155,7 +1148,7 @@ object Graph {
       val cm = maskOf(frontier.join(sym, frontier("id") === sym("u"))
         .select(col("sidx"), col("v").as("id")))
       val sm = maskOf(settled).withColumnRenamed("mask", "__sm")
-      val next = truncate(
+      val (next, nNext) = truncateCounted(
         cm.join(sm, Seq("id"), "left")
           .select(col("id"), expr(
             "transform(mask, (m, i) -> m & ~coalesce(__sm[i], 0L))")
@@ -1168,7 +1161,7 @@ object Graph {
             .as("b"))
           .select((col("wi").cast("long") * 64L + col("b").cast("long"))
             .as("sidx"), col("id"), lit(hop.toLong).as("dist")))
-      live = next.count()
+      live = nNext
       if (live > 0) {
         parts += next
         frontier = next
@@ -1213,8 +1206,8 @@ object Graph {
     *
     * Hop bound: dependencies count only shortest paths of length ≤
     * `maxHops` — the same truncation contract as [[shortestPaths]],
-    * identical in a replay. SIDE-EFFECTING: the per-hop counts run
-    * eagerly at construction.
+    * identical in a replay. SIDE-EFFECTING: each hop's frontier is
+    * checkpointed at construction and counted by that same pass.
     *
     * Scale, per hop and per back-sweep round: one (seed,id)-keyed
     * frontier ⋈ edges equi-join + one hash-agg — fixed-width rows
@@ -1226,31 +1219,31 @@ object Graph {
       maxSeeds: Long = 10000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val sym = truncate(symEdges(edges, srcCol, dstCol))
-    val seeds = sources.select(col(sourceCol).cast("long").as("seed"))
-      .distinct()
-    val nSeeds = seeds.count()
+    // forward sweep: levels(d) = (seed, id, sigma) for vertices first
+    // reached at hop d; sigma = number of shortest s→v paths. Level 0
+    // is seed-scale, so it materializes before the seed-count guard.
+    val (level0, nSeeds) = truncateCounted(
+      sources.select(col(sourceCol).cast("long").as("seed")).distinct()
+        .select(col("seed"), col("seed").as("id"),
+          lit(1).cast("decimal(38,0)").as("sigma")))
     require(nSeeds <= maxSeeds,
       s"$nSeeds seeds exceed maxSeeds=$maxSeeds — per-seed BFS state is " +
         "(seeds x vertices); sample the panel or raise the cap if the " +
         "cluster is sized for it")
-    // forward sweep: levels(d) = (seed, id, sigma) for vertices first
-    // reached at hop d; sigma = number of shortest s→v paths
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    levels += truncate(seeds.select(col("seed"), col("seed").as("id"),
-      lit(1).cast("decimal(38,0)").as("sigma")))
+    val levels = scala.collection.mutable.ArrayBuffer(level0)
     var reached = levels.head.select(col("seed"), col("id"))
     var frontier = levels.head
     var hop = 0
     var live = nSeeds
     while (live > 0 && hop < maxHops) {
       hop += 1
-      val next = truncate(
+      val (next, nNext) = truncateCounted(
         frontier.join(sym, frontier("id") === sym("u"))
           .select(col("seed"), col("v").as("id"), col("sigma"))
           .groupBy(col("seed"), col("id"))
           .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
           .join(reached, Seq("seed", "id"), "left_anti"))
-      live = next.count()
+      live = nNext
       if (live > 0) {
         levels += next
         reached = truncate(
@@ -1371,12 +1364,12 @@ object Graph {
   def louvainMove(edges: DataFrame, srcCol: String = "id_a",
       dstCol: String = "id_b", iters: Int = 3): DataFrame = {
     requireIters(iters, max = 20)
-    val e = truncate(symEdges(edges, srcCol, dstCol))
+    // symmetrized: |directed rows| = 2m exactly
+    val (e, twoM) = truncateCounted(symEdges(edges, srcCol, dstCol))
     require(e.filter(col("u") < 0L).isEmpty,
       "louvainMove requires non-negative vertex ids " +
         "(the deterministic tie-break encodes min-label as a max)")
     val deg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    val twoM = e.count() // symmetrized: |directed rows| = 2m exactly
     var labels = deg.select(col("id"), col("id").as("label"))
     for (_ <- 1 to iters) {
       val tot = labels.join(deg, "id")
@@ -1549,7 +1542,7 @@ object Graph {
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "id_a",
       dstCol: String = "id_b", maxIter: Int = 15): DataFrame = {
     require(k >= 3, s"k must be >= 3 (got $k)")
-    var und = truncate(canonEdges(edges, srcCol, dstCol))
+    var (und, nEdges) = truncateCounted(canonEdges(edges, srcCol, dstCol))
     // Orientation computed ONCE from the INITIAL degrees and reused
     // every round: wedge enumeration needs only SOME consistent total
     // vertex order (each triangle then has exactly one apex with two
@@ -1572,7 +1565,6 @@ object Graph {
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("support"))
-    var nEdges = und.count()
     var iter = 0
     var converged = nEdges == 0L
     // the converged round's surviving support rows — on convergence
@@ -1596,9 +1588,10 @@ object Graph {
     var prevUnd = und // the edge set lastKeep's supports were counted in
     while (!converged && iter < maxIter) {
       iter += 1
-      val keep = lastKeep match {
+      val (keep, n2) = lastKeep match {
         case None => // round 1: the one full wedge census
-          truncate(supports(und).filter(col("support") >= (k - 2).toLong))
+          truncateCounted(
+            supports(und).filter(col("support") >= (k - 2).toLong))
         case Some(prev) =>
           // prev = supports within prevUnd, rows = the live set `und`
           val peeled = prevUnd.join(und, Seq("a", "b"), "left_anti")
@@ -1628,7 +1621,7 @@ object Graph {
             .select(col("e.a").as("a"), col("e.b").as("b"))
             .groupBy(col("a"), col("b"))
             .agg(count(lit(1)).as("__d"))
-          truncate(prev.join(dec, Seq("a", "b"), "left")
+          truncateCounted(prev.join(dec, Seq("a", "b"), "left")
             .select(col("a"), col("b"),
               (col("support") - coalesce(col("__d"), lit(0L)))
                 .as("support"))
@@ -1636,7 +1629,6 @@ object Graph {
       }
       // keep is checkpointed; the live edge set is its projection —
       // no second per-round truncation needed
-      val n2 = keep.count()
       converged = n2 == nEdges
       prevUnd = und
       und = keep.select(col("a"), col("b"))
@@ -1746,9 +1738,10 @@ object Graph {
     while (changed && it < maxIter) {
       val cand = e.join(lvl.withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), (col("level") + 1L).as("level"))
-      lvl = truncate(lvl.union(cand)
-        .groupBy("id").agg(max("level").as("level")))
-      val s2 = lvl.agg(sum("level")).head().getLong(0)
+      val (next, nextSum) = Eager.checkpoint(lvl.union(cand)
+        .groupBy("id").agg(max("level").as("level")), sum("level"))
+      lvl = next
+      val s2 = nextSum.getLong(0)
       changed = s2 != prevSum
       prevSum = s2
       it += 1
@@ -1799,10 +1792,9 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst",
       maxOuter: Int = 20, maxIter: Int = 60): DataFrame = {
     var e = truncate(longEdges(edges, srcCol, dstCol).distinct())
-    var verts = truncate(
+    var (verts, nVerts) = truncateCounted(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .distinct())
-    var nVerts = verts.count()
     val assignedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
     while (nVerts > 0 && outer < maxOuter) {
@@ -1814,10 +1806,9 @@ object Graph {
       var trimming = true
       var trimIter = 0
       while (trimming && nVerts > 0 && trimIter < maxIter) {
-        val twoSided = truncate(
+        val (twoSided, nTwo) = truncateCounted(
           e.select(col("u").as("id")).distinct()
             .join(e.select(col("v").as("id")).distinct(), "id"))
-        val nTwo = twoSided.count()
         if (nTwo == nVerts) trimming = false
         else {
           assignedParts += verts.join(twoSided, Seq("id"), "left_anti")
@@ -1836,18 +1827,20 @@ object Graph {
       if (nVerts > 0) {
         // 2. color: min id reaching each vertex, forward propagation.
         // Labels only DECREASE, so sum(c) is a strictly monotone
-        // convergence witness — one narrow agg over the checkpointed
-        // table instead of a join-against-previous + count.
-        var color = truncate(verts.withColumn("c", col("id")))
-        var prevSum = color.agg(sum("c")).head().getLong(0)
+        // convergence witness — observed by the job that checkpoints
+        // the table, instead of a join-against-previous + count.
+        var (color, colorSum) = Eager.checkpoint(
+          verts.withColumn("c", col("id")), sum("c"))
+        var prevSum = colorSum.getLong(0)
         var changed = true
         var it = 0
         while (changed && it < maxIter) {
           val msgs = e.join(color.withColumnRenamed("id", "u"), "u")
             .select(col("v").as("id"), col("c"))
-          color = truncate(color.union(msgs)
-            .groupBy("id").agg(min("c").as("c")))
-          val s2 = color.agg(sum("c")).head().getLong(0)
+          val (next, nextSum) = Eager.checkpoint(color.union(msgs)
+            .groupBy("id").agg(min("c").as("c")), sum("c"))
+          color = next
+          val s2 = nextSum.getLong(0)
           changed = s2 != prevSum
           prevSum = s2
           it += 1
@@ -1861,16 +1854,15 @@ object Graph {
             .join(color.select(col("id").as("v"), col("c").as("cv")), "v")
             .filter(col("cu") === col("cv"))
             .select(col("u"), col("v"), col("cu").as("c")))
-        var mark = truncate(color.filter(col("id") === col("c")))
-        var nMark = mark.count()
+        var (mark, nMark) = truncateCounted(color.filter(col("id") === col("c")))
         var grew = true
         var mIt = 0
         while (grew && mIt < maxIter) {
           val reached = eCol
             .join(mark.select(col("id").as("v")), "v")
             .select(col("u").as("id"), col("c"))
-          mark = truncate(mark.union(reached).distinct())
-          val n2 = mark.count()
+          val (grown, n2) = truncateCounted(mark.union(reached).distinct())
+          mark = grown
           grew = n2 != nMark
           nMark = n2
           mIt += 1
@@ -1878,9 +1870,10 @@ object Graph {
         require(!grew,
           s"SCC backward mark did not converge within $maxIter rounds")
         assignedParts += mark.select(col("id"), col("c").as("scc_id"))
-        verts = truncate(verts.join(mark.select("id"), Seq("id"),
-          "left_anti"))
-        nVerts = verts.count()
+        val (rest, nRest) = truncateCounted(
+          verts.join(mark.select("id"), Seq("id"), "left_anti"))
+        verts = rest
+        nVerts = nRest
         e = truncate(
           e.join(verts.select(col("id").as("u")), "u")
             .join(verts.select(col("id").as("v")), "v")
@@ -1931,8 +1924,9 @@ object Graph {
     * — the latency-optimal tail that keeps a log₂V-round loop from
     * paying the full fixpoint-loop barrier cost per round. Labels
     * are truncated per round (lineage truncation on the session's
-    * checkpoint policy). SIDE-EFFECTING: one count per round (the convergence
-    * witness). Loud maxRounds guard.
+    * checkpoint policy). SIDE-EFFECTING: each round checkpoints the
+    * claimed edges and counts them (the convergence witness) in that
+    * same pass. Loud maxRounds guard.
     *
     * Returns the forest edges (src, dst, weight), src < dst. */
   def minimumSpanningForest(edges: DataFrame, srcCol: String = "id_a",
@@ -1972,13 +1966,13 @@ object Graph {
           col("w")))
       val wMin = Window.partitionBy(col("__g"))
         .orderBy(col("w"), col("a"), col("b"))
-      val picked = truncate(cand
+      // convergence witness: no component claimed an edge ⇔ no
+      // cross-component edge remained (counted by the checkpoint job)
+      val (picked, nPicked) = truncateCounted(cand
         .withColumn("__rn", row_number().over(wMin))
         .filter(col("__rn") === 1)
         .select(col("a"), col("b"), col("w")).distinct())
-      // convergence witness: no component claimed an edge ⇔ no
-      // cross-component edge remained (cheap — picked is checkpointed)
-      active = picked.count()
+      active = nPicked
       if (active > 0) {
         chosen = chosen.unionByName(picked) // ≤ log₂V unions deep
         // contract the CLAIMED label graph (≤ one edge per component)
@@ -2057,7 +2051,8 @@ object Graph {
     * Scale: per round one per-vertex argmin window over the live
     * edge table (edge-scale, fixed-width) + one mutual filter + two
     * anti-joins; live edges shrink monotonically; lineage truncates
-    * per round. SIDE-EFFECTING: one count per round.
+    * per round. SIDE-EFFECTING: each round checkpoints the live
+    * edges and counts them in that same pass.
     *
     * Returns the matched edges (src, dst, weight), src < dst. */
   def maximalMatching(edges: DataFrame, srcCol: String = "id_a",
@@ -2071,7 +2066,7 @@ object Graph {
         col(weightCol).cast("long").as("__w"))
       .filter(col("__s").isNotNull && col("__d").isNotNull &&
         col("__w").isNotNull && col("__s") =!= col("__d"))
-    var live = truncate(e0
+    var (live, remaining) = truncateCounted(e0
       .select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"), col("__w"))
       .groupBy(col("a"), col("b")).agg(min(col("__w")).as("w")))
@@ -2080,7 +2075,6 @@ object Graph {
       spark.sparkContext.emptyRDD[Row],
       live.schema)
     var round = 0
-    var remaining = live.count()
     while (remaining > 0 && round < maxRounds) {
       val cand = live.select(col("a").as("__v"), col("a"), col("b"),
           col("w"))
@@ -2098,10 +2092,12 @@ object Graph {
       matched = matched.unionByName(mutual) // ≤ maxRounds unions deep
       val mv = mutual.select(col("a").as("__mv"))
         .union(mutual.select(col("b").as("__mv"))).distinct()
-      live = truncate(live
+      // convergence witness (documented eager)
+      val (rest, nRest) = truncateCounted(live
         .join(mv.select(col("__mv").as("a")), Seq("a"), "left_anti")
         .join(mv.select(col("__mv").as("b")), Seq("b"), "left_anti"))
-      remaining = live.count() // convergence witness (documented eager)
+      live = rest
+      remaining = nRest
       round += 1
     }
     require(remaining == 0L,

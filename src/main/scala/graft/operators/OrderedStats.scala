@@ -265,8 +265,9 @@ object OrderedStats {
     * ([[Quality.decimalDivTrunc]]). All-tied raters (denominator 0)
     * return empty. Returns one row (n_items, k, ties, w_ppm).
     *
-    * SIDE-EFFECTING: the item table localCheckpoints (k+2
-    * consumers) and a 1-row distinct-count guard runs eagerly.
+    * SIDE-EFFECTING: the item table is checkpointed (k+2
+    * consumers) by a job that also counts it, and a 1-row
+    * distinct-count guard runs eagerly.
     * Scale: per rater one distinct-value hash-agg + one
     * DISTINCT-VALUE-scale cumulative window (the ksBattery posture —
     * per-rater distinct values must fit a partition, guarded loudly)
@@ -281,12 +282,11 @@ object OrderedStats {
     val sCols = (1 to k).map(j => s"__s$j")
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(scoreExprs.zip(sCols).map {
-        case (e, nm) => e.cast("double").as(nm) }: _*)
-      .filter(sCols.map(c => col(c).isNotNull && !isnan(col(c)))
-        .reduce(_ && _))
-      .localCheckpoint(true)
-    val n = base.count()
+    val (base, n) = Eager.truncateCounted(
+      df.select(scoreExprs.zip(sCols).map {
+          case (e, nm) => e.cast("double").as(nm) }: _*)
+        .filter(sCols.map(c => col(c).isNotNull && !isnan(col(c)))
+          .reduce(_ && _)))
     if (n < 2L) {
       Seq.empty[(Long, Long, Long, Long)]
         .toDF("n_items", "k", "ties", "w_ppm")

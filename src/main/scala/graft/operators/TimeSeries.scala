@@ -365,7 +365,7 @@ object TimeSeries {
         // C = 0 is NO shift evidence (prefix means exactly equal) —
         // emitting it would pad ranks with noise splits
         .filter(col("__c") > lit(0))
-      val pick = cand
+      val (pick, nPicked) = Eager.truncateCounted(cand
         .withColumn("__rn", row_number().over(Window.partitionBy(
           col("__k")).orderBy(col("__c").desc, col("__i"))))
         .filter(col("__rn") === 1)
@@ -375,9 +375,7 @@ object TimeSeries {
           expr("CAST(__c div __nl AS BIGINT)").as("stat_micros"),
           expr("__stl div __tl").as("mean_pre_micros"),
           expr("(__snl - __stl) div (__nl - __tl)")
-            .as("mean_post_micros"))
-        .localCheckpoint(true)
-      val nPicked = pick.count()
+            .as("mean_post_micros")))
       live = nPicked > 0L
       if (live) {
         found = found.unionByName(pick)
@@ -1948,11 +1946,9 @@ object TimeSeries {
     * first; a diagnostic is series-scale by contract). */
   def runsTest(df: DataFrame, orderExpr: Column,
       valueExpr: Column): DataFrame = {
-    val base = df.select(orderExpr.as("__o"),
-        valueExpr.cast("long").as("__x"))
-      .filter(col("__x").isNotNull)
-      .localCheckpoint(true) // median rank + mark scan
-    val n = base.count()
+    val (base, n) = Eager.truncateCounted( // median rank + mark scan
+      df.select(orderExpr.as("__o"), valueExpr.cast("long").as("__x"))
+        .filter(col("__x").isNotNull))
     require(n >= 1, "runsTest needs at least 1 non-NULL value")
     val med = base
       .withColumn("__rk", row_number().over(

@@ -366,7 +366,7 @@ object AggregationQueries {
           for (i <- 2 to vs.size) acc += vs(i - 1) * cl((i - 1) % 3)
           (k, acc, cl.sum)
         }
-      rows.toDF("k", "acc", "cl_sum").orderBy($"k")
+      rows.toDF("k", "acc", "cl_sum").coalesce(1).orderBy($"k")
     },
     // grader-dialect probe: constant list threaded through a KEYED
     // recursive CTE (see the engine entry's rationale)
@@ -401,7 +401,7 @@ object AggregationQueries {
           for (i <- 2 to vs.size) cl((i - 1) % 3) += vs(i - 1)
           (k, cl(0), cl(1), cl(2))
         }
-      rows.toDF("k", "c1", "c2", "c3").orderBy($"k")
+      rows.toDF("k", "c1", "c2", "c3").coalesce(1).orderBy($"k")
     },
     // grader-dialect probe: list STATE rebuilt per step inside a
     // KEYED recursive CTE via list_transform + CASE-on-slot — the

@@ -249,11 +249,14 @@ private[queries] object Shared {
     (topWord, ranked)
   }
 
-  /** Per-sf-dir scratch location under the JVM tmpdir,
-    * `<tmpdir>/graft_<tag>_<|hash(dir)|>`: one path per (query, sf
-    * dir), reused across repeated invocations. */
+  /** Per-process, per-sf-dir scratch location under the JVM tmpdir,
+    * `<tmpdir>/graft_<tag>_<pid>_<|hash(dir)|>`: one path per (query,
+    * sf dir), reused across repeated invocations in this JVM. The pid
+    * keeps two processes on one sf dir (a Verify run beside a test
+    * suite) from overwriting each other's persisted indexes. */
   def tmpPath(tag: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${math.abs(dir.hashCode)}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
+      s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
 
   /** The customer↔supplier trade graph shared by the centrality
     * queries: customer nodes `c<custkey>`, supplier nodes `s<suppkey>`,
