@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.doc_fingerprint
+import graft.operators.Moments
 
 /** Text analysis for training-data pipelines (north star): language
   * ID, quality scoring, token counting, fingerprinting. All pure
@@ -439,8 +440,9 @@ object TextAnalysis {
     *
     * Exactness: per-term `x = round(ln(rank)·10⁶)`,
     * `y = round(ln(f)·10⁶)` quantize independently (order-free), the
-    * OLS moments are DECIMAL-widened integer sums (the [[CUPED]]
-    * moment discipline), and the slope is ONE IEEE division —
+    * OLS moments are DECIMAL-widened integer sums ([[Moments.sums]],
+    * the [[graft.operators.Features.cuped]] moment discipline), and
+    * the slope is ONE IEEE division ([[Moments.slope]]) —
     * engine-replayable to the micro.
     *
     * Scale: one token hash-agg (the row-scale pass), a TakeOrdered
@@ -461,17 +463,13 @@ object TextAnalysis {
     val xy = ranked.select(
       round(log(col("rank").cast("double")) * 1e6).cast("long").as("__x"),
       round(log(col("f").cast("double")) * 1e6).cast("long").as("__y"))
-    val m = xy.agg(count(lit(1)).as("__n"),
-      sum(col("__x").cast("decimal(38,0)")).as("__sx"),
-      sum(col("__y").cast("decimal(38,0)")).as("__sy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__y")).as("__sxy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__x")).as("__sxx"))
-    m.select(col("__n").cast("bigint").as("n_terms"),
-      round((col("__n").cast("decimal(38,0)") * col("__sxy") -
-          col("__sx") * col("__sy")).cast("double") /
-        (col("__n").cast("decimal(38,0)") * col("__sxx") -
-          col("__sx") * col("__sx")).cast("double") * 1e6)
-        .cast("long").as("slope_micros"))
+    val (x, y) = (col("__x"), col("__y"))
+    val aggs = Moments.sums("__n", Seq("__sx" -> x, "__sy" -> y),
+      Seq(("__sxy", x, y), ("__sxx", x, x)))
+    xy.agg(aggs.head, aggs.tail: _*)
+      .select(col("__n").cast("bigint").as("n_terms"),
+        round(Moments.slope(col("__n"), col("__sxy"), col("__sx"),
+          col("__sy"), col("__sxx")) * 1e6).cast("long").as("slope_micros"))
   }
 
   /** Corpus vocabulary statistics — the one-row corpus health header
@@ -869,7 +867,6 @@ object TextAnalysis {
       gridSteps: Int = 10): DataFrame = {
     require(gridSteps >= 2 && gridSteps <= 1000,
       s"gridSteps must be in [2, 1000] (got $gridSteps)")
-    val dec = "decimal(38,0)"
     val toks = df.select(col(idCol).cast("long").as("__id"),
         explode(split(col(textCol), "\\s+")).as("__w"))
       .filter(length(col("__w")) > 0)
@@ -911,16 +908,15 @@ object TextAnalysis {
         .as("__x"),
       round(log(col("vocab").cast("double")) * lit(1e6)).cast("long")
         .as("__y"))
-    val beta = pts.agg(count(lit(1)).as("__k"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__x").cast(dec) * col("__y")).as("__sxy"),
-        sum(col("__x").cast(dec) * col("__x")).as("__sxx"))
-      .select(when(
-        col("__k").cast(dec) * col("__sxx") - col("__sx") * col("__sx")
-          > 0,
-        expr("CAST((__k * __sxy - __sx * __sy) * 1000000" +
-          " div nullif(__k * __sxx - __sx * __sx, 0) AS BIGINT)"))
+    val (x, y) = (col("__x"), col("__y"))
+    val aggs = Moments.sums("__k", Seq("__sx" -> x, "__sy" -> y),
+      Seq(("__sxy", x, y), ("__sxx", x, x)))
+    val (k, sx) = (col("__k"), col("__sx"))
+    val beta = pts.agg(aggs.head, aggs.tail: _*)
+      .select(Moments.centered(k, col("__sxy"), sx, col("__sy")).as("__cxy"),
+        Moments.centered(k, col("__sxx"), sx, sx).as("__cxx"))
+      .select(when(col("__cxx") > 0,
+        expr("CAST(__cxy * 1000000 div nullif(__cxx, 0) AS BIGINT)"))
         .as("beta_ppm"))
     curve.crossJoin(broadcast(beta)) // 1-row fitted exponent
       .orderBy(col("step"))

@@ -84,18 +84,14 @@ object Features {
     val withCols = df.select(col(groupCol),
         xExpr.cast("long").as("__x"), yExpr.cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
-    val m = withCols.groupBy(col(groupCol)).agg(
-      count(lit(1)).as("__n"),
-      sum(col("__x").cast("decimal(38,0)")).as("__sx"),
-      sum(col("__y").cast("decimal(38,0)")).as("__sy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__y")).as("__sxy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__x")).as("__sxx"))
-    val varNum = (col("__n").cast("decimal(38,0)") * col("__sxx") -
-      col("__sx") * col("__sx"))
-    val covNum = (col("__n").cast("decimal(38,0)") * col("__sxy") -
-      col("__sx") * col("__sy"))
-    m.filter(varNum > 0)
-      .withColumn("__slope", covNum.cast("double") / varNum.cast("double"))
+    val (x, y) = (col("__x"), col("__y"))
+    val aggs = Moments.sums("__n", Seq("__sx" -> x, "__sy" -> y),
+      Seq(("__sxy", x, y), ("__sxx", x, x)))
+    val m = withCols.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
+    val (n, sx, sy) = (col("__n"), col("__sx"), col("__sy"))
+    m.filter(Moments.centered(n, col("__sxx"), sx, sx) > 0)
+      .withColumn("__slope",
+        Moments.slope(n, col("__sxy"), sx, sy, col("__sxx")))
       .select(col(groupCol), col("__n").cast("bigint").as("n"),
         round(col("__slope") * 1e6).cast("long").as("slope_micros"),
         round((col("__sy").cast("double") -
@@ -284,30 +280,12 @@ object Features {
     * empty. ONE aggregate pass; nothing shuffles. */
   def welchTTest(df: DataFrame, treatmentExpr: Column,
       metricExpr: Column): DataFrame = {
-    val c = df.select(treatmentExpr.as("__t"),
+    val c = armMoments(df.select(treatmentExpr.as("__t"),
         metricExpr.cast("long").as("__y"))
-      .filter(col("__t").isNotNull && col("__y").isNotNull)
-      .agg(
-        sum(when(col("__t"), 1L).otherwise(0L)).as("n_t"),
-        // cast INSIDE the sum: a long accumulator would overflow at
-        // petabyte row counts before the cast ever ran
-        sum(when(col("__t"), col("__y")).otherwise(0L)
-          .cast("decimal(38,0)")).as("__st"),
-        sum(when(col("__t"),
-          col("__y").cast("decimal(38,0)") * col("__y")).otherwise(
-          lit(0).cast("decimal(38,0)"))).as("__sst"),
-        sum(when(!col("__t"), 1L).otherwise(0L)).as("n_c"),
-        sum(when(!col("__t"), col("__y")).otherwise(0L)
-          .cast("decimal(38,0)")).as("__sc"),
-        sum(when(!col("__t"),
-          col("__y").cast("decimal(38,0)") * col("__y")).otherwise(
-          lit(0).cast("decimal(38,0)"))).as("__ssc"))
-    def mean(s: Column, n: Column) = s.cast("double") / n.cast("double")
-    def variance(n: Column, s: Column, ss: Column) =
-      (n.cast("decimal(38,0)") * ss - s * s).cast("double") /
-        (n.cast("decimal(38,0)") * (n - 1)).cast("double")
-    val vt = variance(col("n_t"), col("__st"), col("__sst"))
-    val vc = variance(col("n_c"), col("__sc"), col("__ssc"))
+      .filter(col("__t").isNotNull && col("__y").isNotNull))
+    import Moments.mean
+    val vt = Moments.sampleVar(col("n_t"), col("__st"), col("__sst"))
+    val vc = Moments.sampleVar(col("n_c"), col("__sc"), col("__ssc"))
     val se2t = vt / col("n_t").cast("double")
     val se2c = vc / col("n_c").cast("double")
     val t = (mean(col("__st"), col("n_t")) - mean(col("__sc"), col("n_c"))) /
@@ -328,6 +306,17 @@ object Features {
         round(dfW * 1e6).cast("long").as("df_micros"))
   }
 
+  /** One row of per-arm moments of `__y` split on the boolean `__t`:
+    * (n_t, __st, __sst) for the treatment arm, (n_c, __sc, __ssc) for
+    * control. */
+  private def armMoments(rows: DataFrame): DataFrame = {
+    val y = col("__y")
+    def arm(p: String, in: Column) = Moments.sums(s"n_$p",
+      Seq(s"__s$p" -> y), Seq((s"__ss$p", y, y)), Some(in))
+    val aggs = arm("t", col("__t")) ++ arm("c", !col("__t"))
+    rows.agg(aggs.head, aggs.tail: _*)
+  }
+
   /** Power analysis / minimum-detectable-effect table — the question
     * that comes BEFORE every test in the kit (z, t, CUPED, DiD,
     * jackknife, sequential): is this experiment even big enough?
@@ -339,7 +328,7 @@ object Features {
     * α = 0.05 two-sided, power = 0.80 (z constants 1.959964 and
     * 0.841621, shared literals both engines fold identically).
     *
-    * Exactness: n/Σy/Σy² are exact integers (DECIMAL before summing);
+    * Exactness: n/Σy/Σy² are exact integers ([[Moments.sums]]);
     * mean, σ² and the closed forms are ONE mirrored IEEE tree;
     * outputs micro-quantize (`ceil` for n_req — a fractional unit
     * rounds UP, you cannot run 0.4 of a user). Zero-variance or
@@ -352,19 +341,16 @@ object Features {
       effectsPpm: Seq[Long]): DataFrame = {
     require(effectsPpm.nonEmpty && effectsPpm.forall(_ > 0),
       s"effectsPpm must be non-empty positive (got $effectsPpm)")
-    val dec = "decimal(38,0)"
     val spark = df.sparkSession
     import spark.implicits._
+    val y = col("__y")
+    val aggs = Moments.sums("n", Seq("__s" -> y), Seq(("__ss", y, y)))
     val base = df.select(metricExpr.cast("long").as("__y"))
       .filter(col("__y").isNotNull)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__y").cast(dec)).as("__s"),
-        sum(col("__y").cast(dec) * col("__y")).as("__ss"))
+      .agg(aggs.head, aggs.tail: _*)
       .filter(col("n") > 1L)
-    val m = col("__s").cast("double") / col("n").cast("double")
-    val v = (col("n").cast(dec) * col("__ss") - col("__s") * col("__s"))
-      .cast("double") /
-      (col("n").cast(dec) * (col("n") - 1)).cast("double")
+    val m = Moments.mean(col("__s"), col("n"))
+    val v = Moments.sampleVar(col("n"), col("__s"), col("__ss"))
     val z = lit(1.959964) + lit(0.841621)
     val delta = col("__m") * col("effect_ppm").cast("double") / lit(1e6)
     base.withColumn("__m", m).withColumn("__v", v)
@@ -383,7 +369,7 @@ object Features {
   /** Always-valid sequential inference — the mixture sequential
     * probability ratio test (mSPRT, Robbins 1970; Johari et al. 2017
     * "Peeking at A/B tests") over a LOOK SCHEDULE: the fixed-horizon
-    * z/t tests ([[twoProportionZ]]/[[welchTTest]]) are only valid at
+    * z/t tests ([[twoProportionZTest]]/[[welchTTest]]) are only valid at
     * ONE pre-registered n, but every real dashboard is peeked at
     * daily — the mSPRT's always-valid p-value can be monitored
     * continuously and still caps the type-I error at α. Per look k
@@ -394,7 +380,7 @@ object Features {
     * always rejected (the decision is monotone by construction).
     *
     * Exactness: per-look counts/sums/square-sums are exact integers
-    * (DECIMAL before summing, the [[welchTTest]] discipline) folded
+    * ([[Moments.sums]], the [[welchTTest]] discipline) folded
     * by ONE cumulative window; `1/Λ` is a single mirrored IEEE tree
     * on those integers (`sqrt((v+τ²)/v)·exp(−d²τ²/(2v(v+τ²)))` —
     * written reciprocal-free), p quantizes to micros and the running
@@ -418,12 +404,10 @@ object Features {
     require(alphaMicros > 0L && alphaMicros <= 1000000L,
       s"alphaMicros must be in (0, 1e6] (got $alphaMicros)")
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def cell(p: Column, suffix: String): Seq[Column] = Seq(
-      sum(when(p, 1L).otherwise(0L)).as(s"__n$suffix"),
-      sum(when(p, col("__y")).otherwise(0L).cast(dec)).as(s"__s$suffix"),
-      sum(when(p, col("__y").cast(dec) * col("__y"))
-        .otherwise(lit(0).cast(dec))).as(s"__ss$suffix"))
+    val y = col("__y")
+    def cell(p: Column, suffix: String): Seq[Column] = Moments.sums(
+      s"__n$suffix", Seq(s"__s$suffix" -> y), Seq((s"__ss$suffix", y, y)),
+      Some(p))
     val cells = cell(col("__t"), "a") ++ cell(!col("__t"), "b")
     val byLookFull = df.select(lookExpr.as("look"),
         treatmentExpr.as("__t"), metricExpr.cast("long").as("__y"))
@@ -446,14 +430,11 @@ object Features {
       .withColumn("__csb", sum(col("__sb")).over(w))
       .withColumn("__cssb", sum(col("__ssb")).over(w))
       .filter(col("n_a") > 1L && col("n_b") > 1L)
-    def variance(n: Column, s: Column, ss: Column) =
-      (n.cast(dec) * ss - s * s).cast("double") /
-        (n.cast(dec) * (n - 1)).cast("double")
-    val vA = variance(col("n_a"), col("__csa"), col("__cssa"))
-    val vB = variance(col("n_b"), col("__csb"), col("__cssb"))
+    val vA = Moments.sampleVar(col("n_a"), col("__csa"), col("__cssa"))
+    val vB = Moments.sampleVar(col("n_b"), col("__csb"), col("__cssb"))
     val v = vA / col("n_a").cast("double") + vB / col("n_b").cast("double")
-    val d = col("__csa").cast("double") / col("n_a").cast("double") -
-      col("__csb").cast("double") / col("n_b").cast("double")
+    val d = Moments.mean(col("__csa"), col("n_a")) -
+      Moments.mean(col("__csb"), col("n_b"))
     val t2 = lit(tau * tau)
     val lamInv = sqrt((col("__v") + t2) / col("__v")) *
       exp(-(col("__d") * col("__d") * t2) /
@@ -497,17 +478,11 @@ object Features {
         metricExpr.cast("long").as("__y"))
       .filter(col("__t").isNotNull && col("__p").isNotNull &&
         col("__y").isNotNull)
-    def cell(name: String, t: Boolean, p: Boolean): Seq[Column] = {
-      val in = col("__t") === t && col("__p") === p
-      Seq(sum(when(in, 1L).otherwise(0L)).as(s"n_$name"),
-        // promote BEFORE aggregating (matching the __ss path): a
-        // LongType sum can silently wrap under non-ANSI where the
-        // oracle's HUGEINT sum does not.
-        sum(when(in, col("__y").cast("decimal(38,0)"))
-          .otherwise(lit(0).cast("decimal(38,0)"))).as(s"__s_$name"),
-        sum(when(in, col("__y").cast("decimal(38,0)") * col("__y"))
-          .otherwise(lit(0).cast("decimal(38,0)"))).as(s"__ss_$name"))
-    }
+    val y = col("__y")
+    def cell(name: String, t: Boolean, p: Boolean): Seq[Column] =
+      Moments.sums(s"n_$name", Seq(s"__s_$name" -> y),
+        Seq((s"__ss_$name", y, y)),
+        Some(col("__t") === t && col("__p") === p))
     val aggs = cell("t1", t = true, p = true) ++
       cell("t0", t = true, p = false) ++
       cell("c1", t = false, p = true) ++
@@ -515,13 +490,9 @@ object Features {
     val c = base.agg(aggs.head, aggs.tail: _*)
     def meanMic(n: String) =
       expr(s"__s_$n * 1000000 div nullif(n_$n, 0)")
-    def m(n: String) =
-      col(s"__s_$n").cast("double") / col(s"n_$n").cast("double")
+    def m(n: String) = Moments.mean(col(s"__s_$n"), col(s"n_$n"))
     def v(n: String) =
-      (col(s"n_$n").cast("decimal(38,0)") * col(s"__ss_$n") -
-        col(s"__s_$n") * col(s"__s_$n")).cast("double") /
-        (col(s"n_$n").cast("decimal(38,0)") * (col(s"n_$n") - 1))
-          .cast("double")
+      Moments.sampleVar(col(s"n_$n"), col(s"__s_$n"), col(s"__ss_$n"))
     val se = sqrt(v("t1") / col("n_t1").cast("double") +
       v("t0") / col("n_t0").cast("double") +
       v("c1") / col("n_c1").cast("double") +
@@ -588,14 +559,11 @@ object Features {
     val r = b.crossJoin(broadcast(t)) // 1-row totals
       .select(expr(
         "(__ss - s) * 1000000 div nullif(__nn - n, 0)").as("r"))
-    val a = r.filter(col("r").isNotNull)
-      .agg(count(lit(1)).as("nb"),
-        sum(col("r").cast("decimal(38,0)")).as("sr"),
-        sum(col("r").cast("decimal(38,0)") *
-          col("r").cast("decimal(38,0)")).as("srr"))
-    val v = ((col("nb") - 1L).cast("decimal(38,0)") *
-      (col("nb").cast("decimal(38,0)") * col("srr") -
-        col("sr") * col("sr")))
+    val aggs = Moments.sums("nb", Seq("sr" -> col("r")),
+      Seq(("srr", col("r"), col("r"))))
+    val a = r.filter(col("r").isNotNull).agg(aggs.head, aggs.tail: _*)
+    val v = (col("nb") - 1L).cast(Moments.Dec) *
+      Moments.centered(col("nb"), col("srr"), col("sr"), col("sr"))
     val se = round(sqrt(v.cast("double")) /
       col("nb").cast("double")).cast("long")
     a.crossJoin(broadcast(t))
@@ -637,19 +605,15 @@ object Features {
       covariateExpr: Column): DataFrame = {
     val withCols = df.withColumn("__y", metricExpr.cast("long"))
       .withColumn("__x", covariateExpr.cast("long"))
-    val moments = withCols.agg(
-      count(lit(1)).as("__n"),
-      sum(col("__x").cast("decimal(38,0)")).as("__sx"),
-      sum(col("__y").cast("decimal(38,0)")).as("__sy"),
-      sum((col("__x").cast("decimal(38,0)") * col("__y"))).as("__sxy"),
-      sum((col("__x").cast("decimal(38,0)") * col("__x"))).as("__sxx"))
-    val varNum = (col("__n").cast("decimal(38,0)") * col("__sxx") -
-      col("__sx") * col("__sx"))
-    val covNum = (col("__n").cast("decimal(38,0)") * col("__sxy") -
-      col("__sx") * col("__sy"))
-    val theta = when(varNum > 0,
-      covNum.cast("double") / varNum.cast("double")).otherwise(0.0)
-    val xBar = col("__sx").cast("double") / col("__n").cast("double")
+    val (x, y) = (col("__x"), col("__y"))
+    val aggs = Moments.sums("__n", Seq("__sx" -> x, "__sy" -> y),
+      Seq(("__sxy", x, y), ("__sxx", x, x)))
+    val moments = withCols.agg(aggs.head, aggs.tail: _*)
+    val (n, sx) = (col("__n"), col("__sx"))
+    val theta = when(Moments.centered(n, col("__sxx"), sx, sx) > 0,
+      Moments.slope(n, col("__sxy"), sx, col("__sy"), col("__sxx")))
+      .otherwise(0.0)
+    val xBar = Moments.mean(sx, n)
     withCols.crossJoin(broadcast(moments)) // 1-row moment vector
       .withColumn("theta", theta)
       .withColumn("y_adj", col("__y").cast("double") -
@@ -680,36 +644,28 @@ object Features {
     * the cuped shape, nine sums instead of four. */
   def cupedMulti(df: DataFrame, metricExpr: Column,
       cov1Expr: Column, cov2Expr: Column): DataFrame = {
-    val dec = "decimal(38,0)"
     val withCols = df.withColumn("__y", metricExpr.cast("long"))
       .withColumn("__x1", cov1Expr.cast("long"))
       .withColumn("__x2", cov2Expr.cast("long"))
-    val m = withCols.agg(
-      count(lit(1)).as("__n"),
-      sum(col("__x1").cast(dec)).as("__s1"),
-      sum(col("__x2").cast(dec)).as("__s2"),
-      sum(col("__y").cast(dec)).as("__sy"),
-      sum(col("__x1").cast(dec) * col("__x1")).as("__s11"),
-      sum(col("__x2").cast(dec) * col("__x2")).as("__s22"),
-      sum(col("__x1").cast(dec) * col("__x2")).as("__s12"),
-      sum(col("__x1").cast(dec) * col("__y")).as("__s1y"),
-      sum(col("__x2").cast(dec) * col("__y")).as("__s2y"))
-    val nD = col("__n").cast(dec)
-    val a11 = (nD * col("__s11") - col("__s1") * col("__s1"))
-      .cast("double")
-    val a22 = (nD * col("__s22") - col("__s2") * col("__s2"))
-      .cast("double")
-    val a12 = (nD * col("__s12") - col("__s1") * col("__s2"))
-      .cast("double")
-    val b1 = (nD * col("__s1y") - col("__s1") * col("__sy"))
-      .cast("double")
-    val b2 = (nD * col("__s2y") - col("__s2") * col("__sy"))
-      .cast("double")
+    val (x1, x2, y) = (col("__x1"), col("__x2"), col("__y"))
+    val aggs = Moments.sums("__n",
+      Seq("__s1" -> x1, "__s2" -> x2, "__sy" -> y),
+      Seq(("__s11", x1, x1), ("__s22", x2, x2), ("__s12", x1, x2),
+        ("__s1y", x1, y), ("__s2y", x2, y)))
+    val m = withCols.agg(aggs.head, aggs.tail: _*)
+    def c(sab: String, sa: String, sb: String) =
+      Moments.centered(col("__n"), col(sab), col(sa), col(sb))
+        .cast("double")
+    val a11 = c("__s11", "__s1", "__s1")
+    val a22 = c("__s22", "__s2", "__s2")
+    val a12 = c("__s12", "__s1", "__s2")
+    val b1 = c("__s1y", "__s1", "__sy")
+    val b2 = c("__s2y", "__s2", "__sy")
     val det = a11 * a22 - a12 * a12
     val t1 = when(det > 0.0, (b1 * a22 - b2 * a12) / det).otherwise(0.0)
     val t2 = when(det > 0.0, (b2 * a11 - b1 * a12) / det).otherwise(0.0)
-    val xb1 = col("__s1").cast("double") / col("__n").cast("double")
-    val xb2 = col("__s2").cast("double") / col("__n").cast("double")
+    val xb1 = Moments.mean(col("__s1"), col("__n"))
+    val xb2 = Moments.mean(col("__s2"), col("__n"))
     withCols.crossJoin(broadcast(m)) // 1-row moment vector
       .withColumn("theta1", t1)
       .withColumn("theta2", t2)
@@ -857,7 +813,7 @@ object Features {
     * `z = ((1 − 2/(9d₂))·∛F − (1 − 2/(9d₁))) /
     * √((2/(9d₂))·∛F² + 2/(9d₁))` — cube roots as `exp(ln/3)`, the
     * mirrored tree both engines replay bit-for-bit, through the
-    * shared [[Quality.pValueTwoSidedZ]] polynomial. Truncation can
+    * shared [[Quality.upperTailZ]] read. Truncation can
     * leave SSB_milli ≤ 0 when the group means coincide — that
     * reports F = 0, p = 1 (the correct verdict, not an error).
     * Degenerate inputs (k < 2, N ≤ k, or zero within-group variance)
@@ -870,14 +826,14 @@ object Features {
     * n_g ≲ 10⁸ — a significance test's sample, not a corpus). */
   def anovaF(df: DataFrame, groupExpr: Column, valueExpr: Column)
       : DataFrame = {
-    val dec = "decimal(38,0)"
+    val dec = Moments.Dec
+    val x = col("x")
+    val aggs = Moments.sums("__ng", Seq("__sg" -> x), Seq(("__qg", x, x)))
     val perGroup = df.select(groupExpr.cast("string").as("g"),
         valueExpr.cast("long").as("x"))
       .filter(col("g").isNotNull && col("x").isNotNull)
       .groupBy(col("g"))
-      .agg(count(lit(1)).as("__ng"),
-        sum(col("x").cast(dec)).as("__sg"),
-        sum(col("x").cast(dec) * col("x")).as("__qg"))
+      .agg(aggs.head, aggs.tail: _*)
     // Quality.decimalDivTrunc, NOT SQL `div`: these quotients
     // (1000·Σx² scale) overflow a long at modest group sizes and
     // IntegralDivide wraps silently there
@@ -905,12 +861,9 @@ object Features {
       (lit(1.0) - lit(2.0) / (lit(9.0) * d1))) /
       sqrt((lit(2.0) / (lit(9.0) * d2)) * cbrtF * cbrtF +
         lit(2.0) / (lit(9.0) * d1))
-    val p2 = Quality.pValueTwoSidedZ(zp)
     agg.withColumn("__f", f)
       .withColumn("__p",
-        when(col("__f") <= 0.0, lit(1.0))
-          .when(zp >= 0.0, p2 / 2.0)
-          .otherwise(lit(1.0) - p2 / 2.0))
+        when(col("__f") <= 0.0, lit(1.0)).otherwise(Quality.upperTailZ(zp)))
       .select(col("__n").cast("bigint").as("n"),
         col("__k").cast("bigint").as("n_groups"),
         round(col("__f") * 1e6).cast("long").as("f_micros"),
@@ -1171,17 +1124,11 @@ object Features {
     * Scale: ONE map-side-combined aggregate over the unit table. */
   def deltaMethodRatio(df: DataFrame, treatmentExpr: Column,
       numExpr: Column, denExpr: Column): DataFrame = {
-    val dec = "decimal(38,0)"
-    def side(p: String, t: Column) = Seq(
-      sum(when(t, 1L).otherwise(0L)).as(s"n_$p"),
-      sum(when(t, col("__x")).otherwise(0L).cast(dec)).as(s"__sx_$p"),
-      sum(when(t, col("__y")).otherwise(0L).cast(dec)).as(s"__sy_$p"),
-      sum(when(t, col("__x").cast(dec) * col("__x"))
-        .otherwise(lit(0).cast(dec))).as(s"__qx_$p"),
-      sum(when(t, col("__y").cast(dec) * col("__y"))
-        .otherwise(lit(0).cast(dec))).as(s"__qy_$p"),
-      sum(when(t, col("__x").cast(dec) * col("__y"))
-        .otherwise(lit(0).cast(dec))).as(s"__xy_$p"))
+    val (x, y) = (col("__x"), col("__y"))
+    def side(p: String, t: Column) = Moments.sums(s"n_$p",
+      Seq(s"__sx_$p" -> x, s"__sy_$p" -> y),
+      Seq((s"__qx_$p", x, x), (s"__qy_$p", y, y), (s"__xy_$p", x, y)),
+      Some(t))
     val base = df.select(treatmentExpr.as("__t"),
         numExpr.cast("long").as("__x"), denExpr.cast("long").as("__y"))
       .filter(col("__t").isNotNull && col("__x").isNotNull &&
@@ -1192,14 +1139,11 @@ object Features {
       val n = col(s"n_$p").cast("double")
       val r = col(s"__sx_$p").cast("double") /
         col(s"__sy_$p").cast("double")
-      val nn = col(s"n_$p").cast(dec)
-      val vx = (nn * col(s"__qx_$p") - col(s"__sx_$p") * col(s"__sx_$p"))
-        .cast("double") / (nn * (col(s"n_$p") - 1L)).cast("double")
-      val vy = (nn * col(s"__qy_$p") - col(s"__sy_$p") * col(s"__sy_$p"))
-        .cast("double") / (nn * (col(s"n_$p") - 1L)).cast("double")
-      val cxy = (nn * col(s"__xy_$p") - col(s"__sx_$p") * col(s"__sy_$p"))
-        .cast("double") / (nn * (col(s"n_$p") - 1L)).cast("double")
-      val ybar = col(s"__sy_$p").cast("double") / n
+      val (nn, sx, sy) = (col(s"n_$p"), col(s"__sx_$p"), col(s"__sy_$p"))
+      val vx = Moments.sampleVar(nn, sx, col(s"__qx_$p"))
+      val vy = Moments.sampleVar(nn, sy, col(s"__qy_$p"))
+      val cxy = Moments.sampleCov(nn, col(s"__xy_$p"), sx, sy)
+      val ybar = Moments.mean(sy, nn)
       (vx - lit(2.0) * r * cxy + r * r * vy) / (n * ybar * ybar)
     }
     def ratio(p: String) = col(s"__sx_$p").cast("double") /
@@ -1231,7 +1175,7 @@ object Features {
     *
     * Exactness: per-arm exact DECIMAL moments (the welch contract);
     * Δ, se, both t's and both one-sided tails are mirrored IEEE
-    * trees through the shared [[Quality.pValueTwoSidedZ]] polynomial
+    * trees, the tails read by [[Quality.upperTailZ]]
     * (large-sample normal read, the rank tests' stance); the verdict
     * compares the unrounded p against α — both engines branch on
     * identical doubles. Degenerate arms (n < 2 or zero combined
@@ -1245,40 +1189,23 @@ object Features {
     require(margin > 0L, s"margin must be > 0 (got $margin)")
     require(alphaMicros > 0L && alphaMicros < 1000000L,
       s"alphaMicros must be in (0, 1e6) (got $alphaMicros)")
-    val dec = "decimal(38,0)"
-    val c = df.select(treatmentExpr.as("__t"),
+    val c = armMoments(df.select(treatmentExpr.as("__t"),
         metricExpr.cast("long").as("__y"))
-      .filter(col("__t").isNotNull && col("__y").isNotNull)
-      .agg(
-        sum(when(col("__t"), 1L).otherwise(0L)).as("n_t"),
-        sum(when(col("__t"), col("__y")).otherwise(0L).cast(dec))
-          .as("__st"),
-        sum(when(col("__t"), col("__y").cast(dec) * col("__y"))
-          .otherwise(lit(0).cast(dec))).as("__sst"),
-        sum(when(!col("__t"), 1L).otherwise(0L)).as("n_c"),
-        sum(when(!col("__t"), col("__y")).otherwise(0L).cast(dec))
-          .as("__sc"),
-        sum(when(!col("__t"), col("__y").cast(dec) * col("__y"))
-          .otherwise(lit(0).cast(dec))).as("__ssc"))
-    def variance(n: Column, s: Column, ss: Column) =
-      (n.cast(dec) * ss - s * s).cast("double") /
-        (n.cast(dec) * (n - 1)).cast("double")
-    val se2 = variance(col("n_t"), col("__st"), col("__sst")) /
+      .filter(col("__t").isNotNull && col("__y").isNotNull))
+    val se2 = Moments.sampleVar(col("n_t"), col("__st"), col("__sst")) /
       col("n_t").cast("double") +
-      variance(col("n_c"), col("__sc"), col("__ssc")) /
+      Moments.sampleVar(col("n_c"), col("__sc"), col("__ssc")) /
         col("n_c").cast("double")
-    val diff = col("__st").cast("double") / col("n_t").cast("double") -
-      col("__sc").cast("double") / col("n_c").cast("double")
+    val diff = Moments.mean(col("__st"), col("n_t")) -
+      Moments.mean(col("__sc"), col("n_c"))
     val d = lit(margin.toDouble)
     val tL = (diff + d) / sqrt(col("__se2"))
     val tU = (d - diff) / sqrt(col("__se2"))
-    def upperTail(t: Column) =
-      when(t >= 0.0, Quality.pValueTwoSidedZ(t) / 2.0)
-        .otherwise(lit(1.0) - Quality.pValueTwoSidedZ(t) / 2.0)
     c.filter(col("n_t") > 1L && col("n_c") > 1L)
       .withColumn("__se2", se2)
       .filter(col("__se2") > 0.0)
-      .withColumn("__p", greatest(upperTail(tL), upperTail(tU)))
+      .withColumn("__p",
+        greatest(Quality.upperTailZ(tL), Quality.upperTailZ(tU)))
       .select(col("n_t").cast("bigint").as("n_t"),
         col("n_c").cast("bigint").as("n_c"),
         round(diff * 1e6).cast("long").as("diff_micros"),
@@ -1311,7 +1238,6 @@ object Features {
     * is a 1-row broadcast. */
   def ebShrinkRates(df: DataFrame, segmentExpr: Column,
       successExpr: Column): DataFrame = {
-    val dec = "decimal(38,0)"
     val seg = df.select(segmentExpr.cast("string").as("segment"),
         successExpr.cast("boolean").as("__y"))
       .filter(col("segment").isNotNull && col("__y").isNotNull)
@@ -1321,15 +1247,13 @@ object Features {
       .withColumn("raw_ppm",
         expr("CAST(successes AS DECIMAL(38,0)) * 1000000 div n")
           .cast("long"))
-    val prior = seg.agg(count(lit(1)).as("__k"),
-      sum(col("raw_ppm").cast(dec)).as("__sp"),
-      sum(col("raw_ppm").cast(dec) * col("raw_ppm")).as("__qp"))
-    val kD = col("__k").cast("double")
-    val m = col("__sp").cast("double") / kD / lit(1e6)
-    val vNum = (col("__k").cast(dec) * col("__qp") -
-      col("__sp") * col("__sp"))
-    val v = vNum.cast("double") /
-      (col("__k").cast(dec) * (col("__k") - 1L)).cast("double") / lit(1e12)
+    val r = col("raw_ppm")
+    val aggs = Moments.sums("__k", Seq("__sp" -> r), Seq(("__qp", r, r)))
+    val prior = seg.agg(aggs.head, aggs.tail: _*)
+    val (k, sp, qp) = (col("__k"), col("__sp"), col("__qp"))
+    val m = Moments.mean(sp, k) / lit(1e6)
+    val vNum = Moments.centered(k, qp, sp, sp)
+    val v = Moments.sampleVar(k, sp, qp) / lit(1e12)
     val kPrior = m * (lit(1.0) - m) / v - lit(1.0)
     val shrunk = (col("successes").cast("double") +
       col("__kp") * col("__m")) /
@@ -1644,16 +1568,17 @@ object Features {
       alphaMicros: Long = 50000L, maxGroups: Long = 200L): DataFrame = {
     require(alphaMicros > 0L && alphaMicros < 1000000L,
       s"alphaMicros must be in (0, 1e6) (got $alphaMicros)")
-    val dec = "decimal(38,0)"
     import org.apache.spark.sql.expressions.Window
+    import Moments.mean
+    val x = col("x")
+    val aggs = Moments.sums("n", Seq("s" -> x), Seq(("q", x, x)))
     // consumed twice (both sides of the pair join)
     val (perGroup, k) = Eager.truncateCounted(
       df.select(groupExpr.cast("string").as("g"),
           valueExpr.cast("long").as("x"))
         .filter(col("g").isNotNull && col("x").isNotNull)
         .groupBy(col("g"))
-        .agg(count(lit(1)).as("n"), sum(col("x").cast(dec)).as("s"),
-          sum(col("x").cast(dec) * col("x")).as("q")))
+        .agg(aggs.head, aggs.tail: _*))
     require(k <= maxGroups,
       s"posthocPairs: $k groups (cap $maxGroups) — the pair join is " +
         "k²-scale; a grouping column this wide is not a treatment arm")
@@ -1662,9 +1587,7 @@ object Features {
     val b = perGroup.select(col("g").as("g2"), col("n").as("__n2"),
       col("s").as("__s2"), col("q").as("__q2"))
     def se2(n: Column, s: Column, q: Column) =
-      (n.cast(dec) * q - s * s).cast("double") /
-        (n.cast(dec) * (n - 1)).cast("double") / n.cast("double")
-    def mean(s: Column, n: Column) = s.cast("double") / n.cast("double")
+      Moments.sampleVar(n, s, q) / n.cast("double")
     val se21 = se2(col("__n1"), col("__s1"), col("__q1"))
     val se22 = se2(col("__n2"), col("__s2"), col("__q2"))
     val t = (mean(col("__s1"), col("__n1")) -
@@ -1888,8 +1811,9 @@ object Features {
     * requested λ — the shrinkage path a model selection actually
     * reads.
     *
-    * Exactness: the nine raw moments are exact integer sums in ONE
-    * row-scale pass (inputs must be integral — cast to cents first);
+    * Exactness: the nine raw moments are exact DECIMAL sums in ONE
+    * row-scale pass ([[Moments.sums]]; inputs must be integral — cast
+    * to cents first);
     * centered moments, both Cramer numerators and the determinant
     * are DECIMAL(38,0)-exact; each β is ONE mirrored IEEE division
     * of exact integers and the intercept one mirrored tree — a
@@ -1912,18 +1836,14 @@ object Features {
         x1Expr.cast("long").as("__x1"), x2Expr.cast("long").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
         col("__x2").isNotNull)
-    val m = rows.agg(count(lit(1)).as("n"),
-      sum(col("__y")).as("sy"),
-      sum(col("__x1")).as("s1"), sum(col("__x2")).as("s2"),
-      sum(col("__x1") * col("__x1")).as("s11"),
-      sum(col("__x2") * col("__x2")).as("s22"),
-      sum(col("__x1") * col("__x2")).as("s12"),
-      sum(col("__x1") * col("__y")).as("s1y"),
-      sum(col("__x2") * col("__y")).as("s2y"))
+    val (y, x1, x2) = (col("__y"), col("__x1"), col("__x2"))
+    val aggs = Moments.sums("n", Seq("sy" -> y, "s1" -> x1, "s2" -> x2),
+      Seq(("s11", x1, x1), ("s22", x2, x2), ("s12", x1, x2),
+        ("s1y", x1, y), ("s2y", x2, y)))
+    val m = rows.agg(aggs.head, aggs.tail: _*)
       .filter(col("n") >= 3L)
     def c(sab: String, sa: String, sb: String) =
-      (col("n").cast(dec) * col(sab) - col(sa).cast(dec) * col(sb))
-        .cast(dec)
+      Moments.centered(col("n"), col(sab), col(sa), col(sb))
     val spark = df.sparkSession
     import spark.implicits._
     val ls = lambdas.toDF("lambda")

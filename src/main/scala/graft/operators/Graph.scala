@@ -1061,22 +1061,17 @@ object Graph {
     val xy = e
       .join(deg.select(col("id").as("u"), col("deg").as("__x")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("__y")), "v")
-    val m = xy.agg(count(lit(1)).as("__n"),
-      sum(col("__x").cast("decimal(38,0)")).as("__sx"),
-      sum(col("__y").cast("decimal(38,0)")).as("__sy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__y")).as("__sxy"),
-      sum(col("__x").cast("decimal(38,0)") * col("__x")).as("__sxx"),
-      sum(col("__y").cast("decimal(38,0)") * col("__y")).as("__syy"))
-    val a = (col("__n").cast("decimal(38,0)") * col("__sxx") -
-      col("__sx") * col("__sx"))
-    val b = (col("__n").cast("decimal(38,0)") * col("__syy") -
-      col("__sy") * col("__sy"))
-    m.filter(a > 0 && b > 0)
-      .select(col("__n").cast("bigint").as("n_edges"),
-        round((col("__n").cast("decimal(38,0)") * col("__sxy") -
-            col("__sx") * col("__sy")).cast("double") /
-          (sqrt(a.cast("double")) * sqrt(b.cast("double"))) * 1e6)
-          .cast("long").as("r_micros"))
+    val (x, y) = (col("__x"), col("__y"))
+    val aggs = Moments.sums("__n", Seq("__sx" -> x, "__sy" -> y),
+      Seq(("__sxy", x, y), ("__sxx", x, x), ("__syy", y, y)))
+    val (n, sx, sy) = (col("__n"), col("__sx"), col("__sy"))
+    val (sxx, syy) = (col("__sxx"), col("__syy"))
+    xy.agg(aggs.head, aggs.tail: _*)
+      .filter(Moments.centered(n, sxx, sx, sx) > 0 &&
+        Moments.centered(n, syy, sy, sy) > 0)
+      .select(n.cast("bigint").as("n_edges"),
+        Moments.pearsonMicros(n, col("__sxy"), sx, sy, sxx, syy)
+          .as("r_micros"))
   }
 
   /** Per-seed closeness centrality, hop-bounded — "how central are

@@ -508,22 +508,17 @@ object OrderedStats {
     val ranked = rows
       .join(rank2("__x", "__rx"), "__x")
       .join(rank2("__y", "__ry"), "__y")
-    val m = ranked.agg(count(lit(1)).as("__n"),
-      sum(col("__rx").cast("decimal(38,0)")).as("__sx"),
-      sum(col("__ry").cast("decimal(38,0)")).as("__sy"),
-      sum(col("__rx").cast("decimal(38,0)") * col("__ry")).as("__sxy"),
-      sum(col("__rx").cast("decimal(38,0)") * col("__rx")).as("__sxx"),
-      sum(col("__ry").cast("decimal(38,0)") * col("__ry")).as("__syy"))
-    val a = (col("__n").cast("decimal(38,0)") * col("__sxx") -
-      col("__sx") * col("__sx"))
-    val b = (col("__n").cast("decimal(38,0)") * col("__syy") -
-      col("__sy") * col("__sy"))
-    m.filter(a > 0 && b > 0)
-      .select(col("__n").cast("bigint").as("n"),
-        round((col("__n").cast("decimal(38,0)") * col("__sxy") -
-            col("__sx") * col("__sy")).cast("double") /
-          (sqrt(a.cast("double")) * sqrt(b.cast("double"))) * 1e6)
-          .cast("long").as("rho_micros"))
+    val (rx, ry) = (col("__rx"), col("__ry"))
+    val aggs = Moments.sums("__n", Seq("__sx" -> rx, "__sy" -> ry),
+      Seq(("__sxy", rx, ry), ("__sxx", rx, rx), ("__syy", ry, ry)))
+    val (n, sx, sy) = (col("__n"), col("__sx"), col("__sy"))
+    val (sxx, syy) = (col("__sxx"), col("__syy"))
+    ranked.agg(aggs.head, aggs.tail: _*)
+      .filter(Moments.centered(n, sxx, sx, sx) > 0 &&
+        Moments.centered(n, syy, sy, sy) > 0)
+      .select(n.cast("bigint").as("n"),
+        Moments.pearsonMicros(n, col("__sxy"), sx, sy, sxx, syy)
+          .as("rho_micros"))
   }
 
   /** Cumulative gains / lift table — the model-eval companion to
@@ -587,13 +582,12 @@ object OrderedStats {
     * integers, order-free sum — and the tie-corrected statistic is
     * ONE cross-multiplied integer division:
     * `H_micros = (12·S₃·10³ − 3n(n+1)²·10⁶)·(n³−n) div
-    * (n(n+1)·(n³−n−T))`, `T = Σ(t³−t)`. The upper-tail p comes from
-    * the Wilson–Hilferty cube-root normalization
-    * `z = (∛(H/d) − (1−2/(9d))) / √(2/(9d))`, d = k−1, through the
-    * shared [[Quality.pValueTwoSidedZ]] polynomial — a mirrored
-    * double tree (`exp(ln(u)/3)` is the cube root both engines
-    * replay bit-for-bit). Degenerate inputs (k < 2, or all values
-    * tied) return empty; an H truncated to ≤ 0 reports p = 1.
+    * (n(n+1)·(n³−n−T))`, `T = Σ(t³−t)`. The upper-tail p is
+    * [[Quality.upperTailZ]] of the [[Quality.wilsonHilfertyZ]]
+    * cube-root normalization of H/d, d = k−1 — a mirrored double
+    * tree both engines replay bit-for-bit. Degenerate inputs (k < 2,
+    * or all values tied) return empty; an H truncated to ≤ 0 reports
+    * p = 1.
     *
     * Scale: one row-scale (group, value) hash-agg + [[cumCounts]]'s
     * two-phase prefix sum; everything after is distinct-value- and
@@ -642,14 +636,9 @@ object OrderedStats {
           " * (__n3 - __t), 0)"))
     val d = (col("__k") - 1L).cast("double")
     val u = when(col("__hc") > 0L, col("__hc").cast("double") / 1e6 / d)
-    val zw = (exp(log(u) / lit(3.0)) -
-      (lit(1.0) - lit(2.0) / (lit(9.0) * d))) /
-      sqrt(lit(2.0) / (lit(9.0) * d))
-    val p2 = Quality.pValueTwoSidedZ(zw)
     hc.withColumn("__p",
         when(col("__hc") <= 0L, lit(1.0))
-          .when(zw >= 0.0, p2 / 2.0)
-          .otherwise(lit(1.0) - p2 / 2.0))
+          .otherwise(Quality.upperTailZ(Quality.wilsonHilfertyZ(u, d))))
       .select(col("__n").cast("bigint").as("n"),
         col("__k").cast("bigint").as("n_groups"),
         col("__hc").cast("bigint").as("h_micros"),
@@ -725,17 +714,11 @@ object OrderedStats {
     val base = df.select(valueExpr.cast("long").as("x"),
         tagExpr.as("t"))
       .filter(col("x").isNotNull && col("t").isNotNull)
-    val mom = base.agg(
-      sum(when(col("t"), 1L).otherwise(0L)).as("n_a"),
-      sum(when(!col("t"), 1L).otherwise(0L)).as("n_b"),
-      sum(when(col("t"), col("x").cast(dec)).otherwise(lit(0).cast(dec)))
-        .as("__s1"),
-      sum(when(!col("t"), col("x").cast(dec)).otherwise(lit(0).cast(dec)))
-        .as("__s2"),
-      sum(when(col("t"), col("x").cast(dec) * col("x"))
-        .otherwise(lit(0).cast(dec))).as("__q1"),
-      sum(when(!col("t"), col("x").cast(dec) * col("x"))
-        .otherwise(lit(0).cast(dec))).as("__q2"))
+    val x = col("x")
+    def side(n: String, i: Int, in: Column) = Moments.sums(n,
+      Seq(s"__s$i" -> x), Seq((s"__q$i", x, x)), Some(in))
+    val aggs = side("n_a", 1, col("t")) ++ side("n_b", 2, !col("t"))
+    val mom = base.agg(aggs.head, aggs.tail: _*)
     // 2U off the prefix sum (the mannWhitney/aucExact identity)
     val cum = cumCounts(base, col("x"), col("t"), nBuckets)
     val u2 = cum.agg(sum(col("ca").cast(dec) *

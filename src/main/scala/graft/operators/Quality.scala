@@ -704,6 +704,23 @@ object Quality {
     poly * exp(-(x * x))
   }
 
+  /** Upper-tail normal probability `P(Z ≥ z)`, read off the
+    * [[pValueTwoSidedZ]] polynomial: half the two-sided p for z ≥ 0,
+    * its complement below. */
+  def upperTailZ(z: Column): Column = {
+    val p2 = pValueTwoSidedZ(z)
+    when(z >= 0.0, p2 / 2.0).otherwise(lit(1.0) - p2 / 2.0)
+  }
+
+  /** Wilson–Hilferty (1931) normal approximation of a χ² statistic on
+    * `d` degrees of freedom, given `u = χ²/d`:
+    * `z = (∛u − (1 − 2/(9d))) / √(2/(9d))`, the cube root as
+    * `exp(ln u / 3)` — the mirrored tree an oracle replays bit for
+    * bit. Pair it with [[upperTailZ]] for the χ² upper-tail p. */
+  def wilsonHilfertyZ(u: Column, d: Column): Column =
+    (exp(log(u) / lit(3.0)) - (lit(1.0) - lit(2.0) / (lit(9.0) * d))) /
+      sqrt(lit(2.0) / (lit(9.0) * d))
+
   /** Truncating integer division that STAYS in DECIMAL(38,0) — the
     * safe form of SQL `div` for big integer statistics. Spark's
     * `div` (IntegralDivide) returns LONG and silently WRAPS when the
@@ -1001,49 +1018,38 @@ object Quality {
     * in ONE scan — the multicollinearity screen before feature
     * selection (k separate `corr` calls re-read the table k²/2
     * times): a single aggregate computes every sum, square-sum and
-    * cross-sum as DECIMAL(38,0)-exact integers; the k(k−1)/2
-    * correlations then derive on the driver from that one row, each
-    * the `(n·Σxy − ΣxΣy) / (√·√)` tree of exact integers the
-    * assortativity/regression family already replays. Returns
-    * (col_a, col_b, corr_micros), input order, zero-variance pairs
-    * NULL. `cols` are (name, integer-castable expr) pairs — quantize
-    * doubles to cents/bp upstream, the house rule. */
+    * cross-sum as DECIMAL(38,0)-exact integers ([[Moments.sums]]);
+    * the one-row result unpivots to the k(k−1)/2 pairs, each the
+    * [[Moments.pearsonMicros]] tree of exact integers the
+    * assortativity/regression family already replays. No job runs
+    * while the DataFrame is built. Returns (col_a, col_b,
+    * corr_micros), input order, zero-variance pairs NULL. `cols` are
+    * (name, integer-castable expr) pairs — quantize doubles to
+    * cents/bp upstream, the house rule. */
   def corrMatrix(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
     require(cols.size >= 2 && cols.size <= 8,
       s"corrMatrix takes 2..8 columns (got ${cols.size}) — a wide " +
         "matrix is a different scan-cost problem; batch it")
-    val spark = df.sparkSession
     val k = cols.size
-    val base = df.select(cols.zipWithIndex.map { case ((_, c), i) =>
-      c.cast("long").cast("decimal(38,0)").as(s"__x$i") }: _*)
-    val aggs =
-      Seq(count(lit(1)).as("__n")) ++
-      (0 until k).map(i => sum(col(s"__x$i")).as(s"__s$i")) ++
-      (0 until k).map(i => sum(col(s"__x$i") * col(s"__x$i")).as(s"__q$i")) ++
-      (for (i <- 0 until k; j <- i + 1 until k)
-        yield sum(col(s"__x$i") * col(s"__x$j")).as(s"__p${i}_$j"))
-    val row = base.agg(aggs.head, aggs.tail: _*).collect().head
-    val n = BigDecimal(row.getLong(0))
-    def dec(name: String) = BigDecimal(row.getAs[java.math.BigDecimal](name))
-    val out = for (i <- 0 until k; j <- i + 1 until k) yield {
-      val (si, sj) = (dec(s"__s$i"), dec(s"__s$j"))
-      val varI = n * dec(s"__q$i") - si * si
-      val varJ = n * dec(s"__q$j") - sj * sj
-      val cov = n * dec(s"__p${i}_$j") - si * sj
-      val corr: java.lang.Long =
-        if (varI <= 0 || varJ <= 0) null
-        else java.lang.Long.valueOf(math.round(cov.toDouble /
-          (math.sqrt(varI.toDouble) * math.sqrt(varJ.toDouble)) * 1e6))
-      org.apache.spark.sql.Row(cols(i)._1, cols(j)._1, corr)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("col_a",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("col_b",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("corr_micros",
-          org.apache.spark.sql.types.LongType, nullable = true))))
+    val x = (0 until k).map(i => col(s"__x$i"))
+    val pairs = for (i <- 0 until k; j <- i + 1 until k) yield (i, j)
+    val aggs = Moments.sums("__n", (0 until k).map(i => s"__s$i" -> x(i)),
+      (0 until k).map(i => (s"__q$i", x(i), x(i))) ++
+        pairs.map { case (i, j) => (s"__p${i}_$j", x(i), x(j)) })
+    val n = col("__n")
+    def s(i: Int) = col(s"__s$i")
+    def q(i: Int) = col(s"__q$i")
+    def cxx(i: Int) = Moments.centered(n, q(i), s(i), s(i))
+    df.select(cols.zipWithIndex.map { case ((_, c), i) =>
+        c.cast("long").as(s"__x$i") }: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(pairs.map { case (i, j) =>
+        struct(lit(cols(i)._1).as("col_a"), lit(cols(j)._1).as("col_b"),
+          when(cxx(i) > 0 && cxx(j) > 0,
+            Moments.pearsonMicros(n, col(s"__p${i}_$j"), s(i), s(j),
+              q(i), q(j))).as("corr_micros"))
+      }: _*)).as("__pair"))
+      .select(col("__pair.*"))
   }
 
   /** Jensen-Shannon divergence between two samples over the fixed
@@ -1268,26 +1274,6 @@ object Quality {
       .drop("__v")
   }
 
-  /** Poisson overdispersion screen per group — the sanity check
-    * BEFORE any count model or Poisson-rate alert: real event counts
-    * are almost never Poisson (bursts, heavy users), and a monitor
-    * calibrated on `var = mean` pages constantly when
-    * `var ≫ mean`. The dispersion statistic
-    * `D = Σ(x−x̄)²/x̄ = (nΣx² − S²)/(n·x̄·n) · n` reduces to the
-    * cross-multiplied exact form `D = (nΣx² − S²)/S`, distributed
-    * χ²_{n−1} under the Poisson null.
-    *
-    * Exactness: per-group (n, S = Σx, Q = Σx²) are exact DECIMAL
-    * integers; `dispersion_micros = ((nQ − S²)·10⁶) div S` stays in
-    * DECIMAL via [[decimalDivTrunc]]; the upper-tail p uses the
-    * mirrored Wilson–Hilferty cube root through the shared
-    * [[pValueTwoSidedZ]] polynomial (the kruskalWallis convention).
-    * Groups with n < 2 or S ≤ 0 emit nothing. Returns one row per
-    * group: (group, n, mean_micros, dispersion_micros, z_micros,
-    * p_micros).
-    *
-    * Scale: one map-side-combined hash-agg to group moments;
-    * everything after is group-scale. */
   /** Theil T inequality index with the between/within-group
     * decomposition — the reading [[graft.operators.Graph]]-style
     * concentration numbers (gini, Lorenz) can't give: Theil is the
@@ -1344,30 +1330,45 @@ object Quality {
         (col("__t") - col("__b")).cast("bigint").as("within_micros"))
   }
 
+  /** Poisson overdispersion screen per group — the sanity check
+    * BEFORE any count model or Poisson-rate alert: real event counts
+    * are almost never Poisson (bursts, heavy users), and a monitor
+    * calibrated on `var = mean` pages constantly when
+    * `var ≫ mean`. The dispersion statistic
+    * `D = Σ(x−x̄)²/x̄ = (nΣx² − S²)/(n·x̄·n) · n` reduces to the
+    * cross-multiplied exact form `D = (nΣx² − S²)/S`, distributed
+    * χ²_{n−1} under the Poisson null.
+    *
+    * Exactness: per-group (n, S = Σx, Q = Σx²) are exact DECIMAL
+    * integers; `dispersion_micros = ((nQ − S²)·10⁶) div S` stays in
+    * DECIMAL via [[decimalDivTrunc]]; the upper-tail p is
+    * [[upperTailZ]] of the [[wilsonHilfertyZ]] transform (the
+    * kruskalWallis convention).
+    * Groups with n < 2 or S ≤ 0 emit nothing. Returns one row per
+    * group: (group, n, mean_micros, dispersion_micros, z_micros,
+    * p_micros).
+    *
+    * Scale: one map-side-combined hash-agg to group moments;
+    * everything after is group-scale. */
   def overdispersion(df: DataFrame, groupExpr: Column,
       countExpr: Column): DataFrame = {
-    val dec = "decimal(38,0)"
+    val x = col("__x")
+    val aggs = Moments.sums("n", Seq("__s" -> x), Seq(("__q", x, x)))
     val g = df.select(groupExpr.cast("string").as("grp"),
         countExpr.cast("long").as("__x"))
       .filter(col("grp").isNotNull && col("__x").isNotNull &&
         col("__x") >= 0L)
       .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"), sum(col("__x").cast(dec)).as("__s"),
-        sum(col("__x").cast(dec) * col("__x")).as("__q"))
+      .agg(aggs.head, aggs.tail: _*)
       .filter(col("n") > 1L && col("__s") > 0)
       .withColumn("__dm", decimalDivTrunc(
-        (col("n").cast(dec) * col("__q") - col("__s") * col("__s")) *
+        Moments.centered(col("n"), col("__q"), col("__s"), col("__s")) *
           lit(1000000L), col("__s")))
     val d = (col("n") - 1L).cast("double")
     val u = when(col("__dm") > 0, col("__dm").cast("double") / 1e6 / d)
-    val zw = (exp(log(u) / lit(3.0)) -
-      (lit(1.0) - lit(2.0) / (lit(9.0) * d))) /
-      sqrt(lit(2.0) / (lit(9.0) * d))
-    val p2 = pValueTwoSidedZ(zw)
+    val zw = wilsonHilfertyZ(u, d)
     g.withColumn("__p",
-        when(col("__dm") <= 0L, lit(1.0))
-          .when(zw >= 0.0, p2 / 2.0)
-          .otherwise(lit(1.0) - p2 / 2.0))
+        when(col("__dm") <= 0L, lit(1.0)).otherwise(upperTailZ(zw)))
       .select(col("grp"), col("n").cast("bigint").as("n"),
         expr("CAST(__s * 1000000 div n AS BIGINT)").as("mean_micros"),
         col("__dm").cast("bigint").as("dispersion_micros"),

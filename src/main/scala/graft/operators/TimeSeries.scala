@@ -1751,17 +1751,17 @@ object TimeSeries {
   }
 
   /** Lag-1 Granger causality between two aligned series — the
-    * DIRECTED co-movement question [[win-rolling correlation]] style
-    * monitors cannot answer (correlation is symmetric; "do clicks
-    * LEAD purchases or just move with them?" is what a funnel owner
-    * actually asks): for each direction, compare the restricted
-    * autoregression `T_t ~ 1 + T_{t−1}` against the full
-    * `T_t ~ 1 + T_{t−1} + O_{t−1}` and report the classical F
-    * statistic `(n−3)·(RSS_r − RSS_f)/RSS_f` (1 numerator df). Both
-    * directions come from ONE moment pass.
+    * DIRECTED co-movement question rolling-correlation monitors
+    * (the `win_rolling_corr` query) cannot answer (correlation is
+    * symmetric; "do clicks LEAD purchases or just move with them?"
+    * is what a funnel owner actually asks): for each direction,
+    * compare the restricted autoregression `T_t ~ 1 + T_{t−1}`
+    * against the full `T_t ~ 1 + T_{t−1} + O_{t−1}` and report the
+    * classical F statistic `(n−3)·(RSS_r − RSS_f)/RSS_f` (1 numerator
+    * df). Both directions come from ONE moment pass.
     *
-    * Exactness: all 14 raw moments are exact integer sums in one
-    * row-scale aggregate; the centered cross-moments
+    * Exactness: all 14 raw moments are exact DECIMAL sums in one
+    * row-scale aggregate ([[Moments.sums]]); the centered cross-moments
     * `C_ab = n·Σab − Σa·Σb`, the determinant and the two RSS
     * numerators `P = C_TT·C_11 − C_T1²`,
     * `Q = C_TT·det − (C_T1²·C_22 − 2·C_T1·C_T2·C_12 + C_T2²·C_11)`
@@ -1792,25 +1792,18 @@ object TimeSeries {
       .withColumn("__y1", lag(col("__yt"), 1).over(w))
       .filter(col("__x1").isNotNull && col("__y1").isNotNull &&
         col("__xt").isNotNull && col("__yt").isNotNull)
-    val m = lagged.agg(
-      count(lit(1)).as("n"),
-      sum(col("__yt")).as("syt"), sum(col("__xt")).as("sxt"),
-      sum(col("__y1")).as("sy1"), sum(col("__x1")).as("sx1"),
-      sum(col("__yt") * col("__yt")).as("sytyt"),
-      sum(col("__xt") * col("__xt")).as("sxtxt"),
-      sum(col("__y1") * col("__y1")).as("sy1y1"),
-      sum(col("__x1") * col("__x1")).as("sx1x1"),
-      sum(col("__yt") * col("__y1")).as("syty1"),
-      sum(col("__yt") * col("__x1")).as("sytx1"),
-      sum(col("__xt") * col("__x1")).as("sxtx1"),
-      sum(col("__xt") * col("__y1")).as("sxty1"),
-      sum(col("__y1") * col("__x1")).as("sy1x1"))
+    val (yt, xt, y1, x1) =
+      (col("__yt"), col("__xt"), col("__y1"), col("__x1"))
+    val aggs = Moments.sums("n",
+      Seq("syt" -> yt, "sxt" -> xt, "sy1" -> y1, "sx1" -> x1),
+      Seq(("sytyt", yt, yt), ("sxtxt", xt, xt), ("sy1y1", y1, y1),
+        ("sx1x1", x1, x1), ("syty1", yt, y1), ("sytx1", yt, x1),
+        ("sxtx1", xt, x1), ("sxty1", xt, y1), ("sy1x1", y1, x1)))
+    val m = lagged.agg(aggs.head, aggs.tail: _*)
       .filter(col("n") >= 10L)
       .localCheckpoint(true) // 1-row moment table, two consumers
-    // centered moment C_ab = n·Σab − Σa·Σb, DECIMAL-exact
     def c(sab: String, sa: String, sb: String) =
-      (col("n").cast(dec) * col(sab) - col(sa).cast(dec) * col(sb))
-        .cast(dec)
+      Moments.centered(col("n"), col(sab), col(sa), col(sb))
     def direction(name: String, stt: String, st: String, s1: String,
         s2: String, st1: String, st2: String, s11: String, s22: String,
         s12: String) = {

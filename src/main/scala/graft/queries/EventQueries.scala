@@ -1327,15 +1327,14 @@ object EventQueries {
         .withColumn("__sec", unix_timestamp($"ts"))
         .withColumn("__dt", $"__sec" - lag($"__sec", 1).over(w))
         .filter($"__dt".isNotNull)
-      val dec = "decimal(38,0)"
+      import graft.operators.Moments
+      val aggs = Moments.sums("n", Seq("s" -> $"__dt"),
+        Seq(("q", $"__dt", $"__dt")))
       val m = d.groupBy($"user_id")
-        .agg(count(lit(1)).as("n"),
-          sum($"__dt".cast(dec)).as("s"),
-          sum(($"__dt".cast(dec) * $"__dt")).as("q"))
+        .agg(aggs.head, aggs.tail: _*)
         .filter($"n" >= 30L && $"s" > 0)
-      val cv = sqrt(($"n".cast(dec) * $"q" - $"s" * $"s").cast("double") /
-          ($"n".cast(dec) * ($"n" - 1L)).cast("double")) /
-        ($"s".cast("double") / $"n".cast("double"))
+      val cv = sqrt(Moments.sampleVar($"n", $"s", $"q")) /
+        Moments.mean($"s", $"n")
       m.select($"user_id", $"n".cast("bigint").as("n_gaps"),
           expr("CAST(s * 1000 div n AS BIGINT)").as("mean_gap_ms"),
           round(cv * 1e6).cast("long").as("cv_ppm"))

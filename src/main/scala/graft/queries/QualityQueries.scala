@@ -726,7 +726,7 @@ object QualityQueries {
         |      / (sqrt(CAST(va AS DOUBLE)) * sqrt(CAST(vb AS DOUBLE)))
         |      * 1000000) AS BIGINT) END AS corr_micros
         |FROM pairs ORDER BY col_a, col_b""".stripMargin),
-    bench = true, eagerBuild = true),
+    bench = true),
 
     QuerySpec("dq_duplicate_rows", (s, dir) => {
       import s.implicits._

@@ -49,19 +49,18 @@ object SamplingQueries {
       // ppm integers BEFORE the budget split so the allocation is
       // a pure integer function (truncating; the documented
       // shortfall is < strata rows).
-      val dec = "decimal(38,0)"
+      import graft.operators.Moments
+      val dec = Moments.Dec
+      val aggs = Moments.sums("n", Seq("s" -> $"y"), Seq(("q", $"y", $"y")))
       val m = Tables.orders(s, dir)
         .select($"o_orderpriority".as("stratum"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("y"))
         .groupBy($"stratum")
-        .agg(count(lit(1)).as("n"), sum($"y".cast(dec)).as("s"),
-          sum(($"y".cast(dec) * $"y")).as("q"))
+        .agg(aggs.head, aggs.tail: _*)
         .filter($"n" >= 2L)
       // N_h * S_h with S_h = sqrt((n*q - s^2) / (n*(n-1))): carried
       // as one double tree from exact integers
-      val ns = $"n".cast("double") *
-        sqrt(($"n".cast(dec) * $"q" - $"s" * $"s").cast("double") /
-          ($"n".cast(dec) * ($"n" - 1L)).cast("double"))
+      val ns = $"n".cast("double") * sqrt(Moments.sampleVar($"n", $"s", $"q"))
       val wtab = m.select($"stratum", $"n",
         round(ns).cast("long").as("__ns"))
       val tot = wtab.agg(sum($"__ns".cast(dec)).as("__tns"))

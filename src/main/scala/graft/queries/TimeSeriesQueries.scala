@@ -602,21 +602,20 @@ object TimeSeriesQueries {
       val lags = s.range(-6, 7).select($"id".as("lag"))
       val a = g.select($"h", $"x")
       val b = g.select($"h".as("h2"), $"y")
+      import graft.operators.Moments
+      val aggs = Moments.sums("n", Seq("sx" -> $"x", "sy" -> $"y"),
+        Seq(("sxx", $"x", $"x"), ("syy", $"y", $"y"), ("sxy", $"x", $"y")))
+      val (n, sx, sy) = ($"n", $"sx", $"sy")
       lags.crossJoin(a) // 13 x grid fixed-width rows
         .withColumn("h2", $"h" + $"lag")
         .join(b, "h2")
         .groupBy($"lag")
-        .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
-          sum($"y").as("sy"), sum($"x" * $"x").as("sxx"),
-          sum($"y" * $"y").as("syy"), sum($"x" * $"y").as("sxy"))
-        .selectExpr("lag", "CAST(n AS BIGINT) AS n",
-          "CAST(n * sxy - sx * sy AS DOUBLE) AS num",
-          "CAST(n * sxx - sx * sx AS DOUBLE) AS vx",
-          "CAST(n * syy - sy * sy AS DOUBLE) AS vy")
-        .selectExpr("lag", "n",
-          "CASE WHEN vx <= 0.0 OR vy <= 0.0 THEN NULL ELSE " +
-            "CAST(round(num / (sqrt(vx) * sqrt(vy)) * 1000000)" +
-            " AS BIGINT) END AS ccf_micros")
+        .agg(aggs.head, aggs.tail: _*)
+        .select($"lag", n.cast("bigint").as("n"),
+          when(Moments.centered(n, $"sxx", sx, sx) > 0 &&
+            Moments.centered(n, $"syy", sy, sy) > 0,
+            Moments.pearsonMicros(n, $"sxy", sx, sy, $"sxx", $"syy"))
+            .as("ccf_micros"))
         .orderBy($"lag")
     },
     // hour-index self-join per lag, exact per-lag moments, one
@@ -737,22 +736,22 @@ object TimeSeriesQueries {
         .agg((count(lit(1)) * 1000000L).as("v"))
       val d = graft.operators.TimeSeries.decompose(hc, "event_type",
         expr("unix_timestamp(hour) div 3600"), hour($"hour"), "v")
-      val dec = "decimal(38,0)"
+      import graft.operators.Moments
+      val aggs = Moments.sums("n",
+        Seq("sr_" -> $"r", "st" -> $"tr", "ss" -> $"sr"),
+        Seq(("qr", $"r", $"r"), ("qt", $"tr", $"tr"), ("qs", $"sr", $"sr")))
       val m = d.select($"event_type",
           ($"value_micros" - $"trend_micros" - $"seasonal_micros")
             .as("r"),
           ($"value_micros" - $"seasonal_micros").as("tr"),
           ($"value_micros" - $"trend_micros").as("sr"))
         .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum($"r".cast(dec)).as("sr_"), sum($"r".cast(dec) * $"r").as("qr"),
-          sum($"tr".cast(dec)).as("st"), sum($"tr".cast(dec) * $"tr").as("qt"),
-          sum($"sr".cast(dec)).as("ss"), sum($"sr".cast(dec) * $"sr").as("qs"))
+        .agg(aggs.head, aggs.tail: _*)
       def strength(q: String, sCol: String) = {
         val ratio = graft.operators.Quality.decimalDivTrunc(
-          ($"n".cast(dec) * $"qr" - $"sr_" * $"sr_") * lit(1000000L),
-          nullif($"n".cast(dec) * col(q) - col(sCol) * col(sCol),
-            lit(0).cast(dec))).cast("long")
+          Moments.centered($"n", $"qr", $"sr_", $"sr_") * lit(1000000L),
+          nullif(Moments.centered($"n", col(q), col(sCol), col(sCol)),
+            lit(0).cast(Moments.Dec))).cast("long")
         // NULL must stay NULL: Spark greatest SKIPS null operands
         when(ratio.isNull, lit(null).cast("long"))
           .otherwise(greatest(lit(0L), lit(1000000L) - ratio))

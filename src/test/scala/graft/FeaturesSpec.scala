@@ -842,6 +842,41 @@ class FeaturesSpec extends SparkSpec {
     }
   }
 
+  test("ridgeRegression: a 3.1e9 covariate sums exactly, matching a BigInt reference") {
+    // x1·x1 at 3.1e9 is 9.61e18 > 2^63 − 1: a long product fails with
+    // ARITHMETIC_OVERFLOW under ANSI, so the moments must sum in DECIMAL
+    val rows = Seq((3100000000L, 1L, 5L), (2L, 3L, 1L), (5L, 0L, 4L),
+      (1L, 2L, 2L), (4L, 4L, 7L), (0L, 1L, 3L))
+    val df = rows.toDF("x1", "x2", "y")
+    val got = Features.ridgeRegression(df, $"y", $"x1", $"x2",
+        lambdas = Seq(0L, 1L))
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    val n = BigInt(rows.size)
+    def s(f: ((Long, Long, Long)) => BigInt) = rows.map(f).sum
+    val (s1, s2, sy) = (s(r => BigInt(r._1)), s(r => BigInt(r._2)),
+      s(r => BigInt(r._3)))
+    def c(sab: BigInt, sa: BigInt, sb: BigInt) = n * sab - sa * sb
+    def round6(d: Double) = BigDecimal(d * 1e6)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    for (lambda <- Seq(0L, 1L)) {
+      val l = lambda * n * n
+      val a11 = c(s(r => BigInt(r._1) * r._1), s1, s1) + l
+      val a22 = c(s(r => BigInt(r._2) * r._2), s2, s2) + l
+      val a12 = c(s(r => BigInt(r._1) * r._2), s1, s2)
+      val c1y = c(s(r => BigInt(r._1) * r._3), s1, sy)
+      val c2y = c(s(r => BigInt(r._2) * r._3), s2, sy)
+      val det = a11 * a22 - a12 * a12
+      assert(det > 0)
+      val b1 = (a22 * c1y - a12 * c2y).toDouble / det.toDouble
+      val b2 = (a11 * c2y - a12 * c1y).toDouble / det.toDouble
+      val icpt = (sy.toDouble - b1 * s1.toDouble - b2 * s2.toDouble) /
+        n.toDouble
+      assert(got(lambda) == ((n.toLong, round6(b1), round6(b2),
+        round6(icpt))), s"lambda $lambda")
+    }
+  }
+
   test("isotonicFit: hand PAVA both directions, weights pool exactly, guards") {
     import spark.implicits._
     // increasing on rates 1, 3, 2, 4 (unit weights): the 3/2 violation

@@ -1041,6 +1041,52 @@ class TimeSeriesSpec extends SparkSpec {
     assert(TimeSeries.grangerLag1(short, "o", "x", "y").count() == 0L)
   }
 
+  test("grangerLag1: a 3.1e9 value sums exactly, matching a BigInt reference") {
+    // x_t·x_t at 3.1e9 is 9.61e18 > 2^63 − 1: a long product fails with
+    // ARITHMETIC_OVERFLOW under ANSI, so the moments must sum in DECIMAL.
+    // The spike is the last row — in x_t, not in x_{t−1} — which keeps
+    // every centered product of both directions inside DECIMAL(38,0).
+    val n = 14
+    val xs = (0 until n).map(i =>
+      if (i == n - 1) 3100000000L else ((i * 7) % 5 + 1).toLong)
+    val ys = (0 until n).map(i => ((i * 3) % 7 + 2).toLong)
+    val df = xs.indices.map(i => (i.toLong, xs(i), ys(i)))
+      .toDF("o", "x", "y")
+    val got = TimeSeries.grangerLag1(df, "o", "x", "y").collect()
+      .map(r => r.getString(0) ->
+        ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))))
+      .toMap
+    // F of T_t ~ 1 + T_{t−1} + O_{t−1} against T_t ~ 1 + T_{t−1}
+    def f(t: Seq[Long], o: Seq[Long]): Option[Long] = {
+      val rows = (1 until n).map(i => (t(i), t(i - 1), o(i - 1)))
+      val nn = BigInt(rows.size)
+      def s(g: ((Long, Long, Long)) => BigInt) = rows.map(g).sum
+      val (st, s1, s2) = (s(r => BigInt(r._1)), s(r => BigInt(r._2)),
+        s(r => BigInt(r._3)))
+      def c(sab: BigInt, sa: BigInt, sb: BigInt) = nn * sab - sa * sb
+      val ctt = c(s(r => BigInt(r._1) * r._1), st, st)
+      val ct1 = c(s(r => BigInt(r._1) * r._2), st, s1)
+      val ct2 = c(s(r => BigInt(r._1) * r._3), st, s2)
+      val c11 = c(s(r => BigInt(r._2) * r._2), s1, s1)
+      val c22 = c(s(r => BigInt(r._3) * r._3), s2, s2)
+      val c12 = c(s(r => BigInt(r._2) * r._3), s1, s2)
+      val det = c11 * c22 - c12 * c12
+      val p = ctt * c11 - ct1 * ct1
+      val q = ctt * det - (ct1 * ct1 * c22 - 2 * ct1 * ct2 * c12 +
+        ct2 * ct2 * c11)
+      if (c11 <= 0 || det <= 0 || q <= 0) None
+      else {
+        val rssR = p.toDouble / c11.toDouble
+        val rssF = q.toDouble / det.toDouble
+        Some(BigDecimal((nn.toLong - 3).toDouble * (rssR - rssF) / rssF
+          * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
+      }
+    }
+    assert(got("x_to_y") == (((n - 1).toLong, f(ys, xs))))
+    assert(got("y_to_x") == (((n - 1).toLong, f(xs, ys))))
+    assert(got("y_to_x")._2.isDefined, "the spike's direction must test")
+  }
+
   test("modelSelectByKey: regimes select differently, MAEs equal the single-series member, ineligible keys drop") {
     val n = 120
     val rows = (1 to n).flatMap { i =>
