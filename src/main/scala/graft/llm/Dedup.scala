@@ -104,6 +104,102 @@ object Dedup {
     chunks.join(winners, Seq(idCol, "chunk_no"), "left_semi")
   }
 
+  /** Band-explode 64-bit fingerprints `(id, sh)` into (id, sh, band,
+    * key) pigeonhole rows for radius `maxHamming`: `maxHamming + 1`
+    * near-equal-width bands (graft.expr.BandLayout — shared with the
+    * HammingJoinRewrite optimizer rule). The blocking layout of the
+    * text simhash, of any other 64-bit perceptual fingerprint (e.g.
+    * [[graft.llm.Multimodal.dhash64]]) and of the persisted band
+    * index. */
+  private def banded(fp: DataFrame, maxHamming: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 63,
+      s"maxHamming must be in [0,63] (got $maxHamming)")
+    val layout = graft.expr.BandLayout(maxHamming + 1)
+    val bandKeys = layout.zipWithIndex.map { case ((offset, mask), b) =>
+      struct(lit(b).as("band"),
+        shiftright(col("sh"), offset).bitwiseAND(lit(mask)).as("key"))
+    }
+    fp.select(col("id"), col("sh"),
+      explode(array(bandKeys: _*)).as("bk"))
+      .select(col("id"), col("sh"), col("bk.band"), col("bk.key"))
+  }
+
+  private def textFp(df: DataFrame, textCol: String, idCol: String) =
+    df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sh"))
+
+  private def bitsFp(df: DataFrame, bitsCol: String, idCol: String) =
+    df.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh"))
+
+  /** The collision join of every blocked near-dup family: `rows`
+    * carry `id`, the blocking `keys` and the `carry` columns. Returns
+    * one row per key collision — the new-vs-new pairs (id_a < id_b)
+    * and, given an `index` of the same row shape, the new-vs-index
+    * pairs (least/greatest of `id_n =!= id_o`, so a doc re-arriving
+    * under an indexed id pairs with nothing of itself) — with the
+    * `pair` columns computed from the two sides' carried columns. A
+    * pair may collide under several keys, so each caller reduces:
+    * distinct, per-pair min or a count. `pair` must be symmetric in
+    * its sides, since a new-vs-index pair's orientation follows its
+    * ids. Both joins hash-partition on the keys; nothing quadratic. */
+  private def collisions(rows: DataFrame, keys: Seq[String],
+      index: Option[DataFrame] = None, carry: Seq[String] = Nil,
+      pair: (String => Column, String => Column) => Seq[Column] =
+        (_, _) => Nil): DataFrame = {
+    def side(df: DataFrame, s: String) = df.select(keys.map(col) ++
+      ("id" +: carry).map(c => col(c).as(s"${c}_$s")): _*)
+    def on(a: String, b: String) =
+      pair(c => col(s"${c}_$a"), c => col(s"${c}_$b"))
+    val newVsNew = side(rows, "a").join(side(rows, "b"), keys)
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a") +: col("id_b") +: on("a", "b"): _*)
+    index.fold(newVsNew)(idx => side(rows, "n").join(side(idx, "o"), keys)
+      .filter(col("id_n") =!= col("id_o"))
+      .select(least(col("id_n"), col("id_o")).as("id_a") +:
+        greatest(col("id_n"), col("id_o")).as("id_b") +: on("n", "o"): _*)
+      .union(newVsNew))
+  }
+
+  /** Candidate pairs with both ends' `c` attached as `c_a`/`c_b` — the
+    * verify side of the MinHash and embedding families. The rows are
+    * the new batch's plus, given an index's id sidecar, the sidecar
+    * rows whose ids the batch does not hold (the batch's in-flight
+    * rows win for a re-arriving id; history never re-reads its text),
+    * semi-filtered to the ids of some candidate pair, so sets and
+    * vectors ship at near-dup scale, not corpus scale. */
+  private def verifyPairs(cand: DataFrame, batch: DataFrame,
+      sidecar: Option[DataFrame], c: String): DataFrame = {
+    val candIds = cand.select(col("id_a").as("id"))
+      .union(cand.select(col("id_b").as("id"))).distinct()
+    val rows = sidecar.fold(batch)(old => batch.unionByName(
+        old.join(batch.select(col("id")), Seq("id"), "left_anti")))
+      .join(candIds, Seq("id"), "left_semi")
+    cand.join(rows.select(col("id").as("id_a"), col(c).as(c + "_a")), "id_a")
+      .join(rows.select(col("id").as("id_b"), col(c).as(c + "_b")), "id_b")
+  }
+
+  /** Hamming near-dup pairs of fingerprints `fp` within themselves
+    * and, given a band index, against it: (id_a, id_b, hamming <=
+    * maxHamming), id_a < id_b. A pair may collide on several bands;
+    * for single fingerprints every collision carries the same
+    * distance, so distinct is the reduction, while multi-fingerprint
+    * signatures (`perPairMin`) take the per-pair MIN, which subsumes
+    * the dedup — stacking distinct under it would shuffle the pair
+    * stream twice. Either way one shuffle. */
+  private def hammingPairs(fp: DataFrame, maxHamming: Int,
+      index: Option[DataFrame], perPairMin: Boolean): DataFrame = {
+    val hits = collisions(banded(fp, maxHamming), Seq("band", "key"), index,
+      Seq("sh"), (a, b) =>
+        Seq(bit_count(a("sh").bitwiseXOR(b("sh"))).as("hamming")))
+    val pairs =
+      if (perPairMin) hits.groupBy(col("id_a"), col("id_b"))
+        .agg(min(col("hamming")).as("hamming"))
+      else hits.distinct()
+    pairs.filter(col("hamming") <= maxHamming)
+  }
+
+  private def fpLayout(maxHamming: Int): SideIndex.Layout =
+    Seq("maxHamming" -> maxHamming)
+
   /** SimHash near-dup candidate pairs: ALL document pairs whose 64-bit
     * SimHash differs by <= maxHamming bits. Banding: the fingerprint is
     * split into `maxHamming + 1` near-equal-width bands; by pigeonhole,
@@ -114,66 +210,10 @@ object Dedup {
     * width is 64/(maxHamming+1) bits, so radii past ~7 shrink the band
     * keyspace toward all-pairs. At 100 TB keep maxHamming <= 7
     * (8 bands × 8 bits) and use [[minhashNearDup]] for coarser radii. */
-  /** Banded simhash fingerprints — the shared blocking layout of
-    * [[simhashNearDup]] and the persisted incremental index: one row
-    * per (doc, band) carrying (id, sh, band, key), 64 bits split into
-    * `bands` chunks (graft.expr.BandLayout — shared with the
-    * HammingJoinRewrite optimizer rule). */
-  /** Band-explode PRECOMPUTED 64-bit fingerprints `(id, sh)` into
-    * (id, sh, band, key) pigeonhole rows — the layout step shared by
-    * text simhash and any other 64-bit perceptual fingerprint (e.g.
-    * [[graft.llm.Multimodal.dhash64]]). */
-  private def bandedBits(fp: DataFrame, bands: Int): DataFrame = {
-    val layout = graft.expr.BandLayout(bands)
-    val bandKeys = layout.zipWithIndex.map { case ((offset, mask), b) =>
-      struct(lit(b).as("band"),
-        shiftright(col("sh"), offset).bitwiseAND(lit(mask)).as("key"))
-    }
-    fp.select(col("id"), col("sh"),
-      explode(array(bandKeys: _*)).as("bk"))
-      .select(col("id"), col("sh"), col("bk.band"), col("bk.key"))
-  }
-
-  private def bandedFingerprints(df: DataFrame, textCol: String,
-      idCol: String, bands: Int): DataFrame =
-    bandedBits(
-      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sh")),
-      bands)
-
-  /** Raw pigeonhole self-join of banded fingerprints — one row per
-    * band collision (a pair may appear under several bands, and a
-    * multi-fingerprint pair under several fingerprint pairs). The two
-    * consumers reduce it differently, each in ONE shuffle: the
-    * single-fingerprint path dedups ([[pairsFromBanded]] — per pair
-    * every hamming is equal, so distinct IS the reduction), the
-    * signature path takes the per-pair MIN ([[signatureNearDup]] —
-    * min subsumes the dedup, so stacking distinct under it would be
-    * a redundant second shuffle). */
-  private def rawBandPairs(banded: DataFrame): DataFrame = {
-    val a = banded.select(col("band"), col("key"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = banded.select(col("band"), col("key"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-  }
-
-  /** Pigeonhole self-join of banded fingerprints → near-dup pairs. */
-  private def pairsFromBanded(banded: DataFrame,
-      maxHamming: Int): DataFrame =
-    rawBandPairs(banded)
-      .distinct() // a pair may collide on several bands
-      .filter(col("hamming") <= maxHamming)
-
   def simhashNearDup(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming must be in [0,63] (got $maxHamming)")
-    pairsFromBanded(bandedFingerprints(df, textCol, idCol, maxHamming + 1),
-      maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    hammingPairs(textFp(df, textCol, idCol), maxHamming, None,
+      perPairMin = false)
 
   /** Hamming near-dup pairs over an ARBITRARY precomputed 64-bit
     * fingerprint column — the [[simhashNearDup]] pigeonhole machinery
@@ -187,13 +227,9 @@ object Dedup {
     * pigeonhole, so recall is 1.0 BY CONSTRUCTION, never probabilistic.
     * Returns (id_a, id_b, hamming) with id_a < id_b. */
   def hammingNearDup(df: DataFrame, bitsCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming must be in [0,63] (got $maxHamming)")
-    pairsFromBanded(bandedBits(
-      df.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh")),
-      maxHamming + 1), maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    hammingPairs(bitsFp(df, bitsCol, idCol), maxHamming, None,
+      perPairMin = false)
 
   /** Hamming near-dup pairs over MULTI-fingerprint signatures — the
     * [[hammingNearDup]] machinery for entities carrying SEVERAL 64-bit
@@ -217,30 +253,23 @@ object Dedup {
     * collided distances can only lose, and a pair whose min exceeds
     * the threshold is filtered after the agg. */
   def signatureNearDup(df: DataFrame, bitsCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming must be in [0,63] (got $maxHamming)")
-    rawBandPairs(bandedBits(
-      df.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh")),
-      maxHamming + 1))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("hamming")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    hammingPairs(bitsFp(df, bitsCol, idCol), maxHamming, None,
+      perPairMin = true)
 
   /** Persist the simhash band index of a corpus — the historical half
     * of INCREMENTAL dedup: fingerprint + band rows (id, sh, band, key)
-    * as parquet, plus a 1-row `__meta` sidecar recording the band
-    * layout so a mismatched read fails loudly instead of silently
-    * missing pairs. `mode = "append"` folds a new batch into the
-    * index after it has been dedup'd (the daily-crawl loop: dedup
-    * against history, then append the survivors — history is never
-    * rescanned, never refingerprinted). */
+    * under the [[SideIndex]] protocol, layout `maxHamming`.
+    * `mode = "append"` folds a new batch into the index after it has
+    * been dedup'd (the daily-crawl loop: dedup against history, then
+    * append the survivors — history is never rescanned, never
+    * refingerprinted). The band index has no id sidecar and its
+    * append is not id-guarded: a re-appended id only repeats band
+    * rows, which the readers' distinct (or per-pair min) absorbs. */
   def writeSimhashIndex(df: DataFrame, textCol: String, idCol: String,
       dir: String, maxHamming: Int = 3, mode: String = "overwrite"): Unit =
-    writeFpIndex(
-      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sh")),
-      dir, maxHamming, mode)
+    SideIndex.write("writeSimhashIndex", dir, mode, fpLayout(maxHamming),
+      banded(textFp(df, textCol, idCol), maxHamming))
 
   /** Persist the band index of an ARBITRARY precomputed 64-bit
     * fingerprint column — [[writeSimhashIndex]]'s machinery opened to
@@ -249,34 +278,18 @@ object Dedup {
     * corpus gets the same daily-crawl loop text has: dedup the new
     * batch against history via [[hammingNearDupIncremental]], then
     * append the survivors — history is never re-decoded, never
-    * re-fingerprinted, never rescanned. */
+    * re-fingerprinted, never rescanned. Unguarded on ids, like
+    * [[writeSimhashIndex]]: a signature index repeats ids per frame
+    * by design. */
   def writeHammingIndex(df: DataFrame, bitsCol: String, idCol: String,
       dir: String, maxHamming: Int = 3, mode: String = "overwrite"): Unit =
-    writeFpIndex(
-      df.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh")),
-      dir, maxHamming, mode)
+    SideIndex.write("writeHammingIndex", dir, mode, fpLayout(maxHamming),
+      banded(bitsFp(df, bitsCol, idCol), maxHamming))
 
-  private def writeFpIndex(fp: DataFrame, dir: String, maxHamming: Int,
-      mode: String): Unit = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming must be in [0,63] (got $maxHamming)")
-    val spark = fp.sparkSession
-    if (mode == "append") {
-      // appending under a different layout would silently lose recall
-      // for every doc already indexed — refuse loudly
-      val idxMax = spark.read.parquet(dir + "__meta").head().getInt(0)
-      require(idxMax == maxHamming,
-        s"index at $dir was built with maxHamming=$idxMax, " +
-          s"append requested with $maxHamming")
-    }
-    bandedBits(fp, maxHamming + 1)
-      .write.mode(mode).parquet(dir)
-    if (mode != "append") {
-      import spark.implicits._
-      Seq(maxHamming).toDF("max_hamming")
-        .coalesce(1).write.mode("overwrite").parquet(dir + "__meta")
-    }
-  }
+  private def fpIndex(op: String, newFp: DataFrame, indexDir: String,
+      maxHamming: Int): Option[DataFrame] =
+    Some(SideIndex.open(op, newFp.sparkSession, indexDir,
+      fpLayout(maxHamming)))
 
   /** Near-dup pairs of a NEW batch against a persisted index plus
     * within itself — incremental dedup without rescanning history:
@@ -285,19 +298,19 @@ object Dedup {
     * Returns (id_a, id_b, hamming) with id_a < id_b, hamming <=
     * maxHamming, every pair touching at least one new doc. A new doc
     * re-arriving under an id already in the index pairs with nothing
-    * of itself (`id_a =!= id_b` guard) but still pairs with its
-    * near-dups.
+    * of itself but still pairs with its near-dups.
     *
     * Scale shape: the index joins on fixed-width (band, key) — the
     * historical TEXT never loads, only its 28-byte band rows; the new
     * batch fingerprints once. Both joins hash-partition on band keys;
-    * nothing quadratic, nothing driver-side except the 1-row meta
-    * guard. */
+    * nothing quadratic, nothing collected but the 1-row layout check. */
   def simhashNearDupIncremental(newDf: DataFrame, indexDir: String,
-      textCol: String, idCol: String, maxHamming: Int = 3): DataFrame =
-    fpNearDupIncremental(
-      newDf.select(col(idCol).as("id"), simhash64(col(textCol)).as("sh")),
-      indexDir, maxHamming)
+      textCol: String, idCol: String, maxHamming: Int = 3): DataFrame = {
+    val fp = textFp(newDf, textCol, idCol)
+    hammingPairs(fp, maxHamming,
+      fpIndex("simhashNearDupIncremental", fp, indexDir, maxHamming),
+      perPairMin = false)
+  }
 
   /** Near-dup pairs of a NEW batch of precomputed 64-bit fingerprints
     * against a [[writeHammingIndex]] — [[simhashNearDupIncremental]]'s
@@ -305,10 +318,12 @@ object Dedup {
     * least one new id, `pairs(old ∪ new) = pairs(old) ⊎ incremental`,
     * history joins as 28-byte band rows (payloads never re-decoded). */
   def hammingNearDupIncremental(newDf: DataFrame, indexDir: String,
-      bitsCol: String, idCol: String, maxHamming: Int = 3): DataFrame =
-    fpNearDupIncremental(
-      newDf.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh")),
-      indexDir, maxHamming)
+      bitsCol: String, idCol: String, maxHamming: Int = 3): DataFrame = {
+    val fp = bitsFp(newDf, bitsCol, idCol)
+    hammingPairs(fp, maxHamming,
+      fpIndex("hammingNearDupIncremental", fp, indexDir, maxHamming),
+      perPairMin = false)
+  }
 
   /** Incremental form of [[signatureNearDup]] — the daily-crawl loop
     * for MULTI-fingerprint entities (a video is one dHash per frame):
@@ -326,78 +341,16 @@ object Dedup {
     * one new id.
     *
     * Scale: identical dataflow to [[hammingNearDupIncremental]] with
-    * the reduction swapped — the raw band collisions go through ONE
-    * pair-keyed min hash-agg instead of the distinct (min subsumes
-    * the dedup; stacking both would shuffle the pair stream twice),
-    * with [[signatureNearDup]]'s min-exactness argument. */
+    * the reduction swapped to the per-pair min, with
+    * [[signatureNearDup]]'s min-exactness argument. */
   def signatureNearDupIncremental(newDf: DataFrame, indexDir: String,
-      bitsCol: String, idCol: String, maxHamming: Int = 3): DataFrame =
-    rawPairsIncremental(
-      newDf.select(col(idCol).as("id"), col(bitsCol).cast("long").as("sh")),
-      indexDir, maxHamming)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("hamming")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-
-  private def fpNearDupIncremental(newFp: DataFrame, indexDir: String,
-      maxHamming: Int): DataFrame =
-    rawPairsIncremental(newFp, indexDir, maxHamming)
-      .distinct() // band multi-collisions + old∩new id overlap
-      .filter(col("hamming") <= maxHamming)
-
-  /** Raw new-vs-index + new-vs-new band collisions — the incremental
-    * twin of [[rawBandPairs]], one row per collision, reduced by the
-    * caller (distinct for single fingerprints, per-pair min for
-    * signatures). */
-  private def rawPairsIncremental(newFp: DataFrame, indexDir: String,
-      maxHamming: Int): DataFrame = {
-    val spark = newFp.sparkSession
-    // loud O(1) layout guard — a bands mismatch would silently lose
-    // recall, the worst failure mode an index can have
-    val idxMax = spark.read.parquet(indexDir + "__meta")
-      .head().getInt(0)
-    require(idxMax == maxHamming,
-      s"index at $indexDir was built with maxHamming=$idxMax, " +
-        s"queried with $maxHamming — rebuild or re-query to match")
-    val nw = bandedBits(newFp, maxHamming + 1)
-    val idx = spark.read.parquet(indexDir)
-    val newVsOld = nw
-      .select(col("band"), col("key"), col("id").as("id_n"), col("sh").as("sh_n"))
-      .join(idx.select(col("band"), col("key"),
-          col("id").as("id_o"), col("sh").as("sh_o")),
-        Seq("band", "key"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"),
-        bit_count(col("sh_n").bitwiseXOR(col("sh_o"))).as("hamming"))
-    val a = nw.select(col("band"), col("key"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = nw.select(col("band"), col("key"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
-    val newVsNew = a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-    newVsOld.union(newVsNew)
+      bitsCol: String, idCol: String, maxHamming: Int = 3): DataFrame = {
+    val fp = bitsFp(newDf, bitsCol, idCol)
+    hammingPairs(fp, maxHamming,
+      fpIndex("signatureNearDupIncremental", fp, indexDir, maxHamming),
+      perPairMin = true)
   }
 
-  /** Character-shingle MinHash-LSH near-dup pairs with exact Jaccard
-    * distance below `maxDist` over the shingle-hash sets. Returns
-    * (id_a, id_b, jaccard_dist).
-    *
-    * Classic Broder banding, one minhash per table (b = `numTables`,
-    * r = 1): a pair at Jaccard j collides in a table with probability
-    * j, so P(candidate) = 1-(1-j)^b — 0.9996 at the default
-    * (j >= 0.4, b = 8) threshold. Entirely codegen'd columnar ops
-    * (xxhash64 + array higher-order functions), no ml Vector UDTs:
-    * the banding pass shuffles (table, minhash, id) = 24-byte rows;
-    * the verify pass computes EXACT Jaccard over distinct
-    * shingle-hash sets, shipping arrays only for docs that appear in
-    * some candidate pair (semi-filtered first) — near-dup-scale, not
-    * corpus-scale. This replaced spark.ml MinHashLSH's
-    * approxSimilarityJoin (same pipeline, ~6× faster here, and the
-    * distance is exact rather than subject to 2^18 feature-hash
-    * collisions). */
   /** Distinct shingle-hash set per doc (whitespace-normalized chars) —
     * shared by [[minhashNearDup]] and the persisted-index forms. */
   private def minhashSets(df: DataFrame, textCol: String, idCol: String,
@@ -419,70 +372,69 @@ object Dedup {
             .as("mh"))): _*)).as("b"))
       .select(col("id"), col("b.t").as("t"), col("b.mh").as("mh"))
 
-  /** Exact-Jaccard verify of candidate pairs against per-doc shingle
-    * sets; arrays ship only for docs appearing in some candidate. */
-  private def jaccardVerify(cand: DataFrame, sets: DataFrame,
-      maxDist: Double): DataFrame = {
-    val candIds = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id"))).distinct()
-    val g = sets.join(candIds, Seq("id"), "left_semi")
-    cand
-      .join(g.select(col("id").as("id_a"), col("__sh").as("__ga")), "id_a")
-      .join(g.select(col("id").as("id_b"), col("__sh").as("__gb")), "id_b")
-      .withColumn("__inter", size(array_intersect(col("__ga"), col("__gb"))))
+  /** Distinct MinHash candidate pairs (a pair may collide in several
+    * tables) verified by EXACT Jaccard over the shingle sets of the
+    * batch and, for indexed ids, of the `__sets` sidecar. */
+  private def minhashPairs(sh: DataFrame, numTables: Int,
+      index: Option[(DataFrame, DataFrame)], maxDist: Double): DataFrame = {
+    val cand = collisions(minhashBands(sh, numTables), Seq("t", "mh"),
+      index.map(_._1)).distinct()
+    verifyPairs(cand, sh, index.map(_._2), "__sh")
+      .withColumn("__inter",
+        size(array_intersect(col("__sh_a"), col("__sh_b"))))
       .withColumn("jaccard_dist", lit(1.0) - col("__inter").cast("double") /
-        (size(col("__ga")) + size(col("__gb")) - col("__inter")))
+        (size(col("__sh_a")) + size(col("__sh_b")) - col("__inter")))
       .filter(col("jaccard_dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("jaccard_dist"))
   }
 
+  private def minhashLayout(shingle: Int, numTables: Int,
+      seed: Long): SideIndex.Layout =
+    Seq("shingle" -> shingle, "tables" -> numTables, "seed" -> seed)
+
+  /** Character-shingle MinHash-LSH near-dup pairs with exact Jaccard
+    * distance below `maxDist` over the shingle-hash sets. Returns
+    * (id_a, id_b, jaccard_dist).
+    *
+    * Classic Broder banding, one minhash per table (b = `numTables`,
+    * r = 1): a pair at Jaccard j collides in a table with probability
+    * j, so P(candidate) = 1-(1-j)^b — 0.9996 at the default
+    * (j >= 0.4, b = 8) threshold. Entirely codegen'd columnar ops
+    * (xxhash64 + array higher-order functions), no ml Vector UDTs:
+    * the banding pass shuffles (table, minhash, id) = 24-byte rows;
+    * the verify pass computes EXACT Jaccard over distinct
+    * shingle-hash sets, shipping arrays only for docs that appear in
+    * some candidate pair (semi-filtered first) — near-dup-scale, not
+    * corpus-scale. This replaced spark.ml MinHashLSH's
+    * approxSimilarityJoin (same pipeline, ~6× faster here, and the
+    * distance is exact rather than subject to 2^18 feature-hash
+    * collisions). */
   def minhashNearDup(df: DataFrame, textCol: String, idCol: String,
       maxDist: Double = 0.6, shingle: Int = 5, numTables: Int = 8,
       seed: Long = 42L): DataFrame = {
     require(numTables >= 1, s"numTables must be >= 1 (got $numTables)")
-    val sh = minhashSets(df, textCol, idCol, shingle, seed)
-    val banded = minhashBands(sh, numTables)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.t") === col("b.t") && col("a.mh") === col("b.mh") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct() // a pair may collide in several tables
-    jaccardVerify(cand, sh, maxDist)
+    minhashPairs(minhashSets(df, textCol, idCol, shingle, seed), numTables,
+      None, maxDist)
   }
 
   /** Persist the MinHash band index of a corpus — the MinHash twin of
     * [[writeSimhashIndex]] (the daily-crawl loop: dedup a new batch
-    * against history without rescanning or re-shingling it). Layout:
+    * against history without rescanning or re-shingling it), under
+    * the [[SideIndex]] protocol with layout (shingle, tables, seed).
     * `dir` holds the (id, t, mh) band rows the candidate join probes;
-    * `dir + "__sets"` holds each doc's distinct shingle-hash set (the
-    * exact-Jaccard verify needs the HISTORICAL side's set for
+    * the `__sets` id sidecar holds each doc's distinct shingle-hash
+    * set (the exact-Jaccard verify needs the HISTORICAL side's set for
     * new-vs-old candidates — persisting it is what keeps the verify
-    * from re-reading historical text); `dir + "__meta"` records
-    * (shingle, numTables, seed) so a mismatched read fails loudly
-    * instead of silently losing recall. `mode = "append"` folds an
+    * from re-reading historical text). `mode = "append"` folds an
     * already-deduped batch in. */
   def writeMinhashIndex(df: DataFrame, textCol: String, idCol: String,
       dir: String, shingle: Int = 5, numTables: Int = 8,
       seed: Long = 42L, mode: String = "overwrite"): Unit = {
     require(numTables >= 1, s"numTables must be >= 1 (got $numTables)")
-    val spark = df.sparkSession
-    if (mode == "append") {
-      val m = spark.read.parquet(dir + "__meta").head()
-      require(m.getInt(0) == shingle && m.getInt(1) == numTables &&
-          m.getLong(2) == seed,
-        s"index at $dir was built with (shingle=${m.getInt(0)}, " +
-          s"tables=${m.getInt(1)}, seed=${m.getLong(2)}), append " +
-          s"requested with ($shingle, $numTables, $seed)")
-    }
     val sh = minhashSets(df, textCol, idCol, shingle, seed)
-    minhashBands(sh, numTables).write.mode(mode).parquet(dir)
-    sh.write.mode(mode).parquet(dir + "__sets")
-    if (mode != "append") {
-      import spark.implicits._
-      Seq((shingle, numTables, seed))
-        .toDF("shingle", "num_tables", "seed")
-        .coalesce(1).write.mode("overwrite").parquet(dir + "__meta")
-    }
+    SideIndex.write("writeMinhashIndex", dir, mode,
+      minhashLayout(shingle, numTables, seed), minhashBands(sh, numTables),
+      Some(SideIndex.IdSidecar("__sets", sh, df.select(col(idCol).as("id")))))
   }
 
   /** Near-dup pairs of a NEW batch against a persisted MinHash index
@@ -498,32 +450,11 @@ object Dedup {
       textCol: String, idCol: String, maxDist: Double = 0.6,
       shingle: Int = 5, numTables: Int = 8, seed: Long = 42L): DataFrame = {
     val spark = newDf.sparkSession
-    val m = spark.read.parquet(indexDir + "__meta").head()
-    require(m.getInt(0) == shingle && m.getInt(1) == numTables &&
-        m.getLong(2) == seed,
-      s"index at $indexDir was built with (shingle=${m.getInt(0)}, " +
-        s"tables=${m.getInt(1)}, seed=${m.getLong(2)}), queried with " +
-        s"($shingle, $numTables, $seed) — rebuild or re-query to match")
-    val shNew = minhashSets(newDf, textCol, idCol, shingle, seed)
-    val bNew = minhashBands(shNew, numTables)
-    val idx = spark.read.parquet(indexDir)
-    val newVsOld = bNew
-      .select(col("t"), col("mh"), col("id").as("id_n"))
-      .join(idx.select(col("t"), col("mh"), col("id").as("id_o")),
-        Seq("t", "mh"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-    val newVsNew = bNew.as("a").join(bNew.as("b"),
-        col("a.t") === col("b.t") && col("a.mh") === col("b.mh") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val cand = newVsOld.union(newVsNew).distinct()
-    // verify sets: new batch's in-flight sets win for re-arriving ids;
-    // historical sets come from the persisted sidecar, never from text
-    val oldSets = spark.read.parquet(indexDir + "__sets")
-      .join(shNew.select(col("id")), Seq("id"), "left_anti")
-    jaccardVerify(cand, shNew.unionByName(oldSets), maxDist)
+    val idx = SideIndex.open("minhashNearDupIncremental", spark, indexDir,
+      minhashLayout(shingle, numTables, seed))
+    minhashPairs(minhashSets(newDf, textCol, idCol, shingle, seed),
+      numTables, Some((idx, spark.read.parquet(indexDir + "__sets"))),
+      maxDist)
   }
 
   /** Exact token n-gram Jaccard similarity for candidate pairs.
@@ -550,18 +481,6 @@ object Dedup {
           .as("jaccard"))
   }
 
-  /** Embedding near-dup: pairs with cosine >= `minCosine`, blocked by
-    * multi-table random-hyperplane sign LSH (OR-of-ANDs) to avoid
-    * O(n²). The number of tables is DERIVED from the threshold: with
-    * per-plane sign-agreement probability p = 1 - acos(minCosine)/π
-    * (Charikar 2002), a table of `planes` planes catches a
-    * threshold-grade pair with probability p^planes, so
-    * `ceil(log(1-targetRecall) / log(1-p^planes))` independent tables
-    * bound the per-pair miss rate at 1-targetRecall. High thresholds
-    * (real near-dups, >= 0.9) need few tables of many planes; low
-    * thresholds are intrinsically expensive for sign LSH — the derived
-    * table count makes that cost explicit instead of silently dropping
-    * recall. */
   /** Charikar-derived table count shared by [[embeddingNearDup]] and
     * the persisted-index forms (see [[embeddingNearDup]]'s doc). */
   private def lshTableCount(minCosine: Double, planes: Int,
@@ -574,61 +493,56 @@ object Dedup {
       math.ceil(math.log(1.0 - targetRecall) / math.log(1.0 - pTable)).toInt))
   }
 
+  private def embeddingLayout(planes: Int, tables: Int,
+      seed: Long): SideIndex.Layout =
+    Seq("planes" -> planes, "tables" -> tables, "seed" -> seed)
+
+  /** Embedding near-dup: pairs with cosine >= `minCosine`, blocked by
+    * multi-table random-hyperplane sign LSH (OR-of-ANDs) to avoid
+    * O(n²). The number of tables is DERIVED from the threshold: with
+    * per-plane sign-agreement probability p = 1 - acos(minCosine)/π
+    * (Charikar 2002), a table of `planes` planes catches a
+    * threshold-grade pair with probability p^planes, so
+    * `ceil(log(1-targetRecall) / log(1-p^planes))` independent tables
+    * bound the per-pair miss rate at 1-targetRecall. High thresholds
+    * (real near-dups, >= 0.9) need few tables of many planes; low
+    * thresholds are intrinsically expensive for sign LSH — the derived
+    * table count makes that cost explicit instead of silently dropping
+    * recall. */
   def embeddingNearDup(emb: DataFrame, vecCol: String, idCol: String,
       minCosine: Double = 0.95, planes: Int = 12, targetRecall: Double = 0.95,
       maxTables: Int = 32, seed: Long = 42L): DataFrame = {
     val tables = lshTableCount(minCosine, planes, targetRecall, maxTables)
-    val bucketed =
-      Similarity.cosineLshBucketsMulti(emb, vecCol, idCol, planes, tables, seed)
-    val a = bucketed.select(col("table"), col("bucket"),
-      col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = bucketed.select(col("table"), col("bucket"),
-      col("id").as("id_b"), col("vec").as("vec_b"))
-    a.join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", graft.functions.cosine_similarity(col("vec_a"), col("vec_b")))
+    collisions(
+      Similarity.cosineLshBucketsMulti(emb, vecCol, idCol, planes, tables, seed),
+      Seq("table", "bucket"), carry = Seq("vec"), pair = (a, b) => Seq(
+        graft.functions.cosine_similarity(a("vec"), b("vec")).as("cosine")))
       .filter(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine"))
       .distinct()
   }
 
   /** Persist the sign-LSH bucket index of an embedding corpus — the
     * embedding twin of [[writeSimhashIndex]]/[[writeMinhashIndex]],
     * completing the incremental story for all three near-dup
-    * families. Layout: `dir` holds (table, bucket, id) rows the
-    * candidate join probes; `dir + "__vecs"` holds each doc's vector
-    * (the exact-cosine verify needs the HISTORICAL side's vector for
-    * new-vs-old candidates without re-reading the corpus);
-    * `dir + "__meta"` records (planes, tables, seed) so a mismatched
-    * layout fails loudly instead of silently losing recall. `tables`
+    * families, under the [[SideIndex]] protocol with layout (planes,
+    * tables, seed). `dir` holds (table, bucket, id) rows the candidate
+    * join probes; the `__vecs` id sidecar holds each doc's vector (the
+    * exact-cosine verify needs the HISTORICAL side's vector for
+    * new-vs-old candidates without re-reading the corpus). `tables`
     * derives from (minCosine, planes, targetRecall) exactly as in
-    * [[embeddingNearDup]]. `mode = "append"` folds an
-    * already-deduped batch in. */
+    * [[embeddingNearDup]]. `mode = "append"` folds an already-deduped
+    * batch in. */
   def writeEmbeddingIndex(emb: DataFrame, vecCol: String, idCol: String,
       dir: String, minCosine: Double = 0.95, planes: Int = 12,
       targetRecall: Double = 0.95, maxTables: Int = 32,
       seed: Long = 42L, mode: String = "overwrite"): Unit = {
     val tables = lshTableCount(minCosine, planes, targetRecall, maxTables)
-    val spark = emb.sparkSession
-    if (mode == "append") {
-      val m = spark.read.parquet(dir + "__meta").head()
-      require(m.getInt(0) == planes && m.getInt(1) == tables &&
-          m.getLong(2) == seed,
-        s"index at $dir was built with (planes=${m.getInt(0)}, " +
-          s"tables=${m.getInt(1)}, seed=${m.getLong(2)}), append " +
-          s"requested with ($planes, $tables, $seed)")
-    }
-    val bucketed =
+    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    SideIndex.write("writeEmbeddingIndex", dir, mode,
+      embeddingLayout(planes, tables, seed),
       Similarity.cosineLshBucketsMulti(emb, vecCol, idCol, planes, tables, seed)
-    bucketed.select(col("table"), col("bucket"), col("id"))
-      .write.mode(mode).parquet(dir)
-    emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .write.mode(mode).parquet(dir + "__vecs")
-    if (mode != "append") {
-      import spark.implicits._
-      Seq((planes, tables, seed)).toDF("planes", "num_tables", "seed")
-        .coalesce(1).write.mode("overwrite").parquet(dir + "__meta")
-    }
+        .select(col("table"), col("bucket"), col("id")),
+      Some(SideIndex.IdSidecar("__vecs", vecs, vecs.select(col("id")))))
   }
 
   /** Embedding near-dup pairs of a NEW batch against a persisted
@@ -646,40 +560,13 @@ object Dedup {
       seed: Long = 42L): DataFrame = {
     val tables = lshTableCount(minCosine, planes, targetRecall, maxTables)
     val spark = newEmb.sparkSession
-    val m = spark.read.parquet(indexDir + "__meta").head()
-    require(m.getInt(0) == planes && m.getInt(1) == tables &&
-        m.getLong(2) == seed,
-      s"index at $indexDir was built with (planes=${m.getInt(0)}, " +
-        s"tables=${m.getInt(1)}, seed=${m.getLong(2)}), queried with " +
-        s"($planes, $tables, $seed) — rebuild or re-query to match")
-    val bNew = Similarity.cosineLshBucketsMulti(newEmb, vecCol, idCol,
-      planes, tables, seed)
-    val idx = spark.read.parquet(indexDir)
-    val newVsOld = bNew
-      .select(col("table"), col("bucket"), col("id").as("id_n"))
-      .join(idx.select(col("table"), col("bucket"), col("id").as("id_o")),
-        Seq("table", "bucket"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-    val newVsNew = bNew.as("a").join(bNew.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val cand = newVsOld.union(newVsNew).distinct()
-    val candIds = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id"))).distinct()
-    // in-flight vectors win for re-arriving ids; historical vectors
-    // come from the sidecar, semi-filtered to candidate scale
-    val vNew = newEmb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val vecs = vNew
-      .unionByName(spark.read.parquet(indexDir + "__vecs")
-        .join(vNew.select(col("id")), Seq("id"), "left_anti"))
-      .join(candIds, Seq("id"), "left_semi")
-    cand
-      .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
+    val idx = SideIndex.open("embeddingNearDupIncremental", spark, indexDir,
+      embeddingLayout(planes, tables, seed))
+    val cand = collisions(Similarity.cosineLshBucketsMulti(newEmb, vecCol,
+        idCol, planes, tables, seed), Seq("table", "bucket"), Some(idx))
+      .distinct()
+    verifyPairs(cand, newEmb.select(col(idCol).as("id"), col(vecCol).as("vec")),
+        Some(spark.read.parquet(indexDir + "__vecs")), "vec")
       .withColumn("cosine",
         graft.functions.cosine_similarity(col("vec_a"), col("vec_b")))
       .filter(col("cosine") >= minCosine)
@@ -843,6 +730,65 @@ object Dedup {
       .drop("__cc_id", "comp")
   }
 
+  /** Per-doc DISTINCT (id, gram) posting rows — [[containment]]'s
+    * gram projection, shared with the persisted-index forms so the
+    * incremental path can never drift on tokenization or shingling. */
+  private def gramRows(df: DataFrame, textCol: String, idCol: String,
+      n: Int): DataFrame = {
+    val toks = split(col(textCol), " ")
+    val grams = array_distinct(transform(
+      sequence(lit(0), greatest(size(toks) - n, lit(0))),
+      i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+    df.select(col(idCol).as("id"), explode(grams).as("gram"))
+  }
+
+  private def gramSizes(g: DataFrame): DataFrame =
+    g.groupBy(col("id")).agg(count(lit(1)).as("n_grams"))
+
+  /** The [[containment]] loud-quadratic pre-flight over a posting
+    * stream: the hottest gram's document frequency, as a 1-row head
+    * (NULL-coalesced — an empty stream is zero hotness, not an NPE). */
+  private def requireNoHotGram(g: DataFrame, n: Int,
+      maxGramDf: Long): Unit = {
+    val hottest = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+      .agg(coalesce(max(col("df")), lit(0L))).head().getLong(0)
+    require(hottest <= maxGramDf,
+      s"hottest $n-gram appears in $hottest docs > maxGramDf=$maxGramDf; " +
+        s"the candidate fan-out is quadratic per gram — raise n, strip " +
+        s"the boilerplate upstream, or raise the cap if the cost is " +
+        s"understood")
+  }
+
+  /** The containment threshold in integer micro-units, after the
+    * argument checks both containment forms share. */
+  private def containmentPpm(n: Int, minContainment: Double): Long = {
+    require(minContainment > 0.0 && minContainment <= 1.0,
+      s"minContainment must be in (0,1] (got $minContainment)")
+    require(n >= 1, s"n must be >= 1 (got $n)")
+    math.round(minContainment * 1000000L)
+  }
+
+  /** The shared-gram count per candidate pair plus the threshold filter
+    * and output projection shared by the batch and incremental
+    * containment forms: integer cross-multiplied inclusion, the double
+    * derived after. `sizes` maps id → n_grams. */
+  private def containmentPairs(g: DataFrame, index: Option[DataFrame],
+      sizes: DataFrame, minPpm: Long): DataFrame =
+    collisions(g, Seq("gram"), index)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).cast("bigint").as("n_overlap"))
+      .join(sizes.select(col("id").as("id_a"), col("n_grams").as("n_a")),
+        "id_a")
+      .join(sizes.select(col("id").as("id_b"), col("n_grams").as("n_b")),
+        "id_b")
+      .filter(col("n_overlap") * lit(1000000L) >=
+        lit(minPpm) * least(col("n_a"), col("n_b")))
+      .select(col("id_a"), col("id_b"), col("n_overlap"),
+        col("n_a").cast("bigint").as("n_a"),
+        col("n_b").cast("bigint").as("n_b"),
+        (col("n_overlap").cast("double") /
+          least(col("n_a"), col("n_b")).cast("double")).as("containment"))
+
   /** ASYMMETRIC n-gram containment (Broder 1997's containment, the
     * complement of resemblance/Jaccard): pairs where the smaller
     * gram set is mostly inside the larger one —
@@ -867,108 +813,30 @@ object Dedup {
     * raise n, pre-filter boilerplate, or raise the cap). That df
     * pre-flight is one narrow hash-agg over rows the join needs
     * anyway. */
-  /** Per-doc DISTINCT (id, gram) posting rows — [[containment]]'s
-    * gram projection, shared with the persisted-index forms so the
-    * incremental path can never drift on tokenization or shingling. */
-  private def gramRows(df: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame = {
-    val toks = split(col(textCol), " ")
-    val grams = array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-    df.select(col(idCol).as("id"), explode(grams).as("gram"))
-  }
-
-  /** The [[containment]] loud-quadratic pre-flight over a posting
-    * stream: the hottest gram's document frequency, as a 1-row head
-    * (NULL-coalesced — an empty stream is zero hotness, not an NPE). */
-  private def requireNoHotGram(g: DataFrame, n: Int,
-      maxGramDf: Long): Unit = {
-    val hottest = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .agg(coalesce(max(col("df")), lit(0L))).head().getLong(0)
-    require(hottest <= maxGramDf,
-      s"hottest $n-gram appears in $hottest docs > maxGramDf=$maxGramDf; " +
-        s"the candidate fan-out is quadratic per gram — raise n, strip " +
-        s"the boilerplate upstream, or raise the cap if the cost is " +
-        s"understood")
-  }
-
-  /** the threshold filter + output projection shared by the batch and
-    * incremental containment forms: integer cross-multiplied
-    * inclusion, the double derived after. `sizes` maps id →
-    * n_grams. */
-  private def containmentTail(overlap: DataFrame, sizes: DataFrame,
-      minPpm: Long): DataFrame =
-    overlap
-      .join(sizes.select(col("id").as("id_a"), col("n_grams").as("n_a")),
-        "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n_grams").as("n_b")),
-        "id_b")
-      .filter(col("n_overlap") * lit(1000000L) >=
-        lit(minPpm) * least(col("n_a"), col("n_b")))
-      .select(col("id_a"), col("id_b"), col("n_overlap"),
-        col("n_a").cast("bigint").as("n_a"),
-        col("n_b").cast("bigint").as("n_b"),
-        (col("n_overlap").cast("double") /
-          least(col("n_a"), col("n_b")).cast("double")).as("containment"))
-
   def containment(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3, minContainment: Double = 0.5,
       maxGramDf: Long = 10000L): DataFrame = {
-    require(minContainment > 0.0 && minContainment <= 1.0,
-      s"minContainment must be in (0,1] (got $minContainment)")
-    require(n >= 1, s"n must be >= 1 (got $n)")
-    val minPpm = math.round(minContainment * 1000000L)
+    val minPpm = containmentPpm(n, minContainment)
     val g = gramRows(df, textCol, idCol, n)
     requireNoHotGram(g, n, maxGramDf)
-    val sizes = g.groupBy(col("id")).agg(count(lit(1)).as("n_grams"))
-    val overlap = g.select(col("id").as("id_a"), col("gram"))
-      .join(g.select(col("id").as("id_b"), col("gram")), "gram")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).cast("bigint").as("n_overlap"))
-    containmentTail(overlap, sizes, minPpm)
+    containmentPairs(g, None, gramSizes(g), minPpm)
   }
 
   /** Persist the n-gram POSTING index of a corpus — the containment
-    * twin of [[writeSimhashIndex]], closing the last heavy curation
-    * family without a daily-crawl form: `dir` holds the per-doc
-    * distinct (gram, id) posting rows the candidate join probes
-    * (exactly the BM25 posting shape); `dir + "__sizes"` holds each
-    * doc's gram-set size (the denominator — historical text never
-    * reloads); `dir + "__meta"` records `n` so a mismatched shingle
-    * width fails loudly instead of silently under-counting overlap.
-    * `mode = "append"` folds a new batch in; batches must have
-    * DISJOINT doc ids (distinct posting rows then ADD exactly, the
-    * line-census contract) — GUARDED against the sizes sidecar, not
-    * trusted. */
+    * twin of [[writeSimhashIndex]], under the [[SideIndex]] protocol
+    * with layout `n`: `dir` holds the per-doc distinct (gram, id)
+    * posting rows the candidate join probes (exactly the BM25 posting
+    * shape); the `__sizes` id sidecar holds each doc's gram-set size
+    * (the denominator — historical text never reloads). Batches must
+    * have DISJOINT doc ids (distinct posting rows then ADD exactly,
+    * the line-census contract), and an append is refused otherwise. */
   def writeGramIndex(df: DataFrame, textCol: String, idCol: String,
       dir: String, n: Int = 3, mode: String = "overwrite"): Unit = {
     require(n >= 1, s"n must be >= 1 (got $n)")
-    val spark = df.sparkSession
     val g = gramRows(df, textCol, idCol, n)
-    if (mode == "append") {
-      val idxN = spark.read.parquet(dir + "__meta").head().getInt(0)
-      require(idxN == n,
-        s"index at $dir was built with n=$idxN, append requested " +
-          s"with $n")
-      val seen = spark.read.parquet(dir + "__sizes").select(col("id"))
-      val nOverlap = df.select(col(idCol).as("id")).distinct()
-        .join(seen, Seq("id"), "left_semi").limit(1).count()
-      require(nOverlap == 0L,
-        s"writeGramIndex append to $dir: the batch shares doc ids " +
-          "with an already-indexed batch — posting rows and sizes " +
-          "would double-count; dedup the crawl boundary upstream or " +
-          "rebuild the index")
-    }
-    g.write.mode(mode).parquet(dir)
-    g.groupBy(col("id")).agg(count(lit(1)).as("n_grams"))
-      .write.mode(mode).parquet(dir + "__sizes")
-    if (mode != "append") {
-      import spark.implicits._
-      Seq(n).toDF("n").coalesce(1).write.mode("overwrite")
-        .parquet(dir + "__meta")
-    }
+    SideIndex.write("writeGramIndex", dir, mode, Seq("n" -> n), g,
+      Some(SideIndex.IdSidecar("__sizes", gramSizes(g),
+        df.select(col(idCol).as("id")))))
   }
 
   /** Containment pairs of a NEW batch against a persisted gram index
@@ -977,9 +845,10 @@ object Dedup {
     * index(old))`, disjointly, because grams are a deterministic
     * per-doc function of text and batches have disjoint ids (a mixed
     * pair's overlap is exactly the new-vs-index join's gram count; a
-    * both-old pair never touches the batch). History joins as
-    * posting rows and a sizes sidecar — its text never re-explodes,
-    * never re-shuffles.
+    * both-old pair never touches the batch). The batch's ids are
+    * checked against the `__sizes` sidecar like an append's. History
+    * joins as posting rows and a sizes sidecar — its text never
+    * re-explodes, never re-shuffles.
     *
     * The [[containment]] loud-quadratic guard evaluates over
     * history ∪ batch (one narrow hash-agg over the union): a hot
@@ -990,41 +859,16 @@ object Dedup {
       textCol: String, idCol: String, n: Int = 3,
       minContainment: Double = 0.5,
       maxGramDf: Long = 10000L): DataFrame = {
-    require(minContainment > 0.0 && minContainment <= 1.0,
-      s"minContainment must be in (0,1] (got $minContainment)")
-    require(n >= 1, s"n must be >= 1 (got $n)")
+    val minPpm = containmentPpm(n, minContainment)
     val spark = newDf.sparkSession
-    val idxN = spark.read.parquet(indexDir + "__meta").head().getInt(0)
-    require(idxN == n,
-      s"index at $indexDir was built with n=$idxN, queried with $n — " +
-        "rebuild or re-query to match")
-    val minPpm = math.round(minContainment * 1000000L)
+    val op = "containmentIncremental"
+    val idx = SideIndex.open(op, spark, indexDir, Seq("n" -> n))
+    SideIndex.requireDisjoint(op, newDf.select(col(idCol).as("id")),
+      indexDir + "__sizes")
     val gNew = gramRows(newDf, textCol, idCol, n)
-    val idx = spark.read.parquet(indexDir)
-    val oldSizes = spark.read.parquet(indexDir + "__sizes")
-    val nOverlap = newDf.select(col(idCol).as("id")).distinct()
-      .join(oldSizes.select(col("id")), Seq("id"), "left_semi")
-      .limit(1).count()
-    require(nOverlap == 0L,
-      s"containmentIncremental: the batch shares doc ids with the " +
-        s"index at $indexDir — the disjoint-batch contract is broken " +
-        "and overlap counts would be wrong; dedup the crawl boundary " +
-        "upstream")
     requireNoHotGram(gNew.unionByName(idx), n, maxGramDf)
-    val newVsOld = gNew.select(col("id").as("id_n"), col("gram"))
-      .join(idx.select(col("id").as("id_o"), col("gram")), "gram")
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-    val newVsNew = gNew.select(col("id").as("id_a"), col("gram"))
-      .join(gNew.select(col("id").as("id_b"), col("gram")), "gram")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    val overlap = newVsOld.unionByName(newVsNew)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).cast("bigint").as("n_overlap"))
-    val sizes = gNew.groupBy(col("id")).agg(count(lit(1)).as("n_grams"))
-      .unionByName(oldSizes)
-    containmentTail(overlap, sizes, minPpm)
+    containmentPairs(gNew, Some(idx), gramSizes(gNew)
+      .unionByName(spark.read.parquet(indexDir + "__sizes")), minPpm)
   }
 
   /** LSH S-curve tuning table — the question every banding choice

@@ -610,79 +610,41 @@ object TextAnalysis {
   }
 
   /** Persist the lexical index of a corpus — the BM25 twin of the
-    * engine's other side-file indexes (ivfSave, writeMinhashIndex,
-    * zone/Bloom maps; same `__meta` guard discipline): `dir` holds
+    * engine's other appendable indexes, under the [[SideIndex]]
+    * protocol with the tokenizer contract as its layout: `dir` holds
     * the inverted postings (token, id, tf) RANGE-PARTITIONED AND
     * SORTED on the token, so a query's `isin` filter reaches the
     * parquet scan as a pushed predicate and row-group min/max prune
-    * everything but the probed terms' neighborhoods; `dir + "__docs"`
-    * holds the (id, dl) doc-length sidecar; `dir + "__meta"` records
-    * the tokenizer contract so a reader built against a different
-    * tokenization fails loudly instead of silently mis-scoring.
+    * everything but the probed terms' neighborhoods; the `__docs` id
+    * sidecar holds the (id, dl) doc lengths.
     *
     * `mode = "append"` folds a NEW batch's postings + doc lengths in
-    * (the daily-crawl loop). Corpus totals (N, Σdl) are deliberately
-    * NOT persisted — [[bm25SearchIndexed]] derives them from the
-    * `__docs` sidecar (one narrow index-scale agg), which makes an
-    * append self-consistent with zero stat-merge bookkeeping. A loud
-    * pre-flight rejects re-appending ids the index already holds
-    * (duplicate postings would double-count tf); the check is one
-    * id-column semi-join against the sidecar — index-scale, tiny next
-    * to the append's own tokenize pass.
-    *
-    * Crash discipline: append writes the `__docs` sidecar BEFORE the
-    * postings, because the duplicate-id guard above reads `__docs`. A
-    * failure between the two writes leaves sidecar-only ids (they
-    * inflate N/avgdl until repaired and never match a term — scores
-    * err LOW, never double-count), and a RETRY of the same batch then
-    * trips the guard loudly instead of silently appending a second
-    * copy of its postings. The reverse order would pass the retry's
-    * guard and corrupt tf for every document in the batch. */
+    * (the daily-crawl loop); re-appending an indexed id is refused
+    * (its tf would double-count). Corpus totals (N, Σdl) are
+    * deliberately NOT persisted — [[bm25SearchIndexed]] derives them
+    * from the `__docs` sidecar (one narrow index-scale agg), which
+    * makes an append self-consistent with zero stat-merge
+    * bookkeeping. */
   def bm25SaveIndex(df: DataFrame, idCol: String, textCol: String,
       dir: String, mode: String = "overwrite",
       partitions: Int = 32): Unit = {
-    val spark = df.sparkSession
-    if (mode == "append") {
-      val m = spark.read.parquet(dir + "__meta").head()
-      require(m.getString(0) == tokenizerTag,
-        s"index at $dir was built with tokenizer '${m.getString(0)}', " +
-          s"append requested with '$tokenizerTag' — rebuild to match")
-      val dup = spark.read.parquet(dir + "__docs")
-        .join(df.select(col(idCol).cast("long").as("id")), Seq("id"),
-          "left_semi").limit(1).collect()
-      require(dup.isEmpty,
-        s"id ${dup.headOption.map(_.get(0)).orNull} is already indexed " +
-          s"at $dir — appending it again would double-count its postings; " +
-          "dedup the batch against the index first")
-    }
+    val ids = df.select(col(idCol).cast("long").as("id"))
     val toks = df.select(col(idCol).cast("long").as("id"),
         explode(tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")
-    def writeDocs(): Unit =
-      toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
-        .write.mode(mode).parquet(dir + "__docs")
-    def writePostings(): Unit =
+    SideIndex.write("bm25SaveIndex", dir, mode, bm25Layout,
       toks.groupBy(col("id"), col("tok"))
         .agg(count(lit(1)).as("tf"))
         .repartitionByRange(partitions, col("tok"))
-        .sortWithinPartitions(col("tok"))
-        .write.mode(mode).parquet(dir)
-    if (mode == "append") {
-      // sidecar first — the dup guard reads __docs, so a retry after
-      // a crash between the writes fails loudly (see scaladoc)
-      writeDocs(); writePostings()
-    } else {
-      writePostings(); writeDocs()
-      import spark.implicits._
-      Seq(Tuple1(tokenizerTag)).toDF("tokenizer")
-        .coalesce(1).write.mode("overwrite").parquet(dir + "__meta")
-    }
+        .sortWithinPartitions(col("tok")),
+      Some(SideIndex.IdSidecar("__docs",
+        toks.groupBy(col("id")).agg(count(lit(1)).as("dl")), ids)))
   }
 
-  /** Contract tag for [[bm25SaveIndex]]'s `__meta`: whitespace
-    * tokenization, empty tokens dropped. Bump on any change to
-    * [[tokens]] semantics. */
-  private val tokenizerTag = "ws-v1"
+  /** The layout of [[bm25SaveIndex]]'s `__meta`: whitespace
+    * tokenization, empty tokens dropped. Bump the tag on any change
+    * to [[tokens]] semantics. */
+  private val bm25Layout: SideIndex.Layout = Seq("tokenizer" -> "ws-v1")
 
   /** BM25 over a PERSISTED index — query cost is postings-scale, not
     * corpus-scale: the term `isin` pushes to the postings parquet scan
@@ -695,14 +657,12 @@ object TextAnalysis {
       indexDir: String, idCol: String, queryTerms: Seq[String],
       k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val m = spark.read.parquet(indexDir + "__meta").head()
-    require(m.getString(0) == tokenizerTag,
-      s"index at $indexDir was built with tokenizer '${m.getString(0)}', " +
-        s"reader expects '$tokenizerTag' — rebuild the index to match")
+    val postings =
+      SideIndex.open("bm25SearchIndexed", spark, indexDir, bm25Layout)
     val terms = queryTerms.distinct
     val dl = spark.read.parquet(indexDir + "__docs")
       .select(col("id").as(idCol), col("dl").as("__dl"))
-    val tf = spark.read.parquet(indexDir)
+    val tf = postings
       .filter(col("tok").isin(terms.map(lit(_)): _*))
       .select(col("id").as(idCol), col("tok").as("__tok"),
         col("tf").as("__tf"))
@@ -725,10 +685,8 @@ object TextAnalysis {
       k: Int = 20, k1: Double = 1.2, b: Double = 0.75,
       maxQueryTerms: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = spark.read.parquet(indexDir + "__meta").head()
-    require(m.getString(0) == tokenizerTag,
-      s"index at $indexDir was built with tokenizer '${m.getString(0)}', " +
-        s"reader expects '$tokenizerTag' — rebuild the index to match")
+    val postings =
+      SideIndex.open("bm25SearchIndexedBatch", spark, indexDir, bm25Layout)
     val q = queries.select(col("qid").cast("long").as("qid"),
       col("term").cast("string").as("__tok")).distinct()
     val termList = q.select(col("__tok")).distinct()
@@ -741,7 +699,7 @@ object TextAnalysis {
     val dl = spark.read.parquet(indexDir + "__docs")
       .select(col("id").as(idCol), col("dl").as("__dl"))
     val stats = dl.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__total"))
-    val tf = spark.read.parquet(indexDir)
+    val tf = postings
       .filter(col("tok").isin(termList.map(lit(_)): _*))
       .select(col("id").as(idCol), col("tok").as("__tok"),
         col("tf").as("__tf"))
@@ -1051,36 +1009,22 @@ object TextAnalysis {
     * Batches must have DISJOINT doc-id sets (the crawl contract) —
     * then distinct-doc counts add exactly and readers aggregate by
     * fingerprint; history is never re-censused, its text never
-    * reloads.
-    *
-    * The disjointness contract is GUARDED, not trusted (the
-    * writeFpIndex loud-refusal posture): every write records the
-    * batch's distinct doc ids in a `dir + "__docids"` sidecar, and an
-    * append whose batch intersects the recorded set REFUSES — a
-    * re-crawled doc id would otherwise silently double-count in
-    * `n_docs` and inflate boilerplate verdicts corpus-wide. The
-    * sidecar costs 8 B per doc (vs 24 B per distinct line) and one
-    * semi-join per append. A census dir written before the sidecar
-    * existed has no `__docids` and fails the append loudly — rebuild
-    * it (or backfill the sidecar) rather than appending unguarded. */
+    * reloads. The census is a [[SideIndex]] without layout (no
+    * `__meta`); its `__docids` id sidecar records the batch's
+    * distinct doc ids (8 B per doc vs 24 B per distinct line), so an
+    * append whose batch intersects it is refused — a re-crawled doc
+    * id would otherwise silently double-count in `n_docs` and inflate
+    * boilerplate verdicts corpus-wide. A census dir written before
+    * the sidecar existed has no `__docids` and fails the append
+    * loudly — rebuild it (or backfill the sidecar) rather than
+    * appending unguarded. */
   def writeLineCensus(docs: DataFrame, idCol: String, textCol: String,
       dir: String, mode: String = "overwrite"): Unit = {
-    val spark = docs.sparkSession
     val ids = docs.select(col(idCol).cast("long").as("doc_id"))
       .filter(col("doc_id").isNotNull).distinct()
-    if (mode == "append") {
-      val seen = spark.read.parquet(dir + "__docids")
-      val nOverlap = ids.join(seen, Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(nOverlap == 0L,
-        s"writeLineCensus append to $dir: the batch shares doc ids " +
-          "with an already-censused batch — distinct-doc counts would " +
-          "silently double-count; dedup the crawl boundary upstream " +
-          "or rebuild the census")
-    }
-    lineCensus(docs, idCol, textCol).write.mode(mode).parquet(dir)
-    ids.write.mode(if (mode == "append") "append" else "overwrite")
-      .parquet(dir + "__docids")
+    SideIndex.write("writeLineCensus", dir, mode, Nil,
+      lineCensus(docs, idCol, textCol),
+      Some(SideIndex.IdSidecar("__docids", ids, ids)))
   }
 
   /** Compact an append-grown line census back to ONE row per

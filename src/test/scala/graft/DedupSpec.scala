@@ -380,6 +380,17 @@ class DedupSpec extends SparkSpec {
         minCosine = 0.99, planes = 8)
     }
     assert(ex.getMessage.contains("planes=4"), ex.getMessage)
+    // append: a mismatched layout is refused, the matching one folds
+    // the batch into the vector sidecar (43 vectors after the fold)
+    val exA = intercept[IllegalArgumentException] {
+      Dedup.writeEmbeddingIndex(nw, "embedding", "vec_id", dir,
+        minCosine = 0.99, planes = 8, mode = "append")
+    }
+    assert(exA.getMessage.contains("append") &&
+      exA.getMessage.contains("planes=4"), exA.getMessage)
+    Dedup.writeEmbeddingIndex(nw, "embedding", "vec_id", dir,
+      minCosine = 0.99, planes = 4, mode = "append")
+    assert(spark.read.parquet(dir + "__vecs").count() == 43L)
   }
 
   test("semDedup: planted near-identical vectors collapse to the min id") {
@@ -568,5 +579,103 @@ class DedupSpec extends SparkSpec {
         dir, "text", "doc_id", n = 3, maxGramDf = 2L)
     }
     assert(exHot.getMessage.contains("maxGramDf"), exHot.getMessage)
+  }
+
+  test("index writers refuse a mode other than overwrite/append before any job") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_mode").toString + "/idx"
+    val docs = Seq((1L, "a b c d e"), (2L, "e f g h i")).toDF("doc_id", "text")
+    Dedup.writeGramIndex(docs, "text", "doc_id", dir, n = 3)
+    val postings = spark.read.parquet(dir).count()
+    // Spark's own writer ignores case, so "Append" would have appended
+    // n=5 postings over the n=3 index and rewritten its layout
+    val (ex, jobs) = jobsDuring(intercept[IllegalArgumentException] {
+      Dedup.writeGramIndex(docs, "text", "doc_id", dir, n = 5,
+        mode = "Append")
+    })
+    assert(ex.getMessage.contains("Append"), ex.getMessage)
+    assert(jobs == 0)
+    assert(spark.read.parquet(dir).count() == postings)
+    assert(spark.read.parquet(dir + "__meta").head().getInt(0) == 3)
+    val fps = Seq((1L, 7L)).toDF("id", "bits")
+    val emb = Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    for (mode <- Seq("Append", "OVERWRITE", "ignore", "errorifexists")) {
+      val other = dir + "_" + mode
+      val writers: Seq[() => Unit] = Seq(
+        () => Dedup.writeSimhashIndex(docs, "text", "doc_id", other,
+          mode = mode),
+        () => Dedup.writeHammingIndex(fps, "bits", "id", other, mode = mode),
+        () => Dedup.writeMinhashIndex(docs, "text", "doc_id", other,
+          mode = mode),
+        () => Dedup.writeEmbeddingIndex(emb, "embedding", "vec_id", other,
+          mode = mode),
+        () => Dedup.writeGramIndex(docs, "text", "doc_id", other,
+          mode = mode),
+        () => graft.llm.TextAnalysis.bm25SaveIndex(docs, "doc_id", "text",
+          other, mode = mode),
+        () => graft.llm.TextAnalysis.writeLineCensus(docs, "doc_id", "text",
+          other, mode = mode))
+      for (w <- writers) {
+        val (e, n) = jobsDuring(intercept[IllegalArgumentException](w()))
+        assert(e.getMessage.contains(s"\"$mode\""), e.getMessage)
+        assert(n == 0, s"$mode ran $n jobs")
+      }
+      assert(!new java.io.File(other).exists())
+    }
+  }
+
+  test("gram index append writes the __sizes sidecar first: a retry after a failed append does not double-count") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_grcrash").toString + "/idx"
+    val old = Seq((1L, "a b c d e f g h"), (2L, "p q r s t u v w"))
+      .toDF("doc_id", "text")
+    val nw = Seq((3L, "a b c d e f g h")).toDF("doc_id", "text")
+    Dedup.writeGramIndex(old, "text", "doc_id", dir, n = 8)
+    val restore = sidecarAsFile(dir + "__sizes")
+    intercept[Exception] {
+      Dedup.writeGramIndex(nw, "text", "doc_id", dir, n = 8, mode = "append")
+    }
+    restore()
+    // the failed append wrote nothing, so the retry appends once
+    assert(spark.read.parquet(dir).count() == 2L)
+    Dedup.writeGramIndex(nw, "text", "doc_id", dir, n = 8, mode = "append")
+    assert(spark.read.parquet(dir).count() == 3L)
+    assert(spark.read.parquet(dir + "__sizes").count() == 3L)
+    // doc 4 twins docs 1 and 3: one shared 8-gram each, containment
+    // 1.0 — a doubled posting of doc 3 would read 2 grams of 1
+    val got = Dedup.containmentIncremental(
+        Seq((4L, "a b c d e f g h")).toDF("doc_id", "text"), dir, "text",
+        "doc_id", n = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(5))).toSet
+    assert(got == Set((1L, 4L, 1L, 1.0), (3L, 4L, 1L, 1.0)), got.toString)
+  }
+
+  test("MinHash and embedding appends refuse an id already in __sets / __vecs") {
+    val base = java.nio.file.Files.createTempDirectory("graft_lshdup").toString
+    val old = incCorpus.filter($"doc_id" % 2 === 0)
+    Dedup.writeMinhashIndex(old, "text", "doc_id", base + "/mh")
+    // id 2 re-crawled: appending it again would report its later
+    // near-dups twice
+    val recrawl = Seq((2L, "a re-crawled page under an indexed id"),
+      (7L, "a fresh page")).toDF("doc_id", "text")
+    val exM = intercept[IllegalArgumentException] {
+      Dedup.writeMinhashIndex(recrawl, "text", "doc_id", base + "/mh",
+        mode = "append")
+    }
+    assert(exM.getMessage.contains("id 2 is already indexed"), exM.getMessage)
+    assert(spark.read.parquet(base + "/mh__sets").count() == 3L)
+    assert(spark.read.parquet(base + "/mh").count() == 24L)
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    Dedup.writeEmbeddingIndex(emb, "embedding", "vec_id", base + "/emb")
+    val exE = intercept[IllegalArgumentException] {
+      Dedup.writeEmbeddingIndex(
+        Seq((2L, Array(0.0f, 1.0f)), (9L, Array(0.0f, 1.0f)))
+          .toDF("vec_id", "embedding"),
+        "embedding", "vec_id", base + "/emb", mode = "append")
+    }
+    assert(exE.getMessage.contains("id 2 is already indexed"), exE.getMessage)
+    assert(spark.read.parquet(base + "/emb__vecs").count() == 2L)
   }
 }

@@ -27,6 +27,24 @@ trait SparkSpec extends AnyFunSuite {
     }
     (out, jobs)
   }
+
+  /** Replace the id sidecar at `path` by ONE parquet file holding the
+    * same rows: readers still see the sidecar, but a write to `path`
+    * fails (a file, not a directory). Returns the restore action. */
+  def sidecarAsFile(path: String): () => Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (p, bak, one) = (new org.apache.hadoop.fs.Path(path),
+      new org.apache.hadoop.fs.Path(path + "_bak"),
+      new org.apache.hadoop.fs.Path(path + "_one"))
+    assert(fs.rename(p, bak))
+    spark.read.parquet(bak.toString).coalesce(1).write.parquet(one.toString)
+    val part = fs.listStatus(one).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    assert(fs.rename(part, p))
+    fs.delete(one, true)
+    () => { assert(fs.delete(p, false) && fs.rename(bak, p)) }
+  }
 }
 
 object SparkSpec {

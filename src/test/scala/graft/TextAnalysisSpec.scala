@@ -718,6 +718,32 @@ class TextAnalysisSpec extends SparkSpec {
     assert(spark.read.parquet(dir + "__docids").count() == 4L)
   }
 
+  test("writeLineCensus append writes __docids first: a retry after a failed append does not double-count") {
+    import spark.implicits._
+    val docs = (1L to 4L).map(id => (id, s"NAV\nbody $id"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_blcrash").toString + "/census"
+    graft.llm.TextAnalysis.writeLineCensus(
+      docs.filter($"doc_id" <= 2), "doc_id", "text", dir)
+    val rows = spark.read.parquet(dir).count()
+    val restore = sidecarAsFile(dir + "__docids")
+    intercept[Exception] {
+      graft.llm.TextAnalysis.writeLineCensus(
+        docs.filter($"doc_id" >= 3), "doc_id", "text", dir, mode = "append")
+    }
+    restore()
+    assert(spark.read.parquet(dir).count() == rows)
+    graft.llm.TextAnalysis.writeLineCensus(
+      docs.filter($"doc_id" >= 3), "doc_id", "text", dir, mode = "append")
+    // NAV + body 3 + body 4 from the one appended batch; NAV counts
+    // each document once
+    assert(spark.read.parquet(dir).count() == rows + 3L)
+    val nav = spark.read.parquet(dir).agg(max($"n_docs"), sum($"n_docs"))
+      .head()
+    assert(nav.getLong(0) == 2L && nav.getLong(1) == 8L, nav.toString)
+  }
+
   test("compactLineCensus: one row per fingerprint after, verdicts identical, row drift aborts") {
     import spark.implicits._
     val docs = (1L to 6L).map(id => (id, s"NAV\nFOOT\nbody $id"))
