@@ -42,6 +42,12 @@ object Tables {
     * naturally (and at 100 TB a table has many row groups and scans
     * wide with no help).
     *
+    * A small plan now stays in that one task: when a plan's inputs
+    * together fit under the broadcast threshold,
+    * [[graft.plans.SmallPlanOneTask]] coalesces each scan to one
+    * partition, so the aggregates, joins, windows and sorts above it
+    * need no shuffle either ([[Sessions]]).
+    *
     * Some consumers are PINNED to this natural layout and must never
     * go through [[wide]], because their OUTPUT depends on the physical
     * layout: `sample_first_n` (limit tie-winners follow scan order),

@@ -59,6 +59,12 @@ class EagerSpec extends SparkSpec {
   }
 
   test("construction jobs: logisticGdMulti = iters + 1, posthocPairs = 2, coOccurrence guard = 3") {
+    // at scale: over sf0.001 the small-plan rule drops the shuffles
+    // under these checkpoints, and with them their map-stage jobs
+    atScale(constructionJobs())
+  }
+
+  private def constructionJobs(): Unit = {
     val orders = Tables.orders(spark, sf0001)
     orders.schema // the schema read is not the operators' job
     val iters = 4

@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 /** Plan-shape assertions: the 100 TB posture, checked at sf0.001.
   * These pin the properties that keep working on a 1000-executor
   * cluster: predicate pushdown into parquet, column pruning, broadcast
-  * joins for dims, whole-stage codegen over custom expressions. */
+  * joins for dims, whole-stage codegen over custom expressions. Every
+  * plan here is taken [[atScale]]: over the sf0.001 tables the
+  * small-plan rule would run it as one task with no exchanges. */
 class PlanSpec extends SparkSpec {
   import spark.implicits._
+
+  override def withFixture(test: NoArgTest) = atScale(super.withFixture(test))
 
   private def plan(name: String): String = {
     // other suites cache these tables; a cached scan would mask the
@@ -56,16 +60,10 @@ class PlanSpec extends SparkSpec {
     // longer fits a broadcast: with the threshold off, the unhinted
     // join must fall back to SortMergeJoin instead of OOMing on a
     // forced broadcast
-    val conf = spark.conf
-    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val p = plan("feat_percentile_buckets")
       assert(p.contains("SortMergeJoin"), p)
       assert(!p.contains("BroadcastHashJoin"), p)
-    } finally saved match {
-      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -25,9 +25,9 @@ class ScaleSpec extends SparkSpec {
       "lineitem_b", "o_orderkey", buckets = 4)
     val joined = spark.table("lineitem_b").join(spark.table("orders_b"), "o_orderkey")
       .groupBy("o_orderstatus").count()
-    val nShuffles = joined.queryExecution.executedPlan.collect {
+    val nShuffles = atScale(joined.queryExecution.executedPlan.collect {
       case e: ShuffleExchangeExec => e
-    }.size
+    }.size)
     // the join itself must be shuffle-free: the only exchange allowed
     // is the final single-partition aggregate
     assert(nShuffles <= 1, s"expected co-located join, got $nShuffles shuffles")

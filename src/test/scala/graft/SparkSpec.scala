@@ -28,6 +28,23 @@ trait SparkSpec extends AnyFunSuite {
     (out, jobs)
   }
 
+  /** `body` with the session conf `key` set to `value`, then restored. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** `body` planned as at scale: with [[graft.plans.SmallPlanOneTask]]
+    * excluded through Spark's `spark.sql.optimizer.excludedRules`, so a
+    * plan over the small test tables keeps the exchanges it has over
+    * large ones. Force the plan (explain, executedPlan) inside `body`. */
+  def atScale[T](body: => T): T = withConf("spark.sql.optimizer.excludedRules",
+    graft.plans.SmallPlanOneTask.ruleName)(body)
+
   /** Replace the id sidecar at `path` by ONE parquet file holding the
     * same rows: readers still see the sidecar, but a write to `path`
     * fails (a file, not a directory). Returns the restore action. */
