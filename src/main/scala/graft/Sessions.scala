@@ -17,8 +17,11 @@ import org.apache.spark.sql.SparkSession
   * - small plans run as one task: [[graft.plans.SmallPlanOneTask]]
   *   coalesces each scan of a plan whose leaves together weigh no more
   *   than `spark.sql.autoBroadcastJoinThreshold` (10 MB; ≤ 0 turns it
-  *   off) to one partition, so the plan plans no shuffle exchange and
-  *   pays no job and AQE re-plan per exchange. It leaves streaming
+  *   off) to one partition, and the input of each global sort too (a
+  *   full outer join or a union reports an unknown partitioning, and a
+  *   range exchange above it would run the whole one-task plan twice),
+  *   so the plan plans no shuffle exchange and pays no job and AQE
+  *   re-plan per exchange. It leaves streaming
   *   plans, samples, explicit repartitions/coalesces (the
   *   [[Tables.wide]] spreads) and nondeterministic expressions alone,
   *   since their layout is part of their answer. The bar is the

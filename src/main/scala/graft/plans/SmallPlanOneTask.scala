@@ -17,6 +17,14 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * shuffle). A small plan then pays one job instead of one job and one
   * adaptive re-plan per exchange.
   *
+  * The input of a global sort is coalesced as well. A full outer join
+  * or a union reports an unknown partitioning even over one partition,
+  * so a sort above it would still plan a range exchange, and a range
+  * exchange runs its input twice (a sampling job, then the map stage).
+  * Behind a shuffle that input is a cheap shuffle read; here it is the
+  * whole plan down to its scans (growth_accounting: a full outer join
+  * of two windowed aggregates, then `orderBy`).
+  *
   * The bar is Spark's own broadcast threshold (10 MB by default; a
   * value ≤ 0 turns the rule off): below it Spark already ships a whole
   * join side to every task, so one task may hold all of the inputs
@@ -35,11 +43,11 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * (`injectPreCBORule`), on the plan whose filters and projections are
   * already pushed down: the scan it wraps is the one the planner turns
   * into a parquet read, so its `ReadSchema` and `PushedFilters` are
-  * unchanged. Inside the fixed point a semi join is pushed through a
-  * repartition, which moved the coalesce above the join and exposed
-  * the scan again. The coalesces this rule adds carry a tag and are not
-  * counted as explicit repartitions, so a second application changes
-  * nothing.
+  * unchanged. Inside the fixed point `PushDownLeftSemiAntiJoin` pushes
+  * a semi join below a repartition, so the coalesce would end up above
+  * the join instead of on the scan. The coalesces this rule adds carry
+  * a tag and are not counted as explicit repartitions, so a second
+  * application changes nothing.
   */
 object SmallPlanOneTask extends Rule[LogicalPlan] {
 
@@ -64,18 +72,26 @@ object SmallPlanOneTask extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  private def one(p: LogicalPlan): LogicalPlan =
+    if (ours(p)) p
+    else {
+      val r = Repartition(1, shuffle = false, p)
+      r.setTagValue(added, ())
+      r
+    }
+
   private def wrap(p: LogicalPlan): LogicalPlan =
     if (ours(p)) p
-    else if (scan(p)) {
-      val one = Repartition(1, shuffle = false, p)
-      one.setTagValue(added, ())
-      one
-    } else p.withNewChildren(p.children.map(wrap))
+    else if (scan(p)) one(p)
+    else p match {
+      case s: Sort if s.global => s.withNewChildren(Seq(one(wrap(s.child))))
+      case _ => p.withNewChildren(p.children.map(wrap))
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val bar = conf.autoBroadcastJoinThreshold
     if (bar <= 0 || plan.isStreaming || scan(plan) || layoutBound(plan) ||
         plan.collectLeaves().map(_.stats.sizeInBytes).sum > bar) plan
-    else plan.withNewChildren(plan.children.map(wrap))
+    else wrap(plan)
   }
 }

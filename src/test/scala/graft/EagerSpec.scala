@@ -58,28 +58,40 @@ class EagerSpec extends SparkSpec {
     } finally TestAccess.clearCheckpointDir(sc)
   }
 
+  private val iters = 4
+
   test("construction jobs: logisticGdMulti = iters + 1, posthocPairs = 2, coOccurrence guard = 3") {
     // at scale: over sf0.001 the small-plan rule drops the shuffles
     // under these checkpoints, and with them their map-stage jobs
-    atScale(constructionJobs())
+    atScale(constructionJobs(iters + 1, 2, 3))
   }
 
-  private def constructionJobs(): Unit = {
+  test("construction jobs on the default session: posthocPairs = 1, coOccurrence guard = 1") {
+    // the guard first, on a fresh read, then again after the other
+    // operators: the rule plans the same DataFrame the same way
+    assert(coOccurrenceJobs() == 1)
+    constructionJobs(iters + 1, 1, 1)
+  }
+
+  private def coOccurrenceJobs(): Int = {
+    val lineitem = Tables.lineitem(spark, sf0001)
+    lineitem.schema // the schema read is not the operators' job
+    jobsDuring(Graph.coOccurrence(lineitem,
+      "l_orderkey", "l_partkey", weighted = true))._2
+  }
+
+  private def constructionJobs(gd: Int, posthoc: Int, guard: Int): Unit = {
     val orders = Tables.orders(spark, sf0001)
-    orders.schema // the schema read is not the operators' job
-    val iters = 4
+    orders.schema
     val (_, gdJobs) = jobsDuring(Features.logisticGdMulti(orders,
       Seq(least($"o_totalprice" / 600000.0, lit(1.0)),
         month($"o_orderdate").cast("double") / 12.0),
       $"o_orderpriority".isin("1-URGENT", "2-HIGH"), iters = iters))
-    assert(gdJobs == iters + 1, s"logisticGdMulti ran $gdJobs build jobs")
+    assert(gdJobs == gd, s"logisticGdMulti ran $gdJobs build jobs")
     val (_, phJobs) = jobsDuring(Features.posthocPairs(orders,
       $"o_orderpriority", round($"o_totalprice" * 100).cast("long")))
-    assert(phJobs == 2, s"posthocPairs ran $phJobs build jobs")
-    val lineitem = Tables.lineitem(spark, sf0001)
-    lineitem.schema
-    val (_, coJobs) = jobsDuring(Graph.coOccurrence(lineitem,
-      "l_orderkey", "l_partkey", weighted = true))
-    assert(coJobs == 3, s"the coOccurrence guard ran $coJobs jobs")
+    assert(phJobs == posthoc, s"posthocPairs ran $phJobs build jobs")
+    val coJobs = coOccurrenceJobs()
+    assert(coJobs == guard, s"the coOccurrence guard ran $coJobs jobs")
   }
 }

@@ -39,6 +39,18 @@ class SmallPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows.toSeq == atScaleRows.toSeq)
   }
 
+  test("a global sort above a full outer join plans no range exchange") {
+    // growth_accounting: two windowed aggregates, full outer joined,
+    // then ordered; a full outer join reports an unknown partitioning
+    val df = SparkEntry.queries("growth_accounting")(spark, sf001)
+    assert(shuffles(df) == 0, df.queryExecution.executedPlan)
+    val (rows, jobs) = jobsDuring(df.collect())
+    val (atScaleRows, atScaleJobs) = atScale(
+      jobsDuring(SparkEntry.queries("growth_accounting")(spark, sf001).collect()))
+    assert(jobs < atScaleJobs, s"$jobs vs $atScaleJobs")
+    assert(rows.toSeq == atScaleRows.toSeq)
+  }
+
   test("the rule is idempotent and leaves a bare scan alone") {
     val analyzed = drawdown().queryExecution.analyzed
     val once = graft.plans.SmallPlanOneTask(analyzed)
