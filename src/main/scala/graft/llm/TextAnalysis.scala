@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.doc_fingerprint
-import graft.operators.Moments
+import graft.operators.{Moments, Quality}
 
 /** Text analysis for training-data pipelines (north star): language
   * ID, quality scoring, token counting, fingerprinting. All pure
@@ -325,16 +325,8 @@ object TextAnalysis {
       .join(left, "w1")
       .join(right, "w2")
       .crossJoin(broadcast(total)) // 1-row bigram total
-      // both products DECIMAL(38,0)-widened before the ratio (the
-      // associationRules lift convention): a raw long multiply of
-      // n_pair·N silently wraps at corpus scale under non-ANSI
-      // semantics and would corrupt the PMI; the oracle's HUGEINT
-      // arithmetic is already exact
-      .withColumn("pmi_micros",
-        round(log((col("n_pair").cast("decimal(38,0)") * col("__n"))
-            .cast("double") /
-          (col("__cl").cast("decimal(38,0)") * col("__cr"))
-            .cast("double")) * 1e6).cast("long"))
+      .withColumn("pmi_micros", Quality.pmiMicros(col("n_pair"), col("__n"),
+        col("__cl"), col("__cr")))
       .select(col("w1"), col("w2"), col("n_pair").cast("bigint").as("n_pair"),
         col("pmi_micros"))
   }

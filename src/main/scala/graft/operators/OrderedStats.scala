@@ -77,6 +77,20 @@ object OrderedStats {
         (col("__cin_b") + col("__ob")).as("cum_b"))
   }
 
+  /** [[cumCounts]] crossed with its two sample sizes `n_a`, `n_b`, one
+    * broadcast 1-row aggregate: the prelude of the two-sample tests. */
+  private def sided(df: DataFrame, valueExpr: Column, tagExpr: Column,
+      nBuckets: Int): DataFrame = {
+    val cum = cumCounts(df, valueExpr, tagExpr, nBuckets)
+    cum.crossJoin(broadcast(
+      cum.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))))
+  }
+
+  /** `cum_a·n_b − cum_b·n_a`, the exact integer numerator of the CDF
+    * gap `F_a − F_b` at a value ([[Quality.shareGap]]). */
+  private def cdfGap: Column =
+    Quality.shareGap(col("cum_a"), col("cum_b"), col("n_a"), col("n_b"))
+
   /** Two-sample Kolmogorov-Smirnov distance, EXACT:
     * `D = max_v |F_a(v) − F_b(v)|` computed as the integer maximum of
     * `|cum_a·n_b − cum_b·n_a|` over distinct pooled values (the sup
@@ -85,26 +99,21 @@ object OrderedStats {
     * (n_a, n_b, d_micros) with `d_micros = round(D · 10⁶)`.
     *
     * Unlike the binned drift family ([[Quality.driftReport]] /
-    * [[Quality.psi]]), KS needs no grid choice — it is the
+    * [[Quality.psiReport]]), KS needs no grid choice — it is the
     * scale-free test a drift monitor escalates to when bins are in
     * question. */
   def ksTest(df: DataFrame, valueExpr: Column, tagExpr: Column,
       nBuckets: Int = 32): DataFrame = {
-    val cum = cumCounts(df, valueExpr, tagExpr, nBuckets)
-    val tot = cum.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot)) // 1-row sample sizes
-      .select(abs(col("cum_a").cast("decimal(38,0)") * col("n_b") -
-        col("cum_b").cast("decimal(38,0)") * col("n_a")).as("__d"),
-        col("n_a"), col("n_b"))
+    sided(df, valueExpr, tagExpr, nBuckets)
+      .select(abs(cdfGap).as("__d"), col("n_a"), col("n_b"))
       .groupBy(col("n_a"), col("n_b"))
       .agg(max(col("__d")).as("__dnum"))
       // one empty side: no distance is defined — empty result, not 0/0
       .filter(col("n_a") > 0L && col("n_b") > 0L)
       .select(col("n_a").cast("bigint").as("n_a"),
         col("n_b").cast("bigint").as("n_b"),
-        round(col("__dnum").cast("double") /
-          (col("n_a").cast("decimal(38,0)") * col("n_b")).cast("double")
-          * 1e6).cast("long").as("d_micros"))
+        round(Quality.perPair(col("__dnum"), col("n_a"), col("n_b")) * 1e6)
+          .cast("long").as("d_micros"))
   }
 
   /** Per-metric two-sample KS battery with one-term asymptotic
@@ -156,7 +165,6 @@ object OrderedStats {
     * identity is structural, not re-derived. */
   def ksBatteryFromCounts(c0: DataFrame,
       maxDistinctPerMetric: Long = 2000000L): DataFrame = {
-    val dec = "decimal(38,0)"
     // the count table feeds BOTH the pre-flight head() and the main
     // window plan — materialize it once (distinct-value scale) so the
     // row-scale upstream (e.g. a full events scan per ksBattery call)
@@ -181,13 +189,11 @@ object OrderedStats {
       .withColumn("n_a", sum(col("ca")).over(wAll))
       .withColumn("n_b", sum(col("cb")).over(wAll))
       .groupBy(col("metric"), col("n_a"), col("n_b"))
-      .agg(max(abs(col("cum_a").cast(dec) * col("n_b") -
-        col("cum_b").cast(dec) * col("n_a"))).as("__dnum"))
+      .agg(max(abs(cdfGap)).as("__dnum"))
       .filter(col("n_a") > 0L && col("n_b") > 0L)
     val naD = col("n_a").cast("double")
     val nbD = col("n_b").cast("double")
-    val dD = col("__dnum").cast("double") /
-      (col("n_a").cast(dec) * col("n_b")).cast("double")
+    val dD = Quality.perPair(col("__dnum"), col("n_a"), col("n_b"))
     val p = least(lit(1.0),
       lit(2.0) * exp(lit(-2.0) * (naD * nbD / (naD + nbD)) * dD * dD))
     agg.select(col("metric"),
@@ -451,9 +457,7 @@ object OrderedStats {
   def mannWhitney(df: DataFrame, valueExpr: Column, tagExpr: Column,
       nBuckets: Int = 32): DataFrame = {
     val dec = "decimal(38,0)"
-    val cum = cumCounts(df, valueExpr, tagExpr, nBuckets)
-    val tot = cum.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    val agg = cum.crossJoin(broadcast(tot)) // 1-row sample sizes
+    val agg = sided(df, valueExpr, tagExpr, nBuckets)
       .select(col("n_a"), col("n_b"),
         (col("ca").cast(dec) *
           (lit(2).cast(dec) * (col("cum_b") - col("cb")) + col("cb")))
@@ -777,12 +781,9 @@ object OrderedStats {
   def cramerVonMises(df: DataFrame, valueExpr: Column, tagExpr: Column,
       nBuckets: Int = 32): DataFrame = {
     val dec = "decimal(38,0)"
-    val cum = cumCounts(df, valueExpr, tagExpr, nBuckets)
-    val tot = cum.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot)) // 1-row sample sizes
+    sided(df, valueExpr, tagExpr, nBuckets)
       .filter(col("n_a") > 0L && col("n_b") > 0L)
-      .withColumn("__d", col("cum_a").cast(dec) * col("n_b") -
-        col("cum_b").cast(dec) * col("n_a"))
+      .withColumn("__d", cdfGap)
       .select(col("n_a"), col("n_b"),
         ((col("ca") + col("cb")).cast(dec) * col("__d") * col("__d"))
           .as("__term"))
@@ -798,35 +799,6 @@ object OrderedStats {
         (col("__t_micros") > 461000L).as("drifted"))
   }
 
-  /** Two-sample Anderson–Darling statistic (Scholz–Stephens k=2,
-    * right-continuous ECDF) — the TAIL-weighted member of the drift
-    * trio: [[ksTest]] reads the single worst gap, [[cramerVonMises]]
-    * integrates it uniformly, AD divides each squared gap by
-    * `B(N−B)` so the same absolute gap counts ~N/4× more in the
-    * tails — the right screen when what drifts is the p99, not the
-    * median. For two samples the per-side terms coincide
-    * (`N·M₂ − n_b·B = −(N·M₁ − n_a·B)`), so
-    * `A² = Σ_j ℓ_j·D_j² / (B_j(N−B_j)) / (n_a·n_b)` over distinct
-    * pooled values with `B_j < N`, `D_j = N·M₁ − n_a·B` — exactly
-    * scipy's `anderson_ksamp(midrank=False)` at k=2.
-    *
-    * Exactness: D and the term numerators are exact DECIMAL
-    * integers off [[cumCounts]]; each term is the pico-scaled
-    * truncating division `(ℓ·D²·10¹²) div (B·(N−B))` — exact
-    * integers, order-free sum, kept in DECIMAL by
-    * [[Quality.decimalDivTrunc]] (a tail term's quotient alone can
-    * pass a long) — and A² is one final truncating division by
-    * `n_a·n_b·10⁶`, leaving micros. Inference uses the
-    * Scholz–Stephens tables downstream — the raw statistic is the
-    * deliverable, same stance as the drift battery. Degenerate
-    * inputs (an empty side, or a single distinct pooled value — no
-    * interior point exists) return empty. Returns one row
-    * (n_a, n_b, a2_micros).
-    *
-    * Scale: identical to [[ksTest]] — one row-scale hash-agg, the
-    * two-phase prefix sum, distinct-value-scale everything after;
-    * DECIMAL(38) bounds `ℓ·D²·10¹² < 10³⁸` (the n⁵·10¹² posture —
-    * a significance test's sample, not a corpus). */
   /** Yuen's trimmed-mean t-test — the ROBUST two-sample mean
     * comparison next to [[graft.operators.Features.welchTTest]]
     * (one whale in an arm owns a raw mean; Yuen compares 20 %-trimmed
@@ -957,18 +929,46 @@ object OrderedStats {
           .as("p_micros"))
   }
 
+  /** Two-sample Anderson–Darling statistic (Scholz–Stephens k=2,
+    * right-continuous ECDF) — the TAIL-weighted member of the drift
+    * trio: [[ksTest]] reads the single worst gap, [[cramerVonMises]]
+    * integrates it uniformly, AD divides each squared gap by
+    * `B(N−B)` so the same absolute gap counts ~N/4× more in the
+    * tails — the right screen when what drifts is the p99, not the
+    * median. For two samples the per-side terms coincide
+    * (`N·M₂ − n_b·B = −(N·M₁ − n_a·B)`), so
+    * `A² = Σ_j ℓ_j·D_j² / (B_j(N−B_j)) / (n_a·n_b)` over distinct
+    * pooled values with `B_j < N`, `D_j = N·M₁ − n_a·B` — exactly
+    * scipy's `anderson_ksamp(midrank=False)` at k=2. With
+    * `N = n_a + n_b` and `B = cum_a + cum_b`, D is the KS/CvM gap
+    * `cum_a·n_b − cum_b·n_a`, and it is computed as that.
+    *
+    * Exactness: D and the term numerators are exact DECIMAL
+    * integers off [[cumCounts]]; each term is the pico-scaled
+    * truncating division `(ℓ·D²·10¹²) div (B·(N−B))` — exact
+    * integers, order-free sum, kept in DECIMAL by
+    * [[Quality.decimalDivTrunc]] (a tail term's quotient alone can
+    * pass a long) — and A² is one final truncating division by
+    * `n_a·n_b·10⁶`, leaving micros. Inference uses the
+    * Scholz–Stephens tables downstream — the raw statistic is the
+    * deliverable, same stance as the drift battery. Degenerate
+    * inputs (an empty side, or a single distinct pooled value — no
+    * interior point exists) return empty. Returns one row
+    * (n_a, n_b, a2_micros).
+    *
+    * Scale: identical to [[ksTest]] — one row-scale hash-agg, the
+    * two-phase prefix sum, distinct-value-scale everything after;
+    * DECIMAL(38) bounds `ℓ·D²·10¹² < 10³⁸` (the n⁵·10¹² posture —
+    * a significance test's sample, not a corpus). */
   def andersonDarling(df: DataFrame, valueExpr: Column,
       tagExpr: Column, nBuckets: Int = 32): DataFrame = {
     val dec = "decimal(38,0)"
-    val cum = cumCounts(df, valueExpr, tagExpr, nBuckets)
-    val tot = cum.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot)) // 1-row sample sizes
+    sided(df, valueExpr, tagExpr, nBuckets)
       .filter(col("n_a") > 0L && col("n_b") > 0L)
       .withColumn("__nn", col("n_a") + col("n_b"))
       .withColumn("__b", col("cum_a") + col("cum_b"))
       .filter(col("__b") < col("__nn")) // the B = N term is excluded
-      .withColumn("__d", col("cum_a").cast(dec) * col("__nn") -
-        col("n_a").cast(dec) * col("__b"))
+      .withColumn("__d", cdfGap) // = cum_a·N − n_a·B
       .select(col("n_a"), col("n_b"),
         Quality.decimalDivTrunc(
           (col("ca") + col("cb")).cast(dec) * col("__d") * col("__d") *

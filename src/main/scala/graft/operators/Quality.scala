@@ -127,10 +127,9 @@ object Quality {
     * by more than `thresholdPpm` parts-per-million.
     *
     * The comparison is EXACT integer arithmetic end to end: bucket b
-    * drifts iff |n_a·B − n_b·A| · 1,000,000 > thresholdPpm · A · B
-    * (cross-multiplied shares, DECIMAL(38,0) products so 10^8-row
-    * samples cannot overflow) — no floating-point shares, so an
-    * oracle replays every row AND every verdict value-for-value.
+    * drifts iff |n_a·B − n_b·A| · 1,000,000 > thresholdPpm · A · B,
+    * the [[shareGap]] of the two samples — no floating-point shares,
+    * so an oracle replays every row AND every verdict value-for-value.
     * Cost: one narrow scan + one tiny hash-agg per sample, a
     * bucket-count-sized join, one broadcast of the two totals.
     * Returns (bucket, n_a, n_b, drifted) with empty buckets present
@@ -138,9 +137,8 @@ object Quality {
     * row). NULL values land in a dedicated bucket -1 that feeds the
     * same verdict AND the totals — a sample whose column goes largely
     * NULL shifts every bucket's share and is flagged, instead of the
-    * NULLs silently vanishing from the denominator. Bucketing itself
-    * is long `div` arithmetic (no double division), so values beyond
-    * 2^53 bucket exactly. */
+    * NULLs silently vanishing from the denominator. Bucketing is
+    * [[bucketOf]]. */
   def driftReport(a: DataFrame, b: DataFrame, valueExpr: Column,
       lo: Long, width: Long, nBuckets: Int,
       thresholdPpm: Long = 50000L): DataFrame = {
@@ -159,36 +157,97 @@ object Quality {
   private[graft] def bucketCounts(df: DataFrame, valueExpr: Column,
       lo: Long, width: Long, nBuckets: Int, out: String): DataFrame =
     df.select(valueExpr.cast("long").as("__v"))
-      .selectExpr(
-        s"""CASE WHEN __v IS NULL THEN -1L
-           |ELSE least(greatest((__v - ${lo}L) div ${width}L, 0L),
-           |           ${nBuckets - 1}L) END AS bucket""".stripMargin)
+      .select(bucketOf("__v", lo, width, nBuckets).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as(out))
+
+  /** The fixed integer bucket of the LONG column `v`: `(v − lo) div
+    * width` clamped to 0..nBuckets−1 (values below `lo` land in bucket
+    * 0, values past the last bucket in the last), and a NULL value is
+    * bucket -1. Long `div`, no double division, so values beyond 2⁵³
+    * bucket exactly. */
+  private[graft] def bucketOf(v: String, lo: Long, width: Long,
+      nBuckets: Int): Column =
+    expr(s"""CASE WHEN $v IS NULL THEN -1L
+            |ELSE least(greatest(($v - ${lo}L) div ${width}L, 0L),
+            |           ${nBuckets - 1}L) END""".stripMargin)
+
+  /** The bucket grid `from..nBuckets-1` left-joined to two count
+    * tables `ca` (bucket, n_a) and `cb` (bucket, n_b), zero-filled:
+    * a bucket empty on one side is a row of evidence, not a missing
+    * row. */
+  private def pairedCounts(ca: DataFrame, cb: DataFrame, from: Long,
+      nBuckets: Int): DataFrame =
+    ca.sparkSession.range(from, nBuckets.toLong)
+      .select(col("id").as("bucket"))
+      .join(ca, Seq("bucket"), "left")
+      .join(cb, Seq("bucket"), "left")
+      .select(col("bucket"), coalesce(col("n_a"), lit(0L)).as("n_a"),
+        coalesce(col("n_b"), lit(0L)).as("n_b"))
+
+  /** `df` (with per-row counts `n_a`, `n_b`) crossed with its two
+    * sample totals `__ta`, `__tb`, one broadcast 1-row aggregate. */
+  private def withTotals(df: DataFrame): DataFrame =
+    df.crossJoin(broadcast(
+      df.agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))))
+
+  /** The share gap of two samples, `n_a·T_b − n_b·T_a`: the exact
+    * integer numerator of `n_a/T_a − n_b/T_b` (times `T_a·T_b`). Every
+    * two-sample screen compares shares this way, cross-multiplied
+    * instead of divided, so no floating-point share ever exists and an
+    * oracle replays each comparison value for value. The products are
+    * DECIMAL(38,0), so 10⁸-row samples cannot overflow where a long
+    * product would. */
+  private[graft] def shareGap(na: Column, nb: Column, ta: Column,
+      tb: Column): Column =
+    na.cast(Moments.Dec) * tb - nb.cast(Moments.Dec) * ta
+
+  /** `x / (n_a·n_b)` as ONE IEEE division of exact integers, the step
+    * that turns a summed or maximal [[shareGap]] into a distance. */
+  private[graft] def perPair(x: Column, na: Column, nb: Column): Column =
+    x.cast("double") / (na.cast(Moments.Dec) * nb).cast("double")
+
+  /** [[driftReport]]'s verdict: |n_a·T_b − n_b·T_a| · 10⁶ >
+    * thresholdPpm · T_a·T_b over the rows of [[withTotals]]. */
+  private def drifted(thresholdPpm: Long): Column =
+    (abs(shareGap(col("n_a"), col("n_b"), col("__ta"), col("__tb"))) *
+      1000000L >
+      lit(thresholdPpm).cast(Moments.Dec) * col("__ta") * col("__tb"))
+      .as("drifted")
+
+  /** Add-one smoothed comparison of two counts `na`, `nb` out of
+    * totals `ta`, `tb` over `cells` cells (the smoothing mass, one per
+    * cell): `(p_a − p_b, ln(p_a/p_b))` with `p = (n+1)/(T+cells)`.
+    * Smoothing keeps an empty cell's log finite. The log's operand is
+    * a ratio of exact DECIMAL products,
+    * `(n_a+1)(T_b+cells) / ((n_b+1)(T_a+cells))`, so it is one IEEE
+    * division an oracle mirrors. */
+  private[graft] def smoothed(na: Column, nb: Column, ta: Column,
+      tb: Column, cells: Int): (Column, Column) = {
+    val (sa, sb) = ((na + 1L).cast("double") / (ta + cells).cast("double"),
+      (nb + 1L).cast("double") / (tb + cells).cast("double"))
+    (sa - sb, log(((na + 1L).cast(Moments.Dec) * (tb + cells))
+      .cast("double") /
+      ((nb + 1L).cast(Moments.Dec) * (ta + cells)).cast("double")))
+  }
+
+  /** A [[smoothed]] term `x` rounded to integer micro-units, except
+    * that a cell empty in BOTH samples carries no evidence and gives
+    * exactly 0: the smoothed formula would invent a phantom term from
+    * unequal sample totals alone. */
+  private[graft] def smoothedMicros(na: Column, nb: Column,
+      x: Column): Column =
+    when(na === 0L && nb === 0L, 0L)
+      .otherwise(round(x * 1e6).cast("long"))
 
   /** [[driftReport]]'s verdict over PRE-BUCKETED counts: `ca` carries
     * (bucket, n_a), `cb` (bucket, n_b); the -1..nBuckets-1 grid,
     * zero-fill, and exact cross-multiplied comparison are identical
     * to the raw-value form. */
   private[graft] def driftVerdict(ca: DataFrame, cb: DataFrame,
-      nBuckets: Int, thresholdPpm: Long): DataFrame = {
-    val grid = ca.sparkSession.range(-1L, nBuckets.toLong)
-      .select(col("id").as("bucket"))
-    val joined = grid
-      .join(ca, Seq("bucket"), "left")
-      .join(cb, Seq("bucket"), "left")
-      .select(col("bucket"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val totals = joined.agg(sum(col("n_a")).as("__ta"),
-      sum(col("n_b")).as("__tb"))
-    joined.crossJoin(broadcast(totals))
-      .select(col("bucket"), col("n_a"), col("n_b"),
-        (abs(col("n_a").cast("decimal(38,0)") * col("__tb") -
-            col("n_b").cast("decimal(38,0)") * col("__ta")) * 1000000L >
-          lit(thresholdPpm).cast("decimal(38,0)") * col("__ta") * col("__tb"))
-          .as("drifted"))
+      nBuckets: Int, thresholdPpm: Long): DataFrame =
+    withTotals(pairedCounts(ca, cb, -1L, nBuckets))
+      .select(col("bucket"), col("n_a"), col("n_b"), drifted(thresholdPpm))
       .orderBy(col("bucket"))
-  }
 
   /** Categorical twin of [[driftReport]]: per-VALUE share comparison
     * for a discrete column (language mix, source mix, label mix —
@@ -209,18 +268,11 @@ object Quality {
     // rows, each falsely flagged as vanished/appeared drift.
     val ca = counts(a, "n_a").alias("__ca")
     val cb = counts(b, "n_b").alias("__cb")
-    val joined = ca.join(cb, col("__ca.key") <=> col("__cb.key"), "full")
-      .select(coalesce(col("__ca.key"), col("__cb.key")).as("key"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val totals = joined.agg(sum(col("n_a")).as("__ta"),
-      sum(col("n_b")).as("__tb"))
-    joined.crossJoin(broadcast(totals))
-      .select(col("key"), col("n_a"), col("n_b"),
-        (abs(col("n_a").cast("decimal(38,0)") * col("__tb") -
-            col("n_b").cast("decimal(38,0)") * col("__ta")) * 1000000L >
-          lit(thresholdPpm).cast("decimal(38,0)") * col("__ta") * col("__tb"))
-          .as("drifted"))
+    withTotals(ca.join(cb, col("__ca.key") <=> col("__cb.key"), "full")
+        .select(coalesce(col("__ca.key"), col("__cb.key")).as("key"),
+          coalesce(col("n_a"), lit(0L)).as("n_a"),
+          coalesce(col("n_b"), lit(0L)).as("n_b")))
+      .select(col("key"), col("n_a"), col("n_b"), drifted(thresholdPpm))
       .orderBy(col("key"))
   }
 
@@ -369,35 +421,15 @@ object Quality {
   def psiReport(a: DataFrame, b: DataFrame, valueExpr: Column,
       lo: Long, width: Long, nBuckets: Int): DataFrame = {
     require(width > 0 && nBuckets > 0, "width and nBuckets must be positive")
-    val ca = bucketCounts(a, valueExpr, lo, width, nBuckets, "n_a")
-    val cb = bucketCounts(b, valueExpr, lo, width, nBuckets, "n_b")
-    val grid = a.sparkSession.range(-1L, nBuckets.toLong)
-      .select(col("id").as("bucket"))
-    val joined = grid
-      .join(ca, Seq("bucket"), "left")
-      .join(cb, Seq("bucket"), "left")
-      .select(col("bucket"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val totals = joined.agg(sum(col("n_a")).as("__ta"),
-      sum(col("n_b")).as("__tb"))
-    val nb = nBuckets + 1 // add-one smoothing mass: one per grid cell
-    joined.crossJoin(broadcast(totals))
-      .withColumn("__pa", (col("n_a") + 1L).cast("double") /
-        (col("__ta") + nb).cast("double"))
-      .withColumn("__pb", (col("n_b") + 1L).cast("double") /
-        (col("__tb") + nb).cast("double"))
-      // a bucket empty in BOTH samples carries no evidence and
-      // contributes exactly zero — the smoothed formula would invent
-      // a phantom contribution purely from unequal sample totals
-      .withColumn("psi_micros",
-        when(col("n_a") === 0L && col("n_b") === 0L, 0L)
-          .otherwise(round((col("__pa") - col("__pb")) *
-            log(((col("n_a") + 1L).cast("decimal(38,0)") *
-                (col("__tb") + nb)).cast("double") /
-              ((col("n_b") + 1L).cast("decimal(38,0)") *
-                (col("__ta") + nb)).cast("double")) * 1e6).cast("long")))
-      .select(col("bucket"), col("n_a"), col("n_b"), col("psi_micros"))
+    val (na, nb) = (col("n_a"), col("n_b"))
+    val (gap, lnRatio) = smoothed(na, nb, col("__ta"), col("__tb"),
+      nBuckets + 1) // one smoothing count per grid cell
+    withTotals(pairedCounts(
+        bucketCounts(a, valueExpr, lo, width, nBuckets, "n_a"),
+        bucketCounts(b, valueExpr, lo, width, nBuckets, "n_b"),
+        -1L, nBuckets))
+      .select(col("bucket"), na, nb,
+        smoothedMicros(na, nb, gap * lnRatio).as("psi_micros"))
       .orderBy(col("bucket"))
   }
 
@@ -460,30 +492,20 @@ object Quality {
       .filter(col("bucket") >= 0L)
     val cb = bucketCounts(b, valueExpr, lo, width, nBuckets, "n_b")
       .filter(col("bucket") >= 0L)
-    val grid = a.sparkSession.range(0L, nBuckets.toLong)
-      .select(col("id").as("bucket"))
     val w = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid
-      .join(ca, Seq("bucket"), "left")
-      .join(cb, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-      .withColumn("__cuma", sum(col("n_a")).over(w)) // nBuckets rows
-      .withColumn("__cumb", sum(col("n_b")).over(w))
-    val tot = cum.agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))
-    cum.crossJoin(broadcast(tot)) // 1-row totals
-      .select(abs(col("__cuma").cast("decimal(38,0)") * col("__tb") -
-        col("__cumb").cast("decimal(38,0)") * col("__ta")).as("__d"),
-        col("__ta"), col("__tb"))
+    withTotals(pairedCounts(ca, cb, 0L, nBuckets)
+        .withColumn("__cuma", sum(col("n_a")).over(w)) // nBuckets rows
+        .withColumn("__cumb", sum(col("n_b")).over(w)))
+      .select(abs(shareGap(col("__cuma"), col("__cumb"), col("__ta"),
+        col("__tb"))).as("__d"), col("__ta"), col("__tb"))
       .groupBy(col("__ta"), col("__tb"))
       .agg(sum(col("__d")).as("__sd"))
       .filter(col("__ta") > 0L && col("__tb") > 0L)
       .select(col("__ta").cast("bigint").as("n_a"),
         col("__tb").cast("bigint").as("n_b"),
-        round(col("__sd").cast("double") /
-          (col("__ta").cast("decimal(38,0)") * col("__tb")).cast("double")
-          * width * 1e6).cast("long").as("w1_micros"))
+        round(perPair(col("__sd"), col("__ta"), col("__tb")) * width * 1e6)
+          .cast("long").as("w1_micros"))
   }
 
   /** t-closeness audit — the privacy screen [[kAnonymity]] and
@@ -515,9 +537,7 @@ object Quality {
     val b = df.select(col(groupCol).cast("string").as("__g"),
         valueExpr.cast("long").as("__v"))
       .filter(col("__v").isNotNull)
-      .selectExpr("__g",
-        s"least(greatest((__v - ${lo}L) div ${width}L, 0L), " +
-          s"${nBuckets - 1}L) AS bucket")
+      .select(col("__g"), bucketOf("__v", lo, width, nBuckets).as("bucket"))
       .groupBy(col("__g"), col("bucket")).agg(count(lit(1)).as("n"))
     val grid = df.sparkSession.range(0L, nBuckets.toLong)
       .select(col("id").as("bucket"))
@@ -535,25 +555,20 @@ object Quality {
           Window.unboundedPreceding, Window.currentRow)))
       .select(col("bucket"), col("__gcum"))
     val tot = full.agg(sum(col("n")).as("__N"))
+    val ng = sum(col("n")).over(Window.partitionBy(col("__g"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     cum.join(broadcast(glob), Seq("bucket"))
       .crossJoin(broadcast(tot))
       .select(col("__g"), col("__N"),
-        abs(col("__cum").cast("decimal(38,0)") * col("__N") -
-          col("__gcum").cast("decimal(38,0)") *
-            sum(col("n")).over(Window.partitionBy(col("__g"))
-              .rowsBetween(Window.unboundedPreceding,
-                Window.unboundedFollowing))).as("__d"),
-        sum(col("n")).over(Window.partitionBy(col("__g"))
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)).as("__ng"))
+        abs(shareGap(col("__cum"), col("__gcum"), ng, col("__N"))).as("__d"),
+        ng.as("__ng"))
       .groupBy(col("__g"), col("__ng"), col("__N"))
       .agg(sum(col("__d")).as("__sd"))
       .filter(col("__ng") > 0L && col("__N") > 0L)
       .select(col("__g").as(groupCol),
         col("__ng").cast("bigint").as("n"),
-        round(col("__sd").cast("double") /
-          (col("__ng").cast("decimal(38,0)") * col("__N")).cast("double")
-          * width * 1e6).cast("long").as("w1_micros"))
+        round(perPair(col("__sd"), col("__ng"), col("__N")) * width * 1e6)
+          .cast("long").as("w1_micros"))
       .withColumn("breached", col("w1_micros") > tMicros)
   }
 
@@ -893,11 +908,7 @@ object Quality {
     * checkpointed grid itself. */
   def chiSquare(df: DataFrame, xExpr: Column, yExpr: Column,
       maxCategories: Int = 1000): DataFrame = {
-    val cells = df.select(xExpr.cast("string").as("x"),
-        yExpr.cast("string").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n"))
-      .persist()
+    val (cells, xs, ys) = contingency(df, xExpr, yExpr)(_.persist())
     try {
       // one action over the cached cells yields both guard counts AND N
       val head = cells.agg(countDistinct(col("x")).as("__nx"),
@@ -908,10 +919,8 @@ object Quality {
         s"chi-square grid would be $nx x $ny cells (cap $maxCategories " +
           "per side) — bucket the high-cardinality column first or raise " +
           "maxCategories if the cost is understood")
-      val xs = cells.groupBy(col("x")).agg(sum(col("n")).as("__r"))
-      val ys = cells.groupBy(col("y")).agg(sum(col("n")).as("__c"))
-      val d = (col("n").cast("decimal(38,0)") * lit(nn) -
-        col("__r").cast("decimal(38,0)") * col("__c"))
+      val d = Moments.centered(lit(nn), col("n"),
+        col("__r").cast(Moments.Dec), col("__c"))
       val report = xs.crossJoin(broadcast(ys)) // guarded category grid
         .join(cells, Seq("x", "y"), "left")
         .withColumn("n", coalesce(col("n"), lit(0L)).cast("bigint"))
@@ -949,27 +958,43 @@ object Quality {
     * category-scale margin joins, a 1-row broadcast total. */
   def mutualInformation(df: DataFrame, xExpr: Column,
       yExpr: Column): DataFrame = {
-    val cells = df.select(xExpr.cast("string").as("x"),
-        yExpr.cast("string").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val xs = cells.groupBy(col("x")).agg(sum(col("n")).as("__r"))
-    val ys = cells.groupBy(col("y")).agg(sum(col("n")).as("__c"))
+    val (cells, xs, ys) =
+      contingency(df, xExpr, yExpr)(_.localCheckpoint(true))
     val total = cells.agg(sum(col("n")).as("__nn"))
     cells.join(xs, "x").join(ys, "y")
       .crossJoin(broadcast(total)) // 1-row N
       .withColumn("__pmi",
-        round(log((col("n").cast("decimal(38,0)") * col("__nn"))
-            .cast("double") /
-          (col("__r").cast("decimal(38,0)") * col("__c")).cast("double"))
-          * 1e6).cast("long"))
+        pmiMicros(col("n"), col("__nn"), col("__r"), col("__c")))
       .agg(count(lit(1)).cast("bigint").as("n_cells"),
         sum(col("n")).cast("bigint").as("n_rows"),
         expr("""CAST(greatest(sum(CAST(n AS DECIMAL(38,0)) * __pmi),
             CAST(0 AS DECIMAL(38,0))) div first(__nn) AS BIGINT)""")
           .as("mi_micros"))
   }
+
+  /** The contingency table of two categoricals: the (x, y) cell
+    * counts `n` over rows where both are non-NULL, as strings, with
+    * `pin` applied once (the caller's cache or checkpoint lifecycle),
+    * and the row and column margins `__r` (per x) and `__c` (per y)
+    * read off the pinned cells. */
+  private def contingency(df: DataFrame, xExpr: Column, yExpr: Column)(
+      pin: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val cells = pin(df.select(xExpr.cast("string").as("x"),
+        yExpr.cast("string").as("y"))
+      .filter(col("x").isNotNull && col("y").isNotNull)
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n")))
+    (cells, cells.groupBy(col("x")).agg(sum(col("n")).as("__r")),
+      cells.groupBy(col("y")).agg(sum(col("n")).as("__c")))
+  }
+
+  /** Pointwise mutual information of a cell in integer micro-nats,
+    * `round(ln(n·N / (r·c)) · 10⁶)` for cell count n, total N and
+    * margins r, c. Both products are DECIMAL(38,0) before the one
+    * division: a long `n·N` wraps at corpus scale. */
+  private[graft] def pmiMicros(n: Column, nn: Column, r: Column,
+      c: Column): Column =
+    round(log((n.cast(Moments.Dec) * nn).cast("double") /
+      (r.cast(Moments.Dec) * c).cast("double")) * 1e6).cast("long")
 
   /** Schema inference report over STRING columns — the first thing an
     * ingest of schemaless CSV/JSON needs: per column, how many
@@ -1070,15 +1095,6 @@ object Quality {
   def jsDivergence(a: DataFrame, b: DataFrame, valueExpr: Column,
       lo: Long, width: Long, nBuckets: Int): DataFrame = {
     require(width > 0 && nBuckets > 0, "width and nBuckets must be positive")
-    val ca = bucketCounts(a, valueExpr, lo, width, nBuckets, "n_a")
-    val cb = bucketCounts(b, valueExpr, lo, width, nBuckets, "n_b")
-    val grid = a.sparkSession.range(-1L, nBuckets.toLong)
-      .select(col("id").as("bucket"))
-    val j = grid.join(ca, Seq("bucket"), "left")
-      .join(cb, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val t = j.agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))
     // the tOther > 0 guard also keeps ANSI mode from raising on the
     // 0.0/0.0 an empty opposite sample would produce (js is NULL then)
     def term(n: String, other: String, tSelf: String, tOther: String) =
@@ -1090,7 +1106,10 @@ object Quality {
               col(other).cast("decimal(38,0)") * col(tSelf)).cast("double"))
             * 1e6).cast("long"))
         .otherwise(lit(0).cast("decimal(38,0)"))
-    j.crossJoin(broadcast(t)) // 1-row totals
+    withTotals(pairedCounts(
+        bucketCounts(a, valueExpr, lo, width, nBuckets, "n_a"),
+        bucketCounts(b, valueExpr, lo, width, nBuckets, "n_b"),
+        -1L, nBuckets))
       .withColumn("__termA", term("n_a", "n_b", "__ta", "__tb"))
       .withColumn("__termB", term("n_b", "n_a", "__tb", "__ta"))
       .agg(first(col("__ta")).cast("bigint").as("n_a_total"),
@@ -1150,41 +1169,19 @@ object Quality {
   def woeReport(df: DataFrame, valueExpr: Column, badExpr: Column,
       lo: Long, width: Long, nBuckets: Int): DataFrame = {
     require(width > 0 && nBuckets > 0, "width and nBuckets must be positive")
-    val cg = bucketCounts(df.filter(!badExpr), valueExpr, lo, width,
-      nBuckets, "n_good")
-    val cb = bucketCounts(df.filter(badExpr), valueExpr, lo, width,
-      nBuckets, "n_bad")
-    val grid = df.sparkSession.range(-1L, nBuckets.toLong)
-      .select(col("id").as("bucket"))
-    val joined = grid
-      .join(cg, Seq("bucket"), "left")
-      .join(cb, Seq("bucket"), "left")
-      .select(col("bucket"),
-        coalesce(col("n_good"), lit(0L)).as("n_good"),
-        coalesce(col("n_bad"), lit(0L)).as("n_bad"))
-    val totals = joined.agg(sum(col("n_good")).as("__tg"),
-      sum(col("n_bad")).as("__tb"))
-    val nb = nBuckets + 1
-    joined.crossJoin(broadcast(totals))
-      .withColumn("__lnr",
-        log(((col("n_good") + 1L).cast("decimal(38,0)") *
-            (col("__tb") + nb)).cast("double") /
-          ((col("n_bad") + 1L).cast("decimal(38,0)") *
-            (col("__tg") + nb)).cast("double")))
-      // empty-both buckets carry no evidence (see psiReport): zero,
-      // not a smoothing phantom
-      .withColumn("woe_micros",
-        when(col("n_good") === 0L && col("n_bad") === 0L, 0L)
-          .otherwise(round(col("__lnr") * 1e6).cast("long")))
-      .withColumn("iv_micros",
-        when(col("n_good") === 0L && col("n_bad") === 0L, 0L)
-          .otherwise(round(((col("n_good") + 1L).cast("double") /
-              (col("__tg") + nb).cast("double") -
-            (col("n_bad") + 1L).cast("double") /
-              (col("__tb") + nb).cast("double")) *
-            col("__lnr") * 1e6).cast("long")))
-      .select(col("bucket"), col("n_good"), col("n_bad"),
-        col("woe_micros"), col("iv_micros"))
+    val (ng, nb) = (col("n_a"), col("n_b")) // good, bad
+    val (gap, lnRatio) = smoothed(ng, nb, col("__ta"), col("__tb"),
+      nBuckets + 1)
+    withTotals(pairedCounts(
+        bucketCounts(df.filter(!badExpr), valueExpr, lo, width, nBuckets,
+          "n_a"),
+        bucketCounts(df.filter(badExpr), valueExpr, lo, width, nBuckets,
+          "n_b"),
+        -1L, nBuckets))
+      .withColumn("__lnr", lnRatio)
+      .select(col("bucket"), ng.as("n_good"), nb.as("n_bad"),
+        smoothedMicros(ng, nb, col("__lnr")).as("woe_micros"),
+        smoothedMicros(ng, nb, gap * col("__lnr")).as("iv_micros"))
       .orderBy(col("bucket"))
   }
 

@@ -244,9 +244,7 @@ object QualityQueries {
       val ev = Tables.events(s, dir)
         .select(date_trunc("week", $"ts").cast("date").as("wk"),
           round($"value" * 100).cast("long").as("v"))
-        .selectExpr("wk",
-          "CASE WHEN v IS NULL THEN -1L" +
-            " ELSE least(greatest(v div 1000, 0L), 9L) END AS bucket")
+        .select($"wk", Quality.bucketOf("v", 0L, 1000L, 10).as("bucket"))
       val counts = ev.groupBy($"wk", $"bucket").agg(count(lit(1)).as("n"))
         .localCheckpoint(true) // weeks + baseline + grid consumers
       val weeks = counts.select($"wk").distinct()
@@ -261,17 +259,10 @@ object QualityQueries {
         .select($"wk", $"bucket", coalesce($"n", lit(0L)).as("n_a"),
           coalesce($"nb0", lit(0L)).as("n_b"))
       val ta = full.groupBy($"wk").agg(sum($"n_a").as("ta"))
+      val (gap, lnRatio) = Quality.smoothed($"n_a", $"n_b", $"ta", $"tb", 11)
       full.join(ta, "wk").crossJoin(broadcast(tb)) // 1-row baseline total
         .withColumn("__term",
-          when($"n_a" === 0L && $"n_b" === 0L, 0L)
-            .otherwise(round((($"n_a" + 1L).cast("double") /
-              ($"ta" + 11L).cast("double") -
-              ($"n_b" + 1L).cast("double") /
-                ($"tb" + 11L).cast("double")) *
-              log((($"n_a" + 1L).cast("decimal(38,0)") * ($"tb" + 11L))
-                .cast("double") /
-                (($"n_b" + 1L).cast("decimal(38,0)") * ($"ta" + 11L))
-                  .cast("double")) * 1e6).cast("long")))
+          Quality.smoothedMicros($"n_a", $"n_b", gap * lnRatio))
         .groupBy($"wk")
         .agg(sum($"n_a").cast("bigint").as("n_rows"),
           sum($"__term").cast("bigint").as("psi_micros"))

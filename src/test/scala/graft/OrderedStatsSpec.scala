@@ -415,4 +415,19 @@ class OrderedStatsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("[1, 100000]"))
   }
+
+  test("ksTest and a one-metric ksBattery read the same D on tied, unequal samples") {
+    // a = {1,1,2,2,2,3,5,5}, b = {2,2,3,3,4,5}: the sup gap is at 2,
+    // |5/8 − 2/6| = 7/24
+    val rows = (Seq(1L, 1L, 2L, 2L, 2L, 3L, 5L, 5L).map((_, true)) ++
+      Seq(2L, 2L, 3L, 3L, 4L, 5L).map((_, false))).toDF("v", "t")
+    // 3 range partitions, so the two-phase prefix sum crosses them
+    val ks = OrderedStats.ksTest(rows, $"v", $"t", nBuckets = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val battery = OrderedStats.ksBattery(rows.withColumn("m", lit("m")),
+        $"m", $"v", $"t").collect()
+      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(ks.toSeq == Seq((8L, 6L, math.round(7.0 / 24 * 1e6))))
+    assert(battery.toSeq == ks.toSeq)
+  }
 }

@@ -99,4 +99,17 @@ class PercentilesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("(0, 1e6]"))
   }
+
+  test("feat_percentile_buckets_approx: every l_partkey group is under the sketch accuracy at sf0.001, sf0.01 and sf0.1") {
+    // the query runs percentile_approx with accuracy = 1000 over
+    // Tables.wide; its result is exact and layout-independent only
+    // while no group reaches 1000 rows (the sketch never compresses)
+    for (sf <- Seq(sf0001, sf001, "/root/testdata/sf0.1")) {
+      val worst = Tables.lineitem(spark, sf).groupBy($"l_partkey")
+        .agg(count(lit(1)).as("n")).agg(max($"n")).head().getLong(0)
+      assert(worst < 1000L, s"feat_percentile_buckets_approx is exact " +
+        s"only while every l_partkey group has < 1000 rows (its " +
+        s"accuracy); $sf has a group of $worst")
+    }
+  }
 }

@@ -883,4 +883,23 @@ class QualitySpec extends SparkSpec {
       Quality.nullCorrelation(df, (1 to 9).map("c" + _))
     }
   }
+
+  test("dq_psi_timeline: each week's PSI is psiReport of that week against the first") {
+    val ev = Tables.events(spark, sf001)
+      .withColumn("wk", date_trunc("week", $"ts").cast("date"))
+    val timeline = SparkEntry.queries("dq_psi_timeline")(spark, sf001)
+      .collect() // ordered by week
+    assert(timeline.length > 1)
+    val first = ev.filter($"wk" === lit(timeline.head.get(0)))
+    val psi = timeline.map { r =>
+      val week = ev.filter($"wk" === lit(r.get(0)))
+      val rep = Quality.psiReport(week, first, round($"value" * 100),
+          lo = 0L, width = 1000L, nBuckets = 10)
+        .agg(sum($"n_a"), sum($"psi_micros")).head()
+      assert((r.getLong(1), r.getLong(2)) == ((rep.getLong(0), rep.getLong(1))),
+        s"week ${r.get(0)}")
+      rep.getLong(1)
+    }
+    assert(psi.head == 0L && psi.exists(_ != 0L))
+  }
 }

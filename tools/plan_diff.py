@@ -10,8 +10,10 @@ physical plan), e.g. from a clean copy of the parent commit and from the
 change. Before comparing, the values that differ between two runs of the
 same plan are masked: expression ids (`#123`), `plan_id=`, JVM lambda
 and object-identity hashes, higher-order-function lambda variables
-(`x_12`), RDD ids (`MapPartitionsRDD[45]`), UUIDs and source line
-numbers (`Eager.scala:57`); sbt's `[info]`/`[success]` lines are
+(`x_12`), RDD ids (`MapPartitionsRDD[45]`), UUIDs, source line
+numbers (`Eager.scala:57`) and the process id in a query's scratch
+directory (`graft_dstream_<pid>_<hash>`, `queries.Shared.tmpPath`);
+sbt's `[info]`/`[success]` lines are
 dropped. Prints a unified diff per query whose masked
 plans differ, and a line per query present in only one file; exits 1 if
 anything differs, 0 if every plan is the same.
@@ -36,6 +38,7 @@ MASKS = [
     (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-"
                 r"[0-9a-f]{12}\b"), "UUID"),
     (re.compile(r"\.(scala|java):\d+"), r".\1:N"),
+    (re.compile(r"(/graft_\w+?)_\d+_(\d+)\b"), r"\1_PID_\2"),
 ]
 
 
